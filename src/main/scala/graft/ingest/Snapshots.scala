@@ -2975,7 +2975,7 @@ object Snapshots {
   /** The props META entry that would merge `updates` in — for callers
     * composing a property change ATOMICALLY with another metadata commit
     * (e.g. ADD COLUMN … DEFAULT: mapping + default land in one entry). */
-  private[ingest] def propsMetaEntry(fs: FileSystem, warehouse: String,
+  private[graft] def propsMetaEntry(fs: FileSystem, warehouse: String,
                                      table: String,
                                      updates: Map[String, String])
       : (String, String) = {

@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrameWriter, Row}
 
 /** Manifest-based transactional commit spanning the multi-table demux data
   * appends AND the checkpoint append (closing the reference's at-least-once
@@ -70,6 +71,24 @@ object TxnCommit {
         if (rel.isEmpty) s"$warehouse/$table" else s"$warehouse/$table/$rel"
       Move(src.toString, s"$destDir/$commitId-${src.getName}")
     }
+  }
+
+  /** The staged multi-table writer: each `(table, writer)` stages under
+    * one commit id and all [[commit]] + [[publish]] as ONE log version — a
+    * swap adds `retained`/`op`/`baseVersion`, and `metas` (e.g. a build
+    * stamp) land with the rows. Callers shape their own writers. */
+  def writeTables(fs: FileSystem, warehouse: String,
+                  tables: Seq[(String, DataFrameWriter[Row])],
+                  retained: Seq[String] = Nil, op: String = "append",
+                  baseVersion: Option[Long] = None,
+                  metas: Seq[(String, String)] = Nil): Unit = {
+    val cid = java.util.UUID.randomUUID().toString
+    tables.foreach { case (t, w) => w.parquet(s"${stagingDir(warehouse, cid)}/$t") }
+    val moves = tables.flatMap { case (t, _) => movesFor(fs, warehouse, cid, t) }
+    commit(fs, warehouse, cid, moves, retained = retained, op = op,
+      baseVersion = baseVersion, metas = metas)
+    publish(fs, warehouse, cid, moves, retained = retained, op = op,
+      baseVersion = baseVersion, metas = metas)
   }
 
   /** The table a destination file belongs to: the first ancestor directory

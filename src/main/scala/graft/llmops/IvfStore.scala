@@ -1,19 +1,19 @@
 package graft.llmops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorExprs
-import graft.ingest.{FileStats, Merge, Snapshots, TxnCommit}
+import graft.ingest.{FileStats, Snapshots}
 
 /** Persisted IVF index: the [[SignatureStore]] pattern applied to ANN.
   *
   * [[Ivf]] alone trains per session — the centroid model lives in a JVM
   * cache and the corpus is re-assigned on every cold start. At 100 TB an
   * index must be a TABLE: here the trained model and the per-vector cell
-  * assignments are snapshot-committed through the same stage/commit/publish
-  * protocol as the data, so
+  * assignments are snapshot-committed through the [[DerivedIndex]] writer
+  * (the data's own stage/commit/publish protocol), stamped with their
+  * dim/k, so
   *
   *   1. a new session loads k×dim floats from the `ann_centroids` table —
   *      no re-train, no corpus pass;
@@ -30,66 +30,100 @@ import graft.ingest.{FileStats, Merge, Snapshots, TxnCommit}
   */
 object IvfStore {
 
+  import DerivedIndex.Stamp
+
   val CentroidTable = "ann_centroids"
   val CellTable = "ann_cells"
+  val PqCodebookTable = "ann_pq_codebooks"
+  val PqCellTable = "ann_cells_pq"
 
-  private def publish(spark: SparkSession, warehouse: String, table: String,
-                      df: DataFrame): Unit = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cid = java.util.UUID.randomUUID().toString
-    df.write.parquet(s"${TxnCommit.stagingDir(warehouse, cid)}/$table")
-    val moves = TxnCommit.movesFor(fs, warehouse, cid, table)
-    TxnCommit.commit(fs, warehouse, cid, moves)
-    TxnCommit.publish(fs, warehouse, cid, moves)
-  }
+  private val Flat = DerivedIndex.Postings(CellTable, "vec_id", "cell",
+    DerivedIndex.stamp("ivf"))
+  private val Coded = DerivedIndex.Postings(PqCellTable, "vec_id", "cell",
+    DerivedIndex.stamp("ivf_pq"))
 
-  /** Cell rows of `vecs` under `model`, range-clustered by cell so each
-    * parquet file covers a contiguous cell interval — that is what makes
-    * the log's [min,max] stats on `cell` selective at query time. */
-  private def cellRows(vecs: DataFrame, model: Ivf.Model, idCol: String,
-                       vecCol: String, targetFiles: Int): DataFrame =
-    Ivf.assign(vecs.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
-        model)
+  /** Stamp of the coarse quantizer and the flat postings assigned under
+    * it; the PQ tables add the product quantizer's shape. */
+  private def coarseStamp(c: Ivf.Model): Stamp =
+    DerivedIndex.stamp("ivf", "dim" -> c.dim, "k" -> c.k)
+  private def pqStamp(c: Ivf.Model, pq: Pq.Model): Stamp =
+    DerivedIndex.stamp("ivf_pq", "dim" -> c.dim, "k" -> c.k, "m" -> pq.m,
+      "ksub" -> pq.ksub)
+
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
+
+  /** Cell rows of `vecs` (vec_id, embedding) under `model`, range-clustered
+    * by cell so each parquet file covers a contiguous cell interval — that
+    * is what makes the log's [min,max] stats on `cell` selective at query
+    * time. */
+  private def cellRows(vecs: DataFrame, model: Ivf.Model,
+                       targetFiles: Int): DataFrame =
+    Ivf.assign(vecs, model)
       .repartitionByRange(math.max(1, targetFiles), col("cell"), col("vec_id"))
 
-  /** Train on `corpus` and commit the index: one `ann_centroids` commit
-    * (k rows of cell + centroid) and one `ann_cells` commit (the corpus
-    * assignment). Training itself is [[Ivf.train]] — one shuffle-free
+  /** PQ posting rows: (vec_id, cell, m-byte code), range-clustered by cell
+    * like [[cellRows]]. */
+  private def codeRows(vecs: DataFrame, coarse: Ivf.Model, pq: Pq.Model,
+                       targetFiles: Int): DataFrame =
+    Ivf.assign(vecs, coarse)
+      .withColumn("pq_code", Pq.encodeCol(col("embedding"), pq))
+      .select("vec_id", "cell", "pq_code")
+      .repartitionByRange(math.max(1, targetFiles), col("cell"), col("vec_id"))
+
+  private val floats = ArrayType(FloatType, containsNull = false)
+
+  /** The coarse model as `ann_centroids` rows: (cell, centroid). */
+  private def centroidRows(spark: SparkSession, model: Ivf.Model): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        model.centroids.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
+          .toSeq, 1),
+      StructType(Seq(StructField("cell", IntegerType, nullable = false),
+        StructField("centroid", floats, nullable = false))))
+
+  /** The product quantizer as `ann_pq_codebooks` rows. */
+  private def codebookRows(spark: SparkSession, pq: Pq.Model): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        for (j <- 0 until pq.m; k0 <- 0 until pq.ksub) yield Row(j, k0,
+          (0 until pq.dsub).map(i => pq.codebooks((j * pq.ksub + k0) * pq.dsub + i))),
+        1),
+      StructType(Seq(StructField("subspace", IntegerType, nullable = false),
+        StructField("code", IntegerType, nullable = false),
+        StructField("centroid", floats, nullable = false))))
+
+  /** Train on `corpus` and commit the index — the empty-history case of
+    * [[rebuild]]: one commit of `ann_centroids` (k rows of cell +
+    * centroid) and `ann_cells` (the corpus assignment), stamped with
+    * dim/k. Training itself is [[Ivf.train]] — one shuffle-free
     * treeAggregate per Lloyd step; only model parameters reach the driver.
     * `targetFiles` spreads `ann_cells` over that many range-by-cell files
     * (size for ~128 MB files at the real corpus; tests use small values to
     * exercise pruning). */
   def buildIndex(spark: SparkSession, warehouse: String, corpus: DataFrame,
                  dim: Int, k: Int, iters: Int = 2, targetFiles: Int = 8,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): Ivf.Model = {
-    val model = Ivf.train(
-      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
-      dim, k, iters)
-    val rows = model.centroids.zipWithIndex.map { case (c, i) =>
-      Row(i, c.toSeq)
-    }
-    val schema = StructType(Seq(
-      StructField("cell", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(FloatType, containsNull = false),
-        nullable = false)))
-    publish(spark, warehouse, CentroidTable,
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), schema))
-    publish(spark, warehouse, CellTable,
-      cellRows(corpus, model, idCol, vecCol, targetFiles))
-    model
-  }
+                 idCol: String = "vec_id", vecCol: String = "embedding"): Ivf.Model =
+    rebuild(spark, warehouse, corpus, dim, k, iters, targetFiles, idCol, vecCol)
 
   /** Load the committed model: k×dim floats from the centroid table —
     * model parameters, not data, so the collect is bounded by k at any
-    * corpus scale. */
+    * corpus scale. Refused unless the table holds exactly the stamped
+    * model. */
   def loadModel(spark: SparkSession, warehouse: String): Ivf.Model = {
-    val rows = Snapshots.read(spark, warehouse, CentroidTable)
-      .select("cell", "centroid").collect()
-      .sortBy(_.getInt(0))
-    require(rows.nonEmpty, s"no $CentroidTable committed under $warehouse")
-    Ivf.Model(rows.map(_.getAs[scala.collection.Seq[Float]](1).toArray))
+    val st = DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
+      CentroidTable, Flat.build)
+    val model = Ivf.Model(Snapshots.read(spark, warehouse, CentroidTable)
+      .select("cell", "centroid").collect().sortBy(_.getInt(0))
+      .map(_.getAs[scala.collection.Seq[Float]](1).toArray))
+    DerivedIndex.agree(CentroidTable, st, coarseStamp(model))
+    model
+  }
+
+  /** [[loadModel]], checked against the flat postings' stamp. */
+  private def flatModel(spark: SparkSession, warehouse: String): Ivf.Model = {
+    val model = loadModel(spark, warehouse)
+    DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
+      CellTable, coarseStamp(model))
+    model
   }
 
   /** Assign a new batch against the PERSISTED centroids (no re-train, no
@@ -100,21 +134,18 @@ object IvfStore {
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   targetFiles: Int = 1): Ivf.Model = {
     val model = loadModel(spark, warehouse)
-    publish(spark, warehouse, CellTable,
-      cellRows(newVecs, model, idCol, vecCol, targetFiles))
+    DerivedIndex.write(spark, warehouse, Seq((CellTable, coarseStamp(model),
+      cellRows(vectors(newVecs, idCol, vecCol), model, targetFiles))))
     model
   }
 
   /** Streaming dual of [[appendBatch]] (the [[SignatureStore
     * .streamingIncrementalDedup]] pattern): each micro-batch of vectors is
     * (1) committed to `corpusTable` and (2) assigned under the PERSISTED
-    * centroids and appended to `ann_cells` — both as batchId-keyed
-    * snapshot commits ([[graft.streaming.StreamingOps.commitBatch]]), so a
-    * crash-replayed trigger skips what already published and finishes what
-    * didn't: corpus and index stay exactly-once consistent, and a
-    * long-running ingest keeps the ANN store warm without ever re-scanning
-    * the corpus. Requires an existing store ([[buildIndex]] bootstraps the
-    * centroids); per-trigger cost is O(batch). */
+    * centroids and appended to `ann_cells` — both batchId-keyed snapshot
+    * commits ([[graft.streaming.StreamingOps.commitBatch]]), so corpus and
+    * index stay exactly-once consistent under crash replays. Requires a
+    * built store; per-trigger cost is O(batch). */
   def streamingAppend(vecs: DataFrame, warehouse: String,
                       checkpointDir: String,
                       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -130,8 +161,8 @@ object IvfStore {
         val b = batch.localCheckpoint(true)
         commitBatch(b.select(col(idCol), col(vecCol)), warehouse,
           corpusTable, batchId)
-        val model = loadModel(b.sparkSession, warehouse)
-        commitBatch(cellRows(b, model, idCol, vecCol, targetFiles = 1),
+        val model = flatModel(b.sparkSession, warehouse)
+        commitBatch(cellRows(vectors(b, idCol, vecCol), model, targetFiles = 1),
           warehouse, CellTable, batchId)
         ()
       }
@@ -159,180 +190,86 @@ object IvfStore {
     * The op tag is `merge` WITHOUT change files: a change-feed consumer
     * tailing the index tables across a rebuild fails fast instead of
     * seeing the whole re-assignment as inserts (the assignments are not
-    * row-level changes of the old index — they are a new model). */
+    * row-level changes of the old index — they are a new model). With
+    * nothing to replace — [[buildIndex]] — it is a plain append. */
   def rebuild(spark: SparkSession, warehouse: String, corpus: DataFrame,
               dim: Int, k: Int, iters: Int = 2, targetFiles: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding"): Ivf.Model = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse)
     // The mirror of [[rebuildPq]]'s shared-centroid rule: a PQ posting
     // table in this warehouse references the swapped centroids' cell ids
     // through the same `ann_centroids` — refuse rather than silently
     // orphan it (rebuildPq re-assigns BOTH flavors atomically).
-    require(!Snapshots.fileMeta(fs, warehouse, PqCellTable).exists(_.nonEmpty),
+    require(!Snapshots.fileMeta(DerivedIndex.fsOf(spark, warehouse), warehouse,
+        PqCellTable).exists(_.nonEmpty),
       s"this warehouse also hosts $PqCellTable, whose codes/cells reference " +
         "the shared centroids — use rebuildPq, which swaps both index " +
         "flavors in one commit")
-    val old = Seq(CentroidTable, CellTable).flatMap(t =>
-      Snapshots.fileMeta(fs, warehouse, t).getOrElse(Seq.empty).map(_.file))
-    val model = Ivf.train(
-      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
-      dim, k, iters)
-    val centroidRows = model.centroids.zipWithIndex.map { case (c, i) =>
-      Row(i, c.toSeq)
-    }
-    val schema = StructType(Seq(
-      StructField("cell", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(FloatType, containsNull = false),
-        nullable = false)))
-    val cid = java.util.UUID.randomUUID().toString
-    val staging = TxnCommit.stagingDir(warehouse, cid)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(centroidRows.toSeq, 1), schema)
-      .write.parquet(s"$staging/$CentroidTable")
-    cellRows(corpus, model, idCol, vecCol, targetFiles)
-      .write.parquet(s"$staging/$CellTable")
-    val moves = TxnCommit.movesFor(fs, warehouse, cid, CentroidTable) ++
-      TxnCommit.movesFor(fs, warehouse, cid, CellTable)
-    TxnCommit.commit(fs, warehouse, cid, moves, retained = old,
-      op = "merge", baseVersion = base)
-    TxnCommit.publish(fs, warehouse, cid, moves, retained = old,
-      op = "merge", baseVersion = base)
+    val vecs = vectors(corpus, idCol, vecCol)
+    val model = Ivf.train(vecs, dim, k, iters)
+    val st = coarseStamp(model)
+    DerivedIndex.write(spark, warehouse, Seq(
+      (CentroidTable, st, centroidRows(spark, model)),
+      (CellTable, st, cellRows(vecs, model, targetFiles))), replace = true)
     model
   }
 
-  /** Bin-pack + re-cluster the posting table. Many [[appendBatch]] commits
-    * leave one small file each, eroding both scan cost and — worse — the
-    * range-by-cell layout the query-time pruning depends on (a late append
-    * covers the full cell range, so probed-cell stats stop skipping it).
-    * This is [[graft.ingest.Compaction.compact]] with `sortBy = cell`: one
-    * range exchange re-establishes disjoint per-file cell intervals, the
-    * swap is OCC-guarded and atomic, and any deletion vectors from
-    * [[syncFromChanges]] are materialized away by the rewrite. */
+  /** Bin-pack + re-cluster the posting table by cell
+    * ([[DerivedIndex.compact]]): many [[appendBatch]] commits leave one
+    * small file each, and a late append covers the full cell range, so
+    * probed-cell stats stop skipping it until the layout is restored. */
   def compactIndex(spark: SparkSession, warehouse: String,
                    targetBytes: Long = 128L * 1024 * 1024)
       : Option[graft.ingest.Compaction.Result] =
-    graft.ingest.Compaction.compact(spark, warehouse, CellTable,
-      targetBytes = targetBytes, sortBy = Seq("cell"))
+    DerivedIndex.compact(spark, warehouse, Flat, targetBytes)
 
   /** Propagate corpus DML into the index — the maintenance half of the
     * append-only [[appendBatch]] contract. Without it a
     * [[graft.ingest.Merge.deleteWhereDv]] on the corpus leaves stale
     * postings in `ann_cells` and ANN hits can cite vectored-out rows.
-    *
-    * Consumes the corpus change feed since `fromExclusive` (the last
-    * version the index reflects):
-    *
-    *   - `delete` / `update_preimage` rows name ids whose postings must
-    *     go — removed via [[graft.ingest.Merge.deleteKeysDv]] ON THE INDEX
-    *     TABLE (a merge-on-read vector delete: index files are not
-    *     rewritten, and the DV-aware read every query takes subtracts the
-    *     positions). Cost is O(changed keys), not O(index).
-    *   - `insert` / `update_postimage` rows are assigned against the
-    *     persisted centroids and appended — [[appendBatch]], O(new).
-    *
-    * Deletes run first so an updated vector's OLD posting is vectored out
-    * before its new one lands ([[Merge.deleteKeysDv]] removes EVERY
-    * posting of a key). Each half is its own snapshot commit; a crash
-    * between them leaves the index conservatively delete-complete (never
-    * resurrecting a deleted row) and the re-run's feed re-appends. */
+    * [[DerivedIndex.sync]] over the corpus change feed since
+    * `fromExclusive` (the last version the index reflects): changed ids'
+    * postings are vector-deleted ON THE INDEX TABLE (merge-on-read, the
+    * DV-aware read every query takes subtracts them; O(changed keys)), and
+    * surviving rows are assigned against the persisted centroids and
+    * appended — [[appendBatch]], O(new). */
   def syncFromChanges(spark: SparkSession, warehouse: String,
                       corpusTable: String, fromExclusive: Long,
                       idCol: String = "vec_id", vecCol: String = "embedding",
-                      targetFiles: Int = 1): Ivf.Model = {
-    // The feed drives two actions — pin it once (ContextCleaner-managed
-    // blocks, the SignatureStore stance), it is O(changed rows) small.
-    val feed = Snapshots.changes(spark, warehouse, corpusTable, fromExclusive)
-      .select(col(idCol), col(vecCol), col("_change_type"),
-        col("_commit_version"))
-      .localCheckpoint(false)
-    // Last-writer-wins per key ([[IndexSync.net]]): EVERY touched key's
-    // old postings go; only keys alive at the range's end re-append, once.
-    val (touched, alive) = IndexSync.net(feed, idCol, Seq(vecCol))
-    Merge.deleteKeysDv(spark, warehouse, CellTable,
-      touched.select(col(idCol).as("vec_id")), Seq("vec_id"))
-    if (alive.isEmpty) loadModel(spark, warehouse)
-    else appendBatch(spark, warehouse, alive, idCol, vecCol, targetFiles)
-  }
+                      targetFiles: Int = 1): Ivf.Model =
+    DerivedIndex.sync(spark, warehouse, Flat, corpusTable, fromExclusive,
+        idCol, vecCol)(appendBatch(spark, warehouse, _, idCol, vecCol,
+        targetFiles))
+      .getOrElse(loadModel(spark, warehouse))
 
   // ------------------------------------------------------------- IVF-PQ
 
-  val PqCodebookTable = "ann_pq_codebooks"
-  val PqCellTable = "ann_cells_pq"
-
   /** Train coarse + product quantizers and commit the PQ index in ONE log
-    * version: `ann_centroids` (coarse model), `ann_pq_codebooks`
-    * (m×ksub sub-centroids), and `ann_cells_pq` — the posting table
-    * holding (vec_id, cell, m-BYTE code), range-clustered by cell like
-    * `ann_cells` but ~(4·dim/m)× smaller because it stores CODES, not
-    * vectors. At 100 TB that factor (32× at dim=64, m=8) is what keeps
-    * the scannable index in page cache; full vectors stay only in the
-    * corpus table and are touched per-query for the SHORTLIST re-rank
-    * alone ([[pqTopK]]). */
+    * version — the empty-history case of [[rebuildPq]]: `ann_centroids`
+    * (coarse model), `ann_pq_codebooks` (m×ksub sub-centroids), and
+    * `ann_cells_pq` — the posting table holding (vec_id, cell, m-BYTE
+    * code), range-clustered by cell like `ann_cells` but ~(4·dim/m)×
+    * smaller because it stores CODES, not vectors. At 100 TB that factor
+    * (32× at dim=64, m=8) is what keeps the scannable index in page cache;
+    * full vectors stay only in the corpus table and are touched per-query
+    * for the SHORTLIST re-rank alone ([[pqTopK]]). A flat index already in
+    * the warehouse shares `ann_centroids` and is re-assigned in the same
+    * commit. */
   def buildPqIndex(spark: SparkSession, warehouse: String, corpus: DataFrame,
                    dim: Int, k: Int, m: Int, ksub: Int, iters: Int = 2,
                    targetFiles: Int = 8, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): (Ivf.Model, Pq.Model) = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vecs = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val coarse = Ivf.train(vecs, dim, k, iters)
-    val pq = Pq.train(vecs, dim, m, ksub, iters)
-    val cid = java.util.UUID.randomUUID().toString
-    writePqTables(spark, TxnCommit.stagingDir(warehouse, cid), coarse, pq,
-      vecs, targetFiles)
-    val moves = Seq(CentroidTable, PqCodebookTable, PqCellTable)
-      .flatMap(t => TxnCommit.movesFor(fs, warehouse, cid, t))
-    TxnCommit.commit(fs, warehouse, cid, moves)
-    TxnCommit.publish(fs, warehouse, cid, moves)
-    (coarse, pq)
-  }
+                   vecCol: String = "embedding"): (Ivf.Model, Pq.Model) =
+    rebuildPq(spark, warehouse, corpus, dim, k, m, ksub, iters, targetFiles,
+      idCol, vecCol)
 
-  /** Stage the three PQ-index tables (coarse centroids, codebooks,
-    * range-by-cell code postings) under one commit's staging dir. */
-  private def writePqTables(spark: SparkSession, staging: String,
-                            coarse: Ivf.Model, pq: Pq.Model, vecs: DataFrame,
-                            targetFiles: Int): Unit = {
-    val centroidSchema = StructType(Seq(
-      StructField("cell", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(FloatType, containsNull = false),
-        nullable = false)))
-    val cbSchema = StructType(Seq(
-      StructField("subspace", IntegerType, nullable = false),
-      StructField("code", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(FloatType, containsNull = false),
-        nullable = false)))
-    val cbRows = for (j <- 0 until pq.m; k0 <- 0 until pq.ksub) yield Row(j, k0,
-      (0 until pq.dsub).map(i => pq.codebooks((j * pq.ksub + k0) * pq.dsub + i)))
-    spark.createDataFrame(spark.sparkContext.parallelize(
-        coarse.centroids.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
-          .toSeq, 1), centroidSchema)
-      .write.parquet(s"$staging/$CentroidTable")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(cbRows, 1), cbSchema)
-      .write.parquet(s"$staging/$PqCodebookTable")
-    Ivf.assign(vecs, coarse)
-      .withColumn("pq_code", Pq.encodeCol(col("embedding"), pq))
-      .select("vec_id", "cell", "pq_code")
-      .repartitionByRange(math.max(1, targetFiles), col("cell"), col("vec_id"))
-      .write.parquet(s"$staging/$PqCellTable")
-  }
-
-  /** The committed PQ codebooks — m×ksub×dsub floats, model parameters. */
-  def loadPqModel(spark: SparkSession, warehouse: String): Pq.Model =
-    pqModelOf(Snapshots.read(spark, warehouse, PqCodebookTable)
-      .select("subspace", "code", "centroid").collect(), warehouse)
-
-  private def pqModelOf(rows: Array[Row], warehouse: String): Pq.Model = {
-    require(rows.nonEmpty, s"no $PqCodebookTable committed under $warehouse")
-    val m = rows.map(_.getInt(0)).max + 1
-    val ksub = rows.map(_.getInt(1)).max + 1
-    val dsub = rows.head.getAs[scala.collection.Seq[Float]](2).length
+  /** Codebook rows (kind, subspace, code, centroid) → the PQ model. */
+  private def pqModelOf(rows: Array[Row]): Pq.Model = {
+    val m = rows.map(_.getInt(1)).max + 1
+    val ksub = rows.map(_.getInt(2)).max + 1
+    val dsub = rows.head.getAs[scala.collection.Seq[Float]](3).length
     val flat = new Array[Float](m * ksub * dsub)
     rows.foreach { r =>
-      val off = (r.getInt(0) * ksub + r.getInt(1)) * dsub
-      val c = r.getAs[scala.collection.Seq[Float]](2)
+      val off = (r.getInt(1) * ksub + r.getInt(2)) * dsub
+      val c = r.getAs[scala.collection.Seq[Float]](3)
       var i = 0
       while (i < dsub) { flat(off + i) = c(i); i += 1 }
     }
@@ -342,24 +279,26 @@ object IvfStore {
   /** Coarse + PQ models in ONE collect: both tables are a handful of
     * model-parameter rows, and a serving query pays driver-job latency per
     * action — two separate loads were two jobs for data that unions into
-    * one aligned projection. */
+    * one aligned projection. Refused unless both match the PQ stamp. */
   private def loadModels(spark: SparkSession,
                          warehouse: String): (Ivf.Model, Pq.Model) = {
+    val st = DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
+      PqCellTable, Coded.build)
     val cent = Snapshots.read(spark, warehouse, CentroidTable)
       .select(lit(0).as("kind"), col("cell").as("i"), lit(0).as("j"),
         col("centroid"))
     val cbs = Snapshots.read(spark, warehouse, PqCodebookTable)
       .select(lit(1).as("kind"), col("subspace").as("i"), col("code").as("j"),
         col("centroid"))
-    val all = cent.unionByName(cbs).collect()
-    val centRows = all.filter(_.getInt(0) == 0)
-      .map(r => (r.getInt(1), r.getAs[scala.collection.Seq[Float]](3)))
-      .sortBy(_._1)
-    require(centRows.nonEmpty, s"no $CentroidTable committed under $warehouse")
-    val coarse = Ivf.Model(centRows.map(_._2.toArray))
-    val cbRows = all.filter(_.getInt(0) == 1)
-      .map(r => Row(r.getInt(1), r.getInt(2), r.get(3)))
-    (coarse, pqModelOf(cbRows, warehouse))
+    val (centRows, cbRows) = cent.unionByName(cbs).collect()
+      .partition(_.getInt(0) == 0)
+    require(centRows.nonEmpty && cbRows.nonEmpty,
+      s"$CentroidTable or $PqCodebookTable is empty under $warehouse")
+    val coarse = Ivf.Model(centRows.sortBy(_.getInt(1))
+      .map(_.getAs[scala.collection.Seq[Float]](3).toArray))
+    val pq = pqModelOf(cbRows)
+    DerivedIndex.agree(PqCellTable, st, pqStamp(coarse, pq))
+    (coarse, pq)
   }
 
   /** Append a new batch to the PQ posting table under the persisted
@@ -367,38 +306,22 @@ object IvfStore {
   def appendPqBatch(spark: SparkSession, warehouse: String, newVecs: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     targetFiles: Int = 1): Unit = {
-    val coarse = loadModel(spark, warehouse)
-    val pq = loadPqModel(spark, warehouse)
-    publish(spark, warehouse, PqCellTable,
-      Ivf.assign(newVecs.select(col(idCol).as("vec_id"),
-          col(vecCol).as("embedding")), coarse)
-        .withColumn("pq_code", Pq.encodeCol(col("embedding"), pq))
-        .select("vec_id", "cell", "pq_code")
-        .repartitionByRange(math.max(1, targetFiles), col("cell"),
-          col("vec_id")))
+    val (coarse, pq) = loadModels(spark, warehouse)
+    DerivedIndex.write(spark, warehouse, Seq((PqCellTable, pqStamp(coarse, pq),
+      codeRows(vectors(newVecs, idCol, vecCol), coarse, pq, targetFiles))))
   }
 
   /** Corpus-DML propagation for the PQ posting table — [[syncFromChanges]]
     * for codes: deleted/updated ids' postings are vector-deleted (queries'
     * DV-aware reads subtract them), new/updated vectors are re-encoded
-    * under the PERSISTED models and appended. Same crash stance: deletes
-    * commit first, so an interrupted sync is conservatively
-    * delete-complete and can never resurrect a removed row through the
-    * code path. */
+    * under the PERSISTED models and appended. */
   def syncPqFromChanges(spark: SparkSession, warehouse: String,
                         corpusTable: String, fromExclusive: Long,
                         idCol: String = "vec_id", vecCol: String = "embedding",
-                        targetFiles: Int = 1): Unit = {
-    val feed = Snapshots.changes(spark, warehouse, corpusTable, fromExclusive)
-      .select(col(idCol), col(vecCol), col("_change_type"),
-        col("_commit_version"))
-      .localCheckpoint(false)
-    val (touched, alive) = IndexSync.net(feed, idCol, Seq(vecCol))
-    Merge.deleteKeysDv(spark, warehouse, PqCellTable,
-      touched.select(col(idCol).as("vec_id")), Seq("vec_id"))
-    if (!alive.isEmpty)
-      appendPqBatch(spark, warehouse, alive, idCol, vecCol, targetFiles)
-  }
+                        targetFiles: Int = 1): Unit =
+    DerivedIndex.sync(spark, warehouse, Coded, corpusTable, fromExclusive,
+      idCol, vecCol)(appendPqBatch(spark, warehouse, _, idCol, vecCol,
+      targetFiles))
 
   /** Re-train coarse + product quantizers and atomically swap ALL THREE
     * PQ-index tables in one log version — the [[rebuild]] dual. Codes are
@@ -410,41 +333,30 @@ object IvfStore {
                 dim: Int, k: Int, m: Int, ksub: Int, iters: Int = 2,
                 targetFiles: Int = 8, idCol: String = "vec_id",
                 vecCol: String = "embedding"): (Ivf.Model, Pq.Model) = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse)
     // `ann_centroids` is SHARED with the flat index: when this warehouse
     // also hosts `ann_cells`, its assignments reference the centroids
     // being swapped — re-assign it under the new model in the SAME
     // commit, or a reader would see new centroids over old cell ids.
-    val hasFlat =
-      Snapshots.fileMeta(fs, warehouse, CellTable).exists(_.nonEmpty)
-    val tables = Seq(CentroidTable, PqCodebookTable, PqCellTable) ++
-      (if (hasFlat) Seq(CellTable) else Nil)
-    val old = tables.flatMap(t =>
-      Snapshots.fileMeta(fs, warehouse, t).getOrElse(Seq.empty).map(_.file))
-    val vecs = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
+    val hasFlat = Snapshots.fileMeta(DerivedIndex.fsOf(spark, warehouse),
+      warehouse, CellTable).exists(_.nonEmpty)
+    val vecs = vectors(corpus, idCol, vecCol)
     val coarse = Ivf.train(vecs, dim, k, iters)
     val pq = Pq.train(vecs, dim, m, ksub, iters)
-    val cid = java.util.UUID.randomUUID().toString
-    val staging = TxnCommit.stagingDir(warehouse, cid)
-    writePqTables(spark, staging, coarse, pq, vecs, targetFiles)
-    if (hasFlat)
-      cellRows(vecs, coarse, "vec_id", "embedding", targetFiles)
-        .write.parquet(s"$staging/$CellTable")
-    val moves = tables.flatMap(t => TxnCommit.movesFor(fs, warehouse, cid, t))
-    TxnCommit.commit(fs, warehouse, cid, moves, retained = old,
-      op = "merge", baseVersion = base)
-    TxnCommit.publish(fs, warehouse, cid, moves, retained = old,
-      op = "merge", baseVersion = base)
+    val (cs, ps) = (coarseStamp(coarse), pqStamp(coarse, pq))
+    DerivedIndex.write(spark, warehouse, Seq(
+      (CentroidTable, cs, centroidRows(spark, coarse)),
+      (PqCodebookTable, ps, codebookRows(spark, pq)),
+      (PqCellTable, ps, codeRows(vecs, coarse, pq, targetFiles))) ++
+      (if (hasFlat) Seq((CellTable, cs, cellRows(vecs, coarse, targetFiles)))
+       else Nil),
+      replace = true)
     (coarse, pq)
   }
 
   /** Shortlist ids above this count skip the corpus point-prune filter
     * (the re-rank join still runs; it just scans more files) — the same
     * bounded-driver-collect stance as [[graft.ingest.Merge]]'s key cap. */
-  private def maxRerankPruneIds: Int =
-    sys.props.get("graft.pq.rerankPruneMaxIds").map(_.toInt).getOrElse(4096)
+  private val MaxRerankPruneIds = 4096
 
   /** IVF-PQ top-k: probe `nprobe` cells, score ALL candidates from their
     * m-byte codes (asymmetric cosine — the corpus contributes zero bytes
@@ -464,23 +376,15 @@ object IvfStore {
     val (coarse, pq) = loadModels(spark, warehouse)
     val np = math.min(nprobe, coarse.k)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    // Full probe (np = k, the exact configuration): every cell is each
-    // query's nearest-np set by definition — the probed set is all cells,
-    // no discovery job needed. (With an empty query batch the downstream
-    // join is empty either way.)
-    val probed =
-      if (np == coarse.k) Array.range(0, coarse.k)
-      else q
-        .select(explode(VectorExprs.nearestCellsCol(
-          col("q_vec"), coarse.flat, coarse.dim, np)).as("cell"))
-        .distinct().collect().map(_.getInt(0)).sorted
+    val probed = probedCells(q, "q_vec", coarse, np)
     if (probed.isEmpty)
       return q.limit(0).select(col("q_id"), col("q_id").as("vec_id"),
         lit(0.0).as("sim"), lit(0L).as("rnk"))
-    val postings = Snapshots.read(spark, warehouse, PqCellTable,
-        dataFilter = probed.map(c => FileStats.eq("cell", c)).reduce(_ or _))
-      .filter(col("cell").isInCollection(probed))
-    // Full-refine shortcut (r22): when the shortlist cap k·refine covers the
+    val postings = DerivedIndex.probe(spark, warehouse, Coded, probed)
+    // Full-refine shortcut (r22), full probe only: below it every query
+    // must see its OWN nprobe nearest cells, while `postings` is the union
+    // over the batch — the windowed path joins per query on cell. When
+    // every cell is probed and the shortlist cap k·refine covers the
     // whole valid row_number domain (rnk is IntegerType — a per-query
     // candidate count past 2^31 is outside the operator's domain either
     // way), the `prnk <= k·refine` filter provably passes every row, so the
@@ -490,7 +394,7 @@ object IvfStore {
     // load + answer) and drops the wasted O(candidates log candidates)
     // sort. The windowed path below is byte-identical for any smaller cap
     // and stays the serving configuration.
-    if (k.toLong * refine >= Int.MaxValue.toLong) {
+    if (np == coarse.k && k.toLong * refine >= Int.MaxValue.toLong) {
       val cand = postings.select(col("vec_id"))
         .join(Snapshots.read(spark, warehouse, corpusTable)
           .select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
@@ -526,9 +430,9 @@ object IvfStore {
       .localCheckpoint(true)
     // Point-pruned exact re-rank: true vectors for the shortlist only.
     val ids = shortlist.select("vec_id").distinct()
-      .limit(maxRerankPruneIds + 1).collect().map(_.get(0))
+      .limit(MaxRerankPruneIds + 1).collect().map(_.get(0))
     val corpus0 =
-      if (ids.nonEmpty && ids.length <= maxRerankPruneIds)
+      if (ids.nonEmpty && ids.length <= MaxRerankPruneIds)
         Snapshots.read(spark, warehouse, corpusTable,
           dataFilter = ids.map(v => FileStats.eq(idCol, v)).reduce(_ or _))
       else Snapshots.read(spark, warehouse, corpusTable)
@@ -553,23 +457,20 @@ object IvfStore {
   def topK(spark: SparkSession, warehouse: String, queries: DataFrame,
            k: Int, nprobe: Int = 2,
            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val model = loadModel(spark, warehouse)
+    val model = flatModel(spark, warehouse)
     val np = math.min(nprobe, model.k)
-    val q = queries.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    // Full probe (np = k): the probed set is provably every cell — skip
-    // the discovery job (see [[pqTopK]]).
-    val probed =
-      if (np == model.k) Array.range(0, model.k)
-      else q
-        .select(explode(VectorExprs.nearestCellsCol(
-          col("embedding"), model.flat, model.dim, np)).as("cell"))
-        .distinct().collect().map(_.getInt(0)).sorted
-    val indexed =
-      if (probed.isEmpty) // empty query batch: nothing to probe
-        Snapshots.read(spark, warehouse, CellTable).limit(0)
-      else Snapshots.read(spark, warehouse, CellTable,
-          dataFilter = probed.map(c => FileStats.eq("cell", c)).reduce(_ or _))
-        .filter(col("cell").isInCollection(probed))
-    Ivf.topK(q, indexed, model, k, np)
+    val q = vectors(queries, idCol, vecCol)
+    Ivf.topK(q, DerivedIndex.probe(spark, warehouse, Flat,
+      probedCells(q, "embedding", model, np)), model, k, np)
   }
+
+  /** Cells the queries' `vecCol` vectors probe. Full probe (np = k, the
+    * exact configuration) is every cell by definition — no discovery job;
+    * with an empty query batch the downstream join is empty either way. */
+  private def probedCells(q: DataFrame, vecCol: String, model: Ivf.Model,
+                          np: Int): Seq[Int] =
+    if (np == model.k) 0 until model.k
+    else q.select(explode(VectorExprs.nearestCellsCol(
+        col(vecCol), model.flat, model.dim, np)).as("cell"))
+      .distinct().collect().map(_.getInt(0)).sorted.toSeq
 }

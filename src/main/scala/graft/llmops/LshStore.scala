@@ -1,11 +1,9 @@
 package graft.llmops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.ingest.{FileStats, Merge, Snapshots, TxnCommit}
+import graft.ingest.Snapshots
 
 /** Persisted LSH ANN index — the [[IvfStore]] pattern for the hyperplane
   * family. The bucket function is deterministic (pseudo-random planes
@@ -16,27 +14,21 @@ import graft.ingest.{FileStats, Merge, Snapshots, TxnCommit}
   * on `bucket` overlap its probed buckets — a multi-probe query over a
   * 100 TB corpus touches a handful of files, the corpus table none.
   *
-  * The hashing parameters (dim, numPlanes) ride a one-row meta table so
-  * appends and queries provably use the index's own scheme — mixing bucket
-  * functions would silently zero recall.
+  * The hashing parameters (dim, numPlanes) ride the bucket table's build
+  * stamp ([[DerivedIndex]]) so appends and queries provably use the index's
+  * own scheme — mixing bucket functions would silently zero recall.
   */
 object LshStore {
 
   val BucketTable = "ann_lsh_buckets"
-  val MetaTable = "ann_lsh_meta"
 
-  case class Params(dim: Int, numPlanes: Int)
-
-  private def publish(spark: SparkSession, warehouse: String, table: String,
-                      df: DataFrame): Unit = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cid = java.util.UUID.randomUUID().toString
-    df.write.parquet(s"${TxnCommit.stagingDir(warehouse, cid)}/$table")
-    val moves = TxnCommit.movesFor(fs, warehouse, cid, table)
-    TxnCommit.commit(fs, warehouse, cid, moves)
-    TxnCommit.publish(fs, warehouse, cid, moves)
+  case class Params(dim: Int, numPlanes: Int) {
+    private[llmops] def stamp: DerivedIndex.Stamp =
+      DerivedIndex.stamp("lsh", "dim" -> dim, "numPlanes" -> numPlanes)
   }
+
+  private val Buckets = DerivedIndex.Postings(BucketTable, "vec_id", "bucket",
+    DerivedIndex.stamp("lsh"))
 
   private def bucketRows(vecs: DataFrame, p: Params, idCol: String,
                          vecCol: String, targetFiles: Int): DataFrame =
@@ -47,29 +39,24 @@ object LshStore {
       // interval, which is what makes the log's [min,max] stats selective.
       .repartitionByRange(math.max(1, targetFiles), col("bucket"), col("vec_id"))
 
-  /** Bucket `corpus` and commit the index: one meta commit (the hashing
-    * params) and one range-by-bucket `ann_lsh_buckets` commit. */
+  /** Bucket `corpus` and commit the index: one range-by-bucket
+    * `ann_lsh_buckets` commit stamped with the hashing params, replacing
+    * any index already there. */
   def buildIndex(spark: SparkSession, warehouse: String, corpus: DataFrame,
                  dim: Int, numPlanes: Int = 8, targetFiles: Int = 8,
                  idCol: String = "vec_id", vecCol: String = "embedding"): Params = {
     val p = Params(dim, numPlanes)
-    val schema = StructType(Seq(
-      StructField("dim", IntegerType, nullable = false),
-      StructField("num_planes", IntegerType, nullable = false)))
-    publish(spark, warehouse, MetaTable,
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(dim, numPlanes)), 1), schema))
-    publish(spark, warehouse, BucketTable,
-      bucketRows(corpus, p, idCol, vecCol, targetFiles))
+    DerivedIndex.write(spark, warehouse, Seq((BucketTable, p.stamp,
+      bucketRows(corpus, p, idCol, vecCol, targetFiles))), replace = true)
     p
   }
 
-  /** The index's committed hashing params — one row, bounded at any scale. */
+  /** The index's hashing params, from its build stamp — a log read, no
+    * Spark job. */
   def loadParams(spark: SparkSession, warehouse: String): Params = {
-    val rows = Snapshots.read(spark, warehouse, MetaTable)
-      .select("dim", "num_planes").collect()
-    require(rows.nonEmpty, s"no $MetaTable committed under $warehouse")
-    Params(rows.head.getInt(0), rows.head.getInt(1))
+    val st = DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
+      BucketTable, Buckets.build)
+    Params(DerivedIndex.param(st, "dim"), DerivedIndex.param(st, "numPlanes"))
   }
 
   /** Bucket a new batch under the PERSISTED params and append — O(new),
@@ -78,43 +65,30 @@ object LshStore {
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   targetFiles: Int = 1): Params = {
     val p = loadParams(spark, warehouse)
-    publish(spark, warehouse, BucketTable,
-      bucketRows(newVecs, p, idCol, vecCol, targetFiles))
+    DerivedIndex.write(spark, warehouse, Seq((BucketTable, p.stamp,
+      bucketRows(newVecs, p, idCol, vecCol, targetFiles))))
     p
   }
 
-  /** Bin-pack + re-cluster the bucket table ([[IvfStore.compactIndex]]
-    * for the hyperplane family): re-establishes the range-by-bucket
-    * layout that probed-bucket pruning depends on after many one-file
-    * appends, and materializes away any [[syncFromChanges]] vectors. */
+  /** Bin-pack + re-cluster the bucket table ([[DerivedIndex.compact]]):
+    * re-establishes the range-by-bucket layout that probed-bucket pruning
+    * depends on after many one-file appends. */
   def compactIndex(spark: SparkSession, warehouse: String,
                    targetBytes: Long = 128L * 1024 * 1024)
       : Option[graft.ingest.Compaction.Result] =
-    graft.ingest.Compaction.compact(spark, warehouse, BucketTable,
-      targetBytes = targetBytes, sortBy = Seq("bucket"))
+    DerivedIndex.compact(spark, warehouse, Buckets, targetBytes)
 
-  /** Propagate corpus DML into the index — [[IvfStore.syncFromChanges]]
-    * for the hyperplane family: delete/update_preimage ids are vector-
-    * deleted out of the bucket table (merge-on-read, O(changed keys)),
-    * insert/update_postimage rows re-bucketed under the persisted params
-    * and appended. Deletes first, same crash stance: an interrupted sync
-    * is delete-complete, the re-run re-appends. */
+  /** Propagate corpus DML into the index ([[DerivedIndex.sync]]): changed
+    * ids' postings are vector-deleted, surviving rows re-bucketed under
+    * the persisted params and appended. */
   def syncFromChanges(spark: SparkSession, warehouse: String,
                       corpusTable: String, fromExclusive: Long,
                       idCol: String = "vec_id", vecCol: String = "embedding",
-                      targetFiles: Int = 1): Params = {
-    val feed = Snapshots.changes(spark, warehouse, corpusTable, fromExclusive)
-      .select(col(idCol), col(vecCol), col("_change_type"),
-        col("_commit_version"))
-      .localCheckpoint(false)
-    // Last-writer-wins per key ([[IndexSync.net]]): EVERY touched key's
-    // old postings go; only keys alive at the range's end re-append, once.
-    val (touched, alive) = IndexSync.net(feed, idCol, Seq(vecCol))
-    Merge.deleteKeysDv(spark, warehouse, BucketTable,
-      touched.select(col(idCol).as("vec_id")), Seq("vec_id"))
-    if (alive.isEmpty) loadParams(spark, warehouse)
-    else appendBatch(spark, warehouse, alive, idCol, vecCol, targetFiles)
-  }
+                      targetFiles: Int = 1): Params =
+    DerivedIndex.sync(spark, warehouse, Buckets, corpusTable, fromExclusive,
+        idCol, vecCol)(appendBatch(spark, warehouse, _, idCol, vecCol,
+        targetFiles))
+      .getOrElse(loadParams(spark, warehouse))
 
   /** ANN top-k through the warm store: probed bucket ids (≤ |queries| ×
     * (numPlanes+1) longs, collected — bounded driver traffic) drive
@@ -144,12 +118,9 @@ object LshStore {
       else {
         val probed = qb.select("bucket").distinct()
           .collect().map(_.getLong(0)).sorted
-        val pruned =
-          if (probed.isEmpty) Snapshots.read(spark, warehouse, BucketTable).limit(0)
-          else Snapshots.read(spark, warehouse, BucketTable,
-              dataFilter = probed.map(b => FileStats.eq("bucket", b)).reduce(_ or _))
-            .filter(col("bucket").isInCollection(probed))
-        Similarity.dropLargeBuckets(pruned, Seq("bucket"), maxBucket)
+        Similarity.dropLargeBuckets(
+          DerivedIndex.probe(spark, warehouse, Buckets, probed.toSeq),
+          Seq("bucket"), maxBucket)
       }
     val scored = broadcast(qb).join(indexed, Seq("bucket"))
       .filter(col("q_id") =!= col("vec_id"))

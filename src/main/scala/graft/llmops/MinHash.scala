@@ -2,6 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Near-duplicate detection: MinHash+LSH, SimHash, and exact n-gram Jaccard.
   *
@@ -144,15 +145,15 @@ object MinHash {
     * document (a fresh batch, e.g. served by `Snapshots.changes`) against
     * the full corpus — the 100 TB dedup shape, where re-deduping the whole
     * corpus per ingest is a non-starter. The bucket join is new-side ×
-    * corpus-side: cost is O(new × bucket width), never O(corpus²), and at
-    * scale the corpus signatures/bands are computed once and persisted as
-    * a table themselves (here recomputed — the fixture is small).
+    * corpus-side: cost is O(new × bucket width), never O(corpus²). Corpus
+    * signatures are recomputed here; [[SignatureStore]] persists them.
     * Pairs are normalized (doc_a < doc_b) and include new-vs-new. */
   def incrementalNearDupPairs(corpus: DataFrame, newIds: DataFrame,
                               idCol: String, textCol: String,
                               numPerms: Int = 64, numBands: Int = 16,
                               threshold: Double = 0.6,
                               maxBucket: Int = 1000): DataFrame = {
+    requireIntegralId(corpus, idCol)
     val sigd = withSignatures(corpus, idCol, textCol, numPerms).cache()
     val banded = bands(sigd.select(col("doc_id"), col("sig")),
       numPerms, numBands)
@@ -170,10 +171,37 @@ object MinHash {
       sigd.select(col("doc_id"), col("sig"))
         .join(broadcast(fresh), Seq("doc_id")),
       numPerms, numBands)
-    jaccard(incrementalCandidates(banded, fresh, maxBucket, Some(freshBands)),
-        sigd.select(col("doc_id"), col("sh")))
+    incrementalPairs(banded, fresh, freshBands, threshold, maxBucket)(
+      _ => sigd.select(col("doc_id"), col("sh")))
+  }
+
+  /** Signature kernel version in every signature store's build stamp:
+    * bump it whenever shingling, signing or banding changes its output. */
+  private[llmops] val Kernel = 2
+
+  /** The candidate + verify core of both incremental entry points, which
+    * differ only in where corpus `banded` rows and the `shingled(cand)`
+    * (doc_id, sh) rows of candidate endpoints come from. `freshBands` are
+    * the batch's own band rows. Candidates are pinned: a `shingled` that
+    * reads from them would otherwise re-run the candidate pass. */
+  private[llmops] def incrementalPairs(banded: DataFrame, fresh: DataFrame,
+                                       freshBands: DataFrame,
+                                       threshold: Double, maxBucket: Int)(
+      shingled: DataFrame => DataFrame): DataFrame = {
+    val cand = incrementalCandidates(banded, fresh, maxBucket, Some(freshBands))
+      .localCheckpoint(false)
+    jaccard(cand, shingled(cand))
       .filter(col("jaccard") >= threshold)
       .withColumn("jaccard", round(col("jaccard"), 4))
+  }
+
+  /** Incremental candidates carry (doc_id, fresh) as one long,
+    * doc_id·2 + fresh: ids must be integral, and |id| < 2^62. */
+  private[llmops] def requireIntegralId(df: DataFrame, idCol: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"incremental dedup needs an integral id column: '$idCol' is " +
+        s"${t.simpleString} (ids must be byte/short/int/bigint with |id| < 2^62)")
   }
 
   /** Candidate pairs involving ≥ 1 fresh doc — the incremental dual of
@@ -215,7 +243,8 @@ object MinHash {
     val fkeys = freshBands.getOrElse(
         banded.join(broadcast(fresh), Seq("doc_id")))
       .select(col("band"), col("bh")).distinct()
-    // (doc_id, fresh) encoded as one long — doc_id·2 + fresh — so the
+    // (doc_id, fresh) encoded as one long — doc_id·2 + fresh, widened to
+    // long BEFORE the multiply (an int id ≥ 2^30 would overflow) — so the
     // collect_list aggregates a primitive array instead of per-element
     // InternalRow structs (r22: the object aggregate was the candidate
     // pass's dominant term). Monotone in doc_id, so least/greatest order
@@ -225,7 +254,7 @@ object MinHash {
       .join(broadcast(fresh.withColumn("__new", lit(true))),
         Seq("doc_id"), "left")
       .select(col("band"), col("bh"),
-        (col("doc_id") * 2 +
+        (col("doc_id").cast("long") * 2 +
           when(coalesce(col("__new"), lit(false)), 1L).otherwise(0L)).as("m"))
     val grouped = flagged.groupBy(col("band"), col("bh"))
       .agg(collect_list(col("m")).as("ms"))

@@ -32,14 +32,10 @@ object FormatQueries {
     Files.createTempDirectory("graft-fmtq").resolve("wh").toString
 
   private def publish(s: SparkSession, wh: String, table: String,
-                      df: DataFrame): Unit = {
-    val fs = new Path(wh).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cid = java.util.UUID.randomUUID().toString
-    df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(wh, cid)}/$table")
-    val moves = TxnCommit.movesFor(fs, wh, cid, table)
-    TxnCommit.commit(fs, wh, cid, moves)
-    TxnCommit.publish(fs, wh, cid, moves)
-  }
+                      df: DataFrame): Unit =
+    TxnCommit.writeTables(
+      new Path(wh).getFileSystem(s.sparkContext.hadoopConfiguration), wh,
+      Seq(table -> df.coalesce(1).write))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Native DSv2 streaming SINK end-to-end: events → writeStream
@@ -758,17 +754,12 @@ object FormatQueries {
         val w = freshWh()
         val n = nation(s, d)
         publish(s, w, "nation", n.filter(col("n_nationkey") < 13))
-        val cid = java.util.UUID.randomUUID().toString
-        n.filter(col("n_nationkey") >= 13)
-          .withColumn("side", when(col("n_nationkey") % 2 === 0,
-            lit("even")).otherwise(lit("odd")))
-          .coalesce(1).write.partitionBy("side")
-          .parquet(s"${TxnCommit.stagingDir(w, cid)}/nation")
-        val fs = new Path(w).getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        val moves = TxnCommit.movesFor(fs, w, cid, "nation")
-        TxnCommit.commit(fs, w, cid, moves)
-        TxnCommit.publish(fs, w, cid, moves)
+        TxnCommit.writeTables(
+          new Path(w).getFileSystem(s.sparkContext.hadoopConfiguration), w,
+          Seq("nation" -> n.filter(col("n_nationkey") >= 13)
+            .withColumn("side", when(col("n_nationkey") % 2 === 0,
+              lit("even")).otherwise(lit("odd")))
+            .coalesce(1).write.partitionBy("side")))
         w
       }
       Snapshots.read(s, wh, "nation")
@@ -816,15 +807,9 @@ object FormatQueries {
         val w = freshWh()
         val n = nation(s, d).withColumn("dt",
           when(col("n_nationkey") % 2 === 0, lit("d1")).otherwise(lit("d2")))
-        def pubPart(df: DataFrame): Unit = {
-          val fs = new Path(w).getFileSystem(s.sparkContext.hadoopConfiguration)
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write.partitionBy("dt")
-            .parquet(s"${TxnCommit.stagingDir(w, cid)}/nation")
-          val moves = TxnCommit.movesFor(fs, w, cid, "nation")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pubPart(df: DataFrame): Unit = TxnCommit.writeTables(
+          new Path(w).getFileSystem(s.sparkContext.hadoopConfiguration), w,
+          Seq("nation" -> df.coalesce(1).write.partitionBy("dt")))
         pubPart(n.filter(col("n_nationkey") < 12))
         pubPart(n.filter(col("n_nationkey") >= 12))
         Compaction.compact(s, w, "nation", sortBy = Seq("n_nationkey"),
@@ -922,15 +907,9 @@ object FormatQueries {
         val n = nation(s, d)
         Snapshots.setProperties(fs, w, "nation",
           Map("bloom.columns" -> "n_name", "bloom.ndv" -> "1000"))
-        def pubBloom(df: DataFrame): Unit = {
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write
-            .options(Snapshots.bloomWriteOptionsFor(fs, w, "nation", None))
-            .parquet(s"${TxnCommit.stagingDir(w, cid)}/nation")
-          val moves = TxnCommit.movesFor(fs, w, cid, "nation")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pubBloom(df: DataFrame): Unit = TxnCommit.writeTables(fs, w,
+          Seq("nation" -> df.coalesce(1).write
+            .options(Snapshots.bloomWriteOptionsFor(fs, w, "nation", None))))
         pubBloom(n.filter(col("n_nationkey") % 2 === 0))
         pubBloom(n.filter(col("n_nationkey") % 2 === 1))
         val r = Merge.deleteKeysDv(s, w, "nation",

@@ -18,6 +18,19 @@ import graft.llmops.{MinHash, Multimodal, Similarity, TextOps}
   */
 object LlmQueries {
 
+  /** A fresh fixture warehouse in a temp dir, and its filesystem. */
+  private def freshWh(s: SparkSession, prefix: String)
+      : (String, org.apache.hadoop.fs.FileSystem) = {
+    val w = java.nio.file.Files.createTempDirectory(prefix).resolve("wh").toString
+    (w, new org.apache.hadoop.fs.Path(w)
+      .getFileSystem(s.sparkContext.hadoopConfiguration))
+  }
+
+  /** Commit `df` to `table` as one single-file append. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem, w: String,
+                      table: String, df: DataFrame): Unit =
+    graft.ingest.TxnCommit.writeTables(fs, w, Seq(table -> df.coalesce(1).write))
+
   private def docs(s: SparkSession, d: String): DataFrame =
     Fixtures.table(s, d, "documents")
   private def embs(s: SparkSession, d: String): DataFrame =
@@ -29,16 +42,9 @@ object LlmQueries {
   private def pqStore(s: SparkSession, d: String): String =
     Fixtures.once("llm_ann_pq_store", d) {
       import graft.ingest.{Snapshots, TxnCommit}
-      val w = java.nio.file.Files.createTempDirectory("graft-pqstore")
-        .resolve("wh").toString
-      val fs = new org.apache.hadoop.fs.Path(w)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val cid = java.util.UUID.randomUUID().toString
-      embs(s, d).select("vec_id", "embedding").coalesce(2)
-        .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/embeddings")
-      val moves = TxnCommit.movesFor(fs, w, cid, "embeddings")
-      TxnCommit.commit(fs, w, cid, moves)
-      TxnCommit.publish(fs, w, cid, moves)
+      val (w, fs) = freshWh(s, "graft-pqstore")
+      TxnCommit.writeTables(fs, w, Seq("embeddings" ->
+        embs(s, d).select("vec_id", "embedding").coalesce(2).write))
       graft.llmops.IvfStore.buildPqIndex(s, w,
         Snapshots.read(s, w, "embeddings"), dim = 64, k = 8, m = 8,
         ksub = 16, targetFiles = 4)
@@ -123,22 +129,13 @@ object LlmQueries {
     // feed's delta (extra/missing rows change the pair set) and the
     // incremental join's recall.
     "llm_dedup_incremental" -> ((s, d) => {
-      import graft.ingest.{Snapshots, TxnCommit}
+      import graft.ingest.Snapshots
       // Fixture commits happen once per JVM (bench runs each entry 4×);
       // the timed region below is the change-feed read + incremental dedup.
       val (wh, vCorpus) = Fixtures.once("llm_dedup_incremental", d) {
-        val w = java.nio.file.Files.createTempDirectory("graft-incdedup")
-          .resolve("wh").toString
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val (w, fs) = freshWh(s, "graft-incdedup")
         val all = docsWithDups(s, d)
-        def pub(df: DataFrame): Unit = {
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/documents")
-          val moves = TxnCommit.movesFor(fs, w, cid, "documents")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pub(df: DataFrame): Unit = publish(fs, w, "documents", df)
         pub(all.filter(col("doc_id") < 1000000))   // corpus
         val vc = Snapshots.latestVersion(fs, w).get
         pub(all.filter(col("doc_id") >= 1000000))  // the new batch
@@ -158,24 +155,15 @@ object LlmQueries {
     // wholesale. A hash mismatch here means the persisted-signature path
     // lost recall vs ground truth.
     "llm_dedup_incremental_persisted" -> ((s, d) => {
-      import graft.ingest.{Snapshots, TxnCommit}
+      import graft.ingest.Snapshots
       import graft.llmops.SignatureStore
       // Ingest-time work (document commits + signature-table appends) runs
       // once per JVM; the timed region is what a production incremental run
       // pays: change-feed read + signature-table dedup of the new batch.
       val (wh, vCorpus) = Fixtures.once("llm_dedup_incremental_persisted", d) {
-        val w = java.nio.file.Files.createTempDirectory("graft-sigstore")
-          .resolve("wh").toString
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val (w, fs) = freshWh(s, "graft-sigstore")
         val all = docsWithDups(s, d)
-        def pub(df: DataFrame): Unit = {
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/documents")
-          val moves = TxnCommit.movesFor(fs, w, cid, "documents")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pub(df: DataFrame): Unit = publish(fs, w, "documents", df)
         val corpus = all.filter(col("doc_id") < 1000000)
         val batch2 = all.filter(col("doc_id") >= 1000000)
         pub(corpus)
@@ -265,25 +253,16 @@ object LlmQueries {
     // COMPLETE (a lost appendBatch row changes the top-k) and the
     // cell-pruned read is sound.
     "llm_ann_ivf_persisted" -> ((s, d) => {
-      import graft.ingest.{Snapshots, TxnCommit}
+      import graft.ingest.Snapshots
       import graft.llmops.IvfStore
       // Index construction (train + assign + incremental append) runs once
       // per JVM; the timed region is the warm-store query — exactly what a
       // serving cluster pays: centroids + pruned ann_cells files, zero
       // corpus scan, zero re-train.
       val wh = Fixtures.once("llm_ann_ivf_persisted", d) {
-        val w = java.nio.file.Files.createTempDirectory("graft-ivfstore")
-          .resolve("wh").toString
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val (w, fs) = freshWh(s, "graft-ivfstore")
         val all = embs(s, d).select("vec_id", "embedding")
-        def pub(df: DataFrame): Unit = {
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/embeddings")
-          val moves = TxnCommit.movesFor(fs, w, cid, "embeddings")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pub(df: DataFrame): Unit = publish(fs, w, "embeddings", df)
         pub(all.filter(col("vec_id") % 2 === 0))
         IvfStore.buildIndex(s, w,
           Snapshots.read(s, w, "embeddings"), dim = 64, k = 8)
@@ -328,21 +307,12 @@ object LlmQueries {
     // brute-force-over-SURVIVORS oracle proves a deleted vector can never
     // resurface through the index — the top-k would differ.
     "llm_ann_ivf_persisted_dml" -> ((s, d) => {
-      import graft.ingest.{Merge, Snapshots, TxnCommit}
+      import graft.ingest.{Merge, Snapshots}
       import graft.llmops.IvfStore
       val wh = Fixtures.once("llm_ann_ivf_persisted_dml", d) {
-        val w = java.nio.file.Files.createTempDirectory("graft-ivfstore-dml")
-          .resolve("wh").toString
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val (w, fs) = freshWh(s, "graft-ivfstore-dml")
         val all = embs(s, d).select("vec_id", "embedding")
-        def pub(df: DataFrame): Unit = {
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/embeddings")
-          val moves = TxnCommit.movesFor(fs, w, cid, "embeddings")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pub(df: DataFrame): Unit = publish(fs, w, "embeddings", df)
         pub(all)
         IvfStore.buildIndex(s, w,
           Snapshots.read(s, w, "embeddings"), dim = 64, k = 8)
@@ -367,16 +337,9 @@ object LlmQueries {
       import graft.ingest.{Merge, Snapshots, TxnCommit}
       import graft.llmops.IvfStore
       val wh = Fixtures.once("llm_ann_pq_dml", d) {
-        val w = java.nio.file.Files.createTempDirectory("graft-pq-dml")
-          .resolve("wh").toString
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val cid = java.util.UUID.randomUUID().toString
-        embs(s, d).select("vec_id", "embedding").coalesce(2)
-          .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/embeddings")
-        val moves = TxnCommit.movesFor(fs, w, cid, "embeddings")
-        TxnCommit.commit(fs, w, cid, moves)
-        TxnCommit.publish(fs, w, cid, moves)
+        val (w, fs) = freshWh(s, "graft-pq-dml")
+        TxnCommit.writeTables(fs, w, Seq("embeddings" ->
+          embs(s, d).select("vec_id", "embedding").coalesce(2).write))
         IvfStore.buildPqIndex(s, w,
           Snapshots.read(s, w, "embeddings"), dim = 64, k = 8, m = 8,
           ksub = 16, targetFiles = 4)
@@ -400,21 +363,12 @@ object LlmQueries {
     // floor; the pruning claim (probed buckets → index files, zero corpus
     // files) by its plan assertions.
     "llm_ann_lsh_persisted" -> ((s, d) => {
-      import graft.ingest.{Snapshots, TxnCommit}
+      import graft.ingest.Snapshots
       import graft.llmops.LshStore
       val wh = Fixtures.once("llm_ann_lsh_persisted", d) {
-        val w = java.nio.file.Files.createTempDirectory("graft-lshstore")
-          .resolve("wh").toString
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val (w, fs) = freshWh(s, "graft-lshstore")
         val all = embs(s, d).select("vec_id", "embedding")
-        def pub(df: DataFrame): Unit = {
-          val cid = java.util.UUID.randomUUID().toString
-          df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/embeddings")
-          val moves = TxnCommit.movesFor(fs, w, cid, "embeddings")
-          TxnCommit.commit(fs, w, cid, moves)
-          TxnCommit.publish(fs, w, cid, moves)
-        }
+        def pub(df: DataFrame): Unit = publish(fs, w, "embeddings", df)
         pub(all.filter(col("vec_id") % 2 === 0))
         LshStore.buildIndex(s, w,
           Snapshots.read(s, w, "embeddings"), dim = 64, numPlanes = 6)

@@ -181,12 +181,8 @@ object StreamQueries {
         val all = s.read.parquet(s"$d/embeddings.parquet")
           .select("vec_id", "embedding")
         // Bootstrap: first half committed + indexed in batch.
-        val cid = java.util.UUID.randomUUID().toString
-        all.filter(col("vec_id") % 2 === 0).coalesce(1)
-          .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/embeddings")
-        val moves = TxnCommit.movesFor(fs, w, cid, "embeddings")
-        TxnCommit.commit(fs, w, cid, moves)
-        TxnCommit.publish(fs, w, cid, moves)
+        TxnCommit.writeTables(fs, w, Seq("embeddings" ->
+          all.filter(col("vec_id") % 2 === 0).coalesce(1).write))
         IvfStore.buildIndex(s, w,
           Snapshots.read(s, w, "embeddings"), dim = 64, k = 8)
         // The second half arrives as a STREAM, one file per trigger.
@@ -222,12 +218,8 @@ object StreamQueries {
         val nation = s.read.parquet(s"$d/nation.parquet")
           .select(col("n_nationkey").cast("long").as("n_nationkey"),
             col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"))
-        val cid = java.util.UUID.randomUUID().toString
-        nation.coalesce(1)
-          .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/nation_sm")
-        val moves = TxnCommit.movesFor(fs, w, cid, "nation_sm")
-        TxnCommit.commit(fs, w, cid, moves)
-        TxnCommit.publish(fs, w, cid, moves)
+        TxnCommit.writeTables(fs, w, Seq("nation_sm" ->
+          nation.coalesce(1).write))
         // Change batches: keys < 8 then keys 8-15 (+ one insertable and
         // one suppressed new key); keys 3 and 12 are deletes.
         val in = base.resolve("in").toString

@@ -75,7 +75,14 @@ object StreamingOps {
     * the streaming writer the snapshot table format implies: readers switch
     * batches atomically via the log, never observing a half-landed trigger. */
   def commitBatch(df: org.apache.spark.sql.DataFrame, warehouse: String,
-                  table: String, batchId: Long): Unit = {
+                  table: String, batchId: Long): Unit =
+    commitBatch(df, warehouse, table, batchId, Nil)
+
+  /** [[commitBatch]] whose log version also carries `metas`. */
+  private[graft] def commitBatch(df: org.apache.spark.sql.DataFrame,
+                                 warehouse: String, table: String,
+                                 batchId: Long,
+                                 metas: Seq[(String, String)]): Unit = {
     import graft.ingest.{Snapshots, TxnCommit}
     val spark = df.sparkSession
     val fs = new org.apache.hadoop.fs.Path(warehouse)
@@ -118,8 +125,10 @@ object StreamingOps {
     val staging = TxnCommit.stagingDir(warehouse, stagingId)
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$staging/$table")
     val moves = TxnCommit.movesFor(fs, warehouse, stagingId, table)
-    TxnCommit.commit(fs, warehouse, commitId, moves, txnId = Some(commitId))
-    TxnCommit.publish(fs, warehouse, commitId, moves, txnId = Some(commitId))
+    TxnCommit.commit(fs, warehouse, commitId, moves, txnId = Some(commitId),
+      metas = metas)
+    TxnCommit.publish(fs, warehouse, commitId, moves, txnId = Some(commitId),
+      metas = metas)
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     // Post-commit auto-compaction (table-property-gated, off by default;
     // best-effort, under its own commit — the epoch already published).

@@ -276,4 +276,22 @@ class IvfStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(loaded.centroids.map(_.toSeq).toSeq ==
       trained.centroids.map(_.toSeq).toSeq)
   }
+
+  test("buildIndex then buildPqIndex share one centroid set: full-probe search stays exact") {
+    val w = wh("whFlatThenPq")
+    pubEmb(w, 0 until 64)
+    val corpus = Snapshots.read(spark, w, "embeddings")
+    IvfStore.buildIndex(spark, w, corpus, Dim, k = 4, targetFiles = 2)
+    IvfStore.buildPqIndex(spark, w, corpus, Dim, k = 4, m = 8, ksub = 16,
+      targetFiles = 2)
+    // The PQ build replaces the shared centroids and re-assigns the flat
+    // postings under them in the same commit.
+    assert(Snapshots.read(spark, w, IvfStore.CentroidTable).count() == 4)
+    val queries = embDf(0 until 6)
+    val got = IvfStore.topK(spark, w, queries, k = 10, nprobe = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    val want = Similarity.bruteForceTopK(queries, embDf(0 until 64), 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    assert(got == want)
+  }
 }

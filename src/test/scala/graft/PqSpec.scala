@@ -170,6 +170,26 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shortcut == pqExact)
   }
 
+  test("below full probe a multi-query batch never takes the full-refine shortcut") {
+    val w = wh("partial")
+    pubEmb(w, embDf(300))
+    val corpus = Snapshots.read(spark, w, "embeddings")
+    IvfStore.buildPqIndex(spark, w, corpus, dim = Dim, k = 8, m = 8,
+      ksub = 16, targetFiles = 2)
+    // Queries from every cluster: the batch's probed cells are all cells,
+    // each query's own nearest cell is one of them.
+    val queries = corpus.filter(col("vec_id") < 16)
+    // k·refine past Int.MaxValue asks for the shortcut; a windowed call
+    // whose refine covers every candidate must give the same answer.
+    Seq((10, Int.MaxValue), (50, Int.MaxValue / 16)).foreach { case (k, big) =>
+      val full = IvfStore.pqTopK(spark, w, queries, k = k, nprobe = 1,
+        refine = big).orderBy("q_id", "rnk").collect().toSeq
+      val windowed = IvfStore.pqTopK(spark, w, queries, k = k, nprobe = 1,
+        refine = 300).orderBy("q_id", "rnk").collect().toSeq
+      assert(full == windowed, s"k=$k refine=$big")
+    }
+  }
+
   test("corpus deletes propagate into the code postings") {
     val w = wh("dml")
     pubEmb(w, embDf(300))

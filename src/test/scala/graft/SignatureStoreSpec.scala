@@ -36,12 +36,12 @@ class SignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def doc(i: Int): (Long, String) =
     i.toLong -> (0 until 10).map(t => s"t${t}x$i").mkString(" ")
 
-  private def pubDocs(w: String, rows: Seq[(Long, String)]): Unit = {
-    val s0 = spark
-    import s0.implicits._
+  private def pubDocs(w: String, rows: Seq[(Long, String)]): Unit =
+    pubDf(w, toDf(rows))
+
+  private def pubDf(w: String, df: DataFrame): Unit = {
     val cid = java.util.UUID.randomUUID().toString
-    rows.toDF("doc_id", "text").coalesce(1)
-      .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/documents")
+    df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/documents")
     val moves = TxnCommit.movesFor(fs, w, cid, "documents")
     TxnCommit.commit(fs, w, cid, moves)
     TxnCommit.publish(fs, w, cid, moves)
@@ -171,5 +171,70 @@ class SignatureStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = SignatureStore.incrementalNearDupPairs(
       spark, w, "documents", toDf(batch2), "doc_id", "text")
     assert(res.count() == 0, "a deleted doc resurfaced as a dedup endpoint")
+  }
+
+  test("an unstamped or other-kernel store is refused by append and by query, naming the key") {
+    val corpus = (0 until 5).map(doc)
+    val batch = Seq(100L -> (doc(1)._2 + " zz"))
+    def refused(w: String, key: String): Unit = {
+      val onAppend = intercept[IllegalArgumentException](
+        SignatureStore.appendBatch(spark, w, toDf(batch), "doc_id", "text"))
+      assert(onAppend.getMessage.contains(key), onAppend.getMessage)
+      val onQuery = intercept[IllegalArgumentException](
+        SignatureStore.incrementalNearDupPairs(spark, w, "documents",
+          toDf(batch), "doc_id", "text").collect())
+      assert(onQuery.getMessage.contains(key), onQuery.getMessage)
+    }
+    // Band rows committed with no build stamp (a store from before stamps).
+    val unstamped = wh("whUnstamped")
+    pubDocs(unstamped, corpus ++ batch)
+    graft.streaming.StreamingOps.commitBatch(SignatureStore.bandRows(
+      toDf(corpus ++ batch), "doc_id", "text", 64, 16), unstamped,
+      "doc_signatures", 0L)
+    refused(unstamped, "index.kind")
+    // A store stamped by another signature kernel.
+    val oldKernel = wh("whOldKernel")
+    pubDocs(oldKernel, corpus ++ batch)
+    SignatureStore.appendBatch(spark, oldKernel, toDf(corpus ++ batch),
+      "doc_id", "text")
+    Snapshots.setProperties(fs, oldKernel, "doc_signatures",
+      Map("index.kernel" -> "1"))
+    refused(oldKernel, "index.kernel")
+    // An append under another banding scheme than the store's.
+    val schemed = wh("whScheme")
+    SignatureStore.appendBatch(spark, schemed, toDf(corpus), "doc_id", "text")
+    val ex = intercept[IllegalArgumentException](SignatureStore.appendBatch(
+      spark, schemed, toDf(batch), "doc_id", "text", numPerms = 32, numBands = 8))
+    assert(ex.getMessage.contains("index.numBands"), ex.getMessage)
+  }
+
+  test("int ids at or above 2^30 pair through both incremental paths; string ids are refused") {
+    val s0 = spark
+    import s0.implicits._
+    val base = 1L << 30
+    val corpus = (0 until 10).map(i => (base + i) -> doc(i)._2)
+    val batch = (0 until 3).map(i => (base + 100 + i) -> (doc(i)._2 + " zz"))
+    def ints(rows: Seq[(Long, String)]): DataFrame =
+      toDf(rows).select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    val want = (0 until 3).map(i => (base + i, base + 100 + i)).toSet
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+        .as[(Long, Long)].collect().toSet
+    assert(pairs(MinHash.incrementalNearDupPairs(ints(corpus ++ batch),
+      ints(batch).select("doc_id"), "doc_id", "text")) == want)
+    val w = wh("whIntIds")
+    pubDf(w, ints(corpus))
+    SignatureStore.appendBatch(spark, w, ints(corpus), "doc_id", "text")
+    pubDf(w, ints(batch))
+    SignatureStore.appendBatch(spark, w, ints(batch), "doc_id", "text")
+    assert(pairs(SignatureStore.incrementalNearDupPairs(spark, w, "documents",
+      ints(batch), "doc_id", "text")) == want)
+    // Non-integral ids cannot ride the (id·2 + fresh) encoding: refused up
+    // front, naming the column and its type.
+    val strs = toDf(corpus ++ batch)
+      .select(col("doc_id").cast("string").as("doc_id"), col("text"))
+    val ex = intercept[IllegalArgumentException](MinHash.incrementalNearDupPairs(
+      strs, strs.select("doc_id"), "doc_id", "text").collect())
+    assert(ex.getMessage.contains("'doc_id' is string"), ex.getMessage)
   }
 }

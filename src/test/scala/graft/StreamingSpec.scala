@@ -108,8 +108,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     implicit val sc = s.sqlContext
-    val wh = Files.createTempDirectory("graft-stream-dedup").toString
-    val ckpt = Files.createTempDirectory("graft-stream-dedup-ckpt").toString
     def doc(i: Long): (Long, String) =
       (i, s"document number $i talks at length about topic ${i % 3} with " +
         s"many shared words and a distinctive tail token t$i plus filler " +
@@ -118,29 +116,46 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch1 = Seq(doc(1), doc(2), doc(3), dup(1)) // near-dup inside batch 1
     val batch2 = Seq(doc(4), doc(5), dup(2), dup(4)) // cross-batch + in-batch dups
 
-    val input = MemoryStream[(Long, String)]
-    input.addData(batch1: _*)
-    val q = graft.llmops.SignatureStore.streamingIncrementalDedup(
-      input.toDF().toDF("doc_id", "text"), wh, ckpt)
-    q.awaitTermination()
-    input.addData(batch2: _*)
-    val q2 = graft.llmops.SignatureStore.streamingIncrementalDedup(
-      input.toDF().toDF("doc_id", "text"), wh, ckpt)
-    q2.awaitTermination()
+    // Inputs: a fresh store (the default 64/16 scheme, stamped by the
+    // first trigger) and a store built empty under a non-default scheme,
+    // which every trigger must read back from its stamp.
+    Seq(None, Some((32, 8))).foreach { scheme =>
+      val wh = Files.createTempDirectory("graft-stream-dedup").toString
+      val ckpt = Files.createTempDirectory("graft-stream-dedup-ckpt").toString
+      val (numPerms, numBands) = scheme.getOrElse((64, 16))
+      scheme.foreach { case (p, b) =>
+        graft.llmops.SignatureStore.appendBatch(spark, wh,
+          Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text",
+          numPerms = p, numBands = b)
+      }
+      val input = MemoryStream[(Long, String)]
+      input.addData(batch1: _*)
+      val q = graft.llmops.SignatureStore.streamingIncrementalDedup(
+        input.toDF().toDF("doc_id", "text"), wh, ckpt)
+      q.awaitTermination()
+      input.addData(batch2: _*)
+      val q2 = graft.llmops.SignatureStore.streamingIncrementalDedup(
+        input.toDF().toDF("doc_id", "text"), wh, ckpt)
+      q2.awaitTermination()
 
-    val streamed = graft.ingest.Snapshots.read(spark, wh, "dup_pairs")
-      .select("doc_a", "doc_b").distinct().as[(Long, Long)].collect().toSet
-    val oneShot = graft.llmops.MinHash.nearDupPairs(
-        (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(oneShot.nonEmpty && oneShot.exists { case (a, b) => b - a == 1000 })
-    assert(streamed == oneShot) // exactly the batch result, no pair lost or doubled
-    assert(graft.ingest.Snapshots.read(spark, wh, "documents").count() == 8)
-    // crash-replay of the last trigger: all three commits dedup by batchId
-    val before = graft.ingest.Snapshots.read(spark, wh, "dup_pairs").count()
-    StreamingOps.commitBatch(batch2.toDF("doc_id", "text"), wh, "documents", 1L)
-    assert(graft.ingest.Snapshots.read(spark, wh, "documents").count() == 8)
-    assert(graft.ingest.Snapshots.read(spark, wh, "dup_pairs").count() == before)
+      val streamed = graft.ingest.Snapshots.read(spark, wh, "dup_pairs")
+        .select("doc_a", "doc_b").distinct().as[(Long, Long)].collect().toSet
+      val oneShot = graft.llmops.MinHash.nearDupPairs(
+          (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text",
+          numPerms = numPerms, numBands = numBands)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      assert(oneShot.nonEmpty && oneShot.exists { case (a, b) => b - a == 1000 })
+      assert(streamed == oneShot, s"scheme $scheme") // no pair lost or doubled
+      // The store's rows carry the stamped scheme, not a default.
+      assert(graft.ingest.Snapshots.read(spark, wh, "doc_signatures")
+        .select("band").distinct().count() == numBands)
+      assert(graft.ingest.Snapshots.read(spark, wh, "documents").count() == 8)
+      // crash-replay of the last trigger: all three commits dedup by batchId
+      val before = graft.ingest.Snapshots.read(spark, wh, "dup_pairs").count()
+      StreamingOps.commitBatch(batch2.toDF("doc_id", "text"), wh, "documents", 1L)
+      assert(graft.ingest.Snapshots.read(spark, wh, "documents").count() == 8)
+      assert(graft.ingest.Snapshots.read(spark, wh, "dup_pairs").count() == before)
+    }
   }
 
   test("streaming file ingest discovers new reference-format files incrementally") {

@@ -188,21 +188,24 @@ object VectorExprs {
   }
 
   def nearestCells(vec: ArrayData, centroids: Array[Float], dim: Int, n: Int): ArrayData = {
+    // Every IVF/PQ append, sync and query assigns through here, so a
+    // vector of the wrong dimension fails here instead of landing in a cell.
+    if (vec.numElements() != dim) throw new IllegalArgumentException(
+      s"vector has dim ${vec.numElements()}, the index expects dim $dim")
     val k = centroids.length / dim
     val nn = math.min(n, k)
     val ids = new Array[Int](nn)
     val sc = new Array[Double](nn)
     var filled = 0
-    val vn = math.min(dim, vec.numElements())
     var nv = 0.0
     var j = 0
-    while (j < vn) { val x = vec.getFloat(j).toDouble; nv += x * x; j += 1 }
+    while (j < dim) { val x = vec.getFloat(j).toDouble; nv += x * x; j += 1 }
     var c = 0
     while (c < k) {
       val off = c * dim
       var dot = 0.0; var nc = 0.0
       var i = 0
-      while (i < vn) {
+      while (i < dim) {
         val x = vec.getFloat(i).toDouble
         val y = centroids(off + i).toDouble
         dot += x * y; nc += y * y

@@ -2274,20 +2274,12 @@ object Snapshots {
       .groupBy(f => (partitionColumns(Seq(f._1.partition)), f._1.dv))
       .toSeq.sortBy { case ((layout, dv), _) => (layout.mkString("/"), dv) }
       .flatMap { case ((layout, _), files) => appendRead(files, layout.nonEmpty) }
-    val cdf = {
-      val files = cdfList
-      if (files.isEmpty) None
-      else {
-        // Same uniform-signature inference skip as the append read above;
-        // change files without stats tags keep the footer merge (sound).
-        val r0 = spark.read.option("mergeSchema", true)
-        val r = if (uniformStatsSchema(files.map(_._1)))
-          r0.schema(cachedFileSchema(spark, files.head._1.file)) else r0
-        Some(withVersion(
-          r.parquet(files.map(_._1.file).distinct: _*),
-          files))
-      }
-    }
+    // Change files always take the footer merge: CDF log lines carry no
+    // stats token, so no schema tag can vouch for them.
+    val cdf =
+      if (cdfList.isEmpty) None
+      else Some(withVersion(spark.read.option("mergeSchema", true)
+        .parquet(cdfList.map(_._1.file).distinct: _*), cdfList))
     val frames = appends ++ cdf.toSeq
     if (frames.isEmpty)
       read(spark, warehouse, table, Some(to))

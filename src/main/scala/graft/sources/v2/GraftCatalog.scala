@@ -28,10 +28,12 @@ import graft.ingest.{SchemaEvolution, Snapshots}
   * }}}
   *
   * Reads resolve to [[GraftCatalogTable]] (BATCH_READ): correct in any
-  * session via the per-file DSv2 batch scan (log-planned files, partition
-  * tuples from the log, DV subtraction, column mapping, stats-pruned by
-  * pushed filters); sessions with `GraftSqlExtensions` splice the relation
-  * into the vectorized parquet plan pre-CBO, so large scans run columnar.
+  * session via the per-file DSv2 batch scan (log-planned files decoded by
+  * Spark's own parquet reader, so every type Spark's parquet format
+  * serves; partition tuples from the log, DV subtraction, column mapping,
+  * stats-pruned by pushed filters); sessions with `GraftSqlExtensions`
+  * splice the relation into the vectorized parquet plan pre-CBO, so large
+  * scans run columnar.
   * Writes stage through the vectorized [[SnapshotDataWriter]] and publish
   * one TxnCommit version per job. Table identity lives in the log alone —
   * no metastore: CREATE TABLE declares schema/partitioning as table
@@ -282,9 +284,8 @@ class GraftCatalog extends TableCatalog
 
   /** Metadata-only evolution (the column mapping) tracks TOP-LEVEL
     * columns; a struct's interior cannot evolve without rewriting files —
-    * and this is PERMANENT (decided round 15, COVERAGE.md): the format is
-    * flat-relational by design, every write surface refuses struct
-    * columns, so nested DDL can only ever meet pre-catalog legacy files.
+    * and this is PERMANENT (decided round 15, COVERAGE.md): struct columns
+    * are stored and served as whole values, never remapped inside.
     * The error names the EXECUTABLE flatten path (a catalog CREATE OR
     * REPLACE cannot read the struct table — the API read can), so a user
     * is never stranded. */
@@ -482,8 +483,9 @@ object GraftCatalog {
 }
 
 /** Catalog-resolved table: the DSv2 [[SnapshotTable]] surface plus batch
-  * capabilities — BATCH_READ through the log-planned per-file scan (or the
-  * spliced vectorized plan under the graft extensions), BATCH_WRITE /
+  * capabilities — BATCH_READ through the log-planned per-file scan (each
+  * file decoded by Spark's parquet reader; under the graft extensions the
+  * relation is spliced into a plain file-source plan), BATCH_WRITE /
   * TRUNCATE through the staged TxnCommit write. The table's identity
   * (warehouse/table/pinned version) and partition layout ride its
   * properties into every scan and write, so SQL needs no per-query

@@ -1,7 +1,8 @@
 package graft.sources.v2
 
 import java.util
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -9,19 +10,14 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import graft.ingest.{Snapshots, TxnCommit}
+import graft.ingest.{FileStats, Snapshots, TxnCommit}
 
 /** Structured Streaming source over the [[Snapshots]] log — the read-side
   * dual of the exactly-once transactional sink: offsets ARE snapshot
@@ -54,10 +50,10 @@ import graft.ingest.{Snapshots, TxnCommit}
   * from the log's recorded tuples — constant per file, appended by the
   * reader, no path parsing.
   *
-  * The row decode is a plain parquet Group walk supporting flat schemas of
-  * Spark's primitive types (long/int/double/float/boolean/string/binary/
-  * date/timestamp incl. INT96) — nested columns are rejected at plan time
-  * with a clear error. Reference: the reference's tail-the-bucket loop
+  * Rows are decoded by Spark's own parquet reader
+  * ([[SnapshotFileReaderFactory]]), so the stream serves every type Spark's
+  * parquet format serves — decimals, arrays, structs, maps included.
+  * Reference: the reference's tail-the-bucket loop
   * (huckli-import/src/lib.rs:150-210) replayed as a log-offset stream.
   */
 class SnapshotDataSource extends TableProvider with DataSourceRegister
@@ -73,9 +69,9 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
     * the V1 fallback: the DSv2 table advertises MICRO_BATCH_READ only, so
     * DataFrameReader lands here and gets a relation that delegates to the
     * log-pinned [[Snapshots.read]] plan — vectorized parquet IO, log-side
-    * stats/partition skipping, column pruning — instead of a bespoke
-    * row-at-a-time reader (that one exists for tailing small commits, the
-    * wrong tool for a backfill). */
+    * stats/partition skipping, column pruning — instead of one input
+    * partition per file (the stream's shape, made for tailing small
+    * commits, the wrong tool for a backfill). */
   override def createRelation(sqlContext: org.apache.spark.sql.SQLContext,
                               parameters: Map[String, String])
       : org.apache.spark.sql.sources.BaseRelation = {
@@ -420,17 +416,12 @@ object SnapshotDataSource {
     else base.add("_change_type", StringType).add("_commit_version", LongType)
   }
 
-  /** Partition-spec `k=v` values for the columns NOT present in data files,
-    * parsed to the schema's types at read time. */
-  private[v2] def validate(schema: StructType): Unit = schema.fields.foreach { f =>
-    f.dataType match {
-      case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-           StringType | BinaryType | DateType | TimestampType => ()
-      case other => throw new UnsupportedOperationException(
-        s"graft-snapshots streaming reads flat primitive schemas; " +
-          s"column '${f.name}' has unsupported type $other")
-    }
-  }
+  /** The DSv2 scans and the sink serve exactly what Spark's parquet
+    * format serves: the check `df.write.parquet` applies. */
+  private[v2] def validate(schema: StructType): Unit =
+    org.apache.spark.sql.execution.datasources.DataSourceUtils.verifySchema(
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      schema)
 }
 
 class SnapshotTable(tableSchema: StructType, properties: util.Map[String, String])
@@ -603,8 +594,8 @@ class SnapshotScanBuilder(tableSchema: StructType,
   }
   // -----------------------------------------------------------------------
 
-  // Column pruning: ship only projected fields; the Group walk still reads
-  // the file's pages but materializes just the kept columns per row.
+  // Column pruning: ship only projected fields; the parquet reader reads
+  // just the kept columns' pages.
   private var requiredSchema: StructType = tableSchema
   override def pruneColumns(required: StructType): Unit = {
     val keep = required.fieldNames.toSet
@@ -748,39 +739,15 @@ class SnapshotBatch(warehouse: String, table: String, pinned: Option[Long],
   private def fs = new Path(warehouse)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def survivors: Seq[Snapshots.Action] =
-    Snapshots.prunedFileMeta(fs, warehouse, table, pinned, pred)
+  private lazy val facts = new SnapshotFileFacts(fs, warehouse, table, pinned)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // Initial-defaults: attach (logical → literal) for columns a file
-    // predates, decided per file from the log's schema tags (a tagless
-    // file conservatively serves null).
-    val mapping = Snapshots.columnMapping(fs, warehouse, table, pinned)
-    val physDefaults = Snapshots.columnDefaults(
-      fs, warehouse, table, pinned, mapping)
-    val toLogical: Map[String, String] =
-      mapping.map(_.cols.map { case (l, p) => p -> l }.toMap)
-        .getOrElse(Map.empty)
-    survivors
-      .map { a =>
-        val present = Snapshots.defaultPresence(a, physDefaults)
-        val dfl = physDefaults.collect {
-          case (phys, text) if !present(phys) =>
-            toLogical.getOrElse(phys, phys) -> text
-        }
-        SnapshotInputPartition(a.file, a.partitionMap,
-          pinned.getOrElse(-1L), None, a.dvPath, dfl): InputPartition
-      }
+  override def planInputPartitions(): Array[InputPartition] =
+    Snapshots.prunedFileMeta(fs, warehouse, table, pinned, pred)
+      .map(a => facts.partition(a, pinned.getOrElse(-1L)): InputPartition)
       .toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotReaderFactory(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
-      schema,
-      Snapshots.columnMapping(fs, warehouse, table, pinned)
-        .map(_.cols.toMap).getOrElse(Map.empty),
-      sessionTz = spark.sessionState.conf.sessionLocalTimeZone)
+    facts.readerFactory(schema)
 }
 
 /** Offset = snapshot log version (inclusive high-water mark), plus an
@@ -893,7 +860,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
       val all = unitsInRange(from, logEnd)
       val countByVersion = all.groupBy(_._1).map { case (v, us) => (v, us.size) }
       checkUnitsFingerprint(s, countByVersion.getOrElse(s.version, 0))
-      val pending = all.filter { case (v, i, _, _, _) =>
+      val pending = all.filter { case (v, i, _, _) =>
         v > s.version || (s.index >= 0 && v == s.version && i >= s.index) }
       if (pending.isEmpty) SnapshotVersionOffset(logEnd)
       else {
@@ -902,7 +869,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
         var admittedAll = true
         val it = pending.iterator
         while (admittedAll && it.hasNext) {
-          val (v, i, p, nRows, nBytes) = it.next()
+          val (v, i, p, nRows) = it.next()
           // Byte accounting only when a byte limit is set. Sizes come from
           // the log's stats token (recorded at collect time — zero RPCs);
           // only a pre-size-token file pays a getFileStatus fallback. Row
@@ -910,7 +877,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
           // as trigger-filling — conservative, still progresses via the
           // at-least-one rule.
           val sz = if (maxBytes.isDefined)
-            nBytes.getOrElse {
+            if (p.bytes >= 0) p.bytes else {
               SnapshotMicroBatchStream.sizeFallbackRpcs.incrementAndGet()
               fs.getFileStatus(new Path(p.file)).getLen
             }
@@ -976,7 +943,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
 
   /** Ordered servable file units over versions in (fromExclusive,
     * toInclusive]: (version, ordinal-within-version, partition, log-stats
-    * row count, log-stats byte size). Log-line order, deterministic across calls — admission
+    * row count). Log-line order, deterministic across calls — admission
     * accounting in latestOffset and the slice in planInputPartitions walk
     * the SAME list, so an offset minted by one is exact for the other.
     *
@@ -985,9 +952,9 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
     * moments later. Committed log entries are immutable, so the prefix of
     * the cached walk IS that narrower range — slice, don't re-list. */
   @volatile private var unitsCache
-      : (Long, Long, Seq[(Long, Int, SnapshotInputPartition, Option[Long], Option[Long])]) = null
+      : (Long, Long, Seq[(Long, Int, SnapshotInputPartition, Option[Long])]) = null
   private def unitsInRange(fromExclusive: Long, toInclusive: Long)
-      : Seq[(Long, Int, SnapshotInputPartition, Option[Long], Option[Long])] = {
+      : Seq[(Long, Int, SnapshotInputPartition, Option[Long])] = {
     val c = unitsCache
     if (c != null && c._1 == fromExclusive && c._2 >= toInclusive)
       c._3.filter(_._1 <= toInclusive)
@@ -996,7 +963,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
         .flatMap { case (v, op, acts) =>
           unitsForVersion(v, op, acts).zipWithIndex.map {
             case ((p, st), i) =>
-              (v, i, p, st.map(_.rows), st.map(_.bytes).filter(_ >= 0))
+              (v, i, p, st.map(_.rows))
           }
         }
       unitsCache = (fromExclusive, toInclusive, u)
@@ -1030,7 +997,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
       checkUnitsFingerprint(so,
         unitsInRange(s, eo.version).count(_._1 == so.version))
     unitsInRange(s, eo.version).collect {
-      case (v, i, p, _, _)
+      case (v, i, p, _)
         if (v > so.version || (so.index >= 0 && i >= so.index)) &&
            (v < eo.version || eo.index < 0 || i < eo.index) => p: InputPartition
     }.toArray
@@ -1060,7 +1027,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
               s"snapshot version $v is a $op commit without change files " +
                 "— the change-feed stream cannot represent it")
             // CDF files carry _change_type per row; version is constant.
-            cdfs.map(a => (SnapshotInputPartition(a.file, Map.empty, v, None),
+            cdfs.map(a => (facts.partition(a, v),
               graft.ingest.FileStats.decode(a.stats)))
           } else if (skipChangeCommits) Nil
           else throw new IllegalStateException(
@@ -1081,41 +1048,19 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
               if (a.dv.nonEmpty)
                 s.copy(rows = math.max(0L, s.rows - a.dvCount))
               else s)
-            (SnapshotInputPartition(a.file, a.partitionMap, v,
-              Some("insert"), a.dvPath, defaultsFor(a)), st)
+            (facts.partition(a, v), st)
           }
         }
   }
 
-  // Initial-defaults for a streamed file that predates a defaulted column
-  // (a new stream replaying old append commits must serve what the batch
-  // read serves). Current-era properties/mapping, like the stream schema.
-  private lazy val streamDefaults: (Map[String, String], Map[String, String]) = {
-    val mapping = Snapshots.columnMapping(fs, warehouse, table)
-    val phys = Snapshots.columnDefaults(fs, warehouse, table, None, mapping)
-    val toLogical = mapping.map(_.cols.map { case (l, p) => p -> l }.toMap)
-      .getOrElse(Map.empty[String, String])
-    (phys, toLogical)
-  }
-  private def defaultsFor(a: Snapshots.Action): Map[String, String] = {
-    val (phys, toLogical) = streamDefaults
-    if (phys.isEmpty) Map.empty
-    else {
-      val present = Snapshots.defaultPresence(a, phys)
-      phys.collect { case (p, text) if !present(p) =>
-        toLogical.getOrElse(p, p) -> text }
-    }
-  }
+  // Current-era mapping and initial-defaults, like the stream schema: a
+  // new stream replaying old append commits serves what the batch read
+  // serves. Captured once — physical names never change across renames,
+  // so the mapping stays valid for the stream's lifetime.
+  private lazy val facts = new SnapshotFileFacts(fs, warehouse, table, None)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotReaderFactory(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()), schema,
-      // Column mapping: the stream's schema is LOGICAL; files store stable
-      // physical names. Captured once — physical names never change across
-      // renames, so the map stays valid for the stream's lifetime.
-      Snapshots.columnMapping(fs, warehouse, table)
-        .map(_.cols.toMap).getOrElse(Map.empty),
-      sessionTz = spark.sessionState.conf.sessionLocalTimeZone)
+    facts.readerFactory(schema)
 
   override def deserializeOffset(json: String): Offset = {
     def field(name: String): Option[Long] =
@@ -1135,234 +1080,207 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
   override def stop(): Unit = ()
 }
 
-/** `changeType` = Some(constant) for data files (appends are all inserts);
-  * None for change files, whose `_change_type` column is read per row.
-  * `dvPath` nonempty = a restore re-ADD carrying a deletion vector: the
-  * reader loads the vector's positions for this file and skips them. */
-/** `defaults`: LOGICAL column name → SQL literal text for columns this
-  * file predates (initial-defaults, [[Snapshots.columnDefaults]]) — the
-  * reader serves the constant instead of null. */
+/** One committed file as a DSv2 input partition, with the facts the log
+  * knows and the file does not: `partSpec` is its partition tuple,
+  * `version` fills `_commit_version`, `changeType` fills `_change_type`
+  * for data files (appends are all inserts; None for change files, whose
+  * `_change_type` column is read per row), `dvPath` nonempty = a deletion
+  * vector whose positions are subtracted, `defaults` maps the LOGICAL name
+  * of each column this file predates to its stored SQL literal
+  * (initial-defaults, [[Snapshots.columnDefaults]]), and `bytes` is the
+  * file's length from the log's stats token (-1: token absent, the reader
+  * asks the filesystem once). */
 case class SnapshotInputPartition(file: String, partSpec: Map[String, String],
                                   version: Long,
                                   changeType: Option[String] = None,
                                   dvPath: String = "",
-                                  defaults: Map[String, String] = Map.empty)
+                                  defaults: Map[String, String] = Map.empty,
+                                  bytes: Long = -1L)
   extends InputPartition
 
-case class SnapshotReaderFactory(conf: SerializableConfiguration,
-                                 schema: StructType,
-                                 nameMap: Map[String, String] = Map.empty,
-                                 sessionTz: String =
-                                   java.util.TimeZone.getDefault.getID)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SnapshotPartitionReader(
-      partition.asInstanceOf[SnapshotInputPartition], conf, schema, nameMap,
-      sessionTz)
+/** The per-file facts of one table at one version (`asOf` None = the
+  * current era, the era a stream's schema comes from), shared by the
+  * catalog batch scan and the snapshot stream: the column mapping the
+  * reader resolves names through and each file's initial-defaults. */
+private[v2] class SnapshotFileFacts(fs: FileSystem, warehouse: String,
+                                    table: String, asOf: Option[Long]) {
+  private lazy val mapping = Snapshots.columnMapping(fs, warehouse, table, asOf)
+  private lazy val physDefaults =
+    Snapshots.columnDefaults(fs, warehouse, table, asOf, mapping)
+  private lazy val toLogical: Map[String, String] =
+    mapping.map(_.cols.map { case (l, p) => p -> l }.toMap).getOrElse(Map.empty)
+
+  /** `a` served at `version`. Change files carry their own
+    * `_change_type` and never a default or a vector. */
+  def partition(a: Snapshots.Action, version: Long): SnapshotInputPartition = {
+    val bytes = FileStats.decode(a.stats).map(_.bytes).filter(_ >= 0)
+      .getOrElse(-1L)
+    if (a.cdf) SnapshotInputPartition(a.file, Map.empty, version, bytes = bytes)
+    else {
+      val present = Snapshots.defaultPresence(a, physDefaults)
+      val defaults = physDefaults.collect { case (phys, text) if !present(phys) =>
+        toLogical.getOrElse(phys, phys) -> text }
+      SnapshotInputPartition(a.file, a.partitionMap, version, Some("insert"),
+        a.dvPath, defaults, bytes)
+    }
+  }
+
+  def readerFactory(schema: StructType): PartitionReaderFactory =
+    new SnapshotFileReaderFactory(schema,
+      mapping.map(_.cols.toMap).getOrElse(Map.empty))
 }
 
-/** Reads one committed parquet file with the parquet-mr Group API (no
-  * Spark datasource re-entry inside a DSv2 reader), emitting projected
-  * columns as InternalRow. Partition columns (absent from the file) are
-  * served as constants from the log's recorded tuple. */
-class SnapshotPartitionReader(p: SnapshotInputPartition,
-                              conf: SerializableConfiguration,
-                              schema: StructType,
-                              nameMap: Map[String, String] = Map.empty,
-                              sessionTz: String =
-                                java.util.TimeZone.getDefault.getID)
-  extends PartitionReader[InternalRow] {
+/** Reads committed files through Spark's own parquet reader
+  * ([[ParquetPartitionReaderFactory]]: vectorized, every type Spark's
+  * parquet format serves, safe widening, INT96) and adds only what the log
+  * knows per file: partition tuple, `_commit_version`/`_change_type`,
+  * initial-defaults, deletion-vector subtraction. Constructed driver-side;
+  * `schema` is LOGICAL, `nameMap` maps it to the files' physical names. */
+class SnapshotFileReaderFactory(schema: StructType,
+                                nameMap: Map[String, String])
+  extends PartitionReaderFactory {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, JoinedRow, Literal, UnsafeProjection}
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
-  private val reader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.file), conf.value))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  private val columnIO = new ColumnIOFactory().getColumnIO(fileSchema)
+  private val sessionTz =
+    SparkSession.active.sessionState.conf.sessionLocalTimeZone
+  // All nullable: a column the file lacks (partition, metadata, defaulted)
+  // reads as null before its per-file constant replaces it.
+  private val fileSchema = StructType(schema.map(f =>
+    f.copy(name = nameMap.getOrElse(f.name, f.name), nullable = true)))
+  private val plain = SnapshotFileReaderFactory.parquet(fileSchema)
+  // Files with a deletion vector also read Spark's file-wide row index —
+  // the position `_metadata.row_index` serves and vectors record.
+  private val withRowIndex = SnapshotFileReaderFactory.parquet(fileSchema.add(
+    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
+  private val dvRows = SnapshotFileReaderFactory.parquet(new StructType()
+    .add("_dv_data_file", StringType).add("_dv_pos", LongType))
 
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var remaining = 0L
-  private var current: Group = _
-  // File-wide row position (across row groups, in file order) — the same
-  // index `_metadata.row_index` serves in batch, which is what deletion
-  // vectors record.
-  private var rowIdx = -1L
-
-  /** Deleted positions of THIS data file from the attached deletion
-    * vector (null = no vector). The DV parquet bundles several files'
-    * deletion sets; filter by the scheme-less encoded path key — the same
-    * join key `Snapshots.applyDv` uses in batch. Bounded: a vector is a
-    * per-file deletion set (heavy deletion is compaction's job). */
-  private val deleted: java.util.HashSet[java.lang.Long] =
-    if (p.dvPath.isEmpty) null
-    else {
-      val key = Snapshots.pathKey(p.file)
-      val set = new java.util.HashSet[java.lang.Long]()
-      val dvReader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(p.dvPath), conf.value))
-      try {
-        val dvSchema = dvReader.getFooter.getFileMetaData.getSchema
-        val io = new ColumnIOFactory().getColumnIO(dvSchema)
-        val fIdx = dvSchema.getFieldIndex("_dv_data_file")
-        val posIdx = dvSchema.getFieldIndex("_dv_pos")
-        var pages = dvReader.readNextRowGroup()
-        while (pages != null) {
-          val rr = io.getRecordReader(pages, new GroupRecordConverter(dvSchema))
-          var n = pages.getRowCount
-          while (n > 0) {
-            val g = rr.read()
-            if (g.getFieldRepetitionCount(fIdx) > 0 &&
-                new String(g.getBinary(fIdx, 0).getBytes,
-                  java.nio.charset.StandardCharsets.UTF_8) == key)
-              set.add(g.getLong(posIdx, 0))
-            n -= 1
-          }
-          pages = dvReader.readNextRowGroup()
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[SnapshotInputPartition]
+    val deleted = if (p.dvPath.isEmpty) null else deletedRows(p)
+    val rows = (if (deleted == null) plain else withRowIndex)
+      .buildReader(partitionedFile(p.file, p.bytes))
+    // Output column i is file column i, or — for a per-file constant —
+    // column i of a constants row joined after the file row.
+    val width = if (deleted == null) schema.length else schema.length + 1
+    val consts = new GenericInternalRow(schema.length)
+    val project = UnsafeProjection.create(schema.fields.toIndexedSeq.zipWithIndex
+      .map { case (f, i) =>
+        constant(f, p) match {
+          case Some(v) =>
+            consts.update(i, v); BoundReference(width + i, f.dataType, nullable = true)
+          case None => BoundReference(i, f.dataType, nullable = true)
         }
-      } finally dvReader.close()
-      set
-    }
-
-  /** Julian-day epoch offset for INT96 timestamps. */
-  private val JulianEpochDay = 2440588L
-
-  // One getter per projected column, resolved once. A column neither in the
-  // file nor in the partition spec reads as null (additive evolution). The
-  // change-feed metadata columns are constants per file — except
-  // `_change_type` of a change file, which is a real per-row column and
-  // falls through to the file path below.
-  private val getters: Array[Group => Any] = schema.fields.map { f =>
-    if (f.name == "_commit_version") {
-      val v = p.version
-      (_: Group) => v
-    } else if (f.name == "_change_type" && p.changeType.isDefined) {
-      val ct = UTF8String.fromString(p.changeType.get)
-      (_: Group) => ct
-    } else gettersFor(f)
-  }
-
-  private def gettersFor(f: org.apache.spark.sql.types.StructField): Group => Any = {
-    // Column mapping: schema names are logical, file fields physical
-    // (identity when unmapped — partition and feed columns included).
-    val phys = nameMap.getOrElse(f.name, f.name)
-    val idx = if (fileSchema.containsField(phys)) fileSchema.getFieldIndex(phys) else -1
-    if (idx >= 0) {
-      val ptype = fileSchema.getType(idx).asPrimitiveType()
-      val pname = ptype.getPrimitiveTypeName
-      val logical = ptype.getLogicalTypeAnnotation
-      val read: Group => Any = (f.dataType, pname) match {
-        case (LongType, PrimitiveTypeName.INT64) => g => g.getLong(idx, 0)
-        case (LongType, PrimitiveTypeName.INT32) => g => g.getInteger(idx, 0).toLong
-        case (IntegerType, PrimitiveTypeName.INT32) => g => g.getInteger(idx, 0)
-        case (DoubleType, PrimitiveTypeName.DOUBLE) => g => g.getDouble(idx, 0)
-        // Safe type widening: narrow files under the widened table type.
-        case (DoubleType, PrimitiveTypeName.FLOAT) =>
-          g => g.getFloat(idx, 0).toDouble
-        case (FloatType, PrimitiveTypeName.FLOAT) => g => g.getFloat(idx, 0)
-        case (BooleanType, PrimitiveTypeName.BOOLEAN) => g => g.getBoolean(idx, 0)
-        case (StringType, PrimitiveTypeName.BINARY) =>
-          g => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-        case (BinaryType, PrimitiveTypeName.BINARY) =>
-          g => g.getBinary(idx, 0).getBytes
-        case (DateType, PrimitiveTypeName.INT32) => g => g.getInteger(idx, 0)
-        case (TimestampType, PrimitiveTypeName.INT64) =>
-          val toMicros: Long => Long = logical match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                if t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS => _ * 1000L
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => _ / 1000L
-            case _ => identity
-          }
-          g => toMicros(g.getLong(idx, 0))
-        case (TimestampType, PrimitiveTypeName.INT96) => g => {
-          val b = g.getInt96(idx, 0).getBytes // 8B nanos-of-day LE + 4B julian day LE
-          val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanos = buf.getLong; val jday = buf.getInt
-          (jday - JulianEpochDay) * 86400000000L + nanos / 1000L
-        }
-        case (dt, pt) => throw new UnsupportedOperationException(
-          s"column '${f.name}': cannot decode parquet $pt as Spark $dt")
+      })
+    val joined = new JoinedRow(null, consts)
+    new PartitionReader[InternalRow] {
+      override def next(): Boolean = {
+        var more = rows.next()
+        while (more && deleted != null && java.util.Arrays.binarySearch(
+            deleted, rows.get().getLong(schema.length)) >= 0)
+          more = rows.next()
+        more
       }
-      g => if (g.getFieldRepetitionCount(idx) == 0) null else read(g)
-    } else p.partSpec.get(f.name) match {
-      // The Hive null sentinel decodes to NULL for every type — a string
-      // partition column must never read back the literal sentinel, and
-      // typed columns must not throw on it (Spark's own path-inference
-      // read maps it to null; this reader must agree).
-      case Some(v) if v ==
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .DEFAULT_PARTITION_NAME =>
-        _ => null
-      case Some(v) =>
-        val const: Any = f.dataType match {
-          case StringType => UTF8String.fromString(v)
-          case IntegerType => v.toInt
-          case LongType => v.toLong
-          case DoubleType => v.toDouble
-          case BooleanType => v.toBoolean
-          case DateType => java.sql.Date.valueOf(v).toLocalDate.toEpochDay.toInt
-          case dt => throw new UnsupportedOperationException(
-            s"partition column '${f.name}' of type $dt not supported")
-        }
-        _ => const
-      case None => p.defaults.get(f.name) match {
-        // Initial-default for a column this file predates: parse the
-        // stored SQL literal with the SAME machinery as the batch read's
-        // injectDefaults (`expr(text).cast(colType)`) and fold it to one
-        // Catalyst-internal constant per file — identical semantics on
-        // both paths by construction (quoting/escapes via the real
-        // parser; decimal/timestamp/binary columns via Cast), instead of
-        // a hand-rolled strip-quotes + String#toX decode that diverged
-        // on legal literals.
-        case Some(text) =>
-          import org.apache.spark.sql.catalyst.expressions.Cast
-          val lit =
-            try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-              .parseExpression(text)
-            catch { case scala.util.control.NonFatal(ex) =>
-              throw new IllegalStateException(
-                s"unparseable stored DEFAULT '$text' for '${f.name}'", ex) }
-          require(lit.foldable,
-            s"stored DEFAULT '$text' for '${f.name}' is not a literal")
-          // Session timezone, captured DRIVER-side into the factory: the
-          // batch path (Snapshots.injectDefaults) evaluates the same cast
-          // under spark.sql.session.timeZone — a timestamp default must
-          // serve the identical instant on both read paths even when the
-          // session TZ differs from the executor JVM's default TZ.
-          val cast = Cast(lit, f.dataType, Some(sessionTz))
-          if (!cast.resolved) throw new UnsupportedOperationException(
-            s"DEFAULT '$text' cannot be cast to ${f.dataType} " +
-              s"for column '${f.name}'")
-          val const: Any = cast.eval(InternalRow.empty)
-          _ => const
-        case None => _ => null
-      }
+      override def get(): InternalRow = project(joined.withLeft(rows.get()))
+      override def close(): Unit = rows.close()
     }
   }
 
-  override def next(): Boolean = {
-    var found = false
-    var exhausted = false
-    while (!found && !exhausted) {
-      while (remaining == 0L && !exhausted) {
-        val pages = reader.readNextRowGroup()
-        if (pages == null) exhausted = true
-        else {
-          recordReader =
-            columnIO.getRecordReader(pages, new GroupRecordConverter(fileSchema))
-          remaining = pages.getRowCount
-        }
-      }
-      if (!exhausted) {
-        current = recordReader.read()
-        remaining -= 1
-        rowIdx += 1
-        if (deleted == null || !deleted.contains(rowIdx)) found = true
-      }
-    }
-    found
+  private def partitionedFile(file: String, bytes: Long): PartitionedFile = {
+    val path = new Path(file)
+    val len = if (bytes >= 0) bytes else path
+      .getFileSystem(plain.broadcastedConf.value.value).getFileStatus(path).getLen
+    PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0L, len,
+      Array.empty, 0L, len, Map.empty)
   }
 
-  override def get(): InternalRow =
-    new GenericInternalRow(getters.map(_.apply(current)))
+  /** Sorted deleted positions of THIS file. The vector's parquet bundles
+    * several files' deletion sets, keyed by the scheme-less encoded path —
+    * the join key `Snapshots.applyDv` uses in batch. */
+  private def deletedRows(p: SnapshotInputPartition): Array[Long] = {
+    val key = UTF8String.fromString(Snapshots.pathKey(p.file))
+    val rows = dvRows.buildReader(partitionedFile(p.dvPath, -1L))
+    val out = Array.newBuilder[Long]
+    try while (rows.next()) {
+      val r = rows.get()
+      if (r.getUTF8String(0) == key) out += r.getLong(1)
+    } finally rows.close()
+    val sorted = out.result()
+    java.util.Arrays.sort(sorted)
+    sorted
+  }
 
-  override def close(): Unit = reader.close()
+  /** The per-file constant serving `f`, if the log supplies one. */
+  private def constant(f: StructField, p: SnapshotInputPartition): Option[Any] =
+    if (f.name == "_commit_version") Some(p.version)
+    else if (f.name == "_change_type" && p.changeType.isDefined)
+      Some(UTF8String.fromString(p.changeType.get))
+    else p.partSpec.get(f.name) match {
+      // The Hive null sentinel decodes to NULL for every type, as in
+      // Spark's own path-inference read.
+      case Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .DEFAULT_PARTITION_NAME) => Some(null)
+      case Some(v) => Some(fold(Literal(v), f, v))
+      // Initial-default: the stored SQL literal, parsed and cast the way
+      // the batch read's `injectDefaults` does (`expr(text).cast(type)`).
+      case None => p.defaults.get(f.name).map { text =>
+        val lit =
+          try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+            .parseExpression(text)
+          catch { case scala.util.control.NonFatal(ex) =>
+            throw new IllegalStateException(
+              s"unparseable stored DEFAULT '$text' for '${f.name}'", ex) }
+        require(lit.foldable,
+          s"stored DEFAULT '$text' for '${f.name}' is not a literal")
+        fold(lit, f, text)
+      }
+    }
+
+  /** `e` cast to `f`'s type under the SESSION timezone (captured driver
+    * side, as the batch read evaluates it) and folded to one constant. */
+  private def fold(e: org.apache.spark.sql.catalyst.expressions.Expression,
+                   f: StructField, text: String): Any = {
+    val cast = Cast(e, f.dataType, Some(sessionTz))
+    if (!cast.resolved) throw new UnsupportedOperationException(
+      s"'$text' cannot be cast to ${f.dataType} for column '${f.name}'")
+    cast.eval(InternalRow.empty)
+  }
+}
+
+object SnapshotFileReaderFactory {
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** Spark's parquet reader for `readSchema`, its Hadoop conf primed the
+    * way `ParquetScan.createReaderFactory` primes it — the read-side
+    * mirror of the sink's `writeConf`. */
+  private def parquet(readSchema: StructType): ParquetPartitionReaderFactory = {
+    val spark = SparkSession.active
+    val sql = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    val json = readSchema.json
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sql.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sql.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sql.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sql.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sql.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetPartitionReaderFactory(sql,
+      spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
+      readSchema, readSchema, new StructType(), Array.empty, None,
+      new ParquetOptions(Map.empty[String, String], sql))
+  }
 }

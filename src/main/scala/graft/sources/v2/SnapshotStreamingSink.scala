@@ -39,8 +39,9 @@ import graft.ingest.{Snapshots, TxnCommit}
   * buffering only), the commit is O(files-in-epoch) driver work, and
   * readers flip to the new version atomically via the log. Schema and
   * constraint enforcement ride `TxnCommit.commit` like every other writer,
-  * so a stream cannot drift a table's schema. Flat primitive schemas only —
-  * the same surface the streaming reader serves. Output modes: append (one
+  * so a stream cannot drift a table's schema. Every type Spark's parquet
+  * format serves is accepted — the same surface the streaming reader
+  * serves. Output modes: append (one
   * ADD version per epoch) and complete (SupportsTruncate: one OVERWRITE
   * version per epoch — the streaming materialized-view shape); update mode
   * is rejected (upsert-by-key belongs to `foreachBatch` + `Merge.upsert`).
@@ -557,8 +558,8 @@ class SnapshotDataWriter(conf: Configuration, schema: StructType,
     c.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
     c.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
     c.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
-    // No variant columns pass validate(), but the schema converter parses
-    // the flag unconditionally.
+    // The schema converter reads this flag for every schema; off writes a
+    // variant column without the parquet logical-type annotation.
     c.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
     c
   }

@@ -279,8 +279,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       default = Some("TIMESTAMP'2024-01-02 03:04:05'"))
     // Binary-typed column default (same former crash class). A decimal
     // literal like DEFAULT 1.5 on a DOUBLE column folds through the same
-    // Cast path; DecimalType columns themselves are outside the flat
-    // DSv2 surface by design (validate()).
+    // Cast path.
     graft.ingest.SchemaEvolution.addColumn(spark, wh, "dlt", "bin",
       default = Some("X'0A0B'"))
     // A post-add file pins the columns' types (timestamp / binary).
@@ -779,5 +778,65 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // And the full query still returns exact rows.
     assert(spark.sql("SELECT id FROM graft.pr WHERE id > 50 ORDER BY id")
       .as[Long].collect().toSeq == Seq(100L, 200L))
+  }
+
+  test("decimal, array, struct and map columns serve on every DSv2 path") {
+    // decimal(20,0) is the uint64 fallback type; array<float> an embedding.
+    val ddl = "id BIGINT, big DECIMAL(20,0), emb ARRAY<FLOAT>, " +
+      "st STRUCT<a: INT, b: STRING>, m MAP<STRING, BIGINT>"
+    def rowsSql(ids: String) = s"""SELECT id,
+        CASE WHEN id = 3 THEN CAST('18446744073709551615' AS DECIMAL(20,0))
+             ELSE CAST(id AS DECIMAL(20,0)) END AS big,
+        array(CAST(id AS FLOAT), CAST(NULL AS FLOAT), 0.5F) AS emb,
+        named_struct('a', CAST(id AS INT), 'b', concat('s', id)) AS st,
+        map('k', id * 10) AS m
+      FROM VALUES $ids AS v(id)"""
+    val src = dir.resolve("nestedSrc").toString
+    spark.sql(rowsSql("(1L), (2L), (3L)")).coalesce(1).write.parquet(src)
+    val startFrom = Snapshots.latestVersion(fs, wh).getOrElse(-1L)
+    // Written once through the streaming sink …
+    spark.readStream.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .parquet(src)
+      .writeStream.format("graft-snapshots")
+      .option("warehouse", wh).option("table", "nested_sink")
+      .option("checkpointLocation", dir.resolve("nestedSinkCkpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    // … and once through a catalog INSERT.
+    spark.sql(s"CREATE TABLE graft.nested_ins ($ddl)")
+    spark.sql(s"INSERT INTO graft.nested_ins SELECT * FROM parquet.`$src`")
+    def sorted(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select(cols.map(org.apache.spark.sql.functions.col): _*).collect()
+        .toSeq.sortBy(_.toString)
+    val cols = Seq("id", "big", "emb", "st", "m")
+    val feedCols = cols ++ Seq("_change_type", "_commit_version")
+    def stream(t: String, tag: String, opts: Map[String, String]) = {
+      val out = dir.resolve(s"${t}_${tag}Out").toString
+      spark.readStream.format("graft-snapshots")
+        .option("warehouse", wh).option("table", t)
+        .option("startingVersion", startFrom.toString).options(opts).load()
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", dir.resolve(s"${t}_${tag}Ckpt").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      spark.read.parquet(out)
+    }
+    Seq("nested_sink", "nested_ins").foreach { t =>
+      val read = sorted(Snapshots.read(spark, wh, t), cols)
+      assert(read.size == 3 &&
+        read(2).getDecimal(1) == new java.math.BigDecimal("18446744073709551615"),
+        s"$t: $read")
+      assert(sorted(stream(t, "append", Map.empty), cols) == read, t)
+      graft.ingest.Merge.upsert(spark, wh, t, spark.sql(rowsSql("(2L), (4L)"))
+        .withColumn("m", org.apache.spark.sql.functions.map(
+          org.apache.spark.sql.functions.lit("k"),
+          org.apache.spark.sql.functions.lit(-1L))), Seq("id"))
+      val feed = stream(t, "cdf", Map("readChangeFeed" -> "true"))
+      val changes = Snapshots.changes(spark, wh, t, fromExclusive = startFrom)
+      assert(sorted(feed, feedCols) == sorted(changes, feedCols), t)
+      assert(feed.select("_change_type").distinct().count() == 3, t)
+      assert(sorted(spark.sql(s"SELECT * FROM graft.$t"), cols) ==
+        sorted(Snapshots.read(spark, wh, t), cols), t)
+    }
   }
 }

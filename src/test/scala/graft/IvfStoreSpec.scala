@@ -294,4 +294,21 @@ class IvfStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(got == want)
   }
+
+  test("an append of the wrong dim fails naming both dims and commits nothing") {
+    val w = wh("whWrongDim")
+    pubEmb(w, 0 until 32)
+    IvfStore.buildIndex(spark, w,
+      Snapshots.read(spark, w, "embeddings"), Dim, k = 4, targetFiles = 2)
+    val before = Snapshots.latestVersion(fs, w)
+    val wide = embDf(100 until 104).withColumn("embedding",
+      concat(col("embedding"), array(lit(0.5f))))
+    val err = intercept[Exception](IvfStore.appendBatch(spark, w, wide))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains(s"dim ${Dim + 1}") &&
+      m.contains(s"expects dim $Dim")), msgs.mkString(" | "))
+    assert(Snapshots.latestVersion(fs, w) == before)
+    assert(Snapshots.read(spark, w, IvfStore.CellTable).count() == 32)
+  }
 }

@@ -1318,6 +1318,54 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Snapshots.fileMeta(fs, w, "t").isEmpty, "nothing became visible")
   }
 
+  test("changes() over change files that differ only in repetition equals a mergeSchema read") {
+    // Log schema tags cannot see a column's repetition, so two such files
+    // would look alike to a tag-trusting read. Fabricate one change file
+    // with `required` columns and one with `optional` (Spark writes only
+    // optional columns) with parquet-mr directly.
+    val w = wh("cdfRepetition")
+    publishBatch(w, "t", 1 to 2)                                        // v0
+    def changeCommit(rep: String, rows: Seq[(Option[Long], String)]): Unit = {
+      val cid = java.util.UUID.randomUUID().toString
+      val staged = new Path(
+        s"${TxnCommit.stagingDir(w, cid)}/_changes/t/part-00000.parquet")
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        s"message t { $rep int64 id; $rep binary _change_type (STRING); }")
+      val conf = new org.apache.hadoop.conf.Configuration(
+        spark.sparkContext.hadoopConfiguration)
+      org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+          .fromPath(staged, conf))
+        .withConf(conf).build()
+      val factory =
+        new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      try rows.foreach { case (id, ct) =>
+        val g = factory.newGroup()
+        id.foreach(g.append("id", _))
+        writer.write(g.append("_change_type", ct))
+      } finally writer.close()
+      val moves = TxnCommit.movesFor(fs, w, cid, "_changes/t")
+      TxnCommit.commit(fs, w, cid, moves, op = "merge")
+      TxnCommit.publish(fs, w, cid, moves, op = "merge")
+    }
+    changeCommit("required", Seq(Some(1L) -> "delete", Some(3L) -> "insert")) // v1
+    changeCommit("optional", Seq(Some(4L) -> "insert", None -> "insert"))     // v2
+    val cdfs = Snapshots.addsInRange(fs, w, "t", 0L, 2L)
+      .flatMap(_._3).filter(_.cdf)
+    assert(cdfs.size == 2, cdfs)
+    val s0 = spark
+    import s0.implicits._
+    val feed = Snapshots.changes(spark, w, "t", fromExclusive = 0L)
+      .select("id", "_change_type").as[(Option[Long], String)]
+      .collect().toSeq.sortBy(_.toString)
+    val merged = spark.read.option("mergeSchema", true)
+      .parquet(cdfs.map(_.file): _*)
+      .select("id", "_change_type").as[(Option[Long], String)]
+      .collect().toSeq.sortBy(_.toString)
+    assert(feed == merged && feed.size == 4, s"feed=$feed merged=$merged")
+  }
+
   test("reserved engine column names are rejected at the commit point") {
     val w = wh("reserved")
     val s0 = spark

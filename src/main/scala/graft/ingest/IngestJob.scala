@@ -23,6 +23,11 @@ object Checkpoint {
       FileProcessed(f.key, f.prefix, new Timestamp(f.timestamp_ms), now)))
   }
 
+  /** The checkpoint table read with its declared schema: a schema-less
+    * `spark.read.parquet` would run a footer-inference job on every read. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(graft.types.Schemas.filesProcessed).parquet(path)
+
   def append(spark: SparkSession, warehouse: String, files: Seq[FileCatalog.FileInfo]): Unit =
     batch(spark, files).write.mode(SaveMode.Append).parquet(s"$warehouse/$TableName")
 
@@ -35,7 +40,7 @@ object Checkpoint {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Set.empty
-    spark.read.parquet(path)
+    read(spark, path)
       .filter(col("prefix") === prefix)
       .select("file_name").collect().map(_.getString(0)).toSet
   }
@@ -56,7 +61,7 @@ object Checkpoint {
     if (listed.isEmpty || !fs.exists(new org.apache.hadoop.fs.Path(path))) return listed
     import spark.implicits._
     val listedDf = listed.map(_.key).toDF("file_name")
-    val done = spark.read.parquet(path)
+    val done = read(spark, path)
       .filter(col("prefix") === prefix).select("file_name")
     val already = done.join(broadcast(listedDf), Seq("file_name"), "left_semi")
       .distinct().collect().map(_.getString(0)).toSet
@@ -70,7 +75,7 @@ object Checkpoint {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return None
-    spark.read.parquet(path)
+    read(spark, path)
       .filter(col("prefix") === prefix)
       .agg(max(unix_millis(col("file_timestamp"))))
       .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
@@ -83,9 +88,7 @@ object Checkpoint {
   */
 sealed trait IngestSpec {
   def prefix: String
-  def tables(frames: Dataset[FrameSource.RawFrame]): Map[String, DataFrame]
-  /** Release any Dataset cached by tables() (demux specs decode-once). */
-  def cleanup(): Unit = ()
+  def tables(frames: Dataset[FrameSource.RawFrame]): IngestSpec.Output
   /** Output tables that land DATE-PARTITIONED (SURVEY §7.5): each listed
     * table gains a derived `dt` partition column — the UTC day of the
     * source FILE's embedded timestamp (ingest batches are time-bunched,
@@ -95,6 +98,14 @@ sealed trait IngestSpec {
     * the LOG and maintenance (OPTIMIZE/VACUUM) can scope to days — the
     * only maintenance shape that works at 100 TB. Flat by default. */
   def datePartitioned: Set[String] = Set.empty
+}
+
+object IngestSpec {
+  /** One batch's output tables. A demux spec's projections all read one
+    * cached decode, `shared`, which belongs to this call alone: the caller
+    * unpersists it once the batch's writes are over, failed or not. */
+  final case class Output(tables: Map[String, DataFrame],
+                          shared: Option[Dataset[_]] = None)
 }
 
 object IngestSpecs {
@@ -111,19 +122,19 @@ object IngestSpecs {
       partitioned: Boolean = false) extends IngestSpec {
     override def datePartitioned: Set[String] =
       if (partitioned) Set(table) else Set.empty
-    def tables(frames: Dataset[FrameSource.RawFrame]): Map[String, DataFrame] = {
+    def tables(frames: Dataset[FrameSource.RawFrame]): IngestSpec.Output = {
       implicit val enc = Encoders.product[T]
-      Map(table -> FrameSource.decoded(frames, decodeFn).toDF())
+      IngestSpec.Output(Map(table -> FrameSource.decoded(frames, decodeFn).toDF()))
     }
   }
 
   case object VerifiedSpeedtestSpec extends IngestSpec {
     val prefix = "verified_speedtest"
     override def datePartitioned: Set[String] = Set("verified_speedtest_report")
-    def tables(frames: Dataset[FrameSource.RawFrame]): Map[String, DataFrame] = {
+    def tables(frames: Dataset[FrameSource.RawFrame]): IngestSpec.Output = {
       implicit val enc = Encoders.product[VerifiedSpeedtestReport]
-      Map("verified_speedtest_report" ->
-        FrameSource.decoded(frames, Flatten.speedtest).toDF())
+      IngestSpec.Output(Map("verified_speedtest_report" ->
+        FrameSource.decoded(frames, Flatten.speedtest).toDF()))
     }
   }
 
@@ -138,15 +149,12 @@ object IngestSpecs {
       "mobile_promotion_rewards", "mobile_radio_rewards",
       "mobile_reward_trust_scores", "mobile_reward_speedtests",
       "mobile_reward_covered_hexes")
-    private var cached: Option[DataFrame] = None
-    override def cleanup(): Unit = { cached.foreach(_.unpersist()); cached = None }
-    def tables(frames: Dataset[FrameSource.RawFrame]): Map[String, DataFrame] = {
+    def tables(frames: Dataset[FrameSource.RawFrame]): IngestSpec.Output = {
       implicit val enc = Encoders.product[MobileShareFlat]
       // Decode ONCE, cache, then 9 filtered projections (D1+D3). At cluster
       // scale the cache bounds re-decode cost; each projection is a narrow
       // scan of the cached partitions.
       val shares = FrameSource.decoded(frames, Flatten.mobileShare).cache()
-      cached = Some(shares.toDF())
       val epoch = Seq(col("start_period"), col("end_period"))
       def arm(name: String, inner: String) =
         shares.filter(col("arm") === name)
@@ -167,7 +175,7 @@ object IngestSpecs {
         radio.select(col("radio.id").as("id"),
             explode(col(s"radio.$childCol")).as("c"), col("file_source"))
           .select(col("id"), col("c.*"), col("file_source"))
-      Map(
+      IngestSpec.Output(Map(
         "mobile_gateway_rewards" -> arm("gateway", "gateway"),
         "mobile_subscriber_rewards" -> arm("subscriber", "subscriber"),
         "mobile_service_provider_rewards" -> arm("service_provider", "service_provider"),
@@ -176,7 +184,7 @@ object IngestSpecs {
         "mobile_radio_rewards" -> radioParent,
         "mobile_reward_trust_scores" -> child("location_trust_scores"),
         "mobile_reward_speedtests" -> child("speedtests"),
-        "mobile_reward_covered_hexes" -> child("covered_hexes"))
+        "mobile_reward_covered_hexes" -> child("covered_hexes")), Some(shares))
     }
   }
 
@@ -185,19 +193,16 @@ object IngestSpecs {
     override def datePartitioned: Set[String] = Set(
       "iot_gateway_rewards", "iot_operational_rewards",
       "iot_unallocated_rewards")
-    private var cached: Option[DataFrame] = None
-    override def cleanup(): Unit = { cached.foreach(_.unpersist()); cached = None }
-    def tables(frames: Dataset[FrameSource.RawFrame]): Map[String, DataFrame] = {
+    def tables(frames: Dataset[FrameSource.RawFrame]): IngestSpec.Output = {
       implicit val enc = Encoders.product[IotShareFlat]
       val shares = FrameSource.decoded(frames, Flatten.iotShare).cache()
-      cached = Some(shares.toDF())
       def arm(name: String, inner: String) =
         shares.filter(col("arm") === name)
           .select(col("start_period"), col("end_period"), col(s"$inner.*"), col("file_source"))
-      Map(
+      IngestSpec.Output(Map(
         "iot_gateway_rewards" -> arm("gateway", "gateway"),
         "iot_operational_rewards" -> arm("operational", "operational"),
-        "iot_unallocated_rewards" -> arm("unallocated", "unallocated"))
+        "iot_unallocated_rewards" -> arm("unallocated", "unallocated")), Some(shares))
     }
   }
 
@@ -205,18 +210,15 @@ object IngestSpecs {
     val prefix = "coverage_object"
     override def datePartitioned: Set[String] =
       Set("coverage_object", "coverage_location")
-    private var cached: Option[DataFrame] = None
-    override def cleanup(): Unit = { cached.foreach(_.unpersist()); cached = None }
-    def tables(frames: Dataset[FrameSource.RawFrame]): Map[String, DataFrame] = {
+    def tables(frames: Dataset[FrameSource.RawFrame]): IngestSpec.Output = {
       implicit val enc = Encoders.product[CoverageObjectFlat]
       val objs = FrameSource.decoded(frames, Flatten.coverage).cache()
-      cached = Some(objs.toDF())
-      Map(
+      IngestSpec.Output(Map(
         "coverage_object" -> objs.select(col("radio_key"), col("radio_type"),
           col("uuid"), col("coverage_claim_time"), col("indoor"), col("file_source")),
         "coverage_location" -> objs
           .select(col("uuid"), explode(col("locations")).as("l"), col("file_source"))
-          .select(col("uuid"), col("l.*"), col("file_source")))
+          .select(col("uuid"), col("l.*"), col("file_source"))), Some(objs))
     }
   }
 
@@ -325,8 +327,14 @@ object IngestJob {
     // reference is at-least-once here, SURVEY §3.1). Skipping files already
     // checkpointed makes re-runs exactly-once at file granularity; the
     // anti-join guard keeps driver memory O(this batch), not O(history).
+    // A plain `continue` listing needs no guard: it admits only files whose
+    // basename timestamp is > latestMs (exclusive, FileCatalog.list), while
+    // every checkpointed key of this prefix was recorded with the timestamp
+    // parsed from that same basename, which is ≤ latestMs by definition. No
+    // listed key can be checkpointed, so the semi-join could drop nothing.
+    // `afterMs`, `file` and plain runs can list checkpointed keys and keep it.
     val files =
-      if (selection.force) listed
+      if (selection.force || (selection.continue && selection.file.isEmpty)) listed
       else Checkpoint.unprocessed(spark, warehouse, spec.prefix, listed)
     // An explicit --file that the guard filtered out is surprising ("processed
     // 0 files") — say why, and how to override.
@@ -335,11 +343,9 @@ object IngestJob {
         s"skipping already-processed file ${listed.head.key} (use --force to re-ingest)")
     if (files.isEmpty) return Result(Seq.empty, Map.empty)
     val frames = FrameSource.frames(spark, files)
-    val tables = spec.tables(frames)
+    val batch = spec.tables(frames)
     val commitId = java.util.UUID.randomUUID().toString
     val staging = TxnCommit.stagingDir(warehouse, commitId)
-    // Counts are THIS run's ingested rows (cache once, count, write), not a
-    // cumulative re-scan of the warehouse table. Writes go to staging only.
     // Derived `dt` partition value: UTC day of the source file's embedded
     // epoch-millis (the filename's metadata timestamp riding `file_source`
     // lineage) — a per-row codegen'd expression, no join, no driver map.
@@ -358,29 +364,71 @@ object IngestJob {
       date_format(date_add(to_date(lit("1970-01-01")),
         floor(ms / 86400000L).cast("int")), "yyyy-MM-dd")
     }
-    val counts = tables.map { case (name, df) =>
-      val cached = df.cache()
-      val n = cached.count()
-      // Table-property bloom config (`bloom.columns`): ingested files
-      // carry the same point-lookup blooms DML rewrites re-establish.
-      val out =
-        if (spec.datePartitioned(name)) cached.withColumn("dt", dtCol)
-        else cached
-      val writer = out.write.mode(SaveMode.Overwrite)
-        .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, name,
-          Snapshots.columnMapping(fs, warehouse, name)))
-      (if (spec.datePartitioned(name)) writer.partitionBy("dt") else writer)
-        .parquet(s"$staging/$name")
-      cached.unpersist()
-      name -> n
-    }
-    spec.cleanup()
-    Checkpoint.batch(spark, files)
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/${Checkpoint.TableName}")
-    val moves = (tables.keys.toSeq :+ Checkpoint.TableName)
+    // One write wave: every table and the checkpoint batch stage to their
+    // own dirs as concurrent Spark jobs, so executors serve them together
+    // instead of one table after another. Writers (with the table's bloom
+    // options and column mapping) are built here, on the calling thread;
+    // only the write actions run on the pool. A demux spec's projections
+    // share one cached decode: concurrent jobs reaching a cached partition
+    // wait on its block lock rather than decode it twice. Row counts come
+    // from the commit's stats tokens, so no job counts a table.
+    try {
+      val writes = batch.tables.toSeq.map { case (name, df) =>
+        val out = if (spec.datePartitioned(name)) df.withColumn("dt", dtCol) else df
+        // Table-property bloom config (`bloom.columns`): ingested files
+        // carry the same point-lookup blooms DML rewrites re-establish.
+        val writer = out.write.mode(SaveMode.Overwrite)
+          .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, name,
+            Snapshots.columnMapping(fs, warehouse, name)))
+        val staged = if (spec.datePartitioned(name)) writer.partitionBy("dt") else writer
+        () => staged.parquet(s"$staging/$name")
+      } :+ {
+        val cp = Checkpoint.batch(spark, files).write.mode(SaveMode.Overwrite)
+        () => cp.parquet(s"$staging/${Checkpoint.TableName}")
+      }
+      runAll(writes)
+    } finally batch.shared.foreach(_.unpersist())
+    val moves = (batch.tables.keys.toSeq :+ Checkpoint.TableName)
       .flatMap(t => TxnCommit.movesFor(fs, warehouse, commitId, t))
-    TxnCommit.commit(fs, warehouse, commitId, moves) // ← the atomic commit point
+    val statsFor = TxnCommit.commit(fs, warehouse, commitId, moves) // ← the atomic commit point
+    // THIS run's rows per table (not a re-scan of the live table), from its
+    // staged files' stats tokens; 0 when it staged no file. A file without
+    // a readable token (never a Spark-written one) makes its table fall back
+    // to one count over its staged dir, which publish has not yet moved.
+    val counts = batch.tables.keys.map { t =>
+      val dests = moves.map(_.dest).filter(d => TxnCommit.tableOf(d) == t)
+      t -> TxnCommit.tokenRows(statsFor, dests)
+        .getOrElse(spark.read.parquet(s"$staging/$t").count())
+    }.toMap
     TxnCommit.publish(fs, warehouse, commitId, moves)
     Result(files, counts)
+  }
+
+  /** Run every action at once, one daemon thread per action
+    * (`graft-ingest-write-<n>`), wait for ALL of them, then rethrow the
+    * first failure (later ones suppressed). Threads start inside this call,
+    * so they inherit the caller's Spark local properties (job group,
+    * scheduler pool); the pool is gone when this returns. */
+  private def runAll(actions: Seq[() => Unit]): Unit = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size, { r =>
+      val t = new Thread(r, s"graft-ingest-write-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val futures = actions.map(a => pool.submit(new Runnable { def run(): Unit = a() }))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
   }
 }

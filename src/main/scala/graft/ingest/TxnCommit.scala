@@ -414,6 +414,15 @@ object TxnCommit {
           }
     }
 
+  /** The rows of `dests` summed from their stats tokens; None when any
+    * of them has no token or its token carries no row count. */
+  private[ingest] def tokenRows(statsFor: Map[String, String],
+                                dests: Seq[String]): Option[Long] = {
+    val rows = dests.map(d =>
+      statsFor.get(d).flatMap(FileStats.decode).map(_.rows).filter(_ >= 0))
+    if (rows.exists(_.isEmpty)) None else Some(rows.flatten.sum)
+  }
+
   /** COMMIT point: persist the manifest (tmp + atomic rename). Two flavours
     * of swap-out are recorded for recovery: `DEL\t<path>` (logically removed
     * AND physically deleted at publish) and `RM\t<path>` (logically removed
@@ -424,7 +433,9 @@ object TxnCommit {
     * one footer read per file, before anything is visible — validated for
     * schema compatibility, and recorded as the move lines' third field, so
     * publish (live or crash-recovery replay) writes them to the log without
-    * re-opening any footer. */
+    * re-opening any footer. Returns those tokens (data-file dest → token;
+    * a file whose footer yielded none is absent) so a caller can total the
+    * rows it staged without a Spark job. */
   def commit(fs: FileSystem, warehouse: String, commitId: String,
              moves: Seq[Move], deletes: Seq[String] = Nil,
              retained: Seq[String] = Nil, op: String = "append",
@@ -434,7 +445,7 @@ object TxnCommit {
              asTable: Option[String] = None,
              metrics: Map[String, Long] = Map.empty,
              txnId: Option[String] = None,
-             metas: Seq[(String, String)] = Nil): Unit = {
+             metas: Seq[(String, String)] = Nil): Map[String, String] = {
     // Oversized blooms spill to sidecar files STAGED with this commit:
     // their moves join the manifest, so they publish (or replay) with the
     // data whose ADD lines point at them — crash-atomic either way.
@@ -557,6 +568,7 @@ object TxnCommit {
           retained.map(r => s"RM\t$r") ++
           dvAttach.map { case (data, dv, n) => s"DV\t$data\t$dv\t$n" }))
         .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    statsFor
   }
 
   /** PUBLISH: apply every move, flip the [[Snapshots]] log entry (snapshot
@@ -652,13 +664,8 @@ object TxnCommit {
     val mEff =
       if (mEff0.nonEmpty || !Set("append", "overwrite").contains(opEff) ||
           dataMoves.isEmpty) mEff0
-      else {
-        val rows = dataMoves.map(m =>
-          statsFor.get(m.dest).flatMap(FileStats.decode).map(_.rows)
-            .filter(_ >= 0))
-        if (rows.exists(_.isEmpty)) mEff0
-        else Map("rows_inserted" -> rows.flatten.sum)
-      }
+      else tokenRows(statsFor, dataMoves.map(_.dest))
+        .map(n => Map("rows_inserted" -> n)).getOrElse(mEff0)
     val txnEff = manifest.flatMap(_.txnId).orElse(txnId)
     val featEff = manifest.map(_.features).getOrElse(Nil)
     val metasEff = manifest.map(_.metas).filter(_.nonEmpty).getOrElse(metas)

@@ -33,8 +33,8 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def writeFixture(name: String, frames: Seq[Array[Byte]]): Unit = {
-    val out = new FileOutputStream(dir.resolve(name).toFile)
+  private def writeFixture(name: String, frames: Seq[Array[Byte]], in: Path = dir): Unit = {
+    val out = new FileOutputStream(in.resolve(name).toFile)
     try Framing.writeGzipFrames(out, frames) finally out.close()
   }
 
@@ -507,6 +507,148 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       FileSelection(afterMs = Some(1700000008000L)))
     assert(again.files.isEmpty) // already checkpointed -> skipped
     assert(spark.read.parquet(s"${wh("wh7")}/verified_speedtest_report").count() == 2)
+  }
+
+  /** One batch of each benchmark shape, every output table non-empty. */
+  private def mobileFrames(tag: Int): Seq[Array[Byte]] = Seq(
+    MobileRewardShare(1700000000L, 1700003600L, GatewayArm(Array[Byte](1, tag.toByte), 10, 20, 30)),
+    MobileRewardShare(1700000000L, 1700003600L,
+      SubscriberArm(Array.tabulate[Byte](16)(i => (i + tag).toByte), 5, 6, "k")),
+    MobileRewardShare(1700000000L, 1700003600L, ServiceProviderArm(1, 99, "sp")),
+    MobileRewardShare(1700000000L, 1700003600L, UnallocatedArm(2, 7)),
+    MobileRewardShare(1700000000L, 1700003600L, PromotionArm("promo", 1, 2)),
+    MobileRewardShare(1700000000L, 1700003600L, RadioArm(
+      hotspotKey = Array[Byte](3, tag.toByte), baseCoveragePointsSum = Some("1.5"),
+      boostedCoveragePointsSum = None, baseRewardShares = None, boostedRewardShares = None,
+      basePocReward = 1, boostedPocReward = 2, seniorityTimestamp = 1700000000L,
+      coverageObject = Array.tabulate[Byte](16)(_.toByte),
+      locationTrustScoreMultiplier = None, speedtestMultiplier = None,
+      spBoostedHexStatus = 0, oracleBoostedHexStatus = 0,
+      speedtestAverage = Some(SpeedtestAvgMsg(111, 222, 33, 1700000500L)),
+      locationTrustScores = Seq(TrustScoreMsg(10, Some("0.8"))),
+      speedtests = Seq(RadioSpeedtestMsg(1, 2, 3, 1700000000L)),
+      coveredHexes = Seq(CoveredHexMsg(100L, Some("1.5"), None, 0, 1, 2, Some("1.0"), 0,
+        Some("0.5"), 2, true)))))
+    .map(Messages.MobileRewardShare.encode)
+  private def speedtestFrames(tag: Int): Seq[Array[Byte]] = (0 until 3).map(i =>
+    Messages.VerifiedSpeedtest.encode(VerifiedSpeedtest(
+      Some(SpeedtestIngest(Some(SpeedtestReq(Array[Byte](1), s"w$tag-$i", 1700000000L,
+        1, 2, 3)), 1700000000L)), 1700000000L, 0)))
+  private def coverageFrames(tag: Int): Seq[Array[Byte]] = Seq(
+    Messages.CoverageObjectV1.encode(CoverageObjectV1(HotspotKey(Array[Byte](tag.toByte)),
+      Array.tabulate[Byte](16)(i => (i + tag).toByte), 1700000000L, indoor = true,
+      Seq(CoverageLocationMsg("hexA", 2, -80), CoverageLocationMsg("hexB", 3, -70)))))
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("job-count pin: one continue ingest of each benchmark shape") {
+    // One write wave per operation: one job per staged table plus one for
+    // the checkpoint batch, the checkpoint's max() read, and nothing per
+    // table (no cache-and-count) or for the replay guard (a continue
+    // listing cannot hold a checkpointed file). A stray count() or
+    // schema inference on any of these paths trips the pin.
+    val in = Files.createTempDirectory("graft-ingest-jobs")
+    val shapes = Seq(
+      ("mobile-rewards", "mobile_network_reward_shares_v1", mobileFrames _),
+      ("verified-speedtest", "verified_speedtest", speedtestFrames _),
+      ("coverage-objects", "coverage_object", coverageFrames _))
+    val jobs = shapes.map { case (fileType, prefix, frames) =>
+      val w = wh(s"whJobs-$fileType")
+      writeFixture(s"$prefix.1700000001000.gz", frames(1), in)
+      IngestJob.run(spark, in.toString, w, fileType)
+      writeFixture(s"$prefix.1700000002000.gz", frames(2), in)
+      var res: IngestJob.Result = null
+      val n = jobsDuring {
+        res = IngestJob.run(spark, in.toString, w, fileType, FileSelection(continue = true))
+      }
+      assert(res.files.map(_.timestamp_ms) == Seq(1700000002000L), fileType)
+      assert(res.rowCounts.values.forall(_ > 0), s"$fileType: ${res.rowCounts}")
+      fileType -> n
+    }.toMap
+    assert(jobs == Map("mobile-rewards" -> 12, "verified-speedtest" -> 4,
+      "coverage-objects" -> 5), jobs)
+  }
+
+  test("a failed write wave publishes nothing and leaks no cache or thread") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import graft.ingest.Snapshots
+    val in = Files.createTempDirectory("graft-ingest-wave")
+    val w = wh("whWave")
+    val prefix = "mobile_network_reward_shares_v1"
+    writeFixture(s"$prefix.1700000001000.gz", mobileFrames(1), in)
+    IngestJob.run(spark, in.toString, w, "mobile-rewards")
+    writeFixture(s"$prefix.1700000002000.gz", mobileFrames(2), in)
+    val fs = new HPath(w).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val version = Snapshots.latestVersion(fs, w)
+    def checkpointRows = spark.read.parquet(s"$w/files_processed").count()
+    assert(checkpointRows == 1)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // A plain file where the staging root belongs: every staged write fails.
+    val blocker = new HPath(s"$w/_staging")
+    fs.delete(blocker, true)
+    fs.create(blocker).close()
+    intercept[Exception] {
+      IngestJob.run(spark, in.toString, w, "mobile-rewards", FileSelection(continue = true))
+    }
+    assert(Snapshots.latestVersion(fs, w) == version, "a failed wave committed")
+    assert(checkpointRows == 1)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the decode cache outlived the failed run")
+    import scala.jdk.CollectionConverters._
+    val writers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-ingest-write-"))
+    writers.foreach(_.join(10000))
+    assert(writers.forall(!_.isAlive), writers.map(_.getName))
+    fs.delete(blocker, false)
+    val res = IngestJob.run(spark, in.toString, w, "mobile-rewards",
+      FileSelection(continue = true))
+    assert(res.files.map(_.timestamp_ms) == Seq(1700000002000L))
+    assert(res.rowCounts("mobile_reward_covered_hexes") == 1)
+    val cp = spark.read.parquet(s"$w/files_processed")
+    assert(cp.count() == 2 && cp.select("file_name").distinct().count() == 2)
+    assert(Snapshots.read(spark, w, "mobile_gateway_rewards").count() == 2)
+  }
+
+  test("continue after an explicit newer --file: every file ingested once") {
+    val in = Files.createTempDirectory("graft-ingest-file-continue")
+    val w = wh("whFileContinue")
+    def key(ts: Long) = s"verified_speedtest.$ts.gz"
+    writeFixture(key(1700000001000L), speedtestFrames(1), in)
+    IngestJob.run(spark, in.toString, w, "verified-speedtest")
+    // The explicit file is newer than anything listed so far: continue
+    // resumes after IT, never re-listing it.
+    writeFixture(key(1700000003000L), speedtestFrames(3), in)
+    val byFile = IngestJob.run(spark, in.toString, w, "verified-speedtest",
+      FileSelection(file = Some(in.resolve(key(1700000003000L)).toString)))
+    assert(byFile.files.map(_.timestamp_ms) == Seq(1700000003000L))
+    val idle = IngestJob.run(spark, in.toString, w, "verified-speedtest",
+      FileSelection(continue = true))
+    assert(idle.files.isEmpty && idle.rowCounts.isEmpty)
+    writeFixture(key(1700000004000L), speedtestFrames(4), in)
+    val next = IngestJob.run(spark, in.toString, w, "verified-speedtest",
+      FileSelection(continue = true))
+    assert(next.files.map(_.timestamp_ms) == Seq(1700000004000L))
+    assert(next.rowCounts == Map("verified_speedtest_report" -> 3L))
+    // The explicit file keeps its guard: a re-run of it ingests nothing.
+    val again = IngestJob.run(spark, in.toString, w, "verified-speedtest",
+      FileSelection(file = Some(in.resolve(key(1700000003000L)).toString)))
+    assert(again.files.isEmpty)
+    val cp = spark.read.parquet(s"$w/files_processed")
+    assert(cp.count() == 3 && cp.select("file_name").distinct().count() == 3)
+    assert(graft.ingest.Snapshots.read(spark, w, "verified_speedtest_report").count() == 9)
   }
 
   test("salted join and salted aggregation match their unsalted results") {

@@ -154,7 +154,7 @@ object SchemaEvolution {
     * already covers them. */
   /** `default` (a SQL literal, e.g. `Some("'legacy'")` or `Some("42")`) is
     * the column's INITIAL DEFAULT: rows of files written before the column
-    * existed read it instead of null ([[Snapshots.columnDefaults]] — the
+    * existed read it instead of null ([[Snapshot.defaults]] — the
     * Iceberg initial-default analog). It lands as the `default.<name>`
     * table property in the SAME log entry as the mapping, so a crash can
     * never leave the column without its default. */

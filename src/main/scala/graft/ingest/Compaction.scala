@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,19 +37,16 @@ object Compaction {
     * (pre-snapshot-era warehouses, flat layout only). `partitionFilter`
     * scopes maintenance to matching partitions — at 100 TB you compact
     * yesterday's `dt`, never the table. */
-  private def liveFiles(spark: SparkSession, warehouse: String,
-                        table: String,
-                        partitionFilter: Map[String, String] => Boolean = null)
+  private def liveFiles(fs: FileSystem, snap: Snapshot, table: String,
+                        partitionFilter: Map[String, String] => Boolean)
       : Seq[(String, Long, String, String, String)] = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all = Snapshots.fileMeta(fs, warehouse, table) match {
-      case Some(acts) =>
+    val all = snap.version match {
+      case Some(_) =>
         // Candidate sizes come from the ADD line's stats token (recorded
         // at collect time) — zero filesystem RPCs on the common path; only
         // pre-size-token files pay one getFileStatus (which doubles as the
         // liveness probe the exists() check used to provide).
-        acts.flatMap { a =>
+        snap.files(table).flatMap { a =>
           val logged = FileStats.decode(a.stats).map(_.bytes).filter(_ >= 0)
           logged match {
             case Some(sz) => Some((a.file, sz, a.partition, a.dv, a.stats))
@@ -60,7 +57,7 @@ object Compaction {
           }
         }
       case None =>
-        val dir = new Path(s"$warehouse/$table")
+        val dir = new Path(s"${snap.warehouse}/$table")
         if (!fs.exists(dir)) Seq.empty
         else fs.listStatus(dir).toSeq.filter(_.isFile)
           .filterNot(_.getPath.getName.startsWith("_"))
@@ -77,46 +74,15 @@ object Compaction {
     * vector purge), and write the rewrite preserving the partition layout —
     * a partition-blind rewrite would silently DROP the partition column
     * from a `dt=…` table. */
-  private def readInputs(spark: SparkSession, warehouse: String,
+  private def readInputs(spark: SparkSession, snap: Snapshot,
                          table: String,
                          inputs: Seq[(String, Long, String, String, String)]) = {
     val partCols = Snapshots.partitionColumns(inputs.map(_._3))
     val acts = inputs.map { case (f, _, spec, dv, stats) =>
       Snapshots.Action("ADD", table, f, spec, stats, dv) }
-    // One relation per (root table dir, partition layout) — the same key
-    // Snapshots.read groups by: a CLONE's inputs can still sit in the
-    // source table's dir, and a layout-EVOLVED table (flat era + dt= era)
-    // must not mix depths in one basePath relation. Width-mixed inputs
-    // (safe type widening) rewrite at the widest type — the compaction IS
-    // the moment the narrow files physically widen; flat-era rows read
-    // evolved partition columns as null (cross-group widening rides union
-    // coercion).
-    // Column defaults: a compaction merging pre-add and post-add files
-    // would otherwise write the pre-add rows' values as stored NULLs into
-    // column-carrying outputs — silently LOSING the default. Split groups
-    // by defaulted-column presence and inject the constants: the rewrite
-    // is the moment the metadata default becomes physical (same stance as
-    // type widening).
-    val fsW = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val defaults = Snapshots.columnDefaults(fsW, warehouse, table, None,
-      Snapshots.columnMapping(fsW, warehouse, table))
-    val groups =
-      (if (partCols.isEmpty) Seq(acts) else Snapshots.layoutGroups(acts))
-        .flatMap(_.groupBy(Snapshots.defaultPresence(_, defaults)).values)
-    val frames = groups.map { g =>
-      val bp =
-        if (g.head.partition.isEmpty) None
-        else Some(Snapshots.rootDirOf(g.head))
-      val rd0 = bp.fold(spark.read)(p => spark.read.option("basePath", p))
-      val df0 = Snapshots.widenedSchema(spark, g, bp)
-        .fold(rd0)(rd0.schema).parquet(g.map(_.file): _*)
-      Snapshots.injectDefaults(Snapshots.applyDv(spark, df0, g),
-        Snapshots.defaultPresence(g.head, defaults), defaults)
-    }
-    (Snapshots.deVoidPartitions(
-      frames.reduce(_.unionByName(_, allowMissingColumns = true)), partCols),
-      partCols)
+    // The rewrite is where narrow files physically widen and metadata
+    // defaults become stored values (see Snapshot.scanFiles).
+    (snap.scanFiles(spark, table, acts, partCols), partCols)
   }
 
   /** Compact `table` into files of ~`targetBytes`. No-op (None) when the
@@ -151,15 +117,15 @@ object Compaction {
       : Option[Result] = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // OCC guard: capture the snapshot version the input list comes from —
-    // a concurrent rewrite landing after this makes the commit abort
-    // instead of re-adding rows the rival already rewrote (double data).
-    val base = Snapshots.latestVersion(fs, warehouse)
+    // OCC guard: the input list, the table config and the base version
+    // come from one snapshot — a concurrent rewrite landing after it makes
+    // the commit abort instead of re-adding rows the rival already
+    // rewrote (double data).
+    val snap = Snapshots.snapshot(fs, warehouse)
+    val mapping = snap.columnMapping(table)
     val tombstoned: Seq[String] =
-      if (!purgeDropped) Nil
-      else Snapshots.columnMapping(fs, warehouse, table)
-        .map(_.droppedPhysical).getOrElse(Nil)
-    val inputsAll = liveFiles(spark, warehouse, table, partitionFilter)
+      if (!purgeDropped) Nil else mapping.map(_.droppedPhysical).getOrElse(Nil)
+    val inputsAll = liveFiles(fs, snap, table, partitionFilter)
       .filter(_._2 <= maxInputBytes)
     // Per-run work bound (auto-compaction's latency cap): when the
     // eligible set exceeds it, pack the SMALLEST files first — best
@@ -185,24 +151,20 @@ object Compaction {
 
     val commitId = java.util.UUID.randomUUID().toString
     val staging = s"${TxnCommit.stagingDir(warehouse, commitId)}/$table"
-    val (df0, partCols) = readInputs(spark, warehouse, table, inputs)
+    val (df0, partCols) = readInputs(spark, snap, table, inputs)
     // Physically shed tombstoned columns (schema inference may not even
     // surface them when the sampled footer postdates the drop — intersect).
     val df = tombstoned.intersect(df0.columns.toSeq).foldLeft(df0)(_.drop(_))
     // Callers name columns LOGICALLY; the rewrite reads physical files —
     // resolve sortBy through the mapping (identity when none).
-    val sortPhys = {
-      lazy val m = Snapshots.columnMapping(fs, warehouse, table)
-      sortBy.map(c => m.map(_.physicalFor(c)).getOrElse(c))
-    }
+    val sortPhys = sortBy.map(c => mapping.fold(c)(_.physicalFor(c)))
     val packed =
       if (sortPhys.isEmpty) df.coalesce(nOut)
       else df.repartitionByRange(nOut, sortPhys.map(col): _*)
         .sortWithinPartitions(sortPhys.head, sortPhys.tail: _*)
     // Table-property bloom config: compacted files keep the point-lookup
     // blooms their inputs carried (options are physical-named already).
-    val writer = packed.write.options(Snapshots.bloomWriteOptionsFor(
-      fs, warehouse, table, Snapshots.columnMapping(fs, warehouse, table)))
+    val writer = packed.write.options(snap.bloomWriteOptions(table))
     (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
       .parquet(staging)
     val moves = TxnCommit.movesFor(fs, warehouse, commitId, table)
@@ -212,10 +174,10 @@ object Compaction {
     // concurrent APPEND to the table must not abort it (at 100 TB a
     // continuously-ingested table would otherwise never compact).
     TxnCommit.commit(fs, warehouse, commitId, moves, deletes, retained,
-      op = "compact", baseVersion = base, fileGranularOcc = true,
+      op = "compact", baseVersion = snap.version, fileGranularOcc = true,
       asTable = Some(table))
     TxnCommit.publish(fs, warehouse, commitId, moves, deletes, retained,
-      op = "compact", baseVersion = base, fileGranularOcc = true,
+      op = "compact", baseVersion = snap.version, fileGranularOcc = true,
       asTable = Some(table))
     Some(Result(inputs.size, moves.size, totalBytes))
   }
@@ -246,8 +208,8 @@ object Compaction {
     require(cols.size >= 2, "zorder needs >= 2 columns (1 column = sortBy)")
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse) // OCC guard, as in compact
-    val inputs = liveFiles(spark, warehouse, table, partitionFilter)
+    val snap = Snapshots.snapshot(fs, warehouse) // inputs + OCC base, as in compact
+    val inputs = liveFiles(fs, snap, table, partitionFilter)
     // Unlike bin-packing, clustering pays off even for a single input file
     // (row groups inside it become range-disjoint) — only empty is a no-op.
     if (inputs.isEmpty) return None
@@ -255,12 +217,10 @@ object Compaction {
     val nOut = math.min(
       math.max(1L, (totalBytes + targetBytes - 1) / targetBytes),
       inputs.size.toLong).toInt
-    val (df, partCols) = readInputs(spark, warehouse, table, inputs)
+    val (df, partCols) = readInputs(spark, snap, table, inputs)
     // Logical→physical for the clustering columns, like compact's sortBy.
-    val cols0 = {
-      lazy val m = Snapshots.columnMapping(fs, warehouse, table)
-      cols.map(c => m.map(_.physicalFor(c)).getOrElse(c))
-    }
+    val mapping = snap.columnMapping(table)
+    val cols0 = cols.map(c => mapping.fold(c)(_.physicalFor(c)))
     val aggs = cols0.flatMap(c =>
       Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
     val bounds = df.agg(aggs.head, aggs.tail: _*).head()
@@ -287,17 +247,16 @@ object Compaction {
       .repartitionByRange(nOut, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-    val writer = zsorted.write.options(Snapshots.bloomWriteOptionsFor(
-      fs, warehouse, table, Snapshots.columnMapping(fs, warehouse, table)))
+    val writer = zsorted.write.options(snap.bloomWriteOptions(table))
     (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
       .parquet(staging)
     val moves = TxnCommit.movesFor(fs, warehouse, commitId, table)
     val retained = inputs.map(_._1)
     TxnCommit.commit(fs, warehouse, commitId, moves, retained = retained,
-      op = "zorder", baseVersion = base, fileGranularOcc = true,
+      op = "zorder", baseVersion = snap.version, fileGranularOcc = true,
       asTable = Some(table))
     TxnCommit.publish(fs, warehouse, commitId, moves, retained = retained,
-      op = "zorder", baseVersion = base, fileGranularOcc = true,
+      op = "zorder", baseVersion = snap.version, fileGranularOcc = true,
       asTable = Some(table))
     Some(Result(inputs.size, moves.size, totalBytes))
   }
@@ -343,7 +302,7 @@ object Compaction {
                   touchedSpecs: Set[String]): Unit = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val props = Snapshots.properties(fs, warehouse, table)
+    val props = Snapshots.snapshot(fs, warehouse).properties(table)
     val minFiles = props.get("graft.autoCompact.minFiles")
       .flatMap(_.toIntOption).getOrElse(0)
     if (minFiles <= 1) return
@@ -382,7 +341,8 @@ object Compaction {
     if (spark.sparkContext.isStopped) return
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val props = Snapshots.properties(fs, warehouse, table)
+    val snap = Snapshots.snapshot(fs, warehouse)
+    val props = snap.properties(table)
     val minFiles = props.get("graft.autoCompact.minFiles")
       .flatMap(_.toIntOption).getOrElse(0)
     if (minFiles <= 1) return
@@ -397,7 +357,7 @@ object Compaction {
     val maxPerRun = props.get("graft.autoCompact.maxInputsPerRun")
       .flatMap(_.toIntOption).getOrElse(Int.MaxValue)
     try {
-      val perSpec = liveFiles(spark, warehouse, table, null)
+      val perSpec = liveFiles(fs, snap, table, null)
         .filter(_._2 <= target).groupBy(_._3)
         .filter { case (spec, fs0) =>
           fs0.size >= minFiles &&

@@ -43,7 +43,10 @@ object Generated {
     * property-driven. */
   def generatedColumns(fs: FileSystem, warehouse: String, table: String)
       : Seq[(String, String)] =
-    Snapshots.properties(fs, warehouse, table).toSeq
+    generatedColumns(Snapshots.snapshot(fs, warehouse), table)
+
+  def generatedColumns(snap: Snapshot, table: String): Seq[(String, String)] =
+    snap.properties(table).toSeq
       .collect { case (k, v) if k.startsWith("generated.") =>
         k.stripPrefix("generated.") -> v }
       .sortBy(_._1)
@@ -188,14 +191,11 @@ object Generated {
   /** Re-materialize every declared generated column PRESENT in `df`
     * (rewrite frames carry them; extra columns like `_change_type` pass
     * through). Idempotent on rows whose base columns are unchanged. */
-  def materialize(fs: FileSystem, warehouse: String, table: String,
-                  df: DataFrame): DataFrame = {
-    val gens = generatedColumns(fs, warehouse, table)
-    gens.foldLeft(df) { case (d, (c, e)) =>
+  def materialize(snap: Snapshot, table: String, df: DataFrame): DataFrame =
+    generatedColumns(snap, table).foldLeft(df) { case (d, (c, e)) =>
       if (!d.columns.contains(c)) d
       else d.withColumn(c, expr(e).cast(d.schema(c).dataType))
     }
-  }
 
   /** Append `df` materializing the table's generated column(s). `df`
     * must NOT contain them. Returns rows appended (0 for a recognized

@@ -40,14 +40,17 @@ object Identity {
   /** Declared identity columns of `table` (property-driven). */
   def identityColumns(fs: FileSystem, warehouse: String, table: String)
       : Seq[String] =
-    Snapshots.properties(fs, warehouse, table).keys.toSeq
+    identityColumns(Snapshots.snapshot(fs, warehouse), table)
+
+  def identityColumns(snap: Snapshot, table: String): Seq[String] =
+    snap.properties(table).keys.toSeq
       .filter(_.startsWith("identity.")).map(_.stripPrefix("identity."))
       .sorted
 
   /** The column's current high-water mark (last minted id). */
   def highWaterMark(fs: FileSystem, warehouse: String, table: String,
                     column: String): Option[Long] =
-    Snapshots.metaValue(fs, warehouse, hwKey(table, column))
+    Snapshots.snapshot(fs, warehouse).metaValue(hwKey(table, column))
       .flatMap(_.toLongOption)
 
   /** Declare `column` GENERATED ALWAYS AS IDENTITY starting at `start`.

@@ -371,15 +371,16 @@ object IngestJob {
     // only the write actions run on the pool. A demux spec's projections
     // share one cached decode: concurrent jobs reaching a cached partition
     // wait on its block lock rather than decode it twice. Row counts come
-    // from the commit's stats tokens, so no job counts a table.
+    // from the commit's stats tokens, so no job counts a table. Every
+    // writer's table config comes from one snapshot, taken after recovery.
+    val snap = Snapshots.snapshot(fs, warehouse)
     try {
       val writes = batch.tables.toSeq.map { case (name, df) =>
         val out = if (spec.datePartitioned(name)) df.withColumn("dt", dtCol) else df
         // Table-property bloom config (`bloom.columns`): ingested files
         // carry the same point-lookup blooms DML rewrites re-establish.
         val writer = out.write.mode(SaveMode.Overwrite)
-          .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, name,
-            Snapshots.columnMapping(fs, warehouse, name)))
+          .options(snap.bloomWriteOptions(name))
         val staged = if (spec.datePartitioned(name)) writer.partitionBy("dt") else writer
         () => staged.parquet(s"$staging/$name")
       } :+ {

@@ -54,47 +54,29 @@ object Merge {
   /** Read committed files with row identity ([[SrcFileCol]], [[RowPosCol]]),
     * minus any attached deletion vectors, resolved to the logical schema.
     * Every DML read routes through here so no path can resurrect DV'd rows. */
-  private def dvAwareRead(spark: SparkSession, warehouse: String,
+  private def dvAwareRead(spark: SparkSession, snap: Snapshot,
                           table: String, partCols: Seq[String],
-                          mapping: Option[ColumnMapping],
                           acts: Seq[Snapshots.Action]): DataFrame = {
     import org.apache.spark.sql.functions.regexp_replace
-    // One relation per (root table dir, partition layout) — the SAME key
-    // Snapshots.read groups by. Root splits cover a diverged CLONE's
-    // candidates spanning the source's dir and its own; layout splits
-    // cover a table whose partitioning EVOLVED (flat era + dt= era under
-    // one root), where a single basePath relation trips Spark's
-    // conflicting-directory-structures check. basePath, width-mixed
-    // widening, row identity, and DV subtraction are all per-group —
-    // metadata columns only resolve scan-side — then union (flat-era rows
-    // read evolved partition columns as null; cross-group widening rides
-    // union coercion).
-    // Column defaults: DML reads must serve (and rewrites MATERIALIZE)
-    // the default for rows of pre-add files — split each layout group by
-    // defaulted-column presence, inject constants for the absent ones.
-    val defaults = Snapshots.columnDefaults(
-      new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration),
-      warehouse, table, None, mapping)
-    val groups =
-      (if (partCols.isEmpty) Seq(acts) else Snapshots.layoutGroups(acts))
-        .flatMap(_.groupBy(Snapshots.defaultPresence(_, defaults)).values)
-    val frames = groups.map { g =>
-      val bp =
-        if (g.head.partition.isEmpty) None
-        else Some(Snapshots.rootDirOf(g.head))
-      val rd0 = bp.fold(spark.read)(p => spark.read.option("basePath", p))
-      val df0 = Snapshots.widenedSchema(spark, g, bp)
-        .fold(rd0)(rd0.schema).parquet(g.map(_.file): _*)
-      val keyed = df0
-        .withColumn(SrcFileCol,
-          regexp_replace(col("_metadata.file_path"), Snapshots.SchemeRe, ""))
-        .withColumn(RowPosCol, col("_metadata.row_index"))
-      Snapshots.injectDefaults(Snapshots.applyDv(spark, keyed, g),
-        Snapshots.defaultPresence(g.head, defaults), defaults)
-    }
-    val df = Snapshots.deVoidPartitions(
-      frames.reduce(_.unionByName(_, allowMissingColumns = true)), partCols)
-    mapping.fold(df)(_.applyTo(df, passthrough = Seq(SrcFileCol, RowPosCol)))
+    // Row identity is captured per group at the scan, where the metadata
+    // columns resolve; DML reads serve (and rewrites materialize) defaults.
+    val df = snap.scanFiles(spark, table, acts, partCols, _
+      .withColumn(SrcFileCol,
+        regexp_replace(col("_metadata.file_path"), Snapshots.SchemeRe, ""))
+      .withColumn(RowPosCol, col("_metadata.row_index")))
+    snap.columnMapping(table)
+      .fold(df)(_.applyTo(df, passthrough = Seq(SrcFileCol, RowPosCol)))
+  }
+
+  /** The snapshot a DML operation plans from and commits against (its
+    * OCC base): files, mapping, table config and candidate pruning all
+    * come from this one version. */
+  private def pinned(fs: org.apache.hadoop.fs.FileSystem,
+                     warehouse: String): Snapshot = {
+    val snap = Snapshots.snapshot(fs, warehouse)
+    if (snap.version.isEmpty) throw new IllegalStateException(
+      s"no snapshot log under $warehouse — DML needs a TxnCommit table")
+    snap
   }
 
   /** `rowsMatched`: rows of the table whose key matched the source —
@@ -322,9 +304,10 @@ object Merge {
                                  excluded: Set[String] = Set.empty,
                                  restrictTo: Option[Set[String]] = None): Unit = {
     if (!schemaEvolutionOn(spark)) return
-    val meta = Snapshots.fileMeta(fs, warehouse, table).getOrElse(Seq.empty)
+    val snap = Snapshots.snapshot(fs, warehouse)
+    val meta = snap.files(table)
     val tcols: Set[String] =
-      Snapshots.columnMapping(fs, warehouse, table) match {
+      snap.columnMapping(table) match {
         case Some(m) => m.logicalNames.toSet
         case None =>
           val tags = meta.map(a => FileStats.schemaTags(a.stats))
@@ -387,19 +370,10 @@ object Merge {
     try {
     val bounds = keys.agg(min(col(keyCols.head)), max(col(keyCols.head))).head()
     dvCore(spark, warehouse, table,
-      candidatesOf = (meta, mapping) =>
+      candidatesOf = snap =>
         if (bounds.isNullAt(0)) Nil
-        else {
-          val pred = keyPrunePred(keys, keyCols, bounds, enumerate = small)
-          val loader = Snapshots.sidecarBloomLoader(
-            new Path(warehouse).getFileSystem(
-              spark.sparkContext.hadoopConfiguration), warehouse)
-          meta.filter { a =>
-            val st = FileStats.decode(a.stats)
-            FileStats.mayMatch(mapping.fold(st)(_.statsToLogical(st)), pred,
-              loader)
-          }
-        },
+        else snap.pruned(table,
+          keyPrunePred(keys, keyCols, bounds, enumerate = small)),
       matcher = df => df
         .filter(col(keyCols.head).between(lit(bounds.get(0)), lit(bounds.get(1))))
         .join(hintIf(small)(srcKeys), keyCols, "left_semi"),
@@ -431,24 +405,9 @@ object Merge {
                       rewriteFraction: Double = 1.0): Result = {
     import org.apache.spark.sql.functions.{coalesce => cl, not}
     dvCore(spark, warehouse, table,
-      candidatesOf = (meta, mapping) => {
-        // Candidates by log-side stats, exactly as the copy-on-write path.
-        val resolved = Snapshots.read(spark, warehouse, table).filter(condition)
-          .queryExecution.analyzed.collectFirst {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-              f.condition
-          }
-        val pred = resolved.flatMap(FileStats.fromExpression)
-        val loader = Snapshots.sidecarBloomLoader(
-          new Path(warehouse).getFileSystem(
-            spark.sparkContext.hadoopConfiguration), warehouse)
-        meta.filter { a =>
-          val s = FileStats.decode(a.stats)
-          pred.forall(p =>
-            FileStats.mayMatch(mapping.fold(s)(_.statsToLogical(s)), p,
-              loader))
-        }
-      },
+      // Candidates by log-side stats, exactly as the copy-on-write path.
+      candidatesOf = snap => snap.pruned(table,
+        Snapshots.statsPred(spark, snap, table, condition)),
       matcher = _.filter(condition),
       // SQL three-valued logic: rows where the condition evaluates NULL
       // survive a rewrite.
@@ -463,8 +422,7 @@ object Merge {
     * predicates). Both run over the dv-aware read, so already-deleted
     * rows are invisible. */
   private def dvCore(spark: SparkSession, warehouse: String, table: String,
-                     candidatesOf: (Seq[Snapshots.Action], Option[ColumnMapping])
-                       => Seq[Snapshots.Action],
+                     candidatesOf: Snapshot => Seq[Snapshots.Action],
                      matcher: DataFrame => DataFrame,
                      keeper: DataFrame => DataFrame,
                      assignments: Map[String, org.apache.spark.sql.Column],
@@ -473,17 +431,14 @@ object Merge {
     import org.apache.spark.sql.functions.{count, first, when}
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val meta = Snapshots.fileMeta(fs, warehouse, table).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot log under $warehouse — DML needs a TxnCommit table"))
-    val partCols = Snapshots.partitionColumns(meta.map(_.partition))
+    val snap = pinned(fs, warehouse)
+    val partCols = snap.partitionLayout(table)
     assignments.keys.foreach(c => require(!partCols.contains(c),
       s"updateWhereDv cannot reassign partition column '$c' (rows would " +
         "land in the wrong directory) — delete + append instead"))
-    requireAssignable(fs, warehouse, table, assignments.keys, "updateWhereDv")
-    val mapping = Snapshots.columnMapping(fs, warehouse, table)
-    val candidates = candidatesOf(meta, mapping)
+    requireAssignable(snap, table, assignments.keys, "updateWhereDv")
+    val mapping = snap.columnMapping(table)
+    val candidates = candidatesOf(snap)
     if (candidates.isEmpty) return Result(0, 0, 0L, 0)
     // The predicate is evaluated ONCE, over the stats-surviving
     // candidates, and the matched set is persisted: per-file routing
@@ -500,7 +455,7 @@ object Merge {
     // default pure merge-on-read path never calls it. Cache size is
     // bounded by the matched rows (the deletion set), spilling to disk.
     val matched =
-      matcher(dvAwareRead(spark, warehouse, table, partCols, mapping, candidates))
+      matcher(dvAwareRead(spark, snap, table, partCols, candidates))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def run(): Result = {
     val newCounts: Map[String, Long] = matched
@@ -560,7 +515,7 @@ object Merge {
       // GENERATED columns recompute on the postimage (base-column updates
       // must not leave a stale generated value on the merge-on-read path
       // either).
-      val gen = Generated.materialize(fs, warehouse, table, upd)
+      val gen = Generated.materialize(snap, table, upd)
       gen.select(df.schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
     }
@@ -587,7 +542,7 @@ object Merge {
     // logic: rows where the condition evaluates NULL survive).
     val survivors =
       if (heavy.isEmpty) None
-      else Some(keeper(dvAwareRead(spark, warehouse, table, partCols, mapping, heavy))
+      else Some(keeper(dvAwareRead(spark, snap, table, partCols, heavy))
         .drop(SrcFileCol, RowPosCol))
     val post = if (assignments.isEmpty) None else Some(applied(matchedData))
     val outData = (survivors, post) match {
@@ -601,7 +556,7 @@ object Merge {
       val w = outPhys
         .coalesce(math.max(1, heavy.size +
           (if (assignments.isEmpty) 0 else affected.size))).write
-        .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, table, mapping))
+        .options(snap.bloomWriteOptions(table))
       (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
         .parquet(dataStaging)
     }
@@ -632,11 +587,11 @@ object Merge {
       dvMoves.filter(m => usedDvDests(m.dest))
     val removed = (full ++ heavy).map(_.file)
     TxnCommit.commit(fs, warehouse, commitId, moves,
-      retained = removed, op = "merge", baseVersion = base,
+      retained = removed, op = "merge", baseVersion = snap.version,
       dvAttach = attach, fileGranularOcc = true, asTable = Some(table),
       metrics = dvMetrics)
     TxnCommit.publish(fs, warehouse, commitId, moves,
-      retained = removed, op = "merge", baseVersion = base,
+      retained = removed, op = "merge", baseVersion = snap.version,
       dvAttach = attach, fileGranularOcc = true, asTable = Some(table),
       metrics = dvMetrics)
     Result(heavy.size, dataMoves.size, matchedCount, candidates.size,
@@ -650,11 +605,10 @@ object Merge {
     * GENERATED values re-materialize from their expression (assign the
     * BASE columns instead), identity values are minted once at append
     * and never rewritten. */
-  private def requireAssignable(fs: org.apache.hadoop.fs.FileSystem,
-                                warehouse: String, table: String,
+  private def requireAssignable(snap: Snapshot, table: String,
                                 cols: Iterable[String], what: String): Unit = {
-    val gen = Generated.generatedColumns(fs, warehouse, table).map(_._1).toSet
-    val ids = Identity.identityColumns(fs, warehouse, table).toSet
+    val gen = Generated.generatedColumns(snap, table).map(_._1).toSet
+    val ids = Identity.identityColumns(snap, table).toSet
     cols.foreach { c =>
       require(!gen.contains(c),
         s"$what cannot assign GENERATED column '$c' — it re-materializes " +
@@ -674,35 +628,22 @@ object Merge {
     import org.apache.spark.sql.functions.{coalesce => cl, not}
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val meta = Snapshots.fileMeta(fs, warehouse, table).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot log under $warehouse — DML needs a TxnCommit table"))
-    val partCols = Snapshots.partitionColumns(meta.map(_.partition))
+    val snap = pinned(fs, warehouse)
+    val meta = snap.files(table)
+    val partCols = snap.partitionLayout(table)
     assignments.keys.foreach(c => require(!partCols.contains(c),
       s"updateWhere cannot reassign partition column '$c' (rows would " +
         "land in the wrong directory) — delete + append instead"))
-    requireAssignable(fs, warehouse, table, assignments.keys, "updateWhere")
+    requireAssignable(snap, table, assignments.keys, "updateWhere")
     // Condition/assignments are expressed in LOGICAL names; files store
     // physical ones. Read through the mapping (and minus any attached
     // deletion vectors — a rewrite must not resurrect DV'd rows), rewrite
     // back to physical.
-    val mapping = Snapshots.columnMapping(fs, warehouse, table)
     def readFiles(acts: Seq[Snapshots.Action]): DataFrame =
-      dvAwareRead(spark, warehouse, table, partCols, mapping, acts)
+      dvAwareRead(spark, snap, table, partCols, acts)
     // Candidates by log-side stats; affected = candidates that truly match.
-    val resolved = Snapshots.read(spark, warehouse, table).filter(condition)
-      .queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    val pred = resolved.flatMap(FileStats.fromExpression)
-    def logicalStats(a: Snapshots.Action) = {
-      val s = FileStats.decode(a.stats)
-      mapping.fold(s)(_.statsToLogical(s))
-    }
-    val sideLoader = Snapshots.sidecarBloomLoader(fs, warehouse)
-    val candidates = meta.filter(a => pred.forall(p =>
-      FileStats.mayMatch(logicalStats(a), p, sideLoader)))
+    val candidates = snap.pruned(table,
+      Snapshots.statsPred(spark, snap, table, condition))
     // Scheme-less FULL paths, not basenames: one dynamic-partition write
     // emits the same basename into every partition dir, so a basename
     // match would drag every sibling partition's file into the rewrite.
@@ -732,8 +673,8 @@ object Merge {
           matchedRows.withColumn("_change_type", lit("update_preimage"))
             .unionByName(updated.withColumn("_change_type", lit("update_postimage"))))
       }
-    commitRewrite(fs, warehouse, table, partCols, out, changes,
-      affected.map(_.file), base, candidates.size, mapping)
+    commitRewrite(fs, snap, table, partCols, out, changes,
+      affected.map(_.file), candidates.size)
   }
 
   /** Shared commit tail for the key-merge and predicate-DML paths: stage
@@ -745,14 +686,15 @@ object Merge {
     * hitting 10% of a 100 TB table must not funnel every row through one
     * writer task. */
   private def commitRewrite(fs: org.apache.hadoop.fs.FileSystem,
-                            warehouse: String, table: String,
+                            snap: Snapshot, table: String,
                             partCols: Seq[String], out: DataFrame,
                             changes: DataFrame, affected: Seq[String],
-                            base: Option[Long], candidates: Int,
-                            mapping: Option[ColumnMapping] = None,
+                            candidates: Int,
                             fileGranularOcc: Boolean = false,
                             fixedCommitId: Option[String] = None): Result = {
     import org.apache.spark.sql.functions.{count, when}
+    val warehouse = snap.warehouse
+    val mapping = snap.columnMapping(table)
     val commitId =
       fixedCommitId.getOrElse(java.util.UUID.randomUUID().toString)
     // A caller-supplied commitId is a REPLAY key: a prior attempt that
@@ -782,8 +724,8 @@ object Merge {
     // (idempotent), so one hook keeps the invariant everywhere. CDF
     // preimages carry OLD base columns and recompute to the OLD stored
     // value — also idempotent.
-    val outG = Generated.materialize(fs, warehouse, table, out)
-    val changesG = Generated.materialize(fs, warehouse, table, changes)
+    val outG = Generated.materialize(snap, table, out)
+    val changesG = Generated.materialize(snap, table, changes)
     // Rewritten data (and CDF rows) land under PHYSICAL names — renames
     // never fork the files' schema; only the META mapping moves.
     val outPhys = mapping.fold(outG)(_.toPhysicalDf(outG))
@@ -791,7 +733,7 @@ object Merge {
     // Table-property bloom config: rewrites re-establish the blooms the
     // swapped-out files carried.
     val writer = outPhys.coalesce(math.max(1, affected.size)).write
-      .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, table, mapping))
+      .options(snap.bloomWriteOptions(table))
     (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
       .parquet(staging)
     // The CDF write's Observation yields the per-kind row counts — the
@@ -814,10 +756,12 @@ object Merge {
     val moves = dataMoves ++
       TxnCommit.movesFor(fs, warehouse, stagingId, s"_changes/$table")
     TxnCommit.commit(fs, warehouse, commitId, moves, retained = affected,
-      op = "merge", baseVersion = base, fileGranularOcc = fileGranularOcc,
+      op = "merge", baseVersion = snap.version,
+      fileGranularOcc = fileGranularOcc,
       asTable = Some(table), metrics = metrics, txnId = fixedCommitId)
     TxnCommit.publish(fs, warehouse, commitId, moves, retained = affected,
-      op = "merge", baseVersion = base, fileGranularOcc = fileGranularOcc,
+      op = "merge", baseVersion = snap.version,
+      fileGranularOcc = fileGranularOcc,
       asTable = Some(table), metrics = metrics, txnId = fixedCommitId)
     // Reap the attempt dir (publish only knows the commitId-named one):
     // the winner's is empty shells, a converged loser's still holds its
@@ -839,21 +783,17 @@ object Merge {
       evolveExtraColumns(spark, warehouse, table, fs, source.columns.toSeq)
     // OCC guard: a merge is stale the moment ANY commit touches the table
     // after this read (an intervening append may carry matching keys).
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val meta = Snapshots.fileMeta(fs, warehouse, table).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot log under $warehouse — merge needs a TxnCommit table"))
-    val files = meta.map(_.file)
+    val snap = pinned(fs, warehouse)
+    val meta = snap.files(table)
     // Partitioned tables: read with basePath so the partition column stays
     // in the schema (a partition-blind rewrite would drop it), and write
     // the rewrite back through the same partition layout.
-    val partCols = Snapshots.partitionColumns(meta.map(_.partition))
+    val partCols = snap.partitionLayout(table)
     // Source and keyCols are LOGICAL; files are physical. Read through the
     // mapping so the join/union see one schema; the commit tail restores
     // physical names on write.
-    val mapping = Snapshots.columnMapping(fs, warehouse, table)
     def readFiles(acts: Seq[Snapshots.Action]): DataFrame =
-      dvAwareRead(spark, warehouse, table, partCols, mapping, acts)
+      dvAwareRead(spark, snap, table, partCols, acts)
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
     // Size-routed: a dim-sized source broadcasts (and point-prunes); a
     // fact-sized one plans shuffle joins and keeps envelope pruning only.
@@ -868,16 +808,9 @@ object Merge {
     // parquet reader for row-group skipping.
     val bounds = source.agg(min(col(keyCols.head)), max(col(keyCols.head))).head()
     val candidates: Seq[Snapshots.Action] =
-      if (files.isEmpty || bounds.isNullAt(0)) Nil
-      else {
-        val pred = keyPrunePred(source, keyCols, bounds, enumerate = small)
-        val loader = Snapshots.sidecarBloomLoader(fs, warehouse)
-        meta.filter { a =>
-          val s = FileStats.decode(a.stats)
-          FileStats.mayMatch(mapping.fold(s)(_.statsToLogical(s)), pred,
-            loader)
-        }
-      }
+      if (meta.isEmpty || bounds.isNullAt(0)) Nil
+      else snap.pruned(table,
+        keyPrunePred(source, keyCols, bounds, enumerate = small))
     // Affected files by scheme-less FULL path — basenames are NOT unique
     // across a commit's partition dirs, so a name match would rewrite
     // every sibling partition's file. Encoded-form keys (see [[pathKey]]).
@@ -932,8 +865,8 @@ object Merge {
     // UPSERT stays table-granular: a concurrent append could land a row
     // with an inserted key, silently breaking the MERGE uniqueness
     // contract — correctness outranks liveness there.
-    commitRewrite(fs, warehouse, table, partCols, out, changes,
-      affected.map(_.file), base, candidates.size, mapping,
+    commitRewrite(fs, snap, table, partCols, out, changes,
+      affected.map(_.file), candidates.size,
       fileGranularOcc = !insertSource)
     } finally releaseProbe()
   }
@@ -1069,19 +1002,16 @@ object Merge {
           .collect { case (s, t) if s != t => s }.toSet,
         restrictTo = restrictTo)
     }
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val meta = Snapshots.fileMeta(fs, warehouse, table).getOrElse(
-      throw new IllegalStateException(
-        s"no snapshot log under $warehouse — merge needs a TxnCommit table"))
-    val partCols = Snapshots.partitionColumns(meta.map(_.partition))
+    val snap = pinned(fs, warehouse)
+    val meta = snap.files(table)
+    val partCols = snap.partitionLayout(table)
     (matched ++ notMatchedBySource).flatMap(_.assigns.getOrElse(Nil)).map(_._1)
       .foreach(c => require(!partCols.contains(c),
         s"MERGE cannot reassign partition column '$c' (rows would land " +
           "in the wrong directory) — delete + insert instead"))
-    requireAssignable(fs, warehouse, table,
+    requireAssignable(snap, table,
       (matched ++ notMatchedBySource).flatMap(_.assigns.getOrElse(Nil))
         .map(_._1), "MERGE")
-    val mapping = Snapshots.columnMapping(fs, warehouse, table)
 
     // Size-routed source (see [[broadcastMaxRows]]): broadcast + point
     // pruning when dim-sized, shuffle joins + envelope pruning when not.
@@ -1097,21 +1027,13 @@ object Merge {
       srcAsTgtKeys.agg(min(col(keyCols.head)), max(col(keyCols.head))).head()
     val candidates: Seq[Snapshots.Action] =
       if (meta.isEmpty || bounds.isNullAt(0)) Nil
-      else {
-        val pred = keyPrunePred(srcAsTgtKeys, keyCols, bounds,
-          enumerate = small)
-        val loader = Snapshots.sidecarBloomLoader(fs, warehouse)
-        meta.filter { a =>
-          val s = FileStats.decode(a.stats)
-          FileStats.mayMatch(mapping.fold(s)(_.statsToLogical(s)), pred, loader)
-        }
-      }
+      else snap.pruned(table,
+        keyPrunePred(srcAsTgtKeys, keyCols, bounds, enumerate = small))
 
     val tAll =
       if (candidates.isEmpty) null
       else {
-        val raw = dvAwareRead(spark, warehouse, table, partCols, mapping,
-          candidates)
+        val raw = dvAwareRead(spark, snap, table, partCols, candidates)
         targetFilter.fold(raw)(f => f(raw))
       }
     val dataCols0: Seq[org.apache.spark.sql.types.StructField] =
@@ -1119,7 +1041,7 @@ object Merge {
         tAll.schema.fields.toSeq.filterNot(f =>
           f.name == SrcFileCol || f.name == RowPosCol)
       else { // empty/unmatchable table: schema from an arbitrary pinned file
-        val probe = Snapshots.read(spark, warehouse, table)
+        val probe = snap.read(spark, table)
         probe.schema.fields.toSeq
       }
     // A just-evolved column exists in no file yet: the mapped read serves
@@ -1187,20 +1109,13 @@ object Merge {
                 }.flatMap(FileStats.fromExpression)
             }
             if (preds.exists(_.isEmpty)) meta
-            else {
-              val pred = preds.flatten.reduce[FileStats.Pred](_.or(_))
-              val loader = Snapshots.sidecarBloomLoader(fs, warehouse)
-              meta.filter { a =>
-                val s = FileStats.decode(a.stats)
-                FileStats.mayMatch(
-                  mapping.fold(s)(_.statsToLogical(s)), pred, loader)
-              }
-            }
+            else snap.pruned(table,
+              preds.flatten.reduce[FileStats.Pred](_.or(_)))
           }
         if (nmbsMeta.isEmpty) null
         else {
           val tRaw =
-            dvAwareRead(spark, warehouse, table, partCols, mapping, nmbsMeta)
+            dvAwareRead(spark, snap, table, partCols, nmbsMeta)
           val tFrame = targetFilter.fold(tRaw)(f => f(tRaw)).alias("t")
           // Without a residual, source keys renamed to the TARGET key
           // names so the usingColumns anti-join drops them and the
@@ -1301,7 +1216,7 @@ object Merge {
     val survivors =
       if (affected.isEmpty) None
       else {
-        val hit = dvAwareRead(spark, warehouse, table, partCols, mapping, affected)
+        val hit = dvAwareRead(spark, snap, table, partCols, affected)
         val actedFrames =
           (if (acted == null) Nil else Seq(acted)) ++
           (if (nmbsActed == null) Nil else Seq(nmbsActed))
@@ -1348,8 +1263,8 @@ object Merge {
     // Matched-only merges depend only on the files they rewrite →
     // file-granular OCC; with a NOT MATCHED clause the insert keys'
     // uniqueness depends on the whole table → table-granular.
-    commitRewrite(fs, warehouse, table, partCols, out, changes,
-      affected.map(_.file), base, candidates.size, mapping,
+    commitRewrite(fs, snap, table, partCols, out, changes,
+      affected.map(_.file), candidates.size,
       fileGranularOcc = notMatched.isEmpty && notMatchedBySource.isEmpty,
       fixedCommitId = commitId)
     }

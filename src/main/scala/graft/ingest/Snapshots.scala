@@ -1060,12 +1060,16 @@ object Snapshots {
     // Writer-side protocol gate: refuse to mutate a table whose required
     // features this build doesn't know (recovery replays are exempt —
     // their commit passed the gate live; a replay must converge, not
-    // wedge). Pseudo-keys (`t#props`, `#txn#…`) are not tables.
-    if (!replay)
-      (adds.map(_._1) ++ removes.map(_._1) ++ dvs.map(_._1) ++
-        metas.map(_._1).filterNot(_.contains("#")))
-        .distinct.foreach(t =>
-          requireFeatures(fs, warehouse, t, forWrite = true))
+    // wedge). Pseudo-keys (`t#props`, `#txn#…`) are not tables. One fold
+    // gates every table.
+    val gated =
+      if (replay) Nil
+      else (adds.map(_._1) ++ removes.map(_._1) ++ dvs.map(_._1) ++
+        metas.map(_._1).filterNot(_.contains("#"))).distinct
+    if (gated.nonEmpty) {
+      val snap = snapshot(fs, warehouse)
+      gated.foreach(snap.requireFeatures(_, forWrite = true))
+    }
     // `occTables` widens the conflict scope beyond the keys this commit
     // writes: metadata-only commits whose VALIDITY depends on the table's
     // data state (DROP FEATURE's dependency probe, SYNC IDENTITY's stats
@@ -1510,14 +1514,10 @@ object Snapshots {
     } finally releaseHeldClaim()
   }
 
-  /** Full table→(file→(partition, stats)) state folded up to `asOf`
-    * (anchored on the latest visible checkpoint). None when no snapshot log
-    * exists. CDF lines are per-version change capture, not table state —
-    * skipped. */
   /** Folded log state: per-table live files (ADD minus REMOVE; value =
     * (partition, stats, dv attachment)) and the latest visible table
     * metadata (META payload), both as of the same version. */
-  private case class Folded(
+  private[ingest] case class Folded(
       files: scala.collection.mutable.LinkedHashMap[
         String, scala.collection.mutable.LinkedHashMap[String, (String, String, String)]],
       metas: scala.collection.mutable.LinkedHashMap[String, String])
@@ -1537,16 +1537,33 @@ object Snapshots {
           e: java.util.Map.Entry[String, Folded]): Boolean = size() > 64
     })
 
-  private def stateAt(fs: FileSystem, warehouse: String, asOf: Option[Long])
-      : Option[Folded] =
+  /** The log pinned at `asOf` (default: the latest version), folded
+    * anchored on the newest visible checkpoint: ONE anchored tail walk (the
+    * full listing only for time travel below the anchor) plus a fold-cache
+    * lookup. An operation takes one and serves all of its reads, metadata
+    * lookups and OCC base from it. A warehouse without a log yields an
+    * empty snapshot (`version` None). CDF lines are per-version change
+    * capture, not table state — skipped. */
+  def snapshot(fs: FileSystem, warehouse: String,
+               asOf: Option[Long] = None): Snapshot =
     // The fold can race the protocol's legitimate entry deletions (zombie
     // sweeps, vacuum truncation): a vanished entry aborts THIS pass and
     // the retry re-lists — listing happens inside, so each pass folds a
     // consistent view.
-    retryVanished { stateAtPass(fs, warehouse, asOf) }
+    retryVanished { snapshotPass(fs, warehouse, asOf) }
 
-  private def stateAtPass(fs: FileSystem, warehouse: String,
-                          asOf: Option[Long]): Option[Folded] = {
+  /** The folded state at `asOf`; None when no log exists. */
+  private def stateAt(fs: FileSystem, warehouse: String, asOf: Option[Long])
+      : Option[Folded] = {
+    val s = snapshot(fs, warehouse, asOf)
+    s.version.map(_ => s.state)
+  }
+
+  private val NoState = Folded(scala.collection.mutable.LinkedHashMap.empty,
+    scala.collection.mutable.LinkedHashMap.empty)
+
+  private def snapshotPass(fs: FileSystem, warehouse: String,
+                           asOf: Option[Long]): Snapshot = {
     // Latest-state reads ride the anchored tail listing; time travel below
     // the anchor needs the full log.
     val tail = tailEntries(fs, warehouse)
@@ -1554,7 +1571,7 @@ object Snapshots {
       if (asOf.exists(v => tail.headOption.exists(_.version > v)))
         entries(fs, warehouse)
       else tail
-    if (all.isEmpty) return None
+    if (all.isEmpty) return new Snapshot(fs, warehouse, None, NoState)
     val visible = asOf.fold(all)(v => all.filter(_.version <= v))
     // Candidate anchors newest-first. A checkpoint without its [[EndMarker]]
     // footer is in-flight (a racing writeCheckpoint) or torn (its writer
@@ -1579,8 +1596,12 @@ object Snapshots {
         "|" + deltas.map(_.path.getName).mkString(",")
       // A hit needs no anchor validation: this exact (anchor, deltas) set
       // folded before, and complete entries are immutable.
+      // The pinned version: the newest visible entry (a time travel past
+      // the log's end pins the end).
+      def pinned(st: Folded) =
+        new Snapshot(fs, warehouse, Some(visible.last.version), st)
       val hit = foldCache.get(key)
-      if (hit != null) return Some(hit)
+      if (hit != null) return pinned(hit)
       val anchorActs: Option[Seq[Action]] = anchor match {
         case None => Some(Nil)
         case Some(c) => readEntryOpt(fs, c.path, ckptSkipMs).map(parseActions)
@@ -1608,10 +1629,10 @@ object Snapshots {
           anchor.foreach(c => sweepTorn(fs, c.path))
           ckpts = ckpts.tail
         case Some(acts) =>
-          return Some(foldState(fs, warehouse, key, acts, deltas))
+          return pinned(foldState(fs, warehouse, key, acts, deltas))
       }
     }
-    None // unreachable
+    throw new IllegalStateException("unreachable")
   }
 
   private def foldState(fs: FileSystem, warehouse: String, key: String,
@@ -2153,9 +2174,11 @@ object Snapshots {
       regexp_replace}
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Protocol gate (reader side): a change feed serves file rows, so it
-    // needs every reader feature a plain read needs.
-    requireFeatures(fs, warehouse, table, toInclusive)
+    // The range end is pinned once: the protocol gate (a change feed serves
+    // file rows, so it needs every reader feature a plain read needs), the
+    // end version and the logical schema all come from this snapshot.
+    val snap = snapshot(fs, warehouse, toInclusive)
+    snap.requireFeatures(table)
     val rewriteOps = Set("compact", "zorder")
     def checkLive(acts: Seq[Action]): Unit =
       acts.foreach(a => require(fs.exists(new Path(a.file)),
@@ -2173,7 +2196,7 @@ object Snapshots {
       // the steady state) pays only the anchored tail listing; catch-ups
       // reaching below the anchor list the full dir.
       val all = boundedFrom(fs, warehouse, fromExclusive)
-      val to = toInclusive.getOrElse(all.lastOption.map(_.version).getOrElse(-1L))
+      val to = toInclusive.getOrElse(snap.version.getOrElse(-1L))
       // Vacuum deletes pre-cutoff log entries outright — a range reaching
       // below the earliest retained entry would silently miss their appends.
       all.headOption.foreach(first => require(fromExclusive + 1 >= first.version,
@@ -2282,7 +2305,7 @@ object Snapshots {
         .parquet(cdfList.map(_._1.file).distinct: _*), cdfList))
     val frames = appends ++ cdf.toSeq
     if (frames.isEmpty)
-      read(spark, warehouse, table, Some(to))
+      snap.read(spark, table)
         .withColumn("_change_type", lit(""))
         .withColumn("_commit_version", lit(0L)).limit(0)
     else {
@@ -2290,7 +2313,7 @@ object Snapshots {
       // Serve the feed in the range-end's LOGICAL schema: physical names
       // are stable across renames, so one mapping covers every era's files;
       // the feed's own columns pass through unmapped.
-      columnMapping(fs, warehouse, table, Some(to))
+      snap.columnMapping(table)
         .fold(physical)(_.applyTo(physical,
           passthrough = Seq("_change_type", "_commit_version")))
     }
@@ -2311,12 +2334,15 @@ object Snapshots {
               version: Long): (Int, Int) = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = latestVersion(fs, warehouse)
-    val target = fileMeta(fs, warehouse, table, Some(version)).getOrElse(
-      throw new IllegalStateException(s"no snapshot log under $warehouse"))
+    // OCC base and current file set from one snapshot; the target era is
+    // a second, time-traveled one.
+    val cur = snapshot(fs, warehouse)
+    if (cur.version.isEmpty)
+      throw new IllegalStateException(s"no snapshot log under $warehouse")
+    val target = snapshot(fs, warehouse, Some(version)).files(table)
     require(target.nonEmpty,
       s"table '$table' has no files at version $version — nothing to restore to")
-    val current = fileMeta(fs, warehouse, table).getOrElse(Seq.empty)
+    val current = cur.files(table)
     val currentDv = current.map(a => a.file -> a.dv).toMap
     val targetSet = target.map(_.file).toSet
     // A file present in both versions but with a different deletion-vector
@@ -2338,7 +2364,7 @@ object Snapshots {
         "restore" + java.util.UUID.randomUUID().toString.replace("-", ""),
         adds = adds.map(a => a.table -> a.file),
         removes = removes.map(a => a.table -> a.file),
-        op = "restore", baseVersion = base,
+        op = "restore", baseVersion = cur.version,
         statsFor = adds.map(a => a.file -> a.stats).toMap,
         dvFor = adds.filter(_.dv.nonEmpty).map(a => a.file -> a.dv).toMap)
     (adds.size, removes.size)
@@ -2414,11 +2440,7 @@ object Snapshots {
     * a rows token (pre-stats eras must never masquerade as counted). */
   def logRowCount(fs: FileSystem, warehouse: String, table: String,
                   asOf: Option[Long] = None): Option[Long] =
-    fileMeta(fs, warehouse, table, asOf).flatMap(acts =>
-      acts.foldLeft(Option(0L)) { (acc, a) =>
-        acc.flatMap(t => FileStats.decode(a.stats).filter(_.rows >= 0)
-          .map(st => t + math.max(0L, st.rows - a.dvCount)))
-      })
+    snapshot(fs, warehouse, asOf).logRowCount(table)
 
   /** The exact committed file set of `table` at `asOf` (default: latest).
     * None when the warehouse has no snapshot log at all. */
@@ -2436,76 +2458,23 @@ object Snapshots {
 
   /** Committed files of `table` at `asOf` with partition spec AND stats
     * token — the log-side input to both partition pruning and data
-    * skipping. One ADD Action per live file. */
+    * skipping. One ADD Action per live file; None without a log. */
   def fileMeta(fs: FileSystem, warehouse: String, table: String,
                asOf: Option[Long] = None): Option[Seq[Action]] =
-    stateAt(fs, warehouse, asOf).map(_.files.get(table)
-      .map(_.toSeq.map { case (f, (part, stats, dv)) =>
-        Action("ADD", table, f, part, stats, dv) })
-      .getOrElse(Seq.empty))
-
-  /** Live file Actions of `table` at `asOf`, pruned by `pred` against the
-    * log's per-file stats — the same skipping [[read]] applies (partition
-    * tuples fold in as exact ranges, files without stats are kept, sidecar
-    * blooms load only for log-surviving files), exposed for the DSv2 batch
-    * scan's filter pushdown. `pred` null = no pruning. */
-  def prunedFileMeta(fs: FileSystem, warehouse: String, table: String,
-                     asOf: Option[Long],
-                     pred: FileStats.Pred): Seq[Action] = {
-    val all = fileMeta(fs, warehouse, table, asOf).getOrElse(Seq.empty)
-    if (pred == null || all.isEmpty) all
-    else {
-      val mapping = columnMapping(fs, warehouse, table, asOf)
-      val loader = sidecarBloomLoader(fs, warehouse)
-      all.filter { a =>
-        val stats = statsWithPartition(a)
-        FileStats.mayMatch(
-          mapping.fold(stats)(_.statsToLogical(stats)), pred, loader)
-      }
-    }
-  }
+    Some(snapshot(fs, warehouse, asOf)).filter(_.version.isDefined)
+      .map(_.files(table))
 
   /** Ordered partition-column list of the table's live layout at `asOf`
     * (empty for flat tables). */
   def partitionLayout(fs: FileSystem, warehouse: String, table: String,
                       asOf: Option[Long] = None): Seq[String] =
-    partitionColumns(
-      fileMeta(fs, warehouse, table, asOf).getOrElse(Seq.empty).map(_.partition))
+    snapshot(fs, warehouse, asOf).partitionLayout(table)
 
   /** Table names visible in the CURRENT snapshot: tables with live files,
     * plus declared-but-empty tables that carry properties (a catalog
     * CREATE TABLE before its first data commit). */
   def tableNames(fs: FileSystem, warehouse: String): Seq[String] =
-    stateAt(fs, warehouse, None).map { st =>
-      val live = st.files.collect { case (t, fsq) if fsq.nonEmpty => t }
-      // A dropped table's props key survives the fold with an EMPTY
-      // payload (drop writes `p1;` to clear) — only a nonEmpty decoded
-      // payload marks a declared table, so SHOW TABLES never lists a
-      // ghost that tableExists rejects.
-      val declared = st.metas.collect {
-        case (k, v) if k.endsWith("#props") && decodeProps(v).nonEmpty =>
-          k.stripSuffix("#props")
-      }
-      (live ++ declared).toSeq.distinct.sorted
-    }.getOrElse(Nil)
-
-  /** Every live data file (and deletion-vector path) referenced by any
-    * table EXCEPT `except`, from ONE fold — DROP PURGE's clone-sharing
-    * spare list without a per-table [[fileMeta]] walk over the
-    * warehouse. */
-  private[graft] def liveRefsExcept(fs: FileSystem, warehouse: String,
-                                    except: String): (Set[String], Set[String]) =
-    stateAt(fs, warehouse, None).map { st =>
-      val files = Set.newBuilder[String]
-      val dvs = Set.newBuilder[String]
-      st.files.foreach { case (t, m) =>
-        if (t != except) m.foreach { case (f, (part, stats, dv)) =>
-          files += f
-          if (dv.nonEmpty) dvs += Action("ADD", t, f, part, stats, dv).dvPath
-        }
-      }
-      (files.result(), dvs.result())
-    }.getOrElse((Set.empty[String], Set.empty[String]))
+    snapshot(fs, warehouse).tableNames
 
   /** Zero-copy SHALLOW CLONE (the Delta `CREATE TABLE … SHALLOW CLONE`
     * analog): ONE metadata commit ADDs the source table's live file list —
@@ -2517,40 +2486,40 @@ object Snapshots {
     * survive while EITHER table's retained log references them. The
     * source's column mapping and properties at `asOf` carry over, so
     * logical names and constraints resolve identically. OCC-guarded
-    * against a racing creation of `dst`. Returns the clone's version. */
+    * against a racing creation of `dst`: the emptiness check and the OCC
+    * base come from one snapshot. Returns the clone's version. */
   def cloneTable(spark: SparkSession, warehouse: String, src: String,
                  dst: String, asOf: Option[Long] = None): Long = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(src != dst, "clone source and destination are the same table")
-    val files = fileMeta(fs, warehouse, src, asOf).getOrElse(Seq.empty)
+    val cur = snapshot(fs, warehouse)
+    val from = if (asOf.isEmpty) cur else snapshot(fs, warehouse, asOf)
+    val files = from.files(src)
     require(files.nonEmpty,
       s"source table '$src' has no committed files at " +
         s"version ${asOf.getOrElse("latest")}")
-    require(fileMeta(fs, warehouse, dst).forall(_.isEmpty),
+    require(cur.files(dst).isEmpty,
       s"table '$dst' already exists under $warehouse")
-    val base = latestVersion(fs, warehouse)
-    val srcMapping = columnMapping(fs, warehouse, src, asOf)
-    val srcProps = properties(fs, warehouse, src, asOf)
+    val srcMapping = from.columnMapping(src)
+    val srcProps = from.properties(src)
     // The clone needs everything a reader/writer of the SOURCE needs: its
     // required-feature set (a clone of a DV table without
     // r:deletionVectors would dodge the protocol gate and serve deleted
     // rows to naive readers) and its identity high-water marks (a clone
     // that restarts at 1 would mint ids colliding with the cloned rows).
-    val srcFeatures = tableFeatures(fs, warehouse, src, asOf)
-    val srcHw = stateAt(fs, warehouse, asOf).map(_.metas).getOrElse(Map.empty)
-      .collect { case (k, v) if k.startsWith(s"$src#idhw#") =>
-        (s"$dst#idhw#" + k.stripPrefix(s"$src#idhw#")) -> v }.toSeq
+    val srcHw = from.metasWithPrefix(s"$src#idhw#").map { case (k, v) =>
+      (s"$dst#idhw#" + k.stripPrefix(s"$src#idhw#")) -> v }
     append(fs, warehouse,
       "clone" + java.util.UUID.randomUUID().toString.replace("-", ""),
       adds = files.map(a => dst -> a.file), removes = Nil,
-      op = "clone", baseVersion = base,
+      op = "clone", baseVersion = cur.version,
       statsFor = files.map(a => a.file -> a.stats).toMap,
       metas = srcMapping.map(m => dst -> m.encode).toSeq ++
         (if (srcProps.nonEmpty)
            Seq(propsKey(dst) -> encodeProps(srcProps)) else Nil) ++
         srcHw,
-      features = srcFeatures.map(dst -> _).toSeq,
+      features = from.features(src).map(dst -> _).toSeq,
       dvFor = files.filter(_.dv.nonEmpty).map(a => a.file -> a.dv).toMap)
     latestVersion(fs, warehouse).get
   }
@@ -2560,42 +2529,40 @@ object Snapshots {
     * table's properties and column mapping, so a re-created table of the
     * same name starts fresh. The `drop` op tag makes the change stream and
     * `changes()` treat it like any other unrepresentable rewrite (fail
-    * fast / skipChangeCommits). Returns false when the table has neither
-    * live files nor declared properties — nothing to drop. */
+    * fast / skipChangeCommits). The live files and the OCC base come from
+    * one snapshot, so a commit racing the drop aborts it. Returns false
+    * when the table has neither live files nor declared properties —
+    * nothing to drop. */
   def dropTable(fs: FileSystem, warehouse: String, table: String): Boolean = {
-    val live = fileMeta(fs, warehouse, table).getOrElse(Seq.empty)
-    val props = properties(fs, warehouse, table)
-    val mapping = columnMapping(fs, warehouse, table)
-    if (live.isEmpty && props.isEmpty) false
+    val snap = snapshot(fs, warehouse)
+    val live = snap.files(table)
+    if (live.isEmpty && snap.properties(table).isEmpty) false
     else {
-      val base = latestVersion(fs, warehouse)
-      // A re-created table of the same name must start FRESH: clear the
-      // required-feature set and identity high-water marks with the props
-      // and mapping ("" = cleared in the fold, like the mapping).
-      val stale = stateAt(fs, warehouse, None).map(_.metas)
-        .getOrElse(Map.empty).keys
-        .filter(k => k == featuresKey(table) ||
-          k.startsWith(s"$table#idhw#"))
-        .map(_ -> "").toSeq
       append(fs, warehouse, "drop" +
           java.util.UUID.randomUUID().toString.replace("-", ""),
         adds = Nil, removes = live.map(a => table -> a.file),
-        op = "drop", baseVersion = base,
+        op = "drop", baseVersion = snap.version,
         metas = Seq(propsKey(table) -> encodeProps(Map.empty)) ++
-          mapping.map(_ => table -> "").toSeq ++ // "" clears the mapping
-          stale)
+          // "" clears the mapping
+          snap.columnMapping(table).map(_ => table -> "").toSeq ++
+          staleMetas(snap, table))
       true
     }
   }
+
+  /** The META resets a table's new incarnation starts from (drop and
+    * replace): its required-feature set and identity high-water marks
+    * clear ("" = cleared in the fold, like the mapping). */
+  private def staleMetas(snap: Snapshot, table: String): Seq[(String, String)] =
+    (snap.metaValue(featuresKey(table)).map(_ => featuresKey(table)).toSeq ++
+      snap.metasWithPrefix(s"$table#idhw#").map(_._1)).map(_ -> "")
 
   /** The table's [[ColumnMapping]] visible at `asOf` — None until the
     * first RENAME/DROP COLUMN commit. Versioned like file state: time
     * travel below a rename resolves through the mapping of that era. */
   def columnMapping(fs: FileSystem, warehouse: String, table: String,
                     asOf: Option[Long] = None): Option[ColumnMapping] =
-    stateAt(fs, warehouse, asOf)
-      .flatMap(_.metas.get(table)).filter(_.nonEmpty) // "" = cleared by drop
-      .map(ColumnMapping.decode)
+    snapshot(fs, warehouse, asOf).columnMapping(table)
 
   // ------------------------------------------------------ table properties
 
@@ -2618,7 +2585,7 @@ object Snapshots {
     * documented activation contract (a constraint binds commits
     * validated after it lands — validate existing data when adding one)
     * covers the remaining claim-window sliver. */
-  private def propsKey(table: String) = s"$table#props"
+  private[ingest] def propsKey(table: String) = s"$table#props"
 
   // ---------------------------------------------------- applied-txn registry
 
@@ -2665,9 +2632,10 @@ object Snapshots {
     * accessor strips. */
   def txnVersion(fs: FileSystem, warehouse: String, appId: String)
       : Option[Long] =
-    stateAt(fs, warehouse, None)
-      .flatMap(_.metas.get(txnMetaKey(appId)))
-      .flatMap(_.split('@').head.toLongOption)
+    txnVersion(snapshot(fs, warehouse), appId)
+
+  private def txnVersion(snap: Snapshot, appId: String): Option[Long] =
+    snap.metaValue(txnMetaKey(appId)).flatMap(_.split('@').head.toLongOption)
 
   /** Was `commitId` provably applied? Survives log vacuum — the check the
     * exactly-once merge/stream replay paths pair with the raw entry scan.
@@ -2678,7 +2646,8 @@ object Snapshots {
   def txnApplied(fs: FileSystem, warehouse: String, commitId: String)
       : Boolean = {
     val (app, v) = txnParse(commitId)
-    txnVersion(fs, warehouse, app).exists(_ >= v) ||
+    val snap = snapshot(fs, warehouse)
+    txnVersion(snap, app).exists(_ >= v) ||
       // Upgrade bridge: before the watermark shape was gated to merge-/
       // stream- prefixes, ANY id ending in `-<digits>` registered under
       // its TRUNCATED app key with a numeric watermark. An ad-hoc replay
@@ -2690,7 +2659,7 @@ object Snapshots {
       // order-independent membership and never feed this branch.
       (!txnIsWatermark(commitId) && (commitId match {
         case LegacyTxnIdRe(lapp, lv) =>
-          txnVersion(fs, warehouse, lapp).exists(_ >= lv.toLong)
+          txnVersion(snap, lapp).exists(_ >= lv.toLong)
         case _ => false
       }))
   }
@@ -2706,10 +2675,14 @@ object Snapshots {
     * regress the watermark); verbatim ids stamp their registration time
     * for [[setTxnRetention]] expiry. */
   private[graft] def txnMetaEntry(fs: FileSystem, warehouse: String,
-                                  commitId: String): (String, String) = {
+                                  commitId: String): (String, String) =
+    txnMetaEntry(snapshot(fs, warehouse), commitId)
+
+  private[ingest] def txnMetaEntry(snap: Snapshot, commitId: String)
+      : (String, String) = {
     val (app, v) = txnParse(commitId)
     if (txnIsWatermark(commitId)) {
-      val cur = txnVersion(fs, warehouse, app).getOrElse(Long.MinValue)
+      val cur = txnVersion(snap, app).getOrElse(Long.MinValue)
       (txnMetaKey(app), math.max(v, cur).toString)
     } else
       (txnMetaKey(app), s"0@${System.currentTimeMillis()}")
@@ -2769,10 +2742,10 @@ object Snapshots {
   val SupportedWriterFeatures: Set[String] =
     SupportedReaderFeatures ++ Set("identityColumns", "generatedColumns")
 
-  private def featuresKey(table: String) = s"$table#features"
+  private[ingest] def featuresKey(table: String) = s"$table#features"
   private def encodeFeatures(fs0: Set[String]): String =
     "tf1;" + fs0.toSeq.sorted.mkString(";")
-  private def decodeFeatures(payload: String): Set[String] =
+  private[ingest] def decodeFeatures(payload: String): Set[String] =
     payload.split(";").toSeq match {
       case "tf1" +: names => names.filter(_.nonEmpty).toSet
       case _ => throw new IllegalArgumentException(
@@ -2783,9 +2756,7 @@ object Snapshots {
     * "" = cleared by a drop (a re-created name starts fresh). */
   def tableFeatures(fs: FileSystem, warehouse: String, table: String,
                     asOf: Option[Long] = None): Set[String] =
-    stateAt(fs, warehouse, asOf)
-      .flatMap(_.metas.get(featuresKey(table))).filter(_.nonEmpty)
-      .map(decodeFeatures).getOrElse(Set.empty)
+    snapshot(fs, warehouse, asOf).features(table)
 
   /** Thrown when a table requires features this build doesn't know —
     * deliberately NOT a subclass of the OCC/validation exceptions so
@@ -2798,8 +2769,11 @@ object Snapshots {
     * names, never silently-wrong rows. */
   def requireFeatures(fs: FileSystem, warehouse: String, table: String,
                       asOf: Option[Long] = None,
-                      forWrite: Boolean = false): Unit = {
-    val req = tableFeatures(fs, warehouse, table, asOf)
+                      forWrite: Boolean = false): Unit =
+    snapshot(fs, warehouse, asOf).requireFeatures(table, forWrite)
+
+  private[ingest] def checkFeatures(table: String, req: Set[String],
+                                    forWrite: Boolean): Unit = {
     if (req.isEmpty) return
     val unknownR = req.collect {
       case f if f.startsWith("r:") &&
@@ -2844,18 +2818,19 @@ object Snapshots {
     require(SupportedWriterFeatures(name),
       s"cannot drop feature '$name': this build does not implement it, " +
         "so it cannot prove nothing live depends on it — upgrade first")
-    // OCC base is captured BEFORE the dependency probe, and the conflict
-    // scope includes the DATA TABLE (`occTables`), not just the features
-    // pseudo-key: a concurrent commit re-exercising the feature (e.g. a
-    // DELETE attaching a deletion vector) emits no `#features` META line
-    // when the feature is already in the set — only its ADD/REMOVE/DV
-    // lines on the table betray it, and those must abort the drop.
-    val base = latestVersion(fs, warehouse)
-    val cur = tableFeatures(fs, warehouse, table)
+    // The OCC base and the dependency probe come from ONE snapshot, and
+    // the conflict scope includes the DATA TABLE (`occTables`), not just
+    // the features pseudo-key: a concurrent commit re-exercising the
+    // feature (e.g. a DELETE attaching a deletion vector) emits no
+    // `#features` META line when the feature is already in the set — only
+    // its ADD/REMOVE/DV lines on the table betray it, and those must
+    // abort the drop.
+    val snap = snapshot(fs, warehouse)
+    val cur = snap.features(table)
     val scoped = cur.filter(_.drop(2) == name)
     require(scoped.nonEmpty,
       s"table '$table' does not require feature '$name'")
-    val deps = featureDependents(fs, warehouse, table, name)
+    val deps = featureDependents(snap, table, name)
     if (deps.nonEmpty)
       throw new IllegalStateException(
         s"cannot drop feature '$name' from '$table': ${deps.mkString("; ")}")
@@ -2864,7 +2839,7 @@ object Snapshots {
     append(fs, warehouse, "dropfeat" +
         java.util.UUID.randomUUID().toString.replace("-", ""),
       adds = Nil, removes = Nil, op = "dropFeature",
-      baseVersion = base, occTables = Set(table),
+      baseVersion = snap.version, occTables = Set(table),
       metas = Seq(featuresKey(table) ->
         (if (remaining.isEmpty) "" else encodeFeatures(remaining))))
   }
@@ -2872,17 +2847,17 @@ object Snapshots {
   /** What in the table's LIVE state still needs `name` (empty = safe to
     * drop). Checks are exact, not heuristic — each names the dependent
     * and the purge verb that clears it. */
-  private def featureDependents(fs: FileSystem, warehouse: String,
-                                table: String, name: String): Seq[String] = {
-    lazy val live = fileMeta(fs, warehouse, table).getOrElse(Nil)
-    lazy val props = properties(fs, warehouse, table)
+  private def featureDependents(snap: Snapshot, table: String,
+                                name: String): Seq[String] = {
+    lazy val live = snap.files(table)
+    lazy val props = snap.properties(table)
     name match {
       case "deletionVectors" =>
         val n = live.count(_.dv.nonEmpty)
         if (n > 0) Seq(s"$n live file(s) still carry deletion vectors — " +
           "REORG TABLE … APPLY (PURGE) or OPTIMIZE first") else Nil
       case "columnMapping" =>
-        columnMapping(fs, warehouse, table) match {
+        snap.columnMapping(table) match {
           case Some(m) if m.cols.exists { case (l, p) => l != p } ||
               m.droppedPhysical.nonEmpty =>
             Seq("the column mapping still renames columns or hides " +
@@ -2922,11 +2897,6 @@ object Snapshots {
     }
   }
 
-  /** Raw META payload of a pseudo-key (identity high-water marks, etc.). */
-  private[graft] def metaValue(fs: FileSystem, warehouse: String,
-                               key: String): Option[String] =
-    stateAt(fs, warehouse, None).flatMap(_.metas.get(key))
-
   /** The META entry merging `features` into the table's required set —
     * None when nothing is new (no redundant log lines). Hand it to
     * [[append]]'s `metas` so the requirement lands ATOMICALLY with the
@@ -2934,7 +2904,7 @@ object Snapshots {
   private[graft] def featureMetaEntry(fs: FileSystem, warehouse: String,
                                       table: String, features: Set[String])
       : Option[(String, String)] = {
-    val cur = tableFeatures(fs, warehouse, table)
+    val cur = snapshot(fs, warehouse).features(table)
     if ((features -- cur).isEmpty) None
     else Some(featuresKey(table) -> encodeFeatures(cur ++ features))
   }
@@ -2945,7 +2915,7 @@ object Snapshots {
       .map { case (k, v) => s"${e(k)}=${e(v)}" }.mkString(";")
   }
 
-  private def decodeProps(payload: String): Map[String, String] = {
+  private[ingest] def decodeProps(payload: String): Map[String, String] = {
     def d(s: String) = java.net.URLDecoder.decode(s, StandardCharsets.UTF_8)
     payload.split(";", -1).toSeq match {
       case "p1" +: pairs => pairs.filter(_.nonEmpty).map { kv =>
@@ -2960,9 +2930,7 @@ object Snapshots {
     * [[setProperties]] commit). */
   def properties(fs: FileSystem, warehouse: String, table: String,
                  asOf: Option[Long] = None): Map[String, String] =
-    stateAt(fs, warehouse, asOf)
-      .flatMap(_.metas.get(propsKey(table))).map(decodeProps)
-      .getOrElse(Map.empty)
+    snapshot(fs, warehouse, asOf).properties(table)
 
   /** The props META entry that would merge `updates` in — for callers
     * composing a property change ATOMICALLY with another metadata commit
@@ -2970,37 +2938,29 @@ object Snapshots {
   private[graft] def propsMetaEntry(fs: FileSystem, warehouse: String,
                                      table: String,
                                      updates: Map[String, String])
-      : (String, String) = {
-    val merged = (properties(fs, warehouse, table) ++ updates)
-      .filter { case (_, v) => v != null && v.nonEmpty }
-    propsKey(table) -> encodeProps(merged)
-  }
+      : (String, String) =
+    mergedProps(snapshot(fs, warehouse), table, updates)
+
+  private def mergedProps(snap: Snapshot, table: String,
+                          updates: Map[String, String]): (String, String) =
+    propsKey(table) -> encodeProps((snap.properties(table) ++ updates)
+      .filter { case (_, v) => v != null && v.nonEmpty })
 
   // ------------------------------------------------------- column defaults
 
-  /** Column DEFAULTs (`ALTER TABLE t ADD COLUMN c DEFAULT lit`) — the
+  /** Which defaulted physical columns this file CARRIES — the subgroup
+    * key: files sharing it read through one relation, and the defaults of
+    * the complement are injected as constants.
+    *
+    * Column DEFAULTs (`ALTER TABLE t ADD COLUMN c DEFAULT lit`) are the
     * Iceberg initial-default / Delta column-default analog, metadata-only:
-    * the literal lives in the `default.<logical>` table property and is
+    * the literal lives in the `default.<logical>` table property
+    * ([[Snapshot.defaults]] resolves it to the physical name) and is
     * served at READ time for rows of files written BEFORE the column
     * existed (per-FILE, decided from the log's schema tags — a post-add
     * file's stored values, explicit NULLs included, always win). Files
     * without schema tags (pre-stats eras) conservatively read null: a
-    * wrong default is worse than the old behavior.
-    *
-    * Returns PHYSICAL-name → default SQL literal text at `asOf`. */
-  private[graft] def columnDefaults(fs: FileSystem, warehouse: String,
-                                    table: String, asOf: Option[Long],
-                                    mapping: Option[ColumnMapping])
-      : Map[String, String] =
-    properties(fs, warehouse, table, asOf).collect {
-      case (k, v) if k.startsWith("default.") && v.nonEmpty =>
-        val logical = k.stripPrefix("default.")
-        mapping.fold(logical)(_.physicalFor(logical)) -> v
-    }
-
-  /** Which defaulted physical columns this file CARRIES — the subgroup
-    * key: files sharing it read through one relation, and the defaults of
-    * the complement are injected as constants. */
+    * wrong default is worse than the old behavior. */
   private[graft] def defaultPresence(a: Action,
                                      defaults: Map[String, String])
       : Set[String] =
@@ -3033,12 +2993,11 @@ object Snapshots {
     * commit — RESTORE and time travel see the era's properties. */
   def setProperties(fs: FileSystem, warehouse: String, table: String,
                     updates: Map[String, String]): Unit = {
-    val base = latestVersion(fs, warehouse)
-    val merged = (properties(fs, warehouse, table) ++ updates)
-      .filter { case (_, v) => v != null && v.nonEmpty }
+    val snap = snapshot(fs, warehouse)
     append(fs, warehouse, java.util.UUID.randomUUID().toString,
-      adds = Nil, removes = Nil, op = "set_properties", baseVersion = base,
-      metas = Seq(propsKey(table) -> encodeProps(merged)))
+      adds = Nil, removes = Nil, op = "set_properties",
+      baseVersion = snap.version,
+      metas = Seq(mergedProps(snap, table, updates)))
   }
 
   /** REPLACE TABLE's metadata tail: the table's declaration becomes
@@ -3048,22 +3007,18 @@ object Snapshots {
     * properties/mapping (time travel across the replace). */
   def replaceDeclaration(fs: FileSystem, warehouse: String, table: String,
                          declared: Map[String, String]): Unit = {
-    val base = latestVersion(fs, warehouse)
-    val hadMapping = columnMapping(fs, warehouse, table).nonEmpty
     // Replace = a NEW contract: the required-feature set and identity
     // marks of the old incarnation clear with the properties (the new
     // data re-stamps whatever it actually uses).
-    val stale = stateAt(fs, warehouse, None).map(_.metas)
-      .getOrElse(Map.empty).keys
-      .filter(k => k == featuresKey(table) ||
-        k.startsWith(s"$table#idhw#"))
-      .map(_ -> "").toSeq
+    val snap = snapshot(fs, warehouse)
     append(fs, warehouse, java.util.UUID.randomUUID().toString,
-      adds = Nil, removes = Nil, op = "set_properties", baseVersion = base,
+      adds = Nil, removes = Nil, op = "set_properties",
+      baseVersion = snap.version,
       metas = Seq(propsKey(table) -> encodeProps(
         declared.filter { case (_, v) => v != null && v.nonEmpty })) ++
-        (if (hadMapping) Seq(table -> "") else Nil) ++ // "" clears mapping
-        stale)
+        // "" clears the mapping
+        snap.columnMapping(table).map(_ => table -> "").toSeq ++
+        staleMetas(snap, table))
   }
 
   /** Writer options every rewrite of `table` must stage under — today the
@@ -3075,8 +3030,12 @@ object Snapshots {
     * silently degrading point-lookup pruning with every rewrite. */
   def bloomWriteOptionsFor(fs: FileSystem, warehouse: String, table: String,
                            mapping: Option[ColumnMapping])
-      : Map[String, String] = {
-    val props = properties(fs, warehouse, table)
+      : Map[String, String] =
+    bloomOptions(properties(fs, warehouse, table), mapping)
+
+  private[ingest] def bloomOptions(props: Map[String, String],
+                                   mapping: Option[ColumnMapping])
+      : Map[String, String] =
     props.get("bloom.columns").map(_.split(",").toSeq.filter(_.nonEmpty))
       .filter(_.nonEmpty)
       .map { logical =>
@@ -3085,7 +3044,6 @@ object Snapshots {
           ndv = props.get("bloom.ndv").map(_.toLong).getOrElse(25000L),
           fpp = props.get("bloom.fpp").map(_.toDouble).getOrElse(0.01))
       }.getOrElse(Map.empty)
-  }
 
   /** Process-wide sidecar-bloom cache: one file holds one column's
     * bitsets for one data file (≤ [[FileStats.MaxBloomSidecarBytes]]);
@@ -3227,7 +3185,7 @@ object Snapshots {
   /** A file's skipping stats with its partition tuple folded in as exact
     * single-value ranges (strings — Hive specs are untyped; a predicate
     * comparing them to a non-string keeps the file, which is sound). */
-  private def statsWithPartition(a: Action): Option[FileStats.Stats] = {
+  private[ingest] def statsWithPartition(a: Action): Option[FileStats.Stats] = {
     val base = FileStats.decode(a.stats)
     // The Hive null sentinel is NOT a value: claiming min=max=sentinel for
     // a null partition would compare the literal string against real
@@ -3250,18 +3208,30 @@ object Snapshots {
     * consistent. The condition is resolved against the table's schema
     * first (types checked, names bound), then the resolved catalyst tree
     * is translated; planning the throwaway frame reads one footer for the
-    * schema and zero data. */
+    * schema and zero data. Both frames plan from one snapshot. */
   def readWhere(spark: SparkSession, warehouse: String, table: String,
                 condition: org.apache.spark.sql.Column,
                 asOf: Option[Long] = None): DataFrame = {
-    val resolved = read(spark, warehouse, table, asOf).filter(condition)
-      .queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    read(spark, warehouse, table, asOf,
-      dataFilter = resolved.flatMap(FileStats.fromExpression).orNull)
+    val snap = snapshot(fsOf(spark, warehouse), warehouse, asOf)
+    snap.read(spark, table,
+      dataFilter = statsPred(spark, snap, table, condition))
       .filter(condition)
   }
+
+  /** `condition` resolved against `table`'s schema at `snap` and
+    * translated to a stats predicate — null when it has no stats-decidable
+    * part (DML candidate pruning and [[readWhere]] share it). */
+  private[ingest] def statsPred(spark: SparkSession, snap: Snapshot,
+                               table: String,
+                               condition: org.apache.spark.sql.Column)
+      : FileStats.Pred =
+    snap.read(spark, table).filter(condition)
+      .queryExecution.analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.flatMap(FileStats.fromExpression).orNull
+
+  private def fsOf(spark: SparkSession, warehouse: String): FileSystem =
+    new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Parse a `k=v/...` spec with Hive path-escaping undone (same contract
     * as [[Action.partitionMap]]): filters and stats compare real values —
@@ -3374,50 +3344,42 @@ object Snapshots {
   def read(spark: SparkSession, warehouse: String, table: String,
            asOf: Option[Long] = None, mergeSchema: Boolean = false,
            partitionFilter: Map[String, String] => Boolean = null,
-           dataFilter: FileStats.Pred = null): DataFrame = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+           dataFilter: FileStats.Pred = null): DataFrame =
+    snapshot(fsOf(spark, warehouse), warehouse, asOf)
+      .read(spark, table, mergeSchema, partitionFilter, dataFilter)
+
+  /** [[read]] at a pinned snapshot ([[Snapshot.read]]). */
+  private[ingest] def readAt(spark: SparkSession, snap: Snapshot,
+                             table: String, mergeSchema: Boolean,
+                             partitionFilter: Map[String, String] => Boolean,
+                             dataFilter: FileStats.Pred): DataFrame = {
     // Protocol gate: refuse a table requiring reader features this build
     // doesn't know — fail fast, never silently-wrong rows. Time travel
     // checks the ERA's feature set.
-    requireFeatures(fs, warehouse, table, asOf)
-    val folded = stateAt(fs, warehouse, asOf)
-      .getOrElse(throw new IllegalStateException(
-        s"no snapshot log under $warehouse — was this table committed via TxnCommit?"))
-    val all = folded.files.get(table)
-      .map(_.toSeq.map { case (f, (part, stats, dv)) =>
-        Action("ADD", table, f, part, stats, dv) })
-      .getOrElse(Seq.empty)
+    snap.requireFeatures(table)
+    val at = snap.version.getOrElse(throw new IllegalStateException(
+      s"no snapshot log under ${snap.warehouse} — was this table committed via TxnCommit?"))
+    val all = snap.files(table)
     // Column mapping (rename/drop without rewrite): files keep ONE physical
     // schema; the logical view is resolved at the end, and log-side stats
     // (physical keys) are renamed to logical so skipping still fires on
     // logically-named predicates.
-    val mapping =
-      folded.metas.get(table).filter(_.nonEmpty).map(ColumnMapping.decode)
+    val mapping = snap.columnMapping(table)
     require(all.nonEmpty,
-      s"table '$table' has no committed files at version ${asOf.getOrElse("latest")}")
+      s"table '$table' has no committed files at version $at")
     val partPruned =
       if (partitionFilter == null) all
-      else all.filter(a => partitionFilter(specToMap(a.partition)))
+      else snap.pruned(table, null, partitionFilter)
     require(partPruned.nonEmpty,
       s"partition filter pruned every file of '$table' at version " +
-        s"${asOf.getOrElse("latest")} — relax the filter or read the empty table explicitly")
+        s"$at — relax the filter or read the empty table explicitly")
     // Data skipping from the log's per-file [min,max] — no footer reads at
     // plan time: a pruned file costs nothing, not even a task. dataFilter
     // must be implied by the query's own row filter (skipping is an
     // optimization, never a semantic change); files without stats are kept.
-    // Partition tuples join the stats as exact [v,v] string ranges, so one
-    // predicate skips on data AND partition columns uniformly.
     val pruned =
       if (dataFilter == null) partPruned
-      else {
-        val loader = sidecarBloomLoader(fs, warehouse)
-        partPruned.filter { a =>
-          val stats = statsWithPartition(a)
-          FileStats.mayMatch(mapping.fold(stats)(_.statsToLogical(stats)),
-            dataFilter, loader)
-        }
-      }
+      else snap.pruned(table, dataFilter, partitionFilter)
     // Files group per (root table dir, partition layout): normally ONE
     // group — the fast single-relation path — but a zero-copy clone's
     // shared files root in the source's dir, and a table whose partition
@@ -3429,7 +3391,7 @@ object Snapshots {
     // Column defaults split groups further by which defaulted columns a
     // file carries (zero-cost when no default exists): files lacking one
     // read it as the injected constant, per-file exactness.
-    val defaults = columnDefaults(fs, warehouse, table, asOf, mapping)
+    val defaults = snap.defaults(table)
     def groupKey(a: Action): (String, Seq[String], Set[String]) =
       (rootDirOf(a), partitionColumns(Seq(a.partition)),
         defaultPresence(a, defaults))

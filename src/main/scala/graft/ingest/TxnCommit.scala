@@ -195,7 +195,7 @@ object TxnCommit {
     * full replace (overwrite/REPLACE TABLE — every live file removed)
     * may change column types, while a partial overwrite (dynamic
     * partitions) still validates against the surviving files. */
-  private def validateSchemas(fs: FileSystem, warehouse: String,
+  private def validateSchemas(snap: Snapshot,
                               statsFor: Map[String, String],
                               removed: Set[String])
       : Seq[(String, String)] = {
@@ -227,8 +227,7 @@ object TxnCommit {
                 "or land the value as a raw INT64 nanos column instead")
           })
         val current: Map[String, String] =
-          Snapshots.fileMeta(fs, warehouse, table).getOrElse(Seq.empty)
-            .filterNot(a => removed.contains(a.file))
+          snap.files(table).filterNot(a => removed.contains(a.file))
             .flatMap(a => FileStats.schemaTags(a.stats))
             .toMap
         if (current.nonEmpty)
@@ -398,12 +397,11 @@ object TxnCommit {
     (notNull, bounds)
   }
 
-  private def validateConstraints(fs: FileSystem, warehouse: String,
+  private def validateConstraints(snap: => Snapshot,
                                   statsFor: Map[String, String]): Unit =
     statsFor.groupBy { case (dest, _) => tableOf(dest) }.foreach {
       case (table, destStats) =>
-        val props = Snapshots.properties(fs, warehouse, table)
-        val (notNull, bounds) = constraintSet(props, table)
+        val (notNull, bounds) = constraintSet(snap.properties(table), table)
         if (notNull.nonEmpty || bounds.nonEmpty)
           destStats.foreach { case (dest, token) =>
             val st = FileStats.decode(token).getOrElse(
@@ -469,28 +467,29 @@ object TxnCommit {
         Some(rel)
       }
     }
-    // Writer-side protocol gate, BEFORE staging work: refuse a table
+    // Every commit-time check of every table reads ONE fresh snapshot.
+    // Writer-side protocol gate first, BEFORE staging work: refuse a table
     // requiring features this build doesn't know (fail fast, nothing to
     // roll back yet).
+    val snap = Snapshots.snapshot(fs, warehouse)
     (moves.map(m => asTable.getOrElse(tableOf(m.dest))) ++
       (deletes ++ retained).map(d => asTable.getOrElse(tableOf(d))) ++
       dvAttach.map { case (data, _, _) => asTable.getOrElse(tableOf(data)) })
-      .distinct.foreach(t =>
-        Snapshots.requireFeatures(fs, warehouse, t, forWrite = true))
+      .distinct.foreach(snap.requireFeatures(_, forWrite = true))
     val statsFor: Map[String, String] = moves
       .filterNot(m => isChangeDest(m.dest) || isDvDest(m.dest))
       .map(m => m.dest ->
         FileStats.collect(fs.getConf, new Path(m.src), spillFor(m.dest)))
       .filter(_._2.nonEmpty).toMap
     val exercisedFeatures =
-      validateSchemas(fs, warehouse, statsFor, (deletes ++ retained).toSet)
+      validateSchemas(snap, statsFor, (deletes ++ retained).toSet)
     // GENERATED ALWAYS: staged data files of an identity table must CARRY
     // the column — a raw append without it would silently land null-id
     // rows. Rewrites (merge/compact) read it from their inputs and pass;
     // fresh appends must route through Identity.appendWithIdentity.
     statsFor.groupBy { case (dest, _) => tableOf(dest) }.foreach {
       case (table, ds) =>
-        val props = Snapshots.properties(fs, warehouse, table)
+        val props = snap.properties(table)
         val idCols = props.keys.filter(_.startsWith("identity."))
           .map(_.stripPrefix("identity."))
         idCols.foreach { c =>
@@ -521,7 +520,7 @@ object TxnCommit {
     // collection failed (collect returns "" on any footer trouble) is
     // unverifiable and must fail the commit, not silently bypass the
     // constraint — hand the full dest list so absent tokens are caught.
-    validateConstraints(fs, warehouse,
+    validateConstraints(snap,
       moves.filterNot(m => isChangeDest(m.dest) || isDvDest(m.dest))
         .map(m => m.dest -> statsFor.getOrElse(m.dest, "")).toMap)
     val allMoves = moves ++ sidecarMoves
@@ -638,7 +637,10 @@ object TxnCommit {
     // append can still race in; the documented activation contract —
     // constraints bind commits validated after the property — covers
     // that sliver, as it does for Delta's metadata races.)
-    try validateConstraints(fs, warehouse, statsFor)
+    // One fresh snapshot, taken only when needed, serves the constraint
+    // re-check and the applied-txn watermark.
+    lazy val snap = Snapshots.snapshot(fs, warehouse)
+    try validateConstraints(snap, statsFor)
     catch {
       case e: IllegalArgumentException =>
         val mf = new Path(commitsDir(warehouse), s"$commitId.manifest")
@@ -676,8 +678,7 @@ object TxnCommit {
       op = op, baseVersion = baseVersion, statsFor = statsFor,
       changeFiles = cdfMoves.map(m => tableOf(m.dest) -> m.dest),
       replay = replay,
-      metas = txnEff
-        .map(id => Snapshots.txnMetaEntry(fs, warehouse, id)).toSeq ++
+      metas = txnEff.map(Snapshots.txnMetaEntry(snap, _)).toSeq ++
         metasEff,
       dvs = attach.map { case (data, dv, n) =>
         (asT.getOrElse(tableOf(data)), data, s"$n:$dv") },

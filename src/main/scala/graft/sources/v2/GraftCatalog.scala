@@ -79,8 +79,9 @@ class GraftCatalog extends TableCatalog
 
   override def tableExists(ident: Identifier): Boolean = {
     val t = tableName(ident)
-    Snapshots.fileMeta(fs, warehouse, t).exists(_.nonEmpty) ||
-      Snapshots.properties(fs, warehouse, t).contains("catalog.schema.ddl")
+    val snap = Snapshots.snapshot(fs, warehouse)
+    snap.files(t).nonEmpty ||
+      snap.properties(t).contains("catalog.schema.ddl")
   }
 
   override def loadTable(ident: Identifier): Table = loadAt(ident, None)
@@ -101,20 +102,20 @@ class GraftCatalog extends TableCatalog
 
   private def loadAt(ident: Identifier, asOf: Option[Long]): Table = {
     val t = tableName(ident)
+    // Schema, declaration and layout all come from one snapshot.
+    val snap = Snapshots.snapshot(fs, warehouse, asOf)
     val committed =
-      if (Snapshots.fileMeta(fs, warehouse, t, asOf).exists(_.nonEmpty))
-        Some(Snapshots.read(spark, warehouse, t, asOf).schema)
-      else None
+      if (snap.files(t).nonEmpty) Some(snap.read(spark, t).schema) else None
     // asOf rides into the properties too: a time-traveled load must apply
     // THAT era's declared types/partitioning/TBLPROPERTIES, not the
     // current ones (wrong era after an ALTER or a replace/re-create).
-    val tblProps = Snapshots.properties(fs, warehouse, t, asOf)
+    val tblProps = snap.properties(t)
     val declared: Map[String, org.apache.spark.sql.types.DataType] =
       tblProps.get("catalog.schema.ddl").map(StructType.fromDDL)
         .map(_.fields.map(f => f.name -> f.dataType).toMap)
         .getOrElse(Map.empty)
     val partCols = {
-      val live = Snapshots.partitionLayout(fs, warehouse, t, asOf)
+      val live = snap.partitionLayout(t)
       if (live.nonEmpty) live
       else tblProps.get("catalog.partition.columns").toSeq
         .flatMap(_.split(",")).filter(_.nonEmpty)
@@ -313,14 +314,14 @@ class GraftCatalog extends TableCatalog
     * the reference sweep may reclaim those, once every table lets go. */
   override def purgeTable(ident: Identifier): Boolean = {
     val t = tableName(ident)
-    val live = Snapshots.fileMeta(fs, warehouse, t).getOrElse(Seq.empty)
+    val live = Snapshots.snapshot(fs, warehouse).files(t)
     val dropped = dropTable(ident)
     if (dropped) {
       // Clone-sharing spare list from ONE warehouse fold (not a per-table
       // fileMeta walk): on a thousand-table warehouse a DROP PURGE pays
       // one cached fold plus a set build over live references.
       val (sharedFiles, sharedDvs) =
-        Snapshots.liveRefsExcept(fs, warehouse, t)
+        Snapshots.snapshot(fs, warehouse).liveRefsExcept(t)
       live.filterNot(a => sharedFiles(a.file)).foreach { a =>
         fs.delete(new Path(a.file), false)
         if (a.dv.nonEmpty && !sharedDvs(a.dvPath))
@@ -544,26 +545,23 @@ class GraftCatalogTable(tableSchema: StructType,
     val t = props.get("table")
     val fs = new org.apache.hadoop.fs.Path(wh).getFileSystem(
       SparkSession.active.sparkContext.hadoopConfiguration)
-    graft.ingest.Snapshots.logRowCount(fs, wh, t,
-      Option(props.get("versionAsOf")).map(_.toLong))
+    graft.ingest.Snapshots.snapshot(fs, wh,
+      Option(props.get("versionAsOf")).map(_.toLong)).logRowCount(t)
   }
 
   // SQL reads/writes arrive with EMPTY per-query options: the table's own
   // properties (warehouse/table/versionAsOf, partitionBy) supply identity;
   // explicit per-query options still win.
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : org.apache.spark.sql.connector.read.ScanBuilder = {
+      : SnapshotScanBuilder = {
     val merged = new CaseInsensitiveStringMap(
       (props.asScala ++ options.asScala).asJava)
     // Protocol gate: the per-file catalog scan serves rows directly from
     // the log's file list, so it needs every reader feature a batch read
-    // needs — refuse unknown ones at plan time, naming the feature.
-    val whGate = merged.get("warehouse")
-    graft.ingest.Snapshots.requireFeatures(
-      new org.apache.hadoop.fs.Path(whGate).getFileSystem(
-        SparkSession.active.sparkContext.hadoopConfiguration),
-      whGate, merged.get("table"),
-      Option(merged.get("versionAsOf")).map(_.toLong))
+    // needs — refuse unknown ones at plan time, naming the feature. The
+    // gate reads the scan's own pinned snapshot.
+    val builder = super.newScanBuilder(merged)
+    builder.requireReadable()
     // The catalog table's resolved schema is the SNAPSHOT schema; serving
     // the change feed under it would silently surface merge pre/post-image
     // rows as plain data. The feed has its own surfaces — fail fast.
@@ -572,7 +570,7 @@ class GraftCatalogTable(tableSchema: StructType,
         "SNAPSHOT CHANGES OF t, Snapshots.changes, or " +
         "spark.read.format(\"graft-snapshots\").option(\"readChangeFeed\", " +
         "\"true\") (whose schema carries _change_type/_commit_version)")
-    super.newScanBuilder(merged)
+    builder
   }
 
   override def newWriteBuilder(

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
-import graft.ingest.{FileStats, Snapshots, TxnCommit}
+import graft.ingest.{ColumnMapping, FileStats, Snapshot, Snapshots, TxnCommit}
 
 /** Structured Streaming source over the [[Snapshots]] log — the read-side
   * dual of the exactly-once transactional sink: offsets ARE snapshot
@@ -117,13 +117,11 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     TxnCommit.recover(fs, warehouse)
-    // OCC anchor FIRST, live-file set second: a commit racing in between
-    // then has version > base and aborts the overwrite at publish — the
-    // reverse order would let it slip past both the REMOVE set and the
-    // conflict check (its files silently surviving an "overwrite").
-    val base = graft.ingest.Snapshots.latestVersion(fs, warehouse)
-    val existing = graft.ingest.Snapshots.fileMeta(fs, warehouse, table)
-      .map(_.map(_.file)).getOrElse(Seq.empty)
+    // OCC base and live-file set from ONE snapshot: a commit racing in
+    // after it has version > base and aborts the overwrite at publish —
+    // it can slip past neither the REMOVE set nor the conflict check.
+    val snap = Snapshots.snapshot(fs, warehouse)
+    val existing = snap.files(table).map(_.file)
     val exists = existing.nonEmpty
     val skip = mode match {
       case SaveMode.ErrorIfExists if exists =>
@@ -139,16 +137,14 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
       // (ids are minted under the allocation-serialized high-water mark);
       // generated columns RECOMPUTE from their expression (the engine's
       // value wins — a supplied value cannot break stored ≡ expression).
-      require(graft.ingest.Identity.identityColumns(fs, warehouse, table)
-          .isEmpty,
+      require(graft.ingest.Identity.identityColumns(snap, table).isEmpty,
         s"table '$table' declares GENERATED ALWAYS AS IDENTITY columns — " +
           "write through Identity.appendWithIdentity")
-      val data1 = graft.ingest.Generated.materialize(fs, warehouse, table,
-        data)
+      val data1 = graft.ingest.Generated.materialize(snap, table, data)
       // Column-mapped (renamed) tables: files store PHYSICAL names. A
       // caller naturally writes the LOGICAL schema it reads — translate,
       // or the logical name would silently evolve as a duplicate column.
-      val mapping = Snapshots.columnMapping(fs, warehouse, table)
+      val mapping = snap.columnMapping(table)
         .map(_.cols.toMap).getOrElse(Map.empty)
       val physData = mapping.foldLeft(data1) {
         case (df, (logical, physical)) =>
@@ -169,8 +165,8 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
       // RequiresDistributionAndOrdering; AQE-off sessions skip the hint
       // (REBALANCE is an AQE optimization).
       val ow = Option(options.get("graft.optimizeWrite"))
-        .orElse(graft.ingest.Snapshots.properties(fs, warehouse, table)
-          .get("graft.optimizeWrite")).exists(_.toBoolean) &&
+        .orElse(snap.properties(table).get("graft.optimizeWrite"))
+        .exists(_.toBoolean) &&
         spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean
       val staged =
         if (!ow) physData
@@ -198,8 +194,7 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
           }.withColumn("_change_type", lit("insert"))
           // Pre-images translated to physical names like the staged data —
           // CDF files follow the same on-disk naming as data files.
-          val deletes = mapping.foldLeft(
-            Snapshots.read(spark, warehouse, table)) {
+          val deletes = mapping.foldLeft(snap.read(spark, table)) {
               case (df, (logical, physical)) =>
                 if (logical != physical && df.columns.contains(logical))
                   df.withColumnRenamed(logical, physical)
@@ -211,9 +206,9 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister
             TxnCommit.movesFor(fs, warehouse, cid, s"_changes/$table")
         }
         TxnCommit.commit(fs, warehouse, cid, moves, retained = existing,
-          op = "overwrite", baseVersion = base, asTable = Some(table))
+          op = "overwrite", baseVersion = snap.version, asTable = Some(table))
         TxnCommit.publish(fs, warehouse, cid, moves, retained = existing,
-          op = "overwrite", baseVersion = base, asTable = Some(table))
+          op = "overwrite", baseVersion = snap.version, asTable = Some(table))
       } else {
         TxnCommit.commit(fs, warehouse, cid, moves)
         TxnCommit.publish(fs, warehouse, cid, moves)
@@ -251,24 +246,34 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
   // The pinned END of what this relation serves, resolved ONCE at load():
   // the snapshot version for plain reads, the change feed's inclusive
   // upper bound for CDF reads — so two actions on the same DataFrame see
-  // the same data even while commits land in between.
-  private val pinnedVersion: Option[Long] =
-    if (changeFeed)
-      Option(options.get("endingVersion")).map(_.toLong)
-        .orElse(Option(options.get("endingTimestamp")).map { ts =>
-          // Inclusive: everything committed by the instant.
+  // the same data even while commits land in between. The relation keeps
+  // that version and its schema, never the snapshot: both come from one
+  // snapshot taken here, and every later plan re-pins the version.
+  private val (pinnedVersion, loadSchema): (Option[Long], StructType) = {
+    val requested =
+      if (changeFeed)
+        Option(options.get("endingVersion")).map(_.toLong)
+          .orElse(Option(options.get("endingTimestamp")).map { ts =>
+            // Inclusive: everything committed by the instant.
+            Snapshots.versionAt(fs, warehouse,
+              java.sql.Timestamp.valueOf(ts).getTime).getOrElse(-1L)
+          })
+      else Option(options.get("versionAsOf")).map(_.toLong)
+        .orElse(Option(options.get("timestampAsOf")).map { ts =>
           Snapshots.versionAt(fs, warehouse,
-            java.sql.Timestamp.valueOf(ts).getTime).getOrElse(-1L)
+              java.sql.Timestamp.valueOf(ts).getTime)
+            .getOrElse(throw new IllegalArgumentException(
+              s"no snapshot version existed at '$ts' under $warehouse"))
         })
-        .orElse(Snapshots.latestVersion(fs, warehouse))
-    else Option(options.get("versionAsOf")).map(_.toLong)
-      .orElse(Option(options.get("timestampAsOf")).map { ts =>
-        Snapshots.versionAt(fs, warehouse,
-            java.sql.Timestamp.valueOf(ts).getTime)
-          .getOrElse(throw new IllegalArgumentException(
-            s"no snapshot version existed at '$ts' under $warehouse"))
-      })
-      .orElse(Snapshots.latestVersion(fs, warehouse))
+    if (changeFeed) {
+      val v = requested.orElse(Snapshots.snapshot(fs, warehouse).version)
+      (v, baseFrame(v, null).schema)
+    } else {
+      val snap = Snapshots.snapshot(fs, warehouse, requested)
+      (requested.orElse(snap.version),
+        snap.read(spark, table, mergeSchema).schema)
+    }
+  }
 
   /** Live-row bound at the pinned version from the log's stats tokens —
     * zero jobs; [[graft.ingest.Merge]] routes merge-source sizing through
@@ -276,9 +281,10 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     * file rows) or token-less files. */
   private[graft] def logRowBound: Option[Long] =
     if (changeFeed) None
-    else Snapshots.logRowCount(fs, warehouse, table, pinnedVersion)
+    else Snapshots.snapshot(fs, warehouse, pinnedVersion).logRowCount(table)
 
-  private def baseFrame(dataFilter: graft.ingest.FileStats.Pred): DataFrame =
+  private def baseFrame(at: Option[Long],
+                        dataFilter: graft.ingest.FileStats.Pred): DataFrame =
     if (changeFeed)
       Snapshots.changes(spark, warehouse, table,
         fromExclusive =
@@ -289,11 +295,11 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
               Snapshots.versionAt(fs, warehouse,
                 java.sql.Timestamp.valueOf(ts).getTime - 1).getOrElse(-1L)
             }).getOrElse(-1L),
-        toInclusive = pinnedVersion)
-    else Snapshots.read(spark, warehouse, table, asOf = pinnedVersion,
+        toInclusive = at)
+    else Snapshots.read(spark, warehouse, table, asOf = at,
       mergeSchema = mergeSchema, dataFilter = dataFilter)
 
-  override val schema: StructType = baseFrame(null).schema
+  override val schema: StructType = loadSchema
 
   /** The relation's rows ARE the inner vectorized plan's rows — serve
     * InternalRows straight from `toRdd` instead of paying a per-row
@@ -307,7 +313,8 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     * away every file CARRYING a schema-evolved column — those files' rows
     * would have read it as null). */
   private def frameFor(pred: graft.ingest.FileStats.Pred): DataFrame =
-    schema.fields.foldLeft(baseFrame(if (changeFeed) null else pred)) {
+    schema.fields.foldLeft(
+        baseFrame(pinnedVersion, if (changeFeed) null else pred)) {
       (df, f) =>
         if (df.columns.contains(f.name)) df
         else df.withColumn(f.name, lit(null).cast(f.dataType))
@@ -437,7 +444,8 @@ class SnapshotTable(tableSchema: StructType, properties: util.Map[String, String
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE, TableCapability.ACCEPT_ANY_SCHEMA)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+      : SnapshotScanBuilder = {
     require(tableSchema.nonEmpty,
       s"graft-snapshots table '${properties.get("table")}' does not exist " +
         s"yet under ${properties.get("warehouse")} — nothing to read")
@@ -468,6 +476,22 @@ class SnapshotScanBuilder(tableSchema: StructType,
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
 
+  private val table = SnapshotDataSource.required(options, "table")
+
+  /** The ONE version this scan serves (`versionAsOf`, else the latest at
+    * first use): pushed aggregates, statistics and the planned files all
+    * read it. */
+  private lazy val snap: Snapshot = {
+    val warehouse = SnapshotDataSource.required(options, "warehouse")
+    Snapshots.snapshot(
+      new Path(warehouse).getFileSystem(
+        SparkSession.active.sparkContext.hadoopConfiguration),
+      warehouse, Option(options.get("versionAsOf")).map(_.toLong))
+  }
+
+  /** The protocol gate for scans that serve file rows directly. */
+  private[v2] def requireReadable(): Unit = snap.requireFeatures(table)
+
   private var aggPush: Option[(StructType, Array[String])] = None
   private var aggCache: Option[(Aggregation, Option[(StructType, Array[String])])] = None
 
@@ -495,16 +519,9 @@ class SnapshotScanBuilder(tableSchema: StructType,
       : Option[(StructType, Array[String])] = {
     if (agg.groupByExpressions.nonEmpty) return None
     if (Option(options.get("readChangeFeed")).exists(_.toBoolean)) return None
-    val spark = SparkSession.active
-    val warehouse = SnapshotDataSource.required(options, "warehouse")
-    val table = SnapshotDataSource.required(options, "table")
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinned = Option(options.get("versionAsOf")).map(_.toLong)
-      .orElse(Snapshots.latestVersion(fs, warehouse))
-    val files = Snapshots.fileMeta(fs, warehouse, table, pinned)
-      .getOrElse(return None)
-    val mapping = Snapshots.columnMapping(fs, warehouse, table, pinned)
+    if (snap.version.isEmpty) return None
+    val files = snap.files(table)
+    val mapping = snap.columnMapping(table)
     val decoded: Seq[(Snapshots.Action, graft.ingest.FileStats.Stats)] =
       files.map { a =>
         val st = graft.ingest.FileStats.decode(a.stats)
@@ -633,16 +650,9 @@ class SnapshotScanBuilder(tableSchema: StructType,
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     import java.util.OptionalLong
-    val spark = SparkSession.active
-    val warehouse = SnapshotDataSource.required(options, "warehouse")
-    val table = SnapshotDataSource.required(options, "table")
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pinned = Option(options.get("versionAsOf")).map(_.toLong)
-      .orElse(Snapshots.latestVersion(fs, warehouse))
     var bytes = 0L; var rows = 0L
     var haveBytes = true; var haveRows = true
-    Snapshots.prunedFileMeta(fs, warehouse, table, pinned, pred).foreach { a =>
+    snap.pruned(table, pred).foreach { a =>
       val st = graft.ingest.FileStats.decode(a.stats)
       st.map(_.bytes).filter(_ >= 0) match {
         case Some(b) => bytes += b
@@ -671,16 +681,15 @@ class SnapshotScanBuilder(tableSchema: StructType,
   override def toBatch: Batch = aggPush match {
     case Some((schema, values)) => new SnapshotAggBatch(schema, values)
     case None =>
-      val spark = SparkSession.active
-      val warehouse = SnapshotDataSource.required(options, "warehouse")
-      val table = SnapshotDataSource.required(options, "table")
-      val fs = new Path(warehouse)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Pin the served version at scan build, like the V1 relation: every
-      // action over this plan sees the same snapshot.
-      val pinned = Option(options.get("versionAsOf")).map(_.toLong)
-        .orElse(Snapshots.latestVersion(fs, warehouse))
-      new SnapshotBatch(warehouse, table, pinned, requiredSchema, pred)
+      // The files are planned here, at the scan's pinned version, like the
+      // V1 relation: every action over this plan sees the same snapshot.
+      val mapping = snap.columnMapping(table)
+      val defaults = snap.defaults(table)
+      val version = snap.version.getOrElse(-1L)
+      new SnapshotBatch(
+        snap.pruned(table, pred).map(a =>
+          SnapshotInputPartition.of(a, version, mapping, defaults)).toArray,
+        SnapshotFileReaderFactory(requiredSchema, mapping))
   }
 }
 
@@ -726,28 +735,13 @@ case class SnapshotAggReaderFactory() extends PartitionReaderFactory {
   }
 }
 
-/** The catalog batch scan: plans the pinned version's log-surviving files
-  * (stats-pruned by the pushed filters) as [[SnapshotInputPartition]]s.
-  * Statistics come from the SAME log walk — summed size/row tokens of the
-  * pruning-surviving files, zero file opens — so Spark's join planning
-  * (broadcast thresholds, AQE) sees honest sizes even on the fallback
-  * path. */
-class SnapshotBatch(warehouse: String, table: String, pinned: Option[Long],
-                    schema: StructType, pred: graft.ingest.FileStats.Pred)
-  extends Batch {
-  private def spark = SparkSession.active
-  private def fs = new Path(warehouse)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private lazy val facts = new SnapshotFileFacts(fs, warehouse, table, pinned)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    Snapshots.prunedFileMeta(fs, warehouse, table, pinned, pred)
-      .map(a => facts.partition(a, pinned.getOrElse(-1L)): InputPartition)
-      .toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    facts.readerFactory(schema)
+/** The catalog batch scan: the pinned version's log-surviving files
+  * (stats-pruned by the pushed filters) as [[SnapshotInputPartition]]s,
+  * planned by [[SnapshotScanBuilder.toBatch]]. */
+class SnapshotBatch(partitions: Array[InputPartition],
+                    readerFactory: PartitionReaderFactory) extends Batch {
+  override def planInputPartitions(): Array[InputPartition] = partitions
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
 /** Offset = snapshot log version (inclusive high-water mark), plus an
@@ -808,9 +802,11 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
 
   override def initialOffset(): Offset = SnapshotVersionOffset(startingVersion)
 
-  override def latestOffset(): Offset =
-    SnapshotVersionOffset(
-      Snapshots.latestVersion(fs, warehouse).getOrElse(startingVersion))
+  /** The log's current end: the latest snapshot's version. */
+  private def logEnd: Long =
+    Snapshots.snapshot(fs, warehouse).version.getOrElse(startingVersion)
+
+  override def latestOffset(): Offset = SnapshotVersionOffset(logEnd)
 
   /** Default per-trigger admission from the Delta-style options:
     * `maxFilesPerTrigger` / `maxBytesPerTrigger` / `maxRowsPerTrigger`
@@ -836,8 +832,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
   // while upstream keeps committing.
   private var availableNowBound: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowBound =
-      Some(Snapshots.latestVersion(fs, warehouse).getOrElse(startingVersion))
+    availableNowBound = Some(logEnd)
 
   /** Admission control: advance the offset by whole file units until the
     * limit is hit, recording a mid-version position as (version, index) —
@@ -848,8 +843,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
     * (compactions, skipped rewrites) are swallowed by the advance. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[SnapshotVersionOffset]
-    val logEnd = availableNowBound
-      .orElse(Snapshots.latestVersion(fs, warehouse)).getOrElse(startingVersion)
+    val logEnd = availableNowBound.getOrElse(this.logEnd)
     val (maxFiles, maxBytes, maxRows) = flattenLimit(limit)
     val caughtUp = logEnd <= s.version && s.index < 0
     if (caughtUp) s
@@ -1027,7 +1021,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
               s"snapshot version $v is a $op commit without change files " +
                 "— the change-feed stream cannot represent it")
             // CDF files carry _change_type per row; version is constant.
-            cdfs.map(a => (facts.partition(a, v),
+            cdfs.map(a => (SnapshotInputPartition.of(a, v, mapping, defaults),
               graft.ingest.FileStats.decode(a.stats)))
           } else if (skipChangeCommits) Nil
           else throw new IllegalStateException(
@@ -1048,19 +1042,23 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
               if (a.dv.nonEmpty)
                 s.copy(rows = math.max(0L, s.rows - a.dvCount))
               else s)
-            (facts.partition(a, v), st)
+            (SnapshotInputPartition.of(a, v, mapping, defaults), st)
           }
         }
   }
 
   // Current-era mapping and initial-defaults, like the stream schema: a
   // new stream replaying old append commits serves what the batch read
-  // serves. Captured once — physical names never change across renames,
-  // so the mapping stays valid for the stream's lifetime.
-  private lazy val facts = new SnapshotFileFacts(fs, warehouse, table, None)
+  // serves. Captured once, from one snapshot the stream does not keep —
+  // physical names never change across renames, so the mapping stays
+  // valid for the stream's lifetime.
+  private lazy val (mapping, defaults) = {
+    val snap = Snapshots.snapshot(fs, warehouse)
+    (snap.columnMapping(table), snap.defaults(table))
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    facts.readerFactory(schema)
+    SnapshotFileReaderFactory(schema, mapping)
 
   override def deserializeOffset(json: String): Offset = {
     def field(name: String): Option[Long] =
@@ -1087,7 +1085,7 @@ class SnapshotMicroBatchStream(options: CaseInsensitiveStringMap,
   * `_change_type` column is read per row), `dvPath` nonempty = a deletion
   * vector whose positions are subtracted, `defaults` maps the LOGICAL name
   * of each column this file predates to its stored SQL literal
-  * (initial-defaults, [[Snapshots.columnDefaults]]), and `bytes` is the
+  * (initial-defaults, [[Snapshot.defaults]]), and `bytes` is the
   * file's length from the log's stats token (-1: token absent, the reader
   * asks the filesystem once). */
 case class SnapshotInputPartition(file: String, partSpec: Map[String, String],
@@ -1098,36 +1096,26 @@ case class SnapshotInputPartition(file: String, partSpec: Map[String, String],
                                   bytes: Long = -1L)
   extends InputPartition
 
-/** The per-file facts of one table at one version (`asOf` None = the
-  * current era, the era a stream's schema comes from), shared by the
-  * catalog batch scan and the snapshot stream: the column mapping the
-  * reader resolves names through and each file's initial-defaults. */
-private[v2] class SnapshotFileFacts(fs: FileSystem, warehouse: String,
-                                    table: String, asOf: Option[Long]) {
-  private lazy val mapping = Snapshots.columnMapping(fs, warehouse, table, asOf)
-  private lazy val physDefaults =
-    Snapshots.columnDefaults(fs, warehouse, table, asOf, mapping)
-  private lazy val toLogical: Map[String, String] =
-    mapping.map(_.cols.map { case (l, p) => p -> l }.toMap).getOrElse(Map.empty)
-
-  /** `a` served at `version`. Change files carry their own
+object SnapshotInputPartition {
+  /** `a` served at `version`. `defaults` are the table's initial-defaults
+    * by PHYSICAL name ([[Snapshot.defaults]]); those this file predates
+    * are named logically through `mapping`. Change files carry their own
     * `_change_type` and never a default or a vector. */
-  def partition(a: Snapshots.Action, version: Long): SnapshotInputPartition = {
+  def of(a: Snapshots.Action, version: Long, mapping: Option[ColumnMapping],
+         defaults: Map[String, String]): SnapshotInputPartition = {
     val bytes = FileStats.decode(a.stats).map(_.bytes).filter(_ >= 0)
       .getOrElse(-1L)
     if (a.cdf) SnapshotInputPartition(a.file, Map.empty, version, bytes = bytes)
     else {
-      val present = Snapshots.defaultPresence(a, physDefaults)
-      val defaults = physDefaults.collect { case (phys, text) if !present(phys) =>
+      val present = Snapshots.defaultPresence(a, defaults)
+      val toLogical =
+        mapping.map(_.cols.map { case (l, p) => p -> l }.toMap).getOrElse(Map.empty)
+      val missing = defaults.collect { case (phys, text) if !present(phys) =>
         toLogical.getOrElse(phys, phys) -> text }
       SnapshotInputPartition(a.file, a.partitionMap, version, Some("insert"),
-        a.dvPath, defaults, bytes)
+        a.dvPath, missing, bytes)
     }
   }
-
-  def readerFactory(schema: StructType): PartitionReaderFactory =
-    new SnapshotFileReaderFactory(schema,
-      mapping.map(_.cols.toMap).getOrElse(Map.empty))
 }
 
 /** Reads committed files through Spark's own parquet reader
@@ -1249,6 +1237,12 @@ class SnapshotFileReaderFactory(schema: StructType,
 }
 
 object SnapshotFileReaderFactory {
+  /** The reader for a LOGICAL `schema` over files named through `mapping`. */
+  def apply(schema: StructType, mapping: Option[ColumnMapping])
+      : SnapshotFileReaderFactory =
+    new SnapshotFileReaderFactory(schema,
+      mapping.map(_.cols.toMap).getOrElse(Map.empty))
+
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
   import org.apache.spark.sql.internal.SQLConf
 

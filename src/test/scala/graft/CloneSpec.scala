@@ -1,12 +1,38 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{Compaction, Merge, Snapshots, TxnCommit}
+
+/** RawLocalFileSystem that lands a rival commit right after the n-th
+  * listing of a `_snapshots` log dir — between an operation's first log
+  * read and its commit. Arm with [[RivalAfterListFs.arm]]. Below
+  * `CheckpointInterval` versions every log walk is one such listing. */
+class RivalAfterListFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("rivallist:///")
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val out = super.listStatus(f)
+    if (f.getName == "_snapshots" &&
+        RivalAfterListFs.countdown.decrementAndGet() == 0)
+      RivalAfterListFs.rival()
+    out
+  }
+}
+object RivalAfterListFs {
+  private val countdown = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile private var rival: () => Unit = () => ()
+  /** Run `body` with `onList` firing after its `n`-th log listing. */
+  def arm[A](n: Int)(onList: => Unit)(body: => A): A = {
+    rival = () => onList
+    countdown.set(n)
+    try body finally countdown.set(0)
+  }
+}
 
 /** Zero-copy shallow clones: one metadata commit shares the source's live
   * files, the clone diverges independently (reads group per root dir),
@@ -227,6 +253,55 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DROP TABLE gcl.src PURGE")
     assert(fs.listStatus(new Path(s"$w/src"))
       .count(_.getPath.getName.endsWith(".parquet")) == 0)
+  }
+
+  test("drop and clone take their OCC base with their reads: a rival commit aborts them") {
+    // Log-only tables (no data files are opened): the rival lands right
+    // after the operation's FIRST log read (drop) or right after the read
+    // that found `dst` empty (clone). Either the operation aborts with
+    // nothing committed, or it committed against a base that includes
+    // the rival — a drop never leaves a rival file live, a clone never
+    // lands on top of a concurrently created dst.
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.rivallist.impl", classOf[RivalAfterListFs].getName)
+    conf.setBoolean("fs.rivallist.impl.disable.cache", true)
+    conf.setBoolean("graft.commit.atomicConditionalCreate.rivallist", true)
+    def whR(name: String) = "rivallist://" + wh(name)
+    val rfs = new Path(whR("raceDrop")).getFileSystem(conf)
+    def add(w: String, cid: String, table: String): Unit =
+      Snapshots.append(rfs, w, cid,
+        adds = Seq(table -> s"$w/$table/$cid.parquet"), removes = Nil)
+    def outcome(body: => Unit): Option[Throwable] =
+      try { body; None }
+      catch { case e: Snapshots.ConcurrentCommitException => Some(e) }
+    def commitIds(w: String) =
+      Snapshots.entries(rfs, w).filterNot(_.isCheckpoint).map(_.commitId)
+
+    val wd = whR("raceDrop")
+    add(wd, "c0", "t")
+    val dropped = outcome(RivalAfterListFs.arm(1)(add(wd, "rival", "t")) {
+      Snapshots.dropTable(rfs, wd, "t")
+    })
+    assert(commitIds(wd).contains("rival"), "the rival commit must land")
+    if (dropped.nonEmpty)
+      assert(!commitIds(wd).exists(_.startsWith("drop")),
+        "an aborted drop must commit nothing")
+    else
+      assert(Snapshots.fileMeta(rfs, wd, "t").get.isEmpty,
+        "the drop committed while the rival's file stays live: " +
+          Snapshots.fileMeta(rfs, wd, "t").get.map(_.file))
+
+    val wc = whR("raceClone")
+    add(wc, "c0", "src")
+    val cloned = outcome(RivalAfterListFs.arm(2)(add(wc, "rival", "dst")) {
+      Snapshots.cloneTable(spark, wc, "src", "dst")
+    })
+    assert(commitIds(wc).contains("rival"), "the rival commit must land")
+    assert(cloned.nonEmpty,
+      "the clone committed on top of a concurrently created dst: " +
+        Snapshots.fileMeta(rfs, wc, "dst").get.map(_.file))
+    assert(!commitIds(wc).exists(_.startsWith("clone")),
+      "an aborted clone must commit nothing")
   }
 
   test("SQL: SNAPSHOT CLONE src TO dst [VERSION AS OF n]") {

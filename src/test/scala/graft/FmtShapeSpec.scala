@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ingest.Snapshots
+import graft.ingest.{Snapshots, TxnCommit}
 
 /** Protocol-overhead pins for the `fmt_*` gate entries: exact commit
   * counts on the build side and exact log-I/O counts on the steady-state
@@ -69,18 +69,68 @@ class FmtShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fmt_replace: 4 commits; steady-state read is listing-only") {
-    pin("fmt_replace", wantDeltas = 4, wantReads = 0L, wantLists = 234L)
+    pin("fmt_replace", wantDeltas = 4, wantReads = 0L, wantLists = 63L)
   }
 
   test("fmt_roundtrip: 3 commits; steady-state read is listing-only") {
-    pin("fmt_roundtrip", wantDeltas = 3, wantReads = 0L, wantLists = 42L)
+    pin("fmt_roundtrip", wantDeltas = 3, wantReads = 0L, wantLists = 7L)
   }
 
   test("fmt_sql_ctas: 1 commit; steady-state read is listing-only") {
-    pin("fmt_sql_ctas", wantDeltas = 1, wantReads = 0L, wantLists = 9L)
+    pin("fmt_sql_ctas", wantDeltas = 1, wantReads = 0L, wantLists = 3L)
   }
 
   test("fmt_sql_insert: 2 commits; steady-state read is listing-only") {
-    pin("fmt_sql_insert", wantDeltas = 2, wantReads = 0L, wantLists = 15L)
+    pin("fmt_sql_insert", wantDeltas = 2, wantReads = 0L, wantLists = 5L)
+  }
+
+  /** Log listings `body` pays. */
+  private def lists(body: => Unit): Long = {
+    Snapshots.logLists.set(0)
+    body
+    Snapshots.logLists.get()
+  }
+
+  /** A 5-version warehouse holding one flat table `t`. */
+  private def smallWarehouse(): String = {
+    val w = java.nio.file.Files.createTempDirectory("graft-fmtshape")
+      .resolve("w").toString
+    val s0 = spark
+    import s0.implicits._
+    (0 until 5).foreach { i =>
+      val cid = java.util.UUID.randomUUID().toString
+      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1).write
+        .parquet(s"${TxnCommit.stagingDir(w, cid)}/t")
+      val moves = TxnCommit.movesFor(fs, w, cid, "t")
+      TxnCommit.commit(fs, w, cid, moves)
+      TxnCommit.publish(fs, w, cid, moves)
+    }
+    w
+  }
+
+  test("a latest-version read or readWhere lists the log once, like latestVersion") {
+    import org.apache.spark.sql.functions.col
+    val w = smallWarehouse()
+    Snapshots.readWhere(spark, w, "t", col("id") > 2).collect() // warm caches
+    val one = lists(Snapshots.latestVersion(fs, w))
+    assert(one > 0)
+    assert(lists(Snapshots.read(spark, w, "t")) == one)
+    assert(lists(Snapshots.readWhere(spark, w, "t", col("id") > 2)) == one)
+  }
+
+  test("one catalog SELECT through GraftCatalog lists the log a pinned number of times") {
+    val w = smallWarehouse()
+    spark.conf.set("spark.sql.catalog.gshape",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gshape.warehouse", w)
+    val q = "SELECT id, v FROM gshape.t WHERE id > 2"
+    assert(spark.sql(q).collect().map(_.getLong(0)).sorted.sameElements(Seq(3L, 4L)))
+    // Three log walks: loadTable, then the spliced relation's pin (its
+    // schema) and its plan at that version. Each walk lists the 11 log
+    // files (5 entries, their 5 claim locks, the footer-era marker).
+    val one = lists(Snapshots.latestVersion(fs, w))
+    val select = lists(spark.sql(q).collect())
+    assert(one == 11L && select == 33L, s"one catalog SELECT paid $select " +
+      s"log lists (one latestVersion: $one), pinned 33 (11)")
   }
 }

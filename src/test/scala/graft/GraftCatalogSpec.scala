@@ -514,10 +514,9 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The error names the flatten workaround; this proves that path.
     val s0 = spark
     import s0.implicits._
-    // Struct columns are refused by every WRITE surface (the format is
-    // flat-relational by design, like the reference's tables) — a
-    // struct-bearing table can only predate the catalog, staged through
-    // the raw commit path here.
+    // A struct-bearing table, staged through the raw commit path (the
+    // DSv2 write paths serve struct columns too; only ALTER of a struct's
+    // interior is refused).
     import graft.ingest.TxnCommit
     val cid = java.util.UUID.randomUUID().toString
     spark.sql("SELECT 1L AS id, named_struct('a', 2L, 'b', 'x') AS s")

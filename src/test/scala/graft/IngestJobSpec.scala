@@ -582,6 +582,32 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       "coverage-objects" -> 5), jobs)
   }
 
+  test("log-listing pin: one continue ingest of each benchmark shape") {
+    // An operation folds the log once per phase — the writers' table
+    // config, commit's checks, publish's constraint re-check, append's
+    // feature gate — plus append's own claim walk, whatever the table
+    // count. A per-table fold anywhere on the path trips the pin.
+    import graft.ingest.Snapshots
+    val in = Files.createTempDirectory("graft-ingest-lists")
+    val shapes = Seq(
+      ("mobile-rewards", "mobile_network_reward_shares_v1", mobileFrames _),
+      ("verified-speedtest", "verified_speedtest", speedtestFrames _),
+      ("coverage-objects", "coverage_object", coverageFrames _))
+    val lists = shapes.map { case (fileType, prefix, frames) =>
+      val w = wh(s"whLists-$fileType")
+      writeFixture(s"$prefix.1700000001000.gz", frames(1), in)
+      IngestJob.run(spark, in.toString, w, fileType)
+      writeFixture(s"$prefix.1700000002000.gz", frames(2), in)
+      Snapshots.logLists.set(0)
+      IngestJob.run(spark, in.toString, w, fileType, FileSelection(continue = true))
+      fileType -> Snapshots.logLists.get()
+    }.toMap
+    // Five walks of a one-version log (its entry, claim lock and
+    // footer-era marker: 3 files each).
+    assert(lists == Map("mobile-rewards" -> 15L, "verified-speedtest" -> 15L,
+      "coverage-objects" -> 15L), lists)
+  }
+
   test("a failed write wave publishes nothing and leaks no cache or thread") {
     import org.apache.hadoop.fs.{Path => HPath}
     import graft.ingest.Snapshots

@@ -8,7 +8,10 @@
 # built there on first use) and in the working tree, alternating which
 # side goes first from one seed to the next, and
 # prints each end-to-end metric's median over the seeds as
-# `<rev> -> working tree`, plus every run's `correct`/`failed`.
+# `<rev> -> working tree`, each side's spread (IQR/median over its runs,
+# `n/a` below two runs) and every run's `correct`/`failed`. A delta
+# smaller than the <rev> side's own IQR is marked `within spread`: the
+# two sides are not told apart by these runs.
 # It changes nothing under graftbench/; each run's result line is kept in
 # the temporary directory until the script exits.
 set -euo pipefail
@@ -59,13 +62,27 @@ for side, label in (("base", rev), ("change", "working tree")):
             print(f"{label} seed {seed}: correct={r['correct']} "
                   f"failed={r['failed']}/{r['attempted']}")
 names = sorted({k for side in runs.values() for r in side if r for k in r["metrics"]})
+
+def iqr(vals):
+    if len(vals) < 2:
+        return None
+    q1, _, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+    return q3 - q1
+
+def rel(spread, med):
+    return f"{spread / med:.2f}" if spread is not None and med else "n/a"
+
 for name in names:
-    def med(side):
-        vals = [r["metrics"][name]["value"] for r in runs[side] if r and name in r["metrics"]]
-        return statistics.median(vals) if vals else float("nan")
+    vals = {side: [r["metrics"][name]["value"] for r in runs[side]
+                   if r and name in r["metrics"]] for side in runs}
+    med = {side: statistics.median(v) if v else float("nan")
+           for side, v in vals.items()}
     unit = next(r["metrics"][name]["unit"] for side in runs.values()
                 for r in side if r and name in r["metrics"])
-    b, c = med("base"), med("change")
+    b, c = med["base"], med["change"]
+    bs, cs = iqr(vals["base"]), iqr(vals["change"])
     delta = f"{(c - b) / b:+.1%}" if b else "n/a"
-    print(f"{name:12s} {b:12.4g} -> {c:12.4g} {unit:7s} {delta}")
+    note = "  within spread" if bs is not None and abs(c - b) < bs else ""
+    print(f"{name:12s} {b:12.4g} (iqr/med {rel(bs, b):>4s}) -> "
+          f"{c:12.4g} (iqr/med {rel(cs, c):>4s}) {unit:7s} {delta}{note}")
 EOF

@@ -23,27 +23,22 @@ object Checkpoint {
       FileProcessed(f.key, f.prefix, new Timestamp(f.timestamp_ms), now)))
   }
 
-  /** The checkpoint table read with its declared schema: a schema-less
-    * `spark.read.parquet` would run a footer-inference job on every read. */
-  private def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(graft.types.Schemas.filesProcessed).parquet(path)
-
-  def append(spark: SparkSession, warehouse: String, files: Seq[FileCatalog.FileInfo]): Unit =
-    batch(spark, files).write.mode(SaveMode.Append).parquet(s"$warehouse/$TableName")
-
-  /** Keys already recorded for a prefix (idempotent-replay guard). The
-    * checkpoint table is small (one row per ingested file) so a driver-side
-    * collect is the right plan for ad-hoc inspection; the ingest path uses
-    * [[unprocessed]] instead, which never materializes history. */
-  def processedKeys(spark: SparkSession, warehouse: String, prefix: String): Set[String] = {
-    val path = s"$warehouse/$TableName"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Set.empty
-    read(spark, path)
-      .filter(col("prefix") === prefix)
-      .select("file_name").collect().map(_.getString(0)).toSet
+  /** The checkpoint rows live at `snap`, read under the declared schema
+    * (footer inference would add a job on a new warehouse) minus deletion
+    * vectors. None before the first checkpoint commit. Reading the log's
+    * files, not the directory, keeps restored-away and uncommitted files
+    * out. */
+  private def rows(spark: SparkSession, snap: Snapshot): Option[DataFrame] = {
+    val acts = snap.files(TableName)
+    if (acts.isEmpty) None
+    else Some(Snapshots.applyDv(spark,
+      spark.read.schema(graft.types.Schemas.filesProcessed)
+        .parquet(acts.map(_.file): _*), acts))
   }
+
+  private def latest(spark: SparkSession, warehouse: String): Snapshot =
+    Snapshots.snapshot(new org.apache.hadoop.fs.Path(warehouse)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), warehouse)
 
   /** The subset of `listed` not yet checkpointed, via a broadcast semi-join:
     * the listed batch (small, bounded by one run) is broadcast as the BUILD
@@ -54,32 +49,33 @@ object Checkpoint {
     * driver memory and shuffled bytes are O(batch) — not O(every file ever
     * ingested) after years of incremental runs. Listing order is preserved. */
   def unprocessed(spark: SparkSession, warehouse: String, prefix: String,
-                  listed: Seq[FileCatalog.FileInfo]): Seq[FileCatalog.FileInfo] = {
-    val path = s"$warehouse/$TableName"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (listed.isEmpty || !fs.exists(new org.apache.hadoop.fs.Path(path))) return listed
-    import spark.implicits._
-    val listedDf = listed.map(_.key).toDF("file_name")
-    val done = read(spark, path)
-      .filter(col("prefix") === prefix).select("file_name")
-    val already = done.join(broadcast(listedDf), Seq("file_name"), "left_semi")
-      .distinct().collect().map(_.getString(0)).toSet
-    listed.filterNot(f => already.contains(f.key))
-  }
+                  listed: Seq[FileCatalog.FileInfo]): Seq[FileCatalog.FileInfo] =
+    unprocessed(spark, latest(spark, warehouse), prefix, listed)
+
+  private[ingest] def unprocessed(spark: SparkSession, snap: Snapshot,
+                                  prefix: String,
+                                  listed: Seq[FileCatalog.FileInfo])
+      : Seq[FileCatalog.FileInfo] =
+    if (listed.isEmpty) listed
+    else rows(spark, snap).fold(listed) { cp =>
+      import spark.implicits._
+      val listedDf = listed.map(_.key).toDF("file_name")
+      val done = cp.filter(col("prefix") === prefix).select("file_name")
+      val already = done.join(broadcast(listedDf), Seq("file_name"), "left_semi")
+        .distinct().collect().map(_.getString(0)).toSet
+      listed.filterNot(f => already.contains(f.key))
+    }
 
   /** K5: latest processed file timestamp for a prefix (epoch ms), as a
     * max() aggregate — the scalable plan for `ORDER BY ts DESC LIMIT 1`. */
-  def latestMs(spark: SparkSession, warehouse: String, prefix: String): Option[Long] = {
-    val path = s"$warehouse/$TableName"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return None
-    read(spark, path)
-      .filter(col("prefix") === prefix)
+  def latestMs(spark: SparkSession, warehouse: String, prefix: String): Option[Long] =
+    latestMs(spark, latest(spark, warehouse), prefix)
+
+  private[ingest] def latestMs(spark: SparkSession, snap: Snapshot,
+                               prefix: String): Option[Long] =
+    rows(spark, snap).flatMap(_.filter(col("prefix") === prefix)
       .agg(max(unix_millis(col("file_timestamp"))))
-      .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-  }
+      .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])))
 }
 
 /** O1: the type-dispatch registry — fileType → (prefix, table builder).
@@ -314,8 +310,11 @@ object IngestJob {
     // Finish any crashed publish BEFORE reading the checkpoint, so "file
     // recorded as processed" always implies "its rows are visible".
     TxnCommit.recover(fs, warehouse)
+    // One snapshot, taken after recovery, serves the checkpoint reads and
+    // every writer's table config.
+    val snap = Snapshots.snapshot(fs, warehouse)
     val after = if (selection.continue) {
-      Some(Checkpoint.latestMs(spark, warehouse, spec.prefix).getOrElse(
+      Some(Checkpoint.latestMs(spark, snap, spec.prefix).getOrElse(
         throw new IllegalStateException("Cannot continue, no previously processed files")))
     } else selection.afterMs
     val listed = selection.file match {
@@ -335,7 +334,7 @@ object IngestJob {
     // `afterMs`, `file` and plain runs can list checkpointed keys and keep it.
     val files =
       if (selection.force || (selection.continue && selection.file.isEmpty)) listed
-      else Checkpoint.unprocessed(spark, warehouse, spec.prefix, listed)
+      else Checkpoint.unprocessed(spark, snap, spec.prefix, listed)
     // An explicit --file that the guard filtered out is surprising ("processed
     // 0 files") — say why, and how to override.
     if (selection.file.isDefined && listed.nonEmpty && files.isEmpty)
@@ -371,9 +370,7 @@ object IngestJob {
     // only the write actions run on the pool. A demux spec's projections
     // share one cached decode: concurrent jobs reaching a cached partition
     // wait on its block lock rather than decode it twice. Row counts come
-    // from the commit's stats tokens, so no job counts a table. Every
-    // writer's table config comes from one snapshot, taken after recovery.
-    val snap = Snapshots.snapshot(fs, warehouse)
+    // from the commit's stats tokens, so no job counts a table.
     try {
       val writes = batch.tables.toSeq.map { case (name, df) =>
         val out = if (spec.datePartitioned(name)) df.withColumn("dt", dtCol) else df

@@ -139,32 +139,50 @@ final class Snapshot private[ingest] (
   private[ingest] def metasWithPrefix(prefix: String): Seq[(String, String)] =
     state.metas.toSeq.filter(_._1.startsWith(prefix))
 
-  /** The rows of `acts` (live files of `table` here) as one frame in
-    * PHYSICAL names, minus deletion vectors, with initial-defaults injected
-    * for files that predate their column — what every rewrite (DML,
-    * compaction) plans from. One relation per (root table dir, partition
-    * layout, defaulted-column presence), the key [[read]] groups by: a
-    * clone's files can sit in the source's dir, a layout-evolved table must
-    * not mix depths under one basePath (flat-era rows read later partition
-    * columns as null), and width-mixed files read at the widest type.
-    * `scanSide` runs on each group's raw scan, where `_metadata` columns
-    * still resolve. */
+  /** THE log-to-DataFrame builder: the rows of `acts` (ADD or CDF actions
+    * of `table`) as one frame in PHYSICAL names, minus deletion vectors,
+    * with initial-defaults injected for files that predate their column.
+    * Reads, the change feed, DML and compaction all plan through here.
+    *
+    * One relation per (root table dir, partition layout, defaulted-column
+    * presence), read under `basePath` = the root dir: a clone's files can
+    * sit in the source's dir, and a layout-evolved table must not mix
+    * depths under one basePath (Spark's conflicting-directory check);
+    * groups union with additive semantics. Each group's schema is, in
+    * order: the widest schema of a width- or column-mixed group
+    * ([[Snapshots.widenedSchema]]); the cached footer of any member when
+    * the log's schema tags prove a flat group uniform (tags carry the full
+    * top-level signature, so footer merging could find nothing more; a
+    * partitioned group's column types derive from its paths); else footer
+    * inference, merging all footers when `mergeSchema`. The
+    * schema comes from `schemaFrom`'s files of the same group when given
+    * (a pruned read keeps the schema of its unpruned table). `scanSide`
+    * runs on each group's raw scan, where `_metadata` columns still
+    * resolve. The same path may appear more than once in `acts`; it is
+    * read once, under the deletion vector its actions carry. */
   private[ingest] def scanFiles(spark: SparkSession, table: String,
                                 acts: Seq[Action], partCols: Seq[String],
-                                scanSide: DataFrame => DataFrame = identity)
-      : DataFrame = {
+                                scanSide: DataFrame => DataFrame = identity,
+                                mergeSchema: Boolean = false,
+                                schemaFrom: Seq[Action] = Nil): DataFrame = {
     val defaults = this.defaults(table)
-    val groups =
-      (if (partCols.isEmpty) Seq(acts) else Snapshots.layoutGroups(acts))
-        .flatMap(_.groupBy(Snapshots.defaultPresence(_, defaults)).values)
-    val frames = groups.map { g =>
-      val bp =
-        if (g.head.partition.isEmpty) None else Some(Snapshots.rootDirOf(g.head))
-      val rd = bp.fold(spark.read)(p => spark.read.option("basePath", p))
-      val raw = Snapshots.widenedSchema(spark, g, bp)
-        .fold(rd)(rd.schema).parquet(g.map(_.file): _*)
+    def groupKey(a: Action): (String, Seq[String], Set[String]) =
+      (Snapshots.rootDirOf(a), Snapshots.partitionColumns(Seq(a.partition)),
+        Snapshots.defaultPresence(a, defaults))
+    val schemaGroups = schemaFrom.groupBy(groupKey)
+    val frames = acts.groupBy(groupKey).toSeq.map { case (key, g) =>
+      val (root, layout, present) = key
+      val bp = if (layout.isEmpty) None else Some(root)
+      val src = schemaGroups.getOrElse(key, g)
+      val rd0 = spark.read.option("mergeSchema", mergeSchema)
+      val rd = bp.fold(rd0)(rd0.option("basePath", _))
+      val schema = Snapshots.widenedSchema(spark, src, bp).orElse(
+        if (bp.isEmpty && Snapshots.uniformStatsSchema(src))
+          Some(Snapshots.cachedFileSchema(spark, src.head.file))
+        else None)
+      val raw = schema.fold(rd)(rd.schema).parquet(g.map(_.file).distinct: _*)
       Snapshots.injectDefaults(Snapshots.applyDv(spark, scanSide(raw), g),
-        Snapshots.defaultPresence(g.head, defaults), defaults)
+        present, defaults)
     }
     Snapshots.deVoidPartitions(
       frames.reduce(_.unionByName(_, allowMissingColumns = true)), partCols)

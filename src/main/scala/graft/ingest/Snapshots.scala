@@ -142,9 +142,6 @@ object Snapshots {
     d.toString
   }
 
-  private[graft] def rootGroups(acts: Seq[Action]): Seq[Seq[Action]] =
-    acts.groupBy(rootDirOf).values.toSeq
-
   /** When EVERY file of a relation sits in the null partition
     * (`dt=__HIVE_DEFAULT_PARTITION__` — e.g. a rewrite that migrated
     * flat-era rows of a layout-evolved table), Spark infers the partition
@@ -162,15 +159,6 @@ object Snapshots {
         d.withColumn(c, d(c).cast(org.apache.spark.sql.types.StringType))
       else d)
 
-  /** Group actions exactly the way [[read]]'s frameOver does: one group
-    * per (root table dir, partition layout). DML and compaction scans must
-    * use THIS key, not root dir alone — on a layout-evolved table (flat
-    * era + `dt=` era under one root) a single relation with basePath trips
-    * Spark's conflicting-directory-structures check; per-layout relations
-    * union with additive semantics instead. */
-  private[graft] def layoutGroups(acts: Seq[Action]): Seq[Seq[Action]] =
-    acts.groupBy(a => (rootDirOf(a), partitionColumns(Seq(a.partition))))
-      .values.toSeq
   private[graft] def srcFileKey(uri: String): String =
     uri.replaceFirst(SchemeRe, "")
 
@@ -2183,12 +2171,14 @@ object Snapshots {
     def checkLive(acts: Seq[Action]): Unit =
       acts.foreach(a => require(fs.exists(new Path(a.file)),
         s"change file ${a.file} was vacuumed — requested range predates retention"))
-    // Plan shape: the whole range is served by AT MOST TWO parquet reads —
-    // one over every in-range append/restore ADD file, one over every merge
-    // CDF file — with `_commit_version` joined per file from a broadcast
-    // (fileName → version) map (commitId-prefixed part names are unique
-    // within a table's dirs). A consumer catching up over thousands of
-    // versions gets a two-leaf plan, not an O(versions)-deep union chain.
+    // Plan shape: the whole range is normally served by TWO parquet reads
+    // (more only across root-dir, layout, default-presence and deletion-
+    // vector eras) — one over every in-range append/restore ADD file, one
+    // over every merge CDF file — with `_commit_version` joined per file
+    // from a broadcast (fileName → version) map (commitId-prefixed part
+    // names are unique within a table's dirs). A consumer catching up over
+    // thousands of versions gets a two-leaf plan, not an O(versions)-deep
+    // union chain.
     // The scan retries whole on a vanished entry (zombie sweep / vacuum
     // racing it) — listing, range bound, and builders all reset per pass.
     val (appendList, cdfList, to) = retryVanished {
@@ -2241,69 +2231,37 @@ object Snapshots {
     // toUri.getRawPath produces the same encoding for the log's raw paths
     // (spaces in partition values survive Spark's path escaping, so
     // comparing decoded-vs-encoded would silently drop their rows).
-    def withVersion(df: DataFrame, files: Seq[(Action, Long)]): DataFrame = {
+    // Each leaf goes through the one builder ([[Snapshot.scanFiles]]):
+    // basePath per root dir (a clone's files root in its source's dir),
+    // one relation per partition layout (flat→partitioned or dt→dt/hour
+    // switches), the widest schema of a width-mixed range, initial-defaults
+    // for rows that predate their column, and `mergeSchema` so additive
+    // evolution mid-range serves older rows with nulls in later columns.
+    // The file path is captured scan-side (input_file_name is only
+    // reliable there, before the deletion-vector anti-join).
+    def leaf(files: Seq[(Action, Long)], inserts: Boolean): DataFrame = {
+      val acts = files.map(_._1)
+      val df = snap.scanFiles(spark, table, acts,
+        partitionColumns(acts.map(_.partition)),
+        _.withColumn("_file_path",
+          regexp_replace(input_file_name(), SchemeRe, "")),
+        mergeSchema = true)
+      val tagged =
+        if (inserts) df.withColumn("_change_type", lit("insert")) else df
       val verDf = spark.createDataFrame(
         files.map { case (a, v) => (pathKey(a.file), v) }.distinct)
         .toDF("_file_path", "_commit_version")
-      // The path column may have been captured upstream (before a DV
-      // anti-join — input_file_name is only reliable scan-side).
-      val withPath =
-        if (df.columns.contains("_file_path")) df
-        else df.withColumn("_file_path",
-          regexp_replace(input_file_name(), SchemeRe, ""))
-      withPath.join(broadcast(verDf), "_file_path").drop("_file_path")
+      tagged.join(broadcast(verDf), "_file_path").drop("_file_path")
     }
-    // mergeSchema: additive evolution mid-range serves older versions' rows
-    // with nulls in later columns — same stance as read(mergeSchema=true).
-    // ADDs are read in one relation PER PARTITION LAYOUT (the ordered
-    // partition-column list; flat files are the empty layout): mixing
-    // layouts — flat→partitioned, or dt→dt/hour re-partitioning — in one
-    // read trips Spark's conflicting-directory-structure check. Plan depth
-    // stays O(#layout switches), bounded by schema-evolution events, not
-    // by versions.
-    def appendRead(files: Seq[(Action, Long)], partitioned: Boolean) =
-      if (files.isEmpty) None
-      else {
-        val reader = spark.read.option("mergeSchema", true)
-        val bp = if (partitioned) Some(s"$warehouse/$table") else None
-        val r0 = bp.fold(reader)(reader.option("basePath", _))
-        // A width-mixed range (safe type widening landed mid-range) reads
-        // at the widest type — footer merging would throw on the mix.
-        // Uniform flat group (r22, the read()-path rule): the log proves
-        // one schema signature, so the cached footer schema of any member
-        // is exact — skip the per-call footer-merge inference job a
-        // steady-state change-feed consumer was paying on every read.
-        val r = widenedSchema(spark, files.map(_._1), bp) match {
-          case Some(s) => r0.schema(s)
-          case None if bp.isEmpty && uniformStatsSchema(files.map(_._1)) =>
-            r0.schema(cachedFileSchema(spark, files.head._1.file))
-          case None => r0
-        }
-        // Restore re-ADDs can carry a deletion vector — the insert rows a
-        // consumer sees must exclude the DV'd positions. Path captured
-        // scan-side, then the (no-op when dv-free) anti-join.
-        val raw = r.parquet(files.map(_._1.file).distinct: _*)
-          .withColumn("_file_path",
-            regexp_replace(input_file_name(), SchemeRe, ""))
-        Some(withVersion(
-          applyDv(spark, raw, files.map(_._1))
-            .withColumn("_change_type", lit("insert")), files))
-      }
-    // Grouping key includes the DV token: a file served at two versions
-    // under DIFFERENT deletion vectors (restore eras) gets one leaf per
-    // era, so each version's insert rows subtract exactly its own vector.
-    // Plan depth grows only with layout switches + restore-of-DV events.
-    val appends = appendList
-      .groupBy(f => (partitionColumns(Seq(f._1.partition)), f._1.dv))
-      .toSeq.sortBy { case ((layout, dv), _) => (layout.mkString("/"), dv) }
-      .flatMap { case ((layout, _), files) => appendRead(files, layout.nonEmpty) }
-    // Change files always take the footer merge: CDF log lines carry no
-    // stats token, so no schema tag can vouch for them.
-    val cdf =
-      if (cdfList.isEmpty) None
-      else Some(withVersion(spark.read.option("mergeSchema", true)
-        .parquet(cdfList.map(_._1.file).distinct: _*), cdfList))
-    val frames = appends ++ cdf.toSeq
+    // One leaf per deletion-vector era: a file served at two versions
+    // under DIFFERENT vectors (restore eras) is read once per era, so each
+    // version's insert rows subtract exactly its own vector. Plan depth
+    // grows only with layout switches + restore-of-DV events. Change files
+    // carry their own `_change_type` and no stats token, so they always
+    // take the footer merge.
+    val frames = appendList.groupBy(_._1.dv).toSeq.sortBy(_._1)
+      .map { case (_, files) => leaf(files, inserts = true) } ++
+      (if (cdfList.isEmpty) Nil else Seq(leaf(cdfList, inserts = false)))
     if (frames.isEmpty)
       snap.read(spark, table)
         .withColumn("_change_type", lit(""))
@@ -2974,9 +2932,9 @@ object Snapshots {
   /** Inject each defaulted column ABSENT from this subgroup's files as a
     * constant expression (typed from the frame's own column when an
     * explicit read schema already carries it). */
-  private[graft] def injectDefaults(df: org.apache.spark.sql.DataFrame,
-                                    present: Set[String],
-                                    defaults: Map[String, String])
+  private[ingest] def injectDefaults(df: org.apache.spark.sql.DataFrame,
+                                     present: Set[String],
+                                     defaults: Map[String, String])
       : org.apache.spark.sql.DataFrame =
     defaults.foldLeft(df) { case (d, (phys, text)) =>
       if (present(phys)) d
@@ -3095,7 +3053,7 @@ object Snapshots {
     * group carries the identical column/type signature — the case where a
     * single cached footer schema is exact and inference is a pure tax.
     * Files without stats (unknowable) or any signature mix return false. */
-  private def uniformStatsSchema(acts: Seq[Action]): Boolean = {
+  private[ingest] def uniformStatsSchema(acts: Seq[Action]): Boolean = {
     val sigs = acts.map(a => FileStats.schemaTags(a.stats))
     sigs.forall(_.nonEmpty) && sigs.distinct.size == 1
   }
@@ -3266,8 +3224,8 @@ object Snapshots {
     * caller passes the result as the explicit read schema. Files without
     * tags (pre-stats logs) disable the feature — absent evidence must
     * never change how a legacy table reads. */
-  private[graft] def widenedSchema(spark: SparkSession, acts: Seq[Action],
-                                   basePath: Option[String])
+  private[ingest] def widenedSchema(spark: SparkSession, acts: Seq[Action],
+                                    basePath: Option[String])
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types._
     // Light parse: width-mix detection runs on EVERY read — decoding the
@@ -3340,7 +3298,9 @@ object Snapshots {
     * `mergeSchema = true` unions the schemas of all pinned files (additive
     * schema evolution: commits may add columns; old files read them as
     * null). Off by default — merging reads every footer at plan time, and a
-    * stable-schema table shouldn't pay that at 100k files. */
+    * stable-schema table shouldn't pay that at 100k files (a flat file set
+    * whose log-side schema tags prove it uniform reads one cached footer
+    * either way, [[Snapshot.scanFiles]]). */
   def read(spark: SparkSession, warehouse: String, table: String,
            asOf: Option[Long] = None, mergeSchema: Boolean = false,
            partitionFilter: Map[String, String] => Boolean = null,
@@ -3380,61 +3340,15 @@ object Snapshots {
     val pruned =
       if (dataFilter == null) partPruned
       else snap.pruned(table, dataFilter, partitionFilter)
-    // Files group per (root table dir, partition layout): normally ONE
-    // group — the fast single-relation path — but a zero-copy clone's
-    // shared files root in the source's dir, and a table whose partition
-    // layout EVOLVED (flat era → dt= era, or re-partitioning) carries
-    // several layouts. Each group reads under its own basePath/inference;
-    // rows from eras without a partition column read it as null
-    // (additive semantics), and cross-group type widening rides union
-    // coercion.
-    // Column defaults split groups further by which defaulted columns a
-    // file carries (zero-cost when no default exists): files lacking one
-    // read it as the injected constant, per-file exactness.
-    val defaults = snap.defaults(table)
-    def groupKey(a: Action): (String, Seq[String], Set[String]) =
-      (rootDirOf(a), partitionColumns(Seq(a.partition)),
-        defaultPresence(a, defaults))
-    val allByGroup = all.groupBy(groupKey)
-    // Width-mixed groups (safe type widening) read under an explicit
-    // widest schema — detection over the group's live files, so the schema
-    // is stable regardless of pruning. An explicit schema supersedes
-    // mergeSchema; widenedSchema's merge covers additive columns too.
-    def frameOver(group: Seq[Action], schemaOnly: Boolean): DataFrame = {
-      val key = groupKey(group.head)
-      val bp = if (group.head.partition.nonEmpty) Some(key._1) else None
-      val reader0 = spark.read.option("mergeSchema", mergeSchema)
-      val reader1 = bp.fold(reader0)(reader0.option("basePath", _))
-      val allGroup = allByGroup.getOrElse(key, group)
-      val reader = widenedSchema(spark, allGroup, bp) match {
-        case Some(s) => reader1.schema(s)
-        // Uniform unpartitioned group: the log proves one signature, so
-        // the (cached) footer schema of any member is the exact table
-        // schema — skip the per-read inference job. Partitioned groups
-        // keep inference (an explicit schema would have to carry the
-        // partition columns, whose types derive from the path set).
-        case None if bp.isEmpty && !mergeSchema && uniformStatsSchema(allGroup) =>
-          reader1.schema(cachedFileSchema(spark, allGroup.head.file))
-        case None => reader1
-      }
-      val frame =
-        if (schemaOnly)
-          // Every file provably excluded: an empty frame with the table
-          // schema (schema comes from one arbitrary pinned file, never its
-          // rows).
-          reader.parquet(group.head.file).limit(0)
-        else
-          // Merge-on-read: subtract deletion-vectored rows (no-op plan when
-          // no group file carries an attachment).
-          applyDv(spark, reader.parquet(group.map(_.file).distinct: _*), group)
-      injectDefaults(frame, key._3, defaults)
-    }
-    val physical = deVoidPartitions(
-      if (pruned.isEmpty) frameOver(Seq(partPruned.head), schemaOnly = true)
-      else pruned.groupBy(groupKey).values.toSeq
-        .map(g => frameOver(g, schemaOnly = false))
-        .reduce(_.unionByName(_, allowMissingColumns = true)),
-      partitionColumns(all.map(_.partition)))
+    // The schema comes from the UNPRUNED files, so it does not move with
+    // pruning. Every file provably excluded: an empty frame with the table
+    // schema, planned over one pinned file whose rows are never read (its
+    // vector is dropped — nothing to subtract from no rows).
+    val scanned = snap.scanFiles(spark, table,
+      if (pruned.isEmpty) Seq(partPruned.head.copy(dv = "")) else pruned,
+      partitionColumns(all.map(_.partition)), mergeSchema = mergeSchema,
+      schemaFrom = all)
+    val physical = if (pruned.isEmpty) scanned.limit(0) else scanned
     mapping.fold(physical)(_.applyTo(physical))
   }
 }

@@ -121,6 +121,23 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().sorted.toSeq == Seq(1L, 3L, 4L))
   }
 
+  test("change feed of a partitioned clone serves its rows as inserts") {
+    val w = wh("partFeed")
+    val s0 = spark
+    import s0.implicits._
+    pub(w, "src", Seq((1L, "d1"), (2L, "d2"), (3L, "d2")).toDF("id", "dt"),
+      partitionBy = Seq("dt"))
+    Snapshots.cloneTable(spark, w, "src", "dst")
+    // The clone's files root in the SOURCE's dir: the feed must read them
+    // under that root, as read() does.
+    val feed = Snapshots.changes(spark, w, "dst", fromExclusive = -1L)
+      .select("id", "dt", "_change_type").as[(Long, String, String)]
+      .collect().toSet
+    val read = Snapshots.read(spark, w, "dst").as[(Long, String)].collect()
+      .map { case (id, dt) => (id, dt, "insert") }.toSet
+    assert(feed == read && read.size == 3, s"feed $feed vs read $read")
+  }
+
   test("deletion vectors ride the clone") {
     val w = wh("dv")
     val s0 = spark

@@ -677,6 +677,32 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.ingest.Snapshots.read(spark, w, "verified_speedtest_report").count() == 9)
   }
 
+  test("the checkpoint is read from the log: a restore rolls resume back") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import graft.ingest.{Checkpoint, Snapshots}
+    val in = Files.createTempDirectory("graft-ingest-cp-restore")
+    val w = wh("whCpRestore")
+    def key(ts: Long) = s"verified_speedtest.$ts.gz"
+    writeFixture(key(1700000001000L), speedtestFrames(1), in)
+    IngestJob.run(spark, in.toString, w, "verified-speedtest")            // v0
+    writeFixture(key(1700000002000L), speedtestFrames(2), in)
+    IngestJob.run(spark, in.toString, w, "verified-speedtest",
+      FileSelection(continue = true))                                      // v1
+    assert(Checkpoint.latestMs(spark, w, "verified_speedtest")
+      .contains(1700000002000L))
+    // Roll the checkpoint table back to v0: the second file's checkpoint
+    // parquet stays in the directory but is no longer live in the log.
+    Snapshots.restore(spark, w, Checkpoint.TableName, 0L)
+    val fs = new HPath(w).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new HPath(s"$w/${Checkpoint.TableName}"))
+      .count(_.getPath.getName.endsWith(".parquet")) == 2)
+    assert(Checkpoint.latestMs(spark, w, "verified_speedtest")
+      .contains(1700000001000L))
+    val listed = FileCatalog.list(spark, in.toString, "verified_speedtest")
+    assert(Checkpoint.unprocessed(spark, w, "verified_speedtest", listed)
+      .map(_.timestamp_ms) == Seq(1700000002000L))
+  }
+
   test("salted join and salted aggregation match their unsalted results") {
     import org.apache.spark.sql.functions._
     val s0 = spark

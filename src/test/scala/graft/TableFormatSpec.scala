@@ -1612,4 +1612,86 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Snapshots.tableFeatures(fs, w, "t2").exists(_.contains("generated")),
       Snapshots.tableFeatures(fs, w, "t2").toString)
   }
+
+  /** Drain the `graft-snapshots` stream of `table` to its current end with
+    * Trigger.AvailableNow and return what it delivered. */
+  private def drainStream(w: String, table: String,
+                          opts: Map[String, String] = Map.empty)
+      : org.apache.spark.sql.DataFrame = {
+    val out = s"$w-$table-stream-out"
+    val q = spark.readStream.format("graft-snapshots")
+      .option("warehouse", w).option("table", table).options(opts).load()
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", s"$w-$table-stream-ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    spark.read.parquet(out)
+  }
+
+  /** Stage + commit + publish `df` as one file per partition of `table`. */
+  private def publishDf(w: String, table: String,
+                        df: org.apache.spark.sql.DataFrame,
+                        partitionBy: Seq[String] = Nil): Unit = {
+    val cid = java.util.UUID.randomUUID().toString
+    val writer = df.coalesce(1).write
+    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*))
+      .parquet(s"${TxnCommit.stagingDir(w, cid)}/$table")
+    val moves = TxnCommit.movesFor(fs, w, cid, table)
+    TxnCommit.commit(fs, w, cid, moves)
+    TxnCommit.publish(fs, w, cid, moves)
+  }
+
+  test("changes() serves initial-defaults like read and the change-feed stream") {
+    val w = wh("whFeedDefault")
+    val s0 = spark
+    import s0.implicits._
+    publishDf(w, "t", Seq((1L, "a")).toDF("id", "val"))                 // v0
+    graft.ingest.SchemaEvolution.addColumn(spark, w, "t", "tag",
+      Some("'n/a'"))                                                      // v1
+    publishDf(w, "t", Seq((2L, "b", "x")).toDF("id", "val", "tag"))     // v2
+    def tags(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
+      df.select("id", "tag").as[(Long, String)].collect().toMap
+    val want = Map(1L -> "n/a", 2L -> "x")
+    assert(tags(Snapshots.read(spark, w, "t")) == want)
+    assert(tags(Snapshots.changes(spark, w, "t", fromExclusive = -1L)) == want)
+    assert(tags(drainStream(w, "t", Map("readChangeFeed" -> "true"))) == want)
+  }
+
+  test("read paths agree on a partitioned clone with a DV, a default and a widened column") {
+    val w = wh("whReadParity")
+    val s0 = spark
+    import s0.implicits._
+    import org.apache.spark.sql.functions.col
+    // v0: INT `n`, two partitions; v1: a BIGINT `n` in the same layout and
+    // presence group (a width mix read at the widest type).
+    publishDf(w, "t", Seq((1L, 10, "d1"), (2L, 20, "d1"), (3L, 30, "d2"))
+      .toDF("id", "n", "dt"), Seq("dt"))
+    publishDf(w, "t", Seq((4L, 4000000000L, "d2")).toDF("id", "n", "dt"),
+      Seq("dt"))
+    Merge.deleteWhereDv(spark, w, "t", col("id") === 2L)                // DV
+    graft.ingest.SchemaEvolution.addColumn(spark, w, "t", "tag",
+      Some("'n/a'"))
+    publishDf(w, "t", Seq((5L, 50L, Some("x"), "d1"),
+      (6L, 60L, None: Option[String], "d3")).toDF("id", "n", "tag", "dt"),
+      Seq("dt"))
+    // The clone's log is one append-only commit ADDing every live file
+    // (vectors attached) from the source's directory.
+    Snapshots.cloneTable(spark, w, "t", "c")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "n", "tag", "dt").collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)),
+          r.getString(3))).sortBy(_._1).toSeq
+    val want = Seq((1L, 10L, Some("n/a"), "d1"), (3L, 30L, Some("n/a"), "d2"),
+      (4L, 4000000000L, Some("n/a"), "d2"), (5L, 50L, Some("x"), "d1"),
+      (6L, 60L, None, "d3"))
+    assert(rows(Snapshots.read(spark, w, "c")) == want)
+    val feed = Snapshots.changes(spark, w, "c", fromExclusive = -1L)
+    assert(feed.select("_change_type").distinct().as[String].collect()
+      .toSeq == Seq("insert"))
+    assert(rows(feed.drop("_change_type", "_commit_version")) == want)
+    assert(rows(drainStream(w, "c")) == want)
+    assert(Compaction.compact(spark, w, "c").isDefined)
+    assert(rows(Snapshots.read(spark, w, "c")) == want)
+  }
 }

@@ -188,28 +188,11 @@ object Merge {
         }
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         r.table match {
-          case t: graft.sources.v2.GraftCatalogTable
-              if !timeTravelOptions(r.options) => t.logRowBound
-          case _ => None
-        }
-      case sr: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        sr.relation.table match {
-          case t: graft.sources.v2.GraftCatalogTable
-              if !timeTravelOptions(sr.relation.options) => t.logRowBound
+          case t: graft.sources.v2.GraftCatalogTable => t.logRowBound
           case _ => None
         }
       case _ => None
     }
-    // Per-QUERY read options win over the table's own props in
-    // newScanBuilder: a source read with option("versionAsOf"/
-    // "timestampAsOf", old) on a since-shrunk table would get the
-    // latest-version token sum as its "bound", which bounds nothing for
-    // the pinned read — refuse the shortcut and let the bounded probe
-    // answer (results stay correct either way; this guards the
-    // broadcast/point-enumeration routing from an unbounded source).
-    def timeTravelOptions(
-        o: org.apache.spark.sql.util.CaseInsensitiveStringMap): Boolean =
-      o.containsKey("versionAsOf") || o.containsKey("timestampAsOf")
     def bound(p: LogicalPlan): Option[Long] = leafRows(p).orElse(p match {
       case u: Union =>
         u.children.map(bound).foldLeft(Option(0L)) { (a, b) =>

@@ -27,13 +27,14 @@ import graft.ingest.{SchemaEvolution, Snapshots}
   * DROP TABLE graft.t                              -- time-travelable drop
   * }}}
   *
-  * Reads resolve to [[GraftCatalogTable]] (BATCH_READ): correct in any
-  * session via the per-file DSv2 batch scan (log-planned files decoded by
-  * Spark's own parquet reader, so every type Spark's parquet format
-  * serves; partition tuples from the log, DV subtraction, column mapping,
+  * Reads resolve to [[GraftCatalogTable]] (BATCH_READ), pinned at load
+  * to one snapshot version and its served schema: correct in any session
+  * via the per-file DSv2 batch scan (log-planned files decoded by Spark's
+  * own parquet reader, so every type Spark's parquet format serves;
+  * partition tuples from the log, DV subtraction, column mapping,
   * stats-pruned by pushed filters); sessions with `GraftSqlExtensions`
-  * splice the relation into the vectorized parquet plan pre-CBO, so large
-  * scans run columnar.
+  * splice the table's own plan at that version into the vectorized
+  * parquet plan pre-CBO, so large scans run columnar.
   * Writes stage through the vectorized [[SnapshotDataWriter]] and publish
   * one TxnCommit version per job. Table identity lives in the log alone —
   * no metastore: CREATE TABLE declares schema/partitioning as table
@@ -106,9 +107,9 @@ class GraftCatalog extends TableCatalog
     val snap = Snapshots.snapshot(fs, warehouse, asOf)
     val committed =
       if (snap.files(t).nonEmpty) Some(snap.read(spark, t).schema) else None
-    // asOf rides into the properties too: a time-traveled load must apply
-    // THAT era's declared types/partitioning/TBLPROPERTIES, not the
-    // current ones (wrong era after an ALTER or a replace/re-create).
+    // The declared types/partitioning/TBLPROPERTIES come from the same
+    // snapshot: a time-traveled load applies THAT era's, not the current
+    // ones (wrong era after an ALTER or a replace/re-create).
     val tblProps = snap.properties(t)
     val declared: Map[String, org.apache.spark.sql.types.DataType] =
       tblProps.get("catalog.schema.ddl").map(StructType.fromDDL)
@@ -150,13 +151,14 @@ class GraftCatalog extends TableCatalog
       })
     }.orElse(tblProps.get("catalog.schema.ddl").map(StructType.fromDDL))
       .getOrElse(throw new NoSuchTableException(ident))
-    // Identity props drive scans/writes; the log's TBLPROPERTIES ride
-    // along so `SHOW TBLPROPERTIES graft.t` (which reads
-    // Table.properties()) shows the real table configuration.
+    // properties() is what `SHOW TBLPROPERTIES graft.t` shows: the log's
+    // TBLPROPERTIES plus the identity. Reads take identity and version
+    // from the typed fields only.
     val props = tblProps ++
       Map("warehouse" -> warehouse, "table" -> t) ++
       asOf.map(v => "versionAsOf" -> v.toString)
-    new GraftCatalogTable(schema, props.asJava, partCols)
+    new GraftCatalogTable(warehouse, t, snap.version, schema, props.asJava,
+      partCols)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -175,8 +177,7 @@ class GraftCatalog extends TableCatalog
            Map("catalog.partition.columns" -> partCols.mkString(","))
          else Map.empty) ++
         properties.asScala.filterNot(_._1.startsWith("option.")))
-    new GraftCatalogTable(schema,
-      Map("warehouse" -> warehouse, "table" -> t).asJava, partCols)
+    loadTable(ident)
   }
 
   // CREATE-time engine-managed columns: Spark routes `GENERATED ALWAYS
@@ -483,20 +484,30 @@ object GraftCatalog {
     }
 }
 
-/** Catalog-resolved table: the DSv2 [[SnapshotTable]] surface plus batch
-  * capabilities — BATCH_READ through the log-planned per-file scan (each
-  * file decoded by Spark's parquet reader; under the graft extensions the
-  * relation is spliced into a plain file-source plan), BATCH_WRITE /
-  * TRUNCATE through the staged TxnCommit write. The table's identity
-  * (warehouse/table/pinned version) and partition layout ride its
-  * properties into every scan and write, so SQL needs no per-query
-  * options. */
-class GraftCatalogTable(tableSchema: StructType,
+/** Catalog-resolved table, pinned at load: `warehouse`, `table`, the
+  * loaded snapshot's `snapshotVersion` and the served schema are the only
+  * source of what a read of it serves. BATCH_READ runs the log-planned
+  * per-file scan at that version (each file decoded by Spark's parquet
+  * reader); under the graft extensions [[planFor]] splices the same version
+  * into a plain file-source plan. BATCH_WRITE / TRUNCATE go through the
+  * staged TxnCommit write. `properties()` is what `SHOW TBLPROPERTIES`
+  * shows; no read takes its identity or version from it.
+  * `snapshotVersion` is None only for a staged CTAS/REPLACE table, which
+  * is written, never read. */
+class GraftCatalogTable(val warehouse: String, val table: String,
+                        val snapshotVersion: Option[Long],
+                        tableSchema: StructType,
                         props: util.Map[String, String],
                         partCols: Seq[String])
   extends SnapshotTable(tableSchema, props)
   with org.apache.spark.sql.connector.catalog.SupportsDelete {
   import scala.jdk.CollectionConverters._
+
+  private def spark = SparkSession.active
+  private def snapshot: graft.ingest.Snapshot =
+    Snapshots.snapshot(new Path(warehouse)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), warehouse,
+      snapshotVersion)
 
   /** `DELETE FROM graft.t WHERE …` — Spark's row-level delete resolution
     * hands the (exactly translatable) condition here; it lowers onto the
@@ -511,8 +522,7 @@ class GraftCatalogTable(tableSchema: StructType,
     import org.apache.spark.sql.functions.lit
     val cond = filters.flatMap(SnapshotDataSource.filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    graft.ingest.Merge.deleteWhereDv(SparkSession.active,
-      props.get("warehouse"), props.get("table"), cond)
+    graft.ingest.Merge.deleteWhereDv(spark, warehouse, table, cond)
   }
 
   // No ACCEPT_ANY_SCHEMA here (unlike the format-path SnapshotTable,
@@ -532,30 +542,36 @@ class GraftCatalogTable(tableSchema: StructType,
 
   override def properties(): util.Map[String, String] = props
 
-  /** Live-row bound from the log's stats tokens (the table's own
-    * versionAsOf property honored) — zero jobs; [[graft.ingest.Merge]]
-    * routes merge-source sizing through this instead of a probe job. A
-    * timestampAsOf pin refuses (latest-version tokens would not bound a
-    * time-traveled read of a since-shrunk table) — callers fall back to
-    * the probe. */
-  private[graft] def logRowBound: Option[Long] = {
-    if (props.containsKey("timestampAsOf") &&
-        props.get("timestampAsOf") != null) return None
-    val wh = props.get("warehouse")
-    val t = props.get("table")
-    val fs = new org.apache.hadoop.fs.Path(wh).getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    graft.ingest.Snapshots.snapshot(fs, wh,
-      Option(props.get("versionAsOf")).map(_.toLong)).logRowCount(t)
+  /** Live-row bound at the pinned version from the log's stats tokens —
+    * zero jobs; [[graft.ingest.Merge]] routes merge-source sizing through
+    * this instead of a probe job. */
+  private[graft] def logRowBound: Option[Long] = snapshot.logRowCount(table)
+
+  /** The optimized plan of this table's rows at the pinned version, with
+    * `pred` pruning the file list from log stats, conformed to the served
+    * schema ([[SnapshotDataSource.conform]]): a column the catalog widened
+    * or typed (ALTER COLUMN TYPE, a declared partition type) is cast, one
+    * no file carries yet is a typed null, and a table with no live files
+    * is an empty relation. What [[graft.sql.SnapshotScanRule]] splices in
+    * place of the relation; built fresh per call, so each splice has its
+    * own expression ids. */
+  private[graft] def planFor(pred: graft.ingest.FileStats.Pred)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val snap = snapshot
+    val rows =
+      if (snap.files(table).isEmpty) spark.emptyDataFrame
+      else snap.read(spark, table, dataFilter = pred)
+    SnapshotDataSource.conform(rows, tableSchema).queryExecution.optimizedPlan
   }
 
-  // SQL reads/writes arrive with EMPTY per-query options: the table's own
-  // properties (warehouse/table/versionAsOf, partitionBy) supply identity;
-  // explicit per-query options still win.
+  // SQL reads arrive with the per-query options; the typed identity and
+  // the pinned version override them, and the log's TBLPROPERTIES serve
+  // only as defaults beneath (stream options such as maxFilesPerTrigger).
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : SnapshotScanBuilder = {
-    val merged = new CaseInsensitiveStringMap(
-      (props.asScala ++ options.asScala).asJava)
+    val merged = new CaseInsensitiveStringMap((props.asScala ++
+      options.asScala ++ Map("warehouse" -> warehouse, "table" -> table) ++
+      snapshotVersion.map(v => "versionAsOf" -> v.toString)).asJava)
     // Protocol gate: the per-file catalog scan serves rows directly from
     // the log's file list, so it needs every reader feature a batch read
     // needs — refuse unknown ones at plan time, naming the feature. The
@@ -578,6 +594,7 @@ class GraftCatalogTable(tableSchema: StructType,
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new SnapshotWriteBuilder(info,
       props.asScala.toMap ++
+        Map("warehouse" -> warehouse, "table" -> table) ++
         (if (partCols.nonEmpty) Map("partitionBy" -> partCols.mkString(","))
          else Map.empty))
 }
@@ -590,7 +607,7 @@ private[v2] class GraftStagedTable(catalog: GraftCatalog, table: String,
                                    tableSchema: StructType,
                                    partCols: Seq[String],
                                    declared: Map[String, String])
-  extends GraftCatalogTable(tableSchema,
+  extends GraftCatalogTable(catalog.warehousePath, table, None, tableSchema,
     {
       import scala.jdk.CollectionConverters._
       // Declared TBLPROPERTIES configure the CTAS data write itself

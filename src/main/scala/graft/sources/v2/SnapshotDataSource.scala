@@ -231,7 +231,7 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
   with org.apache.spark.sql.sources.PrunedFilteredScan {
 
   import org.apache.spark.sql.{Column, DataFrame, Row}
-  import org.apache.spark.sql.functions.{col, lit}
+  import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.sources.Filter
 
   private val spark = sqlContext.sparkSession
@@ -308,20 +308,15 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     * `RDD[InternalRow]` directly. */
   override def needConversion: Boolean = false
 
-  /** The inner frame with log-side skipping applied and any advertised
-    * column the pruning lost re-added as typed nulls (skipping can prune
-    * away every file CARRYING a schema-evolved column — those files' rows
-    * would have read it as null). */
+  /** The inner frame with log-side skipping applied, conformed to the
+    * advertised schema: skipping can prune away every file CARRYING a
+    * schema-evolved column, whose rows would have read it as null. */
   private def frameFor(pred: graft.ingest.FileStats.Pred): DataFrame =
-    schema.fields.foldLeft(
-        baseFrame(pinnedVersion, if (changeFeed) null else pred)) {
-      (df, f) =>
-        if (df.columns.contains(f.name)) df
-        else df.withColumn(f.name, lit(null).cast(f.dataType))
-    }
+    SnapshotDataSource.conform(
+      baseFrame(pinnedVersion, if (changeFeed) null else pred), schema)
 
   /** The OPTIMIZED logical plan this relation delegates to, output columns
-    * normalized to schema order — what [[graft.sql.SnapshotScanRule]]
+    * in schema order — what [[graft.sql.SnapshotScanRule]]
     * splices into the query plan in place of the relation so the final
     * physical plan is the vectorized columnar parquet scan itself (full
     * parquet predicate pushdown, partition pruning, column pruning),
@@ -333,8 +328,7 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     * self-join swaps two relation nodes independently). */
   private[graft] def planFor(pred: graft.ingest.FileStats.Pred)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    frameFor(pred).select(schema.fieldNames.map(col).toSeq: _*)
-      .queryExecution.optimizedPlan
+    frameFor(pred).queryExecution.optimizedPlan
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter])
@@ -392,6 +386,21 @@ object SnapshotDataSource {
       case _ => None
     }
     go(f)
+  }
+
+  /** `df` by name in `schema`'s column order and types: a column whose
+    * type differs is cast, one `df` lacks is a typed null. */
+  private[v2] def conform(df: org.apache.spark.sql.DataFrame,
+                          schema: StructType): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    df.select(schema.fields.map { f =>
+      have.get(f.name) match {
+        case Some(t) if t == f.dataType => col(f.name)
+        case Some(_) => col(f.name).cast(f.dataType).as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
+      }
+    }.toSeq: _*)
   }
 
   private[v2] def required(options: CaseInsensitiveStringMap, key: String): String =
@@ -502,7 +511,6 @@ class SnapshotScanBuilder(tableSchema: StructType,
       case Some(r) => aggPush = Some(r); true
       case None => false
     }
-  private[graft] def hasPushedAggregation: Boolean = aggPush.isDefined
 
   private def computeAgg(agg: Aggregation)
       : Option[(StructType, Array[String])] = {

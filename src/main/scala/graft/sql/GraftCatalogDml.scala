@@ -28,8 +28,8 @@ case class GraftCatalogDmlRule(session: SparkSession) extends Rule[LogicalPlan] 
   private def graftTarget(plan: LogicalPlan): Option[(String, String)] =
     plan.collectFirst {
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftCatalogTable] =>
-        (r.table.properties().get("warehouse"),
-          r.table.properties().get("table"))
+        val t = r.table.asInstanceOf[GraftCatalogTable]
+        (t.warehouse, t.table)
     }
 
   /** Render a resolved expression back to SQL that re-resolves against a

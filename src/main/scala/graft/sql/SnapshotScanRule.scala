@@ -5,29 +5,30 @@ import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import graft.ingest.FileStats
 import graft.sources.v2.{GraftCatalogTable, SnapshotBatchRelation}
 
-/** Vectorizes `spark.read.format("graft-snapshots")` scans: replaces the
-  * V1 [[SnapshotBatchRelation]] leaf with the log-pinned parquet plan it
-  * delegates to, so the PHYSICAL plan is Spark's columnar parquet scan
-  * itself — whole-stage codegen, parquet predicate pushdown, partition
-  * pruning and column pruning all land in the scan (FileSourceStrategy
-  * collapses the splice's Projects via PhysicalOperation) instead of a
-  * `RowDataSourceScan` that re-encodes every row. Injected as a pre-CBO
-  * rule: it runs ONCE after operator optimization, when pushed-down
+/** Vectorizes snapshot-table scans: replaces the V1 [[SnapshotBatchRelation]]
+  * leaf (`spark.read.format("graft-snapshots")`) and the catalog's
+  * [[GraftCatalogTable]] leaf (`SELECT … FROM graft.t`) with the log-pinned
+  * parquet plan each one builds itself (`planFor`), so the PHYSICAL plan is
+  * Spark's columnar parquet scan itself — whole-stage codegen, parquet
+  * predicate pushdown, partition pruning and column pruning all land in
+  * the scan (FileSourceStrategy collapses the splice's Projects via
+  * PhysicalOperation) instead of a row-shaped scan node. Injected as a
+  * pre-CBO rule: it runs ONCE after operator optimization, when pushed-down
   * filters sit directly above the relation leaf, so the filter condition
   * also feeds log-side FILE skipping ([[FileStats.fromExpression]]) — a
-  * pruned file costs nothing, not even a task.
+  * pruned file costs nothing, not even a task. Pre-CBO runs before V2 scan
+  * pushdown, so a catalog leaf is still its `DataSourceV2Relation` here.
   *
-  * The splice aliases the inner plan's output to the relation's original
-  * expression ids (self-joins swap each relation node to an
-  * independently-built inner plan, keeping both sides' ids distinct).
-  * Sessions without the extension still work through the V1 fallback
-  * (`needConversion=false` — InternalRows end-to-end, just a row-shaped
-  * scan node). Snapshot pinning is unchanged: the relation resolved its
-  * version at load() and every splice serves that same version. */
+  * The splice re-binds the inner plan's output by name to the leaf's
+  * original expression ids (self-joins swap each leaf to an independently
+  * built inner plan, keeping both sides' ids distinct). Sessions without
+  * the extension still work through the V1 fallback and the per-file DSv2
+  * scan. Snapshot pinning is unchanged: each leaf resolved its version at
+  * load and every splice serves that same version. */
 case class SnapshotScanRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -46,80 +47,40 @@ case class SnapshotScanRule(session: SparkSession) extends Rule[LogicalPlan] {
         m.targetTable.foreach(shielded.add)
       case _ => ()
     }
-    applyShielded(plan, shielded)
-  }
-
-  private def applyShielded(plan: LogicalPlan,
-                            shielded: java.util.Set[LogicalPlan])
-      : LogicalPlan = plan.transformDown {
-    case Filter(cond, lr: LogicalRelation)
-        if lr.relation.isInstanceOf[SnapshotBatchRelation] =>
-      // The condition both stays as the row filter AND prunes the pinned
-      // file list from log stats (best-effort, only ever widens).
-      Filter(cond, splice(lr, FileStats.fromExpression(cond).orNull))
-    case lr: LogicalRelation
-        if lr.relation.isInstanceOf[SnapshotBatchRelation] =>
-      splice(lr, null)
-    // Catalog-resolved reads (`SELECT … FROM graft.t`): splice the
-    // [[GraftCatalogTable]] relation the same way so catalog SQL runs the
-    // columnar parquet scan instead of the per-file fallback reader. At
-    // pre-CBO, predicate pushdown has already parked the filters adjacent
-    // to the leaf, so the condition feeds log-side skipping exactly like
-    // the V1 path. Both the pre-pushdown (DataSourceV2Relation) and
-    // post-pushdown (DataSourceV2ScanRelation) shapes are handled —
-    // whichever this Spark version presents at pre-CBO. Write commands
-    // are untouched: a V2WriteCommand's target table is not among its
-    // children, only its query is.
-    case Filter(cond, r: DataSourceV2Relation)
-        if r.table.isInstanceOf[GraftCatalogTable] && !shielded.contains(r) =>
-      Filter(cond, spliceV2(r.table, r.output,
-        FileStats.fromExpression(cond).orNull))
-    case r: DataSourceV2Relation
-        if r.table.isInstanceOf[GraftCatalogTable] && !shielded.contains(r) =>
-      spliceV2(r.table, r.output, null)
-    case Filter(cond, sr: DataSourceV2ScanRelation)
-        if sr.relation.table.isInstanceOf[GraftCatalogTable] &&
-          !shielded.contains(sr) && !aggPushed(sr) =>
-      Filter(cond, spliceV2(sr.relation.table, sr.output,
-        FileStats.fromExpression(cond).orNull))
-    case sr: DataSourceV2ScanRelation
-        if sr.relation.table.isInstanceOf[GraftCatalogTable] &&
-          !shielded.contains(sr) && !aggPushed(sr) =>
-      spliceV2(sr.relation.table, sr.output, null)
-  }
-
-  /** A scan serving a fully-pushed aggregation answers from the log and
-    * must not be spliced back into a full-table plan. */
-  private def aggPushed(sr: DataSourceV2ScanRelation): Boolean =
-    sr.scan match {
-      case b: graft.sources.v2.SnapshotScanBuilder => b.hasPushedAggregation
-      case _ => false
+    val Leaf = new SnapshotLeaf(shielded)
+    // The condition both stays as the row filter AND prunes the pinned
+    // file list from log stats (best-effort, only ever widens). Write
+    // commands are untouched: a V2WriteCommand's target table is not among
+    // its children, only its query is.
+    plan.transformDown {
+      case Filter(cond, leaf @ Leaf(planFor)) =>
+        Filter(cond, splice(leaf, planFor(FileStats.fromExpression(cond).orNull)))
+      case leaf @ Leaf(planFor) => splice(leaf, planFor(null))
     }
+  }
 
-  private def spliceV2(table: org.apache.spark.sql.connector.catalog.Table,
-                       output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-                       pred: FileStats.Pred): LogicalPlan = {
-    val rel = new SnapshotBatchRelation(session.sqlContext,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        table.properties()))
-    val inner = rel.planFor(pred)
-    // The relation's output may be the PRUNED column set; map by name into
-    // the inner plan's full schema-order output, re-binding the original
-    // expression ids.
+  /** A snapshot-table leaf's own `planFor`. */
+  private final class SnapshotLeaf(shielded: java.util.Set[LogicalPlan]) {
+    def unapply(p: LogicalPlan): Option[FileStats.Pred => LogicalPlan] =
+      p match {
+        case lr: LogicalRelation => lr.relation match {
+          case r: SnapshotBatchRelation => Some(r.planFor)
+          case _ => None
+        }
+        case r: DataSourceV2Relation if !shielded.contains(r) => r.table match {
+          case t: GraftCatalogTable => Some(t.planFor)
+          case _ => None
+        }
+        case _ => None
+      }
+  }
+
+  /** `inner`'s columns re-bound by name to `leaf`'s expression ids. */
+  private def splice(leaf: LogicalPlan, inner: LogicalPlan): LogicalPlan = {
     val byName = inner.output.map(a => a.name -> a).toMap
-    Project(output.map { orig =>
+    Project(leaf.output.map { orig =>
       Alias(byName(orig.name), orig.name)(
         exprId = orig.exprId, qualifier = orig.qualifier)
-    }, inner)
-  }
-
-  private def splice(lr: LogicalRelation,
-                     pred: FileStats.Pred): LogicalPlan = {
-    val inner = lr.relation.asInstanceOf[SnapshotBatchRelation].planFor(pred)
-    // planFor normalizes output to schema order = the relation's output
-    // order; the positional alias map re-binds the original ids.
-    Project(lr.output.zip(inner.output).map { case (orig, cur) =>
-      Alias(cur, orig.name)(exprId = orig.exprId, qualifier = orig.qualifier)
     }, inner)
   }
 }

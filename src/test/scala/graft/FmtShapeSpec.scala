@@ -69,7 +69,7 @@ class FmtShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fmt_replace: 4 commits; steady-state read is listing-only") {
-    pin("fmt_replace", wantDeltas = 4, wantReads = 0L, wantLists = 63L)
+    pin("fmt_replace", wantDeltas = 4, wantReads = 0L, wantLists = 45L)
   }
 
   test("fmt_roundtrip: 3 commits; steady-state read is listing-only") {
@@ -125,12 +125,12 @@ class FmtShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.catalog.gshape.warehouse", w)
     val q = "SELECT id, v FROM gshape.t WHERE id > 2"
     assert(spark.sql(q).collect().map(_.getLong(0)).sorted.sameElements(Seq(3L, 4L)))
-    // Three log walks: loadTable, then the spliced relation's pin (its
-    // schema) and its plan at that version. Each walk lists the 11 log
-    // files (5 entries, their 5 claim locks, the footer-era marker).
+    // Two log walks: loadTable pins the version, then the splice plans at
+    // that version. Each walk lists the 11 log files (5 entries, their 5
+    // claim locks, the footer-era marker).
     val one = lists(Snapshots.latestVersion(fs, w))
     val select = lists(spark.sql(q).collect())
-    assert(one == 11L && select == 33L, s"one catalog SELECT paid $select " +
-      s"log lists (one latestVersion: $one), pinned 33 (11)")
+    assert(one == 11L && select == 22L, s"one catalog SELECT paid $select " +
+      s"log lists (one latestVersion: $one), pinned 22 (11)")
   }
 }

@@ -627,6 +627,48 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT x FROM graft.ghost").head().getLong(0) == 1L)
   }
 
+  test("TBLPROPERTIES never pin a catalog read's version") {
+    spark.conf.set("spark.sql.catalog.gtp",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gtp.warehouse",
+      dir.resolve("tblprops").toString)
+    spark.sql("CREATE TABLE gtp.f AS SELECT id FROM range(100)")
+    spark.sql("ALTER TABLE gtp.f SET TBLPROPERTIES ('versionAsOf'='0')")
+    spark.sql("INSERT INTO gtp.f SELECT id FROM range(100, 250)")
+    assert(spark.sql("SELECT count(*) FROM gtp.f").head().getLong(0) == 250L)
+    assert(spark.sql("SELECT id FROM gtp.f").count() == 250L)
+  }
+
+  test("a version-pinned catalog source bounds its merge size from the log") {
+    spark.conf.set("spark.sql.catalog.gsb",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    val w = dir.resolve("statsbound").toString
+    spark.conf.set("spark.sql.catalog.gsb.warehouse", w)
+    spark.sql("CREATE TABLE gsb.f AS SELECT id FROM range(100)")
+    spark.sql("INSERT INTO gsb.f SELECT id FROM range(100, 250)")
+    // Version 0 is the CTAS data commit: 100 rows.
+    val pinned = spark.read.option("versionAsOf", "0").table("gsb.f")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    val bound =
+      try {
+        val b = graft.ingest.Merge.statsRowBound(pinned)
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        b
+      } finally sc.removeSparkListener(l)
+    assert(bound == Some(100L) && jobs.get == 0, s"bound $bound, ${jobs.get} jobs")
+    assert(pinned.count() == 100L)
+    assert(graft.ingest.Merge.statsRowBound(spark.table("gsb.f")) ==
+      Some(250L))
+  }
+
   test("table properties act as default read options for catalog streams") {
     val s0 = spark
     import s0.implicits._

@@ -314,20 +314,16 @@ class MergeClausesSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Merge.statsRowBound(src.union(src)) == Some(30L))
       assert(Merge.statsRowBound(Seq((1L, 2L)).toDF("id", "v")).isEmpty)
       assert(Merge.statsRowBound(src.join(src, "id")).isEmpty)
-      // Per-QUERY time travel wins over table props in newScanBuilder, so
-      // latest-version tokens bound NOTHING for the pinned read: a
-      // version/timestamp-pinned source must refuse the shortcut (probe
-      // fallback), never serve the latest count as a "bound".
+      // Per-query time travel resolves through loadTable, so the table is
+      // pinned at that version and its tokens bound exactly that read.
       val pinnedV = spark.read.option("versionAsOf",
           Snapshots.latestVersion(fs, w).get.toString)
         .table("mcstats.src")
-      assert(Merge.statsRowBound(pinnedV).isEmpty,
-        "versionAsOf-pinned source must not take the stats shortcut")
+      assert(Merge.statsRowBound(pinnedV) == Some(15L))
       val pinnedTs = spark.read
         .option("timestampAsOf", "2100-01-01 00:00:00")
         .table("mcstats.src")
-      assert(Merge.statsRowBound(pinnedTs).isEmpty,
-        "timestampAsOf-pinned source must not take the stats shortcut")
+      assert(Merge.statsRowBound(pinnedTs) == Some(15L))
 
       val events =
         scala.collection.mutable.ArrayBuffer.empty[(String, String)]

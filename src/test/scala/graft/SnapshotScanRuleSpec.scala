@@ -371,19 +371,79 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = wh("catWiden")
     val s0 = spark
     import s0.implicits._
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     spark.conf.set("spark.sql.catalog.gwd",
       classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gwd.warehouse", w)
-    spark.sql("CREATE TABLE gwd.t AS SELECT CAST(7 AS INT) AS id, 'a' AS v")
+    spark.sql("CREATE TABLE gwd.t AS SELECT * FROM VALUES " +
+      "(CAST(7 AS INT), 'a', CAST(1.5 AS FLOAT)), " +
+      "(CAST(-7 AS INT), 'b', CAST(-2.25 AS FLOAT)) AS s(id, v, x)")
     spark.sql("ALTER TABLE gwd.t ALTER COLUMN id TYPE BIGINT")
+    spark.sql("ALTER TABLE gwd.t ALTER COLUMN x TYPE DOUBLE")
     // Under the extensions the catalog read splices to the vectorized
-    // parquet plan — the narrow (int32) file must still serve as LONG.
-    val df = spark.sql("SELECT id FROM gwd.t")
-    assert(df.schema("id").dataType == org.apache.spark.sql.types.LongType)
-    assert(df.as[Long].collect().toSeq == Seq(7L))
-    spark.sql("INSERT INTO gwd.t SELECT 4000000000L, 'b'")
+    // parquet plan — the narrow (int32/float) file must still serve, and
+    // execute, at the wide type.
+    val df = spark.sql("SELECT id, x FROM gwd.t")
+    val executed = df.queryExecution.executedPlan.schema
+    assert(df.schema("id").dataType == LongType)
+    assert(executed("id").dataType == LongType, executed)
+    assert(executed("x").dataType == DoubleType, executed)
+    assert(df.as[(Long, Double)].collect().toSeq.sorted ==
+      Seq(-7L -> -2.25, 7L -> 1.5))
+    // Arithmetic at the wide type: INT would overflow here.
+    assert(spark.sql("SELECT id + 2147483647 FROM gwd.t").as[Long]
+      .collect().toSeq.sorted == Seq(2147483640L, 2147483654L))
+    spark.sql("INSERT INTO gwd.t SELECT 4000000000L, 'c', 0.5D")
     assert(spark.sql("SELECT sum(id) FROM gwd.t").head().getLong(0) ==
-      4000000007L)
+      4000000000L)
+  }
+
+  test("a BIGINT partition column filters at its declared type") {
+    val s0 = spark
+    import s0.implicits._
+    spark.conf.set("spark.sql.catalog.gpb",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gpb.warehouse", wh("catPartBig"))
+    spark.sql("CREATE TABLE gpb.p (id BIGINT, g BIGINT) PARTITIONED BY (g)")
+    spark.sql("INSERT INTO gpb.p VALUES (1L, 1L), (2L, 2L), (3L, 1L)")
+    // Path inference types `g` as INT; the catalog declares BIGINT.
+    assert(spark.sql("SELECT id FROM gpb.p WHERE g = 1").as[Long]
+      .collect().toSeq.sorted == Seq(1L, 3L))
+  }
+
+  test("a column added before any file carries it serves as a typed null") {
+    spark.conf.set("spark.sql.catalog.gac",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gac.warehouse", wh("catAddCol"))
+    spark.sql("CREATE TABLE gac.t AS SELECT 1L AS id")
+    spark.sql("ALTER TABLE gac.t ADD COLUMN c INT")
+    val df = spark.sql("SELECT id, c + 1 AS c1 FROM gac.t")
+    assert(df.schema("c1").dataType == org.apache.spark.sql.types.IntegerType)
+    val rows = df.collect()
+    assert(rows.length == 1 && rows(0).getLong(0) == 1L && rows(0).isNullAt(1))
+  }
+
+  test("a declared table with no files reads as empty") {
+    spark.conf.set("spark.sql.catalog.gem",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gem.warehouse", wh("catEmpty"))
+    spark.sql("CREATE TABLE gem.e (id BIGINT, v STRING)")
+    val df = spark.sql("SELECT * FROM gem.e")
+    assert(df.columns.toSeq == Seq("id", "v"))
+    assert(df.collect().isEmpty)
+    assert(spark.sql("SELECT count(*) FROM gem.e").head().getLong(0) == 0L)
+  }
+
+  test("TBLPROPERTIES never pin a catalog read's version") {
+    spark.conf.set("spark.sql.catalog.gtp",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gtp.warehouse", wh("catTblProps"))
+    spark.sql("CREATE TABLE gtp.f AS SELECT id FROM range(100)")
+    spark.sql("ALTER TABLE gtp.f SET TBLPROPERTIES ('versionAsOf'='0')")
+    spark.sql("INSERT INTO gtp.f SELECT id FROM range(100, 250)")
+    assert(spark.sql("SELECT count(*) FROM gtp.f").head().getLong(0) == 250L)
+    assert(spark.sql("SHOW TBLPROPERTIES gtp.f").collect()
+      .exists(r => r.getString(0) == "versionAsOf" && r.getString(1) == "0"))
   }
 
   test("MERGE ON with a non-equi residual scopes matching") {

@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One pinned version of a warehouse's snapshot log: the version and the
   * log state folded at it (the Delta `Snapshot` analog). An operation takes
@@ -159,12 +160,17 @@ final class Snapshot private[ingest] (
     * (a pruned read keeps the schema of its unpruned table). `scanSide`
     * runs on each group's raw scan, where `_metadata` columns still
     * resolve. The same path may appear more than once in `acts`; it is
-    * read once, under the deletion vector its actions carry. */
+    * read once, under the deletion vector its actions carry.
+    * `partitionTypes` (physical names) types a partition column straight
+    * from its path strings instead of by path inference, which would read
+    * a STRING `h=05` as INT 5. */
   private[ingest] def scanFiles(spark: SparkSession, table: String,
                                 acts: Seq[Action], partCols: Seq[String],
                                 scanSide: DataFrame => DataFrame = identity,
                                 mergeSchema: Boolean = false,
-                                schemaFrom: Seq[Action] = Nil): DataFrame = {
+                                schemaFrom: Seq[Action] = Nil,
+                                partitionTypes: Map[String, DataType] = Map.empty)
+      : DataFrame = {
     val defaults = this.defaults(table)
     def groupKey(a: Action): (String, Seq[String], Set[String]) =
       (Snapshots.rootDirOf(a), Snapshots.partitionColumns(Seq(a.partition)),
@@ -180,7 +186,16 @@ final class Snapshot private[ingest] (
         if (bp.isEmpty && Snapshots.uniformStatsSchema(src))
           Some(Snapshots.cachedFileSchema(spark, src.head.file))
         else None)
-      val raw = schema.fold(rd)(rd.schema).parquet(g.map(_.file).distinct: _*)
+      val paths = g.map(_.file).distinct
+      def typed(s: StructType) = StructType(s.map(f =>
+        partitionTypes.get(f.name).filter(_ => layout.contains(f.name))
+          .fold(f)(t => f.copy(dataType = t))))
+      // An explicit schema is the only way to type partition values: an
+      // inferred one is re-read under its typed copy when they differ.
+      val inferred = schema.map(typed).fold(rd)(rd.schema).parquet(paths: _*)
+      val raw =
+        if (typed(inferred.schema) == inferred.schema) inferred
+        else rd.schema(typed(inferred.schema)).parquet(paths: _*)
       Snapshots.injectDefaults(Snapshots.applyDv(spark, scanSide(raw), g),
         present, defaults)
     }
@@ -192,7 +207,8 @@ final class Snapshot private[ingest] (
     * [[Snapshots.read]]. */
   def read(spark: SparkSession, table: String, mergeSchema: Boolean = false,
            partitionFilter: Map[String, String] => Boolean = null,
-           dataFilter: FileStats.Pred = null): DataFrame =
+           dataFilter: FileStats.Pred = null,
+           partitionTypes: Map[String, DataType] = Map.empty): DataFrame =
     Snapshots.readAt(spark, this, table, mergeSchema, partitionFilter,
-      dataFilter)
+      dataFilter, partitionTypes)
 }

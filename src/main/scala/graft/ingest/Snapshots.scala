@@ -3312,7 +3312,9 @@ object Snapshots {
   private[ingest] def readAt(spark: SparkSession, snap: Snapshot,
                              table: String, mergeSchema: Boolean,
                              partitionFilter: Map[String, String] => Boolean,
-                             dataFilter: FileStats.Pred): DataFrame = {
+                             dataFilter: FileStats.Pred,
+                             partitionTypes: Map[String, org.apache.spark.sql.types.DataType])
+      : DataFrame = {
     // Protocol gate: refuse a table requiring reader features this build
     // doesn't know — fail fast, never silently-wrong rows. Time travel
     // checks the ERA's feature set.
@@ -3347,7 +3349,8 @@ object Snapshots {
     val scanned = snap.scanFiles(spark, table,
       if (pruned.isEmpty) Seq(partPruned.head.copy(dv = "")) else pruned,
       partitionColumns(all.map(_.partition)), mergeSchema = mergeSchema,
-      schemaFrom = all)
+      schemaFrom = all, partitionTypes = partitionTypes.map { case (c, t) =>
+        mapping.fold(c)(_.physicalFor(c)) -> t })
     val physical = if (pruned.isEmpty) scanned.limit(0) else scanned
     mapping.fold(physical)(_.applyTo(physical))
   }

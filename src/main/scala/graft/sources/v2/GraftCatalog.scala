@@ -548,19 +548,21 @@ class GraftCatalogTable(val warehouse: String, val table: String,
   private[graft] def logRowBound: Option[Long] = snapshot.logRowCount(table)
 
   /** The optimized plan of this table's rows at the pinned version, with
-    * `pred` pruning the file list from log stats, conformed to the served
-    * schema ([[SnapshotDataSource.conform]]): a column the catalog widened
-    * or typed (ALTER COLUMN TYPE, a declared partition type) is cast, one
-    * no file carries yet is a typed null, and a table with no live files
-    * is an empty relation. What [[graft.sql.SnapshotScanRule]] splices in
-    * place of the relation; built fresh per call, so each splice has its
-    * own expression ids. */
+    * `pred` pruning the file list from log stats: partition columns read
+    * at their served (declared) type straight from the path strings, so a
+    * STRING `h=05` stays '05'; the rest conformed to the served schema
+    * ([[SnapshotDataSource.conform]]): a column widened by ALTER COLUMN
+    * TYPE is cast, one no file carries yet is a typed null, and a table
+    * with no live files is an empty relation. What
+    * [[graft.sql.SnapshotScanRule]] splices in place of the relation; built
+    * fresh per call, so each splice has its own expression ids. */
   private[graft] def planFor(pred: graft.ingest.FileStats.Pred)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     val snap = snapshot
     val rows =
       if (snap.files(table).isEmpty) spark.emptyDataFrame
-      else snap.read(spark, table, dataFilter = pred)
+      else snap.read(spark, table, dataFilter = pred,
+        partitionTypes = tableSchema.map(f => f.name -> f.dataType).toMap)
     SnapshotDataSource.conform(rows, tableSchema).queryExecution.optimizedPlan
   }
 
@@ -594,7 +596,6 @@ class GraftCatalogTable(val warehouse: String, val table: String,
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new SnapshotWriteBuilder(info,
       props.asScala.toMap ++
-        Map("warehouse" -> warehouse, "table" -> table) ++
         (if (partCols.nonEmpty) Map("partitionBy" -> partCols.mkString(","))
          else Map.empty))
 }

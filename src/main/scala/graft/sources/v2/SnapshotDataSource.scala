@@ -296,8 +296,9 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
                 java.sql.Timestamp.valueOf(ts).getTime - 1).getOrElse(-1L)
             }).getOrElse(-1L),
         toInclusive = at)
-    else Snapshots.read(spark, warehouse, table, asOf = at,
-      mergeSchema = mergeSchema, dataFilter = dataFilter)
+    else Snapshots.snapshot(fs, warehouse, at).read(spark, table,
+      mergeSchema, dataFilter = dataFilter,
+      partitionTypes = schema.map(f => f.name -> f.dataType).toMap)
 
   override val schema: StructType = loadSchema
 
@@ -310,7 +311,9 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
 
   /** The inner frame with log-side skipping applied, conformed to the
     * advertised schema: skipping can prune away every file CARRYING a
-    * schema-evolved column, whose rows would have read it as null. */
+    * schema-evolved column, whose rows would have read it as null, and
+    * partition columns keep their advertised type whatever values the
+    * surviving paths hold. */
   private def frameFor(pred: graft.ingest.FileStats.Pred): DataFrame =
     SnapshotDataSource.conform(
       baseFrame(pinnedVersion, if (changeFeed) null else pred), schema)
@@ -389,15 +392,22 @@ object SnapshotDataSource {
   }
 
   /** `df` by name in `schema`'s column order and types: a column whose
-    * type differs is cast, one `df` lacks is a typed null. */
+    * type safely widens to the served one (or is all-null VOID) is cast,
+    * one `df` lacks is a typed null. Any other type difference would cast
+    * values into different values, so it fails instead. */
   private[v2] def conform(df: org.apache.spark.sql.DataFrame,
                           schema: StructType): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.NullType
     val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
     df.select(schema.fields.map { f =>
       have.get(f.name) match {
         case Some(t) if t == f.dataType => col(f.name)
-        case Some(_) => col(f.name).cast(f.dataType).as(f.name)
+        case Some(t) if t == NullType || GraftCatalog.safeWidening(t, f.dataType) =>
+          col(f.name).cast(f.dataType).as(f.name)
+        case Some(t) => throw new IllegalStateException(
+          s"column '${f.name}' reads as ${t.sql}, which does not widen " +
+            s"to its served type ${f.dataType.sql}")
         case None => lit(null).cast(f.dataType).as(f.name)
       }
     }.toSeq: _*)

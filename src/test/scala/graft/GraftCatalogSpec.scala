@@ -627,6 +627,23 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT x FROM graft.ghost").head().getLong(0) == 1L)
   }
 
+  test("a STRING partition column keeps its path strings verbatim") {
+    val s0 = spark
+    import s0.implicits._
+    spark.conf.set("spark.sql.catalog.gps",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gps.warehouse",
+      dir.resolve("partstr").toString)
+    spark.sql("CREATE TABLE gps.p (id BIGINT, h STRING) PARTITIONED BY (h)")
+    spark.sql("INSERT INTO gps.p VALUES (1L, '05'), (2L, '1.50'), (3L, '007')")
+    assert(spark.sql("SELECT h FROM gps.p").as[String].collect().toSeq.sorted ==
+      Seq("007", "05", "1.50"))
+    assert(spark.sql("SELECT id FROM gps.p WHERE h = '05'").as[Long]
+      .collect().toSeq == Seq(1L))
+    assert(spark.sql("SELECT id, h FROM gps.p WHERE id = 2").as[(Long, String)]
+      .collect().toSeq == Seq(2L -> "1.50"))
+  }
+
   test("TBLPROPERTIES never pin a catalog read's version") {
     spark.conf.set("spark.sql.catalog.gtp",
       classOf[graft.sources.v2.GraftCatalog].getName)

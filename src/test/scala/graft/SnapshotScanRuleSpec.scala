@@ -33,9 +33,11 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def pub(w: String, table: String, df: DataFrame): Unit = {
+  private def pub(w: String, table: String, df: DataFrame,
+                  partitionBy: Seq[String] = Nil): Unit = {
     val cid = java.util.UUID.randomUUID().toString
-    df.coalesce(1).write.parquet(s"${TxnCommit.stagingDir(w, cid)}/$table")
+    df.coalesce(1).write.partitionBy(partitionBy: _*)
+      .parquet(s"${TxnCommit.stagingDir(w, cid)}/$table")
     val moves = TxnCommit.movesFor(fs, w, cid, table)
     TxnCommit.commit(fs, w, cid, moves)
     TxnCommit.publish(fs, w, cid, moves)
@@ -409,6 +411,36 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Path inference types `g` as INT; the catalog declares BIGINT.
     assert(spark.sql("SELECT id FROM gpb.p WHERE g = 1").as[Long]
       .collect().toSeq.sorted == Seq(1L, 3L))
+  }
+
+  test("a STRING partition column keeps its path strings verbatim") {
+    val s0 = spark
+    import s0.implicits._
+    spark.conf.set("spark.sql.catalog.gps",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gps.warehouse", wh("catPartStr"))
+    spark.sql("CREATE TABLE gps.p (id BIGINT, h STRING) PARTITIONED BY (h)")
+    spark.sql("INSERT INTO gps.p VALUES (1L, '05'), (2L, '1.50'), (3L, '007')")
+    // Path inference would read these as 5, 1.5 and 7.
+    assert(spark.sql("SELECT h FROM gps.p").as[String].collect().toSeq.sorted ==
+      Seq("007", "05", "1.50"))
+    assert(spark.sql("SELECT id FROM gps.p WHERE h = '05'").as[Long]
+      .collect().toSeq == Seq(1L))
+    assert(spark.sql("SELECT id, h FROM gps.p WHERE id = 2").as[(Long, String)]
+      .collect().toSeq == Seq(2L -> "1.50"))
+  }
+
+  test("a stats-pruned format read keeps the table's partition type") {
+    val w = wh("prunePartType")
+    val s0 = spark
+    import s0.implicits._
+    pub(w, "t", (0L until 10L).map(i => (i, "01")).toDF("id", "g"), Seq("g"))
+    pub(w, "t", (100L until 110L).map(i => (i, "x")).toDF("id", "g"), Seq("g"))
+    // The table infers `g` as STRING; the surviving g=01 file alone would
+    // infer INT 1.
+    val df = load(w).filter($"id" < 3L).select("id", "g")
+    assert(df.as[(Long, String)].collect().toSeq.sorted ==
+      Seq(0L -> "01", 1L -> "01", 2L -> "01"))
   }
 
   test("a column added before any file carries it serves as a typed null") {

@@ -113,15 +113,15 @@ object SchemaEvolution {
                         table: String): ColumnMapping = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Snapshots.columnMapping(fs, warehouse, table).getOrElse {
-      // Physical schema from the pinned files with mergeSchema: on an
-      // additively-evolved table a sampled-footer schema could miss a late
-      // column, and a mapping built without it would silently project the
-      // column away on every subsequent read. (read() applies no mapping
-      // here — there is none yet.)
+    val snap = Snapshots.snapshot(fs, warehouse)
+    snap.columnMapping(table).getOrElse {
+      // The served schema with mergeSchema: on an additively-evolved table
+      // of untagged files a sampled-footer schema could miss a late column,
+      // and a mapping built without it would silently project the column
+      // away on every subsequent read. (No mapping applies here — there is
+      // none yet.)
       ColumnMapping.identity(
-        Snapshots.read(spark, warehouse, table, mergeSchema = true)
-          .columns.toSeq)
+        snap.schema(spark, table, mergeSchema = true).fieldNames.toSeq)
     }
   }
 

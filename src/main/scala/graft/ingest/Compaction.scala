@@ -81,8 +81,10 @@ object Compaction {
     val acts = inputs.map { case (f, _, spec, dv, stats) =>
       Snapshots.Action("ADD", table, f, spec, stats, dv) }
     // The rewrite is where narrow files physically widen and metadata
-    // defaults become stored values (see Snapshot.scanFiles).
-    (snap.scanFiles(spark, table, acts, partCols), partCols)
+    // defaults become stored values, at the table's served schema (see
+    // Snapshot.scanFiles).
+    (snap.scanFiles(spark, table, acts,
+      snap.physicalSchema(spark, table, snap.files(table))), partCols)
   }
 
   /** Compact `table` into files of ~`targetBytes`. No-op (None) when the

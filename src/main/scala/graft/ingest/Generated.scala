@@ -226,16 +226,10 @@ object Generated {
     val staging = s"${TxnCommit.stagingDir(warehouse, stagingId)}/$table"
     val withGen = gens.foldLeft(df) { case (d, (c, e)) =>
       d.withColumn(c, expr(e)) }
-    // Honor the table's partition layout (live files' specs, falling back
-    // to a catalog declaration) — a generated PARTITION column routes by
-    // the just-materialized value and keeps its pruning.
-    val partCols = {
-      val live = Snapshots.partitionLayout(fs, warehouse, table)
-      if (live.nonEmpty) live
-      else Snapshots.properties(fs, warehouse, table)
-        .get("catalog.partition.columns").toSeq
-        .flatMap(_.split(",")).filter(_.nonEmpty)
-    }
+    // Honor the table's partition layout (live files' specs, else its
+    // catalog declaration) — a generated PARTITION column routes by the
+    // just-materialized value and keeps its pruning.
+    val partCols = Snapshots.partitionLayout(fs, warehouse, table)
     val writer = withGen.write
       .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, table, None))
     (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))

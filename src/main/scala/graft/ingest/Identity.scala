@@ -245,13 +245,7 @@ object Identity {
       // partitioned identity table land unpartitioned files (reads stay
       // correct via mixed-layout handling, but pruning and blooms are
       // lost for those files).
-      val partCols = {
-        val live = Snapshots.partitionLayout(fs, warehouse, table)
-        if (live.nonEmpty) live
-        else Snapshots.properties(fs, warehouse, table)
-          .get("catalog.partition.columns").toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty)
-      }
+      val partCols = Snapshots.partitionLayout(fs, warehouse, table)
       idCols.foreach(c => require(!partCols.contains(c),
         s"identity column '$c' cannot be a partition column — the " +
           "high-water mark advances from file stats, which partition " +

@@ -53,14 +53,17 @@ object Merge {
 
   /** Read committed files with row identity ([[SrcFileCol]], [[RowPosCol]]),
     * minus any attached deletion vectors, resolved to the logical schema.
-    * Every DML read routes through here so no path can resurrect DV'd rows. */
+    * Every DML read routes through here so no path can resurrect DV'd rows,
+    * and every one reads at the table's served schema, so a rewrite writes
+    * back the values a read serves (a STRING `h=05` stays '05'). */
   private def dvAwareRead(spark: SparkSession, snap: Snapshot,
-                          table: String, partCols: Seq[String],
+                          table: String,
                           acts: Seq[Snapshots.Action]): DataFrame = {
     import org.apache.spark.sql.functions.regexp_replace
     // Row identity is captured per group at the scan, where the metadata
     // columns resolve; DML reads serve (and rewrites materialize) defaults.
-    val df = snap.scanFiles(spark, table, acts, partCols, _
+    val df = snap.scanFiles(spark, table, acts,
+      snap.physicalSchema(spark, table, snap.files(table)), _
       .withColumn(SrcFileCol,
         regexp_replace(col("_metadata.file_path"), Snapshots.SchemeRe, ""))
       .withColumn(RowPosCol, col("_metadata.row_index")))
@@ -438,7 +441,7 @@ object Merge {
     // default pure merge-on-read path never calls it. Cache size is
     // bounded by the matched rows (the deletion set), spilling to disk.
     val matched =
-      matcher(dvAwareRead(spark, snap, table, partCols, candidates))
+      matcher(dvAwareRead(spark, snap, table, candidates))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def run(): Result = {
     val newCounts: Map[String, Long] = matched
@@ -525,7 +528,7 @@ object Merge {
     // logic: rows where the condition evaluates NULL survive).
     val survivors =
       if (heavy.isEmpty) None
-      else Some(keeper(dvAwareRead(spark, snap, table, partCols, heavy))
+      else Some(keeper(dvAwareRead(spark, snap, table, heavy))
         .drop(SrcFileCol, RowPosCol))
     val post = if (assignments.isEmpty) None else Some(applied(matchedData))
     val outData = (survivors, post) match {
@@ -623,7 +626,7 @@ object Merge {
     // deletion vectors — a rewrite must not resurrect DV'd rows), rewrite
     // back to physical.
     def readFiles(acts: Seq[Snapshots.Action]): DataFrame =
-      dvAwareRead(spark, snap, table, partCols, acts)
+      dvAwareRead(spark, snap, table, acts)
     // Candidates by log-side stats; affected = candidates that truly match.
     val candidates = snap.pruned(table,
       Snapshots.statsPred(spark, snap, table, condition))
@@ -776,7 +779,7 @@ object Merge {
     // mapping so the join/union see one schema; the commit tail restores
     // physical names on write.
     def readFiles(acts: Seq[Snapshots.Action]): DataFrame =
-      dvAwareRead(spark, snap, table, partCols, acts)
+      dvAwareRead(spark, snap, table, acts)
     val srcKeys = source.select(keyCols.map(col): _*).distinct()
     // Size-routed: a dim-sized source broadcasts (and point-prunes); a
     // fact-sized one plans shuffle joins and keeps envelope pruning only.
@@ -1016,17 +1019,11 @@ object Merge {
     val tAll =
       if (candidates.isEmpty) null
       else {
-        val raw = dvAwareRead(spark, snap, table, partCols, candidates)
+        val raw = dvAwareRead(spark, snap, table, candidates)
         targetFilter.fold(raw)(f => f(raw))
       }
     val dataCols0: Seq[org.apache.spark.sql.types.StructField] =
-      if (tAll != null)
-        tAll.schema.fields.toSeq.filterNot(f =>
-          f.name == SrcFileCol || f.name == RowPosCol)
-      else { // empty/unmatchable table: schema from an arbitrary pinned file
-        val probe = snap.read(spark, table)
-        probe.schema.fields.toSeq
-      }
+      snap.schema(spark, table).fields.toSeq
     // A just-evolved column exists in no file yet: the mapped read serves
     // it as a typeless null (NullType), which parquet cannot write and
     // casts cannot target — type it from the source's same-named column.
@@ -1098,7 +1095,7 @@ object Merge {
         if (nmbsMeta.isEmpty) null
         else {
           val tRaw =
-            dvAwareRead(spark, snap, table, partCols, nmbsMeta)
+            dvAwareRead(spark, snap, table, nmbsMeta)
           val tFrame = targetFilter.fold(tRaw)(f => f(tRaw)).alias("t")
           // Without a residual, source keys renamed to the TARGET key
           // names so the usingColumns anti-join drops them and the
@@ -1199,7 +1196,7 @@ object Merge {
     val survivors =
       if (affected.isEmpty) None
       else {
-        val hit = dvAwareRead(spark, snap, table, partCols, affected)
+        val hit = dvAwareRead(spark, snap, table, affected)
         val actedFrames =
           (if (acted == null) Nil else Seq(acted)) ++
           (if (nmbsActed == null) Nil else Seq(nmbsActed))

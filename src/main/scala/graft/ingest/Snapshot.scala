@@ -2,7 +2,7 @@ package graft.ingest
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, NullType, StructField, StructType}
 
 /** One pinned version of a warehouse's snapshot log: the version and the
   * log state folded at it (the Delta `Snapshot` analog). An operation takes
@@ -69,10 +69,85 @@ final class Snapshot private[ingest] (
   def bloomWriteOptions(table: String): Map[String, String] =
     Snapshots.bloomOptions(properties(table), columnMapping(table))
 
-  /** Ordered partition-column list of the table's live layout (empty for
-    * flat tables). */
-  def partitionLayout(table: String): Seq[String] =
-    Snapshots.partitionColumns(files(table).map(_.partition))
+  /** Ordered partition-column list of the table's live layout — its
+    * catalog declaration (`catalog.partition.columns`) while it has no live
+    * files; empty for flat tables. */
+  def partitionLayout(table: String): Seq[String] = {
+    val live = files(table)
+    if (live.nonEmpty) Snapshots.partitionColumns(live.map(_.partition))
+    else properties(table).get("catalog.partition.columns").toSeq
+      .flatMap(_.split(",")).filter(_.nonEmpty)
+  }
+
+  /** The schema `table` serves at this version, in LOGICAL names — the
+    * one place a column's type is decided: every read, DML rewrite and
+    * catalog scan of the table reads at it (a change feed at the same rule
+    * over its range's files too), so no filter, pruning or rewrite can
+    * move it. Computed from the log, with no path inference
+    * ([[physicalSchema]]), then resolved through the column mapping (a
+    * mapped column no file carries and nothing types is NullType, as the
+    * mapped read serves it). A declared table with no live files serves
+    * its declaration; any other table without committed files throws. */
+  def schema(spark: SparkSession, table: String,
+             mergeSchema: Boolean = false): StructType = {
+    requireFeatures(table)
+    val physical = physicalSchema(spark, table, files(table), mergeSchema)
+    columnMapping(table).fold(physical)(m => StructType(m.cols.map {
+      case (logical, p) => physical.find(_.name == p)
+        .fold(StructField(logical, NullType))(_.copy(name = logical))
+    }))
+  }
+
+  /** [[schema]] in PHYSICAL names over the files `acts` (the live files,
+    * or a change feed's range):
+    *  - data columns from the log's schema tags and one cached footer per
+    *    signature ([[Snapshots.footerSchema]]);
+    *  - partition columns typed from the tuples: declared type
+    *    (`catalog.schema.ddl`), else Spark's inference rule over every
+    *    tuple ([[Snapshots.partitionSchema]]);
+    *  - `catalog.coltype.*` (ALTER COLUMN TYPE / ADD COLUMN) widens a
+    *    column safely, and types a mapped column no file carries yet —
+    *    as does an initial default's literal;
+    *  - no files: the declaration in place of the files' columns, else
+    *    an error. */
+  private[ingest] def physicalSchema(spark: SparkSession, table: String,
+                                     acts: Seq[Action],
+                                     mergeSchema: Boolean = false): StructType = {
+    val props = properties(table)
+    val mapping = columnMapping(table)
+    val declared = props.get("catalog.schema.ddl").map(StructType.fromDDL)
+    def ddlType(c: String, ddl: String): DataType =
+      StructType.fromDDL(s"`$c` $ddl").fields(0).dataType
+    val altered: Map[String, DataType] = props.collect {
+      case (k, v) if k.startsWith("catalog.coltype.") && v.nonEmpty =>
+        val c = k.stripPrefix("catalog.coltype.")
+        mapping.fold(c)(_.physicalFor(c)) -> ddlType(c, v)
+    }
+    def widened(f: StructField) = altered.get(f.name)
+      .filter(Snapshots.safeWidening(f.dataType, _))
+      .fold(f)(t => f.copy(dataType = t))
+    val (data, parts) =
+      if (acts.isEmpty) (declared.getOrElse(throw new IllegalArgumentException(
+        s"table '$table' has no committed files at version " +
+          version.getOrElse(-1L))), new StructType())
+      else {
+        val parts = Snapshots.partitionSchema(spark, acts,
+          declared.fold(Map.empty[String, DataType])(
+            _.fields.map(f => f.name -> f.dataType).toMap))
+        (Snapshots.footerSchema(spark, acts, mergeSchema)
+          .filterNot(f => parts.fieldNames.contains(f.name)), parts)
+      }
+    val carried = (data ++ parts).map(_.name).toSet
+    // Initial defaults are SQL literals: their type is the parsed literal's.
+    val defaultTypes = defaults(table).flatMap { case (c, text) =>
+      scala.util.Try(spark.sessionState.sqlParser.parseExpression(text).dataType)
+        .toOption.map(c -> _) }
+    val uncarried = (mapping.toSeq.flatMap(_.cols.map(_._2)) ++
+        defaultTypes.keys).distinct.filterNot(carried)
+      .flatMap(c => altered.get(c).orElse(defaultTypes.get(c))
+        .map(StructField(c, _)))
+    StructType(data.map(widened) ++ uncarried ++ parts.map(widened))
+  }
 
   /** Summed live-row count of `table` from the stats tokens alone
     * (deletion-vectored rows subtracted). None when there is no log or any
@@ -141,74 +216,50 @@ final class Snapshot private[ingest] (
     state.metas.toSeq.filter(_._1.startsWith(prefix))
 
   /** THE log-to-DataFrame builder: the rows of `acts` (ADD or CDF actions
-    * of `table`) as one frame in PHYSICAL names, minus deletion vectors,
-    * with initial-defaults injected for files that predate their column.
+    * of `table`) as one frame in PHYSICAL names, read at `schema` (the
+    * caller's [[physicalSchema]]: a column a file lacks reads null, a narrow
+    * file reads at the wide type, a partition column takes its served type
+    * straight from its path string), minus deletion vectors, with
+    * initial-defaults injected for files that predate their column.
     * Reads, the change feed, DML and compaction all plan through here.
     *
     * One relation per (root table dir, partition layout, defaulted-column
     * presence), read under `basePath` = the root dir: a clone's files can
     * sit in the source's dir, and a layout-evolved table must not mix
     * depths under one basePath (Spark's conflicting-directory check);
-    * groups union with additive semantics. Each group's schema is, in
-    * order: the widest schema of a width- or column-mixed group
-    * ([[Snapshots.widenedSchema]]); the cached footer of any member when
-    * the log's schema tags prove a flat group uniform (tags carry the full
-    * top-level signature, so footer merging could find nothing more; a
-    * partitioned group's column types derive from its paths); else footer
-    * inference, merging all footers when `mergeSchema`. The
-    * schema comes from `schemaFrom`'s files of the same group when given
-    * (a pruned read keeps the schema of its unpruned table). `scanSide`
-    * runs on each group's raw scan, where `_metadata` columns still
-    * resolve. The same path may appear more than once in `acts`; it is
-    * read once, under the deletion vector its actions carry.
-    * `partitionTypes` (physical names) types a partition column straight
-    * from its path strings instead of by path inference, which would read
-    * a STRING `h=05` as INT 5. */
+    * groups union by name, columns in `schema` order, then whatever
+    * `scanSide` adds. `scanSide` runs on each group's raw scan, where
+    * `_metadata` columns still resolve. The same path may appear more than
+    * once in `acts`; it is read once, under the deletion vector its
+    * actions carry. An explicit schema plans no footer-inference job. */
   private[ingest] def scanFiles(spark: SparkSession, table: String,
-                                acts: Seq[Action], partCols: Seq[String],
-                                scanSide: DataFrame => DataFrame = identity,
-                                mergeSchema: Boolean = false,
-                                schemaFrom: Seq[Action] = Nil,
-                                partitionTypes: Map[String, DataType] = Map.empty)
+                                acts: Seq[Action], schema: StructType,
+                                scanSide: DataFrame => DataFrame = identity)
       : DataFrame = {
     val defaults = this.defaults(table)
-    def groupKey(a: Action): (String, Seq[String], Set[String]) =
-      (Snapshots.rootDirOf(a), Snapshots.partitionColumns(Seq(a.partition)),
-        Snapshots.defaultPresence(a, defaults))
-    val schemaGroups = schemaFrom.groupBy(groupKey)
-    val frames = acts.groupBy(groupKey).toSeq.map { case (key, g) =>
-      val (root, layout, present) = key
-      val bp = if (layout.isEmpty) None else Some(root)
-      val src = schemaGroups.getOrElse(key, g)
-      val rd0 = spark.read.option("mergeSchema", mergeSchema)
-      val rd = bp.fold(rd0)(rd0.option("basePath", _))
-      val schema = Snapshots.widenedSchema(spark, src, bp).orElse(
-        if (bp.isEmpty && Snapshots.uniformStatsSchema(src))
-          Some(Snapshots.cachedFileSchema(spark, src.head.file))
-        else None)
-      val paths = g.map(_.file).distinct
-      def typed(s: StructType) = StructType(s.map(f =>
-        partitionTypes.get(f.name).filter(_ => layout.contains(f.name))
-          .fold(f)(t => f.copy(dataType = t))))
-      // An explicit schema is the only way to type partition values: an
-      // inferred one is re-read under its typed copy when they differ.
-      val inferred = schema.map(typed).fold(rd)(rd.schema).parquet(paths: _*)
-      val raw =
-        if (typed(inferred.schema) == inferred.schema) inferred
-        else rd.schema(typed(inferred.schema)).parquet(paths: _*)
-      Snapshots.injectDefaults(Snapshots.applyDv(spark, scanSide(raw), g),
-        present, defaults)
+    val frames = acts.groupBy(a => (Snapshots.rootDirOf(a),
+        Snapshots.partitionColumns(Seq(a.partition)),
+        Snapshots.defaultPresence(a, defaults))).toSeq.map {
+      case ((root, layout, present), g) =>
+        val rd = spark.read.schema(schema)
+        val raw = (if (layout.isEmpty) rd else rd.option("basePath", root))
+          .parquet(g.map(_.file).distinct: _*)
+        Snapshots.injectDefaults(Snapshots.applyDv(spark, scanSide(raw), g),
+          present, defaults)
     }
-    Snapshots.deVoidPartitions(
-      frames.reduce(_.unionByName(_, allowMissingColumns = true)), partCols)
+    val all = frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    // Spark puts a relation's partition columns last: a group of a shorter
+    // layout would otherwise move them.
+    val order = schema.fieldNames ++ all.columns.filterNot(schema.fieldNames.contains)
+    if (all.columns.sameElements(order)) all
+    else all.select(order.map(c => all.col(s"`${c.replace("`", "``")}`")).toSeq: _*)
   }
 
   /** Snapshot-isolated read of `table` at this version — see
     * [[Snapshots.read]]. */
   def read(spark: SparkSession, table: String, mergeSchema: Boolean = false,
            partitionFilter: Map[String, String] => Boolean = null,
-           dataFilter: FileStats.Pred = null,
-           partitionTypes: Map[String, DataType] = Map.empty): DataFrame =
+           dataFilter: FileStats.Pred = null): DataFrame =
     Snapshots.readAt(spark, this, table, mergeSchema, partitionFilter,
-      dataFilter, partitionTypes)
+      dataFilter)
 }

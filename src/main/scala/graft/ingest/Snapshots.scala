@@ -142,23 +142,6 @@ object Snapshots {
     d.toString
   }
 
-  /** When EVERY file of a relation sits in the null partition
-    * (`dt=__HIVE_DEFAULT_PARTITION__` — e.g. a rewrite that migrated
-    * flat-era rows of a layout-evolved table), Spark infers the partition
-    * column as NullType (VOID) — a type parquet cannot write and
-    * partitionBy rejects, so any DML rewrite over such a relation would
-    * fail downstream. Cast it to string (the values are all null, so the
-    * cast is value-preserving; a mixed relation never hits this — any
-    * non-null value wins inference). */
-  private[graft] def deVoidPartitions(df: org.apache.spark.sql.DataFrame,
-                                      partCols: Seq[String])
-      : org.apache.spark.sql.DataFrame =
-    partCols.foldLeft(df)((d, c) =>
-      if (d.schema.fields.exists(f => f.name == c &&
-          f.dataType == org.apache.spark.sql.types.NullType))
-        d.withColumn(c, d(c).cast(org.apache.spark.sql.types.StringType))
-      else d)
-
   private[graft] def srcFileKey(uri: String): String =
     uri.replaceFirst(SchemeRe, "")
 
@@ -2234,18 +2217,24 @@ object Snapshots {
     // Each leaf goes through the one builder ([[Snapshot.scanFiles]]):
     // basePath per root dir (a clone's files root in its source's dir),
     // one relation per partition layout (flat→partitioned or dt→dt/hour
-    // switches), the widest schema of a width-mixed range, initial-defaults
-    // for rows that predate their column, and `mergeSchema` so additive
-    // evolution mid-range serves older rows with nulls in later columns.
-    // The file path is captured scan-side (input_file_name is only
-    // reliable there, before the deletion-vector anti-join).
+    // switches), initial-defaults for rows that predate their column. All
+    // leaves read at ONE schema, served over the live files and the
+    // range's files together: the widest type of a width-mixed range,
+    // columns added mid-range (older rows null), partition columns typed
+    // over every tuple either side holds, and the change files' own
+    // `_change_type` (last; appends fill it). The file path is captured
+    // scan-side (input_file_name is only reliable there, before the
+    // deletion-vector anti-join).
+    lazy val feedSchema = org.apache.spark.sql.types.StructType(
+      snap.physicalSchema(spark, table,
+          snap.files(table) ++ (appendList ++ cdfList).map(_._1),
+          mergeSchema = true)
+        .filterNot(_.name == "_change_type"))
+      .add("_change_type", org.apache.spark.sql.types.StringType)
     def leaf(files: Seq[(Action, Long)], inserts: Boolean): DataFrame = {
-      val acts = files.map(_._1)
-      val df = snap.scanFiles(spark, table, acts,
-        partitionColumns(acts.map(_.partition)),
+      val df = snap.scanFiles(spark, table, files.map(_._1), feedSchema,
         _.withColumn("_file_path",
-          regexp_replace(input_file_name(), SchemeRe, "")),
-        mergeSchema = true)
+          regexp_replace(input_file_name(), SchemeRe, "")))
       val tagged =
         if (inserts) df.withColumn("_change_type", lit("insert")) else df
       val verDf = spark.createDataFrame(
@@ -2422,8 +2411,8 @@ object Snapshots {
     Some(snapshot(fs, warehouse, asOf)).filter(_.version.isDefined)
       .map(_.files(table))
 
-  /** Ordered partition-column list of the table's live layout at `asOf`
-    * (empty for flat tables). */
+  /** Ordered partition-column list of the table's layout at `asOf`
+    * ([[Snapshot.partitionLayout]]; empty for flat tables). */
   def partitionLayout(fs: FileSystem, warehouse: String, table: String,
                       asOf: Option[Long] = None): Seq[String] =
     snapshot(fs, warehouse, asOf).partitionLayout(table)
@@ -3049,15 +3038,6 @@ object Snapshots {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
-  /** True when the log's per-file schema tags PROVE every file of the
-    * group carries the identical column/type signature — the case where a
-    * single cached footer schema is exact and inference is a pure tax.
-    * Files without stats (unknowable) or any signature mix return false. */
-  private[ingest] def uniformStatsSchema(acts: Seq[Action]): Boolean = {
-    val sigs = acts.map(a => FileStats.schemaTags(a.stats))
-    sigs.forall(_.nonEmpty) && sigs.distinct.size == 1
-  }
-
   /** Loader for [[FileStats.mayMatch]]'s sidecar-resolution variant.
     * A missing/corrupt sidecar returns None — the caller keeps the file
     * (sound: absent bloom never skips). */
@@ -3164,9 +3144,9 @@ object Snapshots {
     * log's stats and partition tuples — the ergonomic form of
     * `read(dataFilter=…).filter(…)` with the two predicates guaranteed
     * consistent. The condition is resolved against the table's schema
-    * first (types checked, names bound), then the resolved catalyst tree
-    * is translated; planning the throwaway frame reads one footer for the
-    * schema and zero data. Both frames plan from one snapshot. */
+    * first (types checked, names bound, over an empty frame of
+    * [[Snapshot.schema]] — no scan planned), then the resolved catalyst
+    * tree is translated. Both plan from one snapshot. */
   def readWhere(spark: SparkSession, warehouse: String, table: String,
                 condition: org.apache.spark.sql.Column,
                 asOf: Option[Long] = None): DataFrame = {
@@ -3183,7 +3163,8 @@ object Snapshots {
                                table: String,
                                condition: org.apache.spark.sql.Column)
       : FileStats.Pred =
-    snap.read(spark, table).filter(condition)
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        snap.schema(spark, table)).filter(condition)
       .queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.flatMap(FileStats.fromExpression).orNull
@@ -3209,49 +3190,21 @@ object Snapshots {
       .map(_.split("/").toSeq.map(s => unescapeSeg(s.split("=", 2)(0))))
       .getOrElse(Seq.empty)
 
-  /** Explicit read schema for a width-mixed file set — the read half of
-    * [[TxnCommit]]'s safe type widening. When the live files' log-side
-    * schema tags mix plain INT32/INT64 (or FLOAT/DOUBLE) on a column,
-    * footer-merged inference either throws (mergeSchema) or picks an
-    * arbitrary width (single-footer inference), so the read must be
-    * pinned to the WIDEST type: Spark's vectorized parquet reader then
-    * materializes the narrow files at the wide type losslessly.
-    *
-    * Returns None — zero extra I/O, the untouched fast path — unless a
-    * genuine width mix exists. Otherwise it reads ONE footer per distinct
-    * tag signature (bounded by widening events, not by file count),
-    * merges the Spark schemas with the two promotions applied, and the
-    * caller passes the result as the explicit read schema. Files without
-    * tags (pre-stats logs) disable the feature — absent evidence must
-    * never change how a legacy table reads. */
-  private[ingest] def widenedSchema(spark: SparkSession, acts: Seq[Action],
-                                    basePath: Option[String])
-      : Option[org.apache.spark.sql.types.StructType] = {
+  /** The data columns the files of `acts` carry, read from the log's
+    * schema tags and cached footers: ONE footer per distinct tag signature
+    * (bounded by schema-evolution events, not by file count; zero jobs
+    * once cached), merged so a column added by a later commit is served
+    * (older files read it as null) and a width mix reads at the widest type
+    * ([[TxnCommit]]'s safe widenings: INT32/INT64, FLOAT/DOUBLE, one-scale
+    * decimal precisions — Spark's parquet readers materialize the narrow
+    * files at the wide type losslessly). Files without tags (pre-stats
+    * logs, change files) fall back to footer inference, over every footer
+    * when `mergeSchema`. The order is deterministic: signatures sorted,
+    * then the tagless files' footers. */
+  private[ingest] def footerSchema(spark: SparkSession, acts: Seq[Action],
+                                   mergeSchema: Boolean)
+      : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    // Light parse: width-mix detection runs on EVERY read — decoding the
-    // full token here would base64-decode inline bloom payloads per file.
-    val sigs: Seq[Seq[(String, String)]] =
-      acts.map(a => FileStats.schemaTags(a.stats))
-    if (sigs.exists(_.isEmpty)) return None
-    val byCol = sigs.flatten.groupBy(_._1).view.mapValues(_.map(_._2).distinct)
-    val widenPairs = Set(Set("INT32", "INT64"), Set("FLOAT", "DOUBLE"))
-    // Same-scale decimal precision mixes widen too (TxnCommit.compatible's
-    // decimal rule) — any number of distinct precisions, one scale.
-    def decimalMix(tags: Seq[String]): Boolean = {
-      val decs = tags.flatMap(TxnCommit.decimalTag)
-      decs.size == tags.size && decs.map(_._2).distinct.size == 1
-    }
-    val widthMixed = byCol.exists { case (_, tags) =>
-      tags.size > 1 && (widenPairs.contains(tags.toSet) || decimalMix(tags))
-    }
-    // Additive mix: the live files disagree on the COLUMN SET (a commit —
-    // append or schema-evolving merge — added columns). Single-footer
-    // inference would silently hide the new column from every read that
-    // samples an old file; merging one footer per distinct signature
-    // serves it (old files null-fill under the explicit schema) without
-    // the all-footers cost of mergeSchema.
-    val addMixed = sigs.map(_.map(_._1).toSet).distinct.size > 1
-    if (!widthMixed && !addMixed) return None
     def widen(a: DataType, b: DataType): DataType = (a, b) match {
       case (x, y) if x == y => x
       case (IntegerType, LongType) | (LongType, IntegerType) => LongType
@@ -3259,8 +3212,8 @@ object Snapshots {
       case (d1: DecimalType, d2: DecimalType) if d1.scale == d2.scale =>
         DecimalType(math.max(d1.precision, d2.precision), d1.scale)
       case (x, y) => throw new IllegalStateException(
-        s"widenedSchema: unmergeable types $x vs $y — schema enforcement " +
-          "should have rejected this commit")
+        s"unmergeable column types $x vs $y across live files — schema " +
+          "enforcement should have rejected this commit")
     }
     def merge(a: StructType, b: StructType): StructType = {
       val bMap = b.fields.map(f => f.name -> f).toMap
@@ -3273,20 +3226,68 @@ object Snapshots {
         .map(_.copy(nullable = true))
       StructType(shared ++ extra)
     }
-    // Deterministic representative order: the merged schema's column order
-    // must not vary run to run with the groupBy's map ordering.
-    val repFiles = sigs.zip(acts).groupBy(_._1).toSeq
-      .sortBy(_._1.toString).map(_._2.head._2.file)
-    Some(repFiles.map { f =>
-      val r = spark.read
-      basePath.fold(r)(bp => r.option("basePath", bp)).parquet(f).schema
-    }.reduce(merge))
+    // Light parse: this runs on every read — decoding the full token here
+    // would base64-decode inline bloom payloads per file.
+    val (tagged, tagless) = acts.map(a => FileStats.schemaTags(a.stats) -> a)
+      .partition(_._1.nonEmpty)
+    val footers = tagged.groupBy(_._1).toSeq.sortBy(_._1.toString)
+      .map(g => cachedFileSchema(spark, g._2.head._2.file)) ++
+      (if (tagless.isEmpty) Nil
+       else Seq(spark.read.option("mergeSchema", mergeSchema)
+         .parquet(tagless.map(_._2.file).distinct: _*).schema))
+    footers.reduce(merge)
+  }
+
+  /** The partition columns of `acts`' layouts with their served types,
+    * typed from the log's tuples alone (no listing, no footer): a column
+    * `declared` names takes its declared type; any other takes Spark's own
+    * path-inference rule (`PartitioningUtils.parsePartitions` over
+    * synthetic `/c=v` paths of every distinct value — the session's
+    * `partitionColumnTypeInference` and time zone honoured), decided over
+    * ALL the tuples at once so the type cannot move with pruning; a column
+    * whose values are all null is STRING (a VOID column cannot be written).
+    * Columns in layout order, the longest layout first. */
+  private[ingest] def partitionSchema(spark: SparkSession, acts: Seq[Action],
+                                      declared: Map[String,
+                                        org.apache.spark.sql.types.DataType])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    val segs = acts.map(_.partition).distinct.filter(_.nonEmpty)
+      .map(_.split("/").toSeq.map(s => unescapeSeg(s.split("=", 2)(0)) -> s))
+    val cols = segs.map(_.map(_._1)).distinct
+      .sortBy(l => (-l.size, l.mkString("/"))).flatten.distinct
+    val values = segs.flatten.groupBy(_._1)
+    StructType(cols.map { c =>
+      val t = declared.getOrElse(c, org.apache.spark.sql.execution.datasources
+        .graftbridge.PartitionBridge.inferredType(spark, values(c).map(_._2).distinct))
+      StructField(c, if (t == NullType) StringType else t)
+    })
+  }
+
+  /** The metadata-only type evolutions (ALTER COLUMN TYPE) that reads,
+    * commits and compaction all honour exactly: narrow files read at the
+    * wide type. */
+  private[graft] def safeWidening(from: org.apache.spark.sql.types.DataType,
+                                  to: org.apache.spark.sql.types.DataType)
+      : Boolean = {
+    import org.apache.spark.sql.types._
+    (from, to) match {
+      case (a, b) if a == b => true
+      case (IntegerType, LongType) => true
+      case (FloatType, DoubleType) => true
+      case _ => false
+    }
   }
 
   /** Snapshot-isolated read: plan from the pinned file list of the resolved
     * version — concurrent publishes (and compactions) are invisible, and
-    * `asOf` reads any retained historical version. Throws if the table has no
-    * committed files at that version (schema would be unknowable).
+    * `asOf` reads any retained historical version. Serves exactly
+    * [[Snapshot.schema]] at that version, whatever the filters prune: every
+    * file reads at the one served schema (partition columns typed from the
+    * log's tuples or the catalog declaration, never by path inference over
+    * the surviving files). A declared table with no live files serves its
+    * declaration as an empty frame; any other table without committed
+    * files throws.
     *
     * `partitionFilter` prunes the pinned file list BEFORE planning, from
     * the partition tuples recorded in the log — no directory listing, no
@@ -3295,12 +3296,10 @@ object Snapshots {
     * table and over one day's worth. Files of a partitioned table are read
     * with `basePath` so the partition columns stay in the schema.
     *
-    * `mergeSchema = true` unions the schemas of all pinned files (additive
-    * schema evolution: commits may add columns; old files read them as
-    * null). Off by default — merging reads every footer at plan time, and a
-    * stable-schema table shouldn't pay that at 100k files (a flat file set
-    * whose log-side schema tags prove it uniform reads one cached footer
-    * either way, [[Snapshot.scanFiles]]). */
+    * `mergeSchema = true` merges every footer of files whose log entries
+    * carry no schema tags (pre-stats eras); tagged files are always served
+    * from one cached footer per distinct signature, so additive evolution
+    * needs no flag there ([[Snapshots.footerSchema]]). */
   def read(spark: SparkSession, warehouse: String, table: String,
            asOf: Option[Long] = None, mergeSchema: Boolean = false,
            partitionFilter: Map[String, String] => Boolean = null,
@@ -3312,9 +3311,7 @@ object Snapshots {
   private[ingest] def readAt(spark: SparkSession, snap: Snapshot,
                              table: String, mergeSchema: Boolean,
                              partitionFilter: Map[String, String] => Boolean,
-                             dataFilter: FileStats.Pred,
-                             partitionTypes: Map[String, org.apache.spark.sql.types.DataType])
-      : DataFrame = {
+                             dataFilter: FileStats.Pred): DataFrame = {
     // Protocol gate: refuse a table requiring reader features this build
     // doesn't know — fail fast, never silently-wrong rows. Time travel
     // checks the ERA's feature set.
@@ -3322,13 +3319,8 @@ object Snapshots {
     val at = snap.version.getOrElse(throw new IllegalStateException(
       s"no snapshot log under ${snap.warehouse} — was this table committed via TxnCommit?"))
     val all = snap.files(table)
-    // Column mapping (rename/drop without rewrite): files keep ONE physical
-    // schema; the logical view is resolved at the end, and log-side stats
-    // (physical keys) are renamed to logical so skipping still fires on
-    // logically-named predicates.
-    val mapping = snap.columnMapping(table)
-    require(all.nonEmpty,
-      s"table '$table' has no committed files at version $at")
+    if (all.isEmpty) return spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](), snap.schema(spark, table))
     val partPruned =
       if (partitionFilter == null) all
       else snap.pruned(table, null, partitionFilter)
@@ -3342,16 +3334,17 @@ object Snapshots {
     val pruned =
       if (dataFilter == null) partPruned
       else snap.pruned(table, dataFilter, partitionFilter)
-    // The schema comes from the UNPRUNED files, so it does not move with
-    // pruning. Every file provably excluded: an empty frame with the table
-    // schema, planned over one pinned file whose rows are never read (its
-    // vector is dropped — nothing to subtract from no rows).
+    // Every file provably excluded: an empty frame planned over one pinned
+    // file whose rows are never read (its vector is dropped — nothing to
+    // subtract from no rows).
     val scanned = snap.scanFiles(spark, table,
       if (pruned.isEmpty) Seq(partPruned.head.copy(dv = "")) else pruned,
-      partitionColumns(all.map(_.partition)), mergeSchema = mergeSchema,
-      schemaFrom = all, partitionTypes = partitionTypes.map { case (c, t) =>
-        mapping.fold(c)(_.physicalFor(c)) -> t })
+      snap.physicalSchema(spark, table, all, mergeSchema))
     val physical = if (pruned.isEmpty) scanned.limit(0) else scanned
-    mapping.fold(physical)(_.applyTo(physical))
+    // Column mapping (rename/drop without rewrite): files keep ONE physical
+    // schema; the logical view is resolved at the end, and log-side stats
+    // (physical keys) are renamed to logical so skipping still fires on
+    // logically-named predicates.
+    snap.columnMapping(table).fold(physical)(_.applyTo(physical))
   }
 }

@@ -152,7 +152,7 @@ object TxnCommit {
     * restricted to the two promotions every engine reads losslessly):
     * a column may mix plain INT32/INT64 files, or plain FLOAT/DOUBLE
     * files, across commits. The table's effective type is the WIDEST live
-    * tag — [[Snapshots.widenedSchema]] resolves reads with an explicit
+    * tag — [[Snapshots.footerSchema]] resolves reads with an explicit
     * widened schema, and Spark's vectorized parquet reader materializes
     * the narrow files at the wide type. Both directions are accepted: a
     * wider file widens the table; a narrower file after the widening is
@@ -168,7 +168,7 @@ object TxnCommit {
     * values and stay rejected. */
   private val DecTagRe =
     raw"(?:INT32|INT64|BINARY|FIXED_LEN_BYTE_ARRAY)\s*/\s*DECIMAL\((\d+),(\d+)\)".r
-  private[ingest] def decimalTag(tag: String): Option[(Int, Int)] =
+  private def decimalTag(tag: String): Option[(Int, Int)] =
     repNorm(tag).trim match {
       case DecTagRe(p, s) => Some((p.toInt, s.toInt))
       case _ => None

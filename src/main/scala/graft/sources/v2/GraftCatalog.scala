@@ -103,62 +103,23 @@ class GraftCatalog extends TableCatalog
 
   private def loadAt(ident: Identifier, asOf: Option[Long]): Table = {
     val t = tableName(ident)
-    // Schema, declaration and layout all come from one snapshot.
+    // Schema, declaration, layout and TBLPROPERTIES all come from one
+    // snapshot: a time-traveled load serves THAT era's (wrong era after an
+    // ALTER or a replace/re-create otherwise). The served schema is the
+    // snapshot's own — declared partition types, ALTER types and an empty
+    // declared table included — so no read is planned here.
     val snap = Snapshots.snapshot(fs, warehouse, asOf)
-    val committed =
-      if (snap.files(t).nonEmpty) Some(snap.read(spark, t).schema) else None
-    // The declared types/partitioning/TBLPROPERTIES come from the same
-    // snapshot: a time-traveled load applies THAT era's, not the current
-    // ones (wrong era after an ALTER or a replace/re-create).
     val tblProps = snap.properties(t)
-    val declared: Map[String, org.apache.spark.sql.types.DataType] =
-      tblProps.get("catalog.schema.ddl").map(StructType.fromDDL)
-        .map(_.fields.map(f => f.name -> f.dataType).toMap)
-        .getOrElse(Map.empty)
-    val partCols = {
-      val live = snap.partitionLayout(t)
-      if (live.nonEmpty) live
-      else tblProps.get("catalog.partition.columns").toSeq
-        .flatMap(_.split(",")).filter(_.nonEmpty)
-    }
-    // Committed schema wins (it tracks evolution), with two declared-type
-    // repairs: partition columns take the DECLARED type (the path `k=v`
-    // form is untyped, so the committed type is whatever the session's
-    // path inference guessed — the declaration is the contract), and a
-    // column added via ALTER before any file carries it reads as NullType
-    // from the mapping — repair it to its recorded ADD COLUMN type. */
-    val schema = committed.map { cs =>
-      StructType(cs.fields.map { f =>
-        if (partCols.contains(f.name) && declared.contains(f.name))
-          f.copy(dataType = declared(f.name))
-        else if (f.dataType == org.apache.spark.sql.types.NullType)
-          f.copy(dataType =
-            tblProps.get(s"catalog.coltype.${f.name}")
-              .map(ddl => StructType.fromDDL(s"`${f.name}` $ddl")
-                .fields(0).dataType)
-              .orElse(declared.get(f.name))
-              .getOrElse(org.apache.spark.sql.types.StringType))
-        else
-          // ALTER COLUMN TYPE widening: the declared coltype wins when
-          // it safely widens the committed type — existing narrow files
-          // read at the wide type (width-mixed reads are already exact).
-          tblProps.get(s"catalog.coltype.${f.name}")
-            .map(ddl => StructType.fromDDL(s"`${f.name}` $ddl")
-              .fields(0).dataType)
-            .filter(d => GraftCatalog.safeWidening(f.dataType, d))
-            .map(d => f.copy(dataType = d))
-            .getOrElse(f)
-      })
-    }.orElse(tblProps.get("catalog.schema.ddl").map(StructType.fromDDL))
-      .getOrElse(throw new NoSuchTableException(ident))
+    if (snap.files(t).isEmpty && !tblProps.contains("catalog.schema.ddl"))
+      throw new NoSuchTableException(ident)
     // properties() is what `SHOW TBLPROPERTIES graft.t` shows: the log's
     // TBLPROPERTIES plus the identity. Reads take identity and version
     // from the typed fields only.
     val props = tblProps ++
       Map("warehouse" -> warehouse, "table" -> t) ++
       asOf.map(v => "versionAsOf" -> v.toString)
-    new GraftCatalogTable(warehouse, t, snap.version, schema, props.asJava,
-      partCols)
+    new GraftCatalogTable(warehouse, t, snap.version, snap.schema(spark, t),
+      props.asJava, snap.partitionLayout(t))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -258,14 +219,15 @@ class GraftCatalog extends TableCatalog
         val cur = loadTable(ident).columns()
           .find(_.name == c).getOrElse(throw new IllegalArgumentException(
             s"column '$c' does not exist in table '$t'")).dataType()
-        require(GraftCatalog.safeWidening(cur, ut.newDataType()),
+        require(Snapshots.safeWidening(cur, ut.newDataType()),
           s"ALTER COLUMN '$c' TYPE ${ut.newDataType().sql}: only safe " +
             s"widenings evolve metadata-only (INT→BIGINT, FLOAT→DOUBLE); " +
             s"'$c' is ${cur.sql} — rewrite via CREATE OR REPLACE for " +
             "other changes")
-        // Metadata-only: the declared type wins at load, existing narrow
-        // files read at the wide type (the same width-mixed machinery
-        // compaction and commits already honor), new writes land wide.
+        // Metadata-only: the snapshot's schema serves the declared type,
+        // existing narrow files read at the wide type (the same
+        // width-mixed machinery compaction and commits already honor), new
+        // writes land wide.
         Snapshots.setProperties(fs, warehouse, t,
           Map(s"catalog.coltype.$c" -> ut.newDataType().sql))
       case ac: TableChange.AddColumn =>
@@ -273,8 +235,7 @@ class GraftCatalog extends TableCatalog
           "ADD", ac.fieldNames(), t))
         SchemaEvolution.addColumn(spark, warehouse, t, ac.fieldNames()(0))
         // Record the declared type: until a file carries the column, the
-        // mapping serves it as NullType and loadTable repairs it from
-        // this property.
+        // snapshot's schema types it from this property.
         Snapshots.setProperties(fs, warehouse, t,
           Map(s"catalog.coltype.${ac.fieldNames()(0)}" ->
             ac.dataType().sql))
@@ -470,20 +431,6 @@ class GraftCatalog extends TableCatalog
         "structure; CTAS into the new name instead")
 }
 
-object GraftCatalog {
-  import org.apache.spark.sql.types._
-
-  /** The metadata-only type evolutions commits, reads, and compaction all
-    * honor exactly (narrow files read at the wide type). */
-  private[v2] def safeWidening(from: DataType, to: DataType): Boolean =
-    (from, to) match {
-      case (a, b) if a == b => true
-      case (IntegerType, LongType) => true
-      case (FloatType, DoubleType) => true
-      case _ => false
-    }
-}
-
 /** Catalog-resolved table, pinned at load: `warehouse`, `table`, the
   * loaded snapshot's `snapshotVersion` and the served schema are the only
   * source of what a read of it serves. BATCH_READ runs the log-planned
@@ -548,23 +495,14 @@ class GraftCatalogTable(val warehouse: String, val table: String,
   private[graft] def logRowBound: Option[Long] = snapshot.logRowCount(table)
 
   /** The optimized plan of this table's rows at the pinned version, with
-    * `pred` pruning the file list from log stats: partition columns read
-    * at their served (declared) type straight from the path strings, so a
-    * STRING `h=05` stays '05'; the rest conformed to the served schema
-    * ([[SnapshotDataSource.conform]]): a column widened by ALTER COLUMN
-    * TYPE is cast, one no file carries yet is a typed null, and a table
-    * with no live files is an empty relation. What
-    * [[graft.sql.SnapshotScanRule]] splices in place of the relation; built
-    * fresh per call, so each splice has its own expression ids. */
+    * `pred` pruning the file list from log stats — the snapshot's read,
+    * which serves exactly this table's schema (both are
+    * [[graft.ingest.Snapshot.schema]]). What [[graft.sql.SnapshotScanRule]]
+    * splices in place of the relation; built fresh per call, so each splice
+    * has its own expression ids. */
   private[graft] def planFor(pred: graft.ingest.FileStats.Pred)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    val snap = snapshot
-    val rows =
-      if (snap.files(table).isEmpty) spark.emptyDataFrame
-      else snap.read(spark, table, dataFilter = pred,
-        partitionTypes = tableSchema.map(f => f.name -> f.dataType).toMap)
-    SnapshotDataSource.conform(rows, tableSchema).queryExecution.optimizedPlan
-  }
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    snapshot.read(spark, table, dataFilter = pred).queryExecution.optimizedPlan
 
   // SQL reads arrive with the per-query options; the typed identity and
   // the pinned version override them, and the log's TBLPROPERTIES serve

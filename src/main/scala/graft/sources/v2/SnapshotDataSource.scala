@@ -265,14 +265,10 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
             .getOrElse(throw new IllegalArgumentException(
               s"no snapshot version existed at '$ts' under $warehouse"))
         })
-    if (changeFeed) {
-      val v = requested.orElse(Snapshots.snapshot(fs, warehouse).version)
-      (v, baseFrame(v, null).schema)
-    } else {
-      val snap = Snapshots.snapshot(fs, warehouse, requested)
-      (requested.orElse(snap.version),
-        snap.read(spark, table, mergeSchema).schema)
-    }
+    val snap = Snapshots.snapshot(fs, warehouse, requested)
+    val served = snap.schema(spark, table, mergeSchema)
+    (requested.orElse(snap.version),
+      if (changeFeed) SnapshotDataSource.withFeedColumns(served) else served)
   }
 
   /** Live-row bound at the pinned version from the log's stats tokens —
@@ -297,8 +293,7 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
             }).getOrElse(-1L),
         toInclusive = at)
     else Snapshots.snapshot(fs, warehouse, at).read(spark, table,
-      mergeSchema, dataFilter = dataFilter,
-      partitionTypes = schema.map(f => f.name -> f.dataType).toMap)
+      mergeSchema, dataFilter = dataFilter)
 
   override val schema: StructType = loadSchema
 
@@ -309,14 +304,26 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     * `RDD[InternalRow]` directly. */
   override def needConversion: Boolean = false
 
-  /** The inner frame with log-side skipping applied, conformed to the
-    * advertised schema: skipping can prune away every file CARRYING a
-    * schema-evolved column, whose rows would have read it as null, and
-    * partition columns keep their advertised type whatever values the
-    * surviving paths hold. */
+  /** The inner frame with log-side skipping applied. A read serves the
+    * advertised schema by construction (both are the snapshot's served
+    * schema, whatever skipping prunes). The change feed types its columns
+    * over the range's files as well, so it is projected into the
+    * advertised order and refused where a type differs (a partition value
+    * of a removed file can type a column differently) — the relation's
+    * rows are handed to Spark as they are. */
   private def frameFor(pred: graft.ingest.FileStats.Pred): DataFrame =
-    SnapshotDataSource.conform(
-      baseFrame(pinnedVersion, if (changeFeed) null else pred), schema)
+    if (!changeFeed) baseFrame(pinnedVersion, pred)
+    else {
+      val feed = baseFrame(pinnedVersion, null)
+      val types = feed.schema.map(f => f.name -> f.dataType).toMap
+      schema.foreach(f => if (!types.get(f.name).contains(f.dataType))
+        throw new IllegalStateException(
+          s"change feed column '${f.name}' reads as " +
+            s"${types.get(f.name).fold("absent")(_.sql)}, not the table's " +
+            s"${f.dataType.sql}"))
+      feed.select(schema.fieldNames.map(c =>
+        col(s"`${c.replace("`", "``")}`")).toSeq: _*)
+    }
 
   /** The OPTIMIZED logical plan this relation delegates to, output columns
     * in schema order — what [[graft.sql.SnapshotScanRule]]
@@ -391,28 +398,6 @@ object SnapshotDataSource {
     go(f)
   }
 
-  /** `df` by name in `schema`'s column order and types: a column whose
-    * type safely widens to the served one (or is all-null VOID) is cast,
-    * one `df` lacks is a typed null. Any other type difference would cast
-    * values into different values, so it fails instead. */
-  private[v2] def conform(df: org.apache.spark.sql.DataFrame,
-                          schema: StructType): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.NullType
-    val have = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    df.select(schema.fields.map { f =>
-      have.get(f.name) match {
-        case Some(t) if t == f.dataType => col(f.name)
-        case Some(t) if t == NullType || GraftCatalog.safeWidening(t, f.dataType) =>
-          col(f.name).cast(f.dataType).as(f.name)
-        case Some(t) => throw new IllegalStateException(
-          s"column '${f.name}' reads as ${t.sql}, which does not widen " +
-            s"to its served type ${f.dataType.sql}")
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }.toSeq: _*)
-  }
-
   private[v2] def required(options: CaseInsensitiveStringMap, key: String): String =
     Option(options.get(key)).getOrElse(
       throw new IllegalArgumentException(s"option '$key' is required"))
@@ -420,12 +405,13 @@ object SnapshotDataSource {
   private[v2] def readChangeFeed(options: CaseInsensitiveStringMap): Boolean =
     Option(options.get("readChangeFeed")).exists(_.toBoolean)
 
-  /** Schema = the current snapshot's read schema (partition columns last,
-    * exactly as a batch Snapshots.read sees them); the change feed adds the
-    * same metadata columns as the batch `changes()`. A table with no
-    * committed snapshot yet yields an EMPTY schema — the write path needs
-    * that for create-on-first-write (the sink's schema comes from the
-    * query, not the table); the read path fails fast in newScanBuilder. */
+  /** Schema = the current snapshot's served schema
+    * ([[graft.ingest.Snapshot.schema]], exactly what a batch
+    * Snapshots.read serves); the change feed adds the same metadata
+    * columns as the batch `changes()`. A table with no committed snapshot
+    * yet yields an EMPTY schema — the write path needs that for
+    * create-on-first-write (the sink's schema comes from the query, not
+    * the table); the read path fails fast in newScanBuilder. */
   private[v2] def tableSchema(options: CaseInsensitiveStringMap): StructType = {
     // Resolve the required options OUTSIDE the not-committed-yet catch: a
     // caller that forgot `warehouse`/`table` must get the clear required-
@@ -433,14 +419,20 @@ object SnapshotDataSource {
     // does not exist" three calls later.
     val warehouse = required(options, "warehouse")
     val table = required(options, "table")
+    val spark = SparkSession.active
     val base =
-      try Snapshots.read(SparkSession.active, warehouse, table).schema
+      try Snapshots.snapshot(new Path(warehouse).getFileSystem(
+          spark.sparkContext.hadoopConfiguration), warehouse)
+        .schema(spark, table)
       catch { case _: IllegalStateException | _: IllegalArgumentException =>
         return new StructType()
       }
-    if (!readChangeFeed(options)) base
-    else base.add("_change_type", StringType).add("_commit_version", LongType)
+    if (!readChangeFeed(options)) base else withFeedColumns(base)
   }
+
+  /** `schema` plus the change feed's metadata columns. */
+  private[v2] def withFeedColumns(schema: StructType): StructType =
+    schema.add("_change_type", StringType).add("_commit_version", LongType)
 
   /** The DSv2 scans and the sink serve exactly what Spark's parquet
     * format serves: the check `df.write.parquet` applies. */

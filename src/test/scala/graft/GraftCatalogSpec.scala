@@ -656,6 +656,22 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT id FROM gtp.f").count() == 250L)
   }
 
+  test("Snapshots.read serves the catalog's schema after ALTER TYPE and ADD COLUMN") {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+    spark.sql(
+      "CREATE TABLE graft.par (id INT, x FLOAT, h STRING) PARTITIONED BY (h)")
+    spark.sql("INSERT INTO graft.par VALUES (1, 1.5, '05')")
+    spark.sql("ALTER TABLE graft.par ALTER COLUMN id TYPE BIGINT")
+    spark.sql("ALTER TABLE graft.par ALTER COLUMN x TYPE DOUBLE")
+    spark.sql("ALTER TABLE graft.par ADD COLUMN note STRING")
+    val api = Snapshots.read(spark, wh, "par")
+    val cat = spark.table("graft.par")
+    assert(api.schema == cat.schema, s"${api.schema} vs ${cat.schema}")
+    assert(Seq("id", "x", "note").map(api.schema(_).dataType) ==
+      Seq(LongType, DoubleType, StringType))
+    assert(api.collect().toSeq == cat.collect().toSeq)
+  }
+
   test("a version-pinned catalog source bounds its merge size from the log") {
     spark.conf.set("spark.sql.catalog.gsb",
       classOf[graft.sources.v2.GraftCatalog].getName)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StringType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{Compaction, Merge, Snapshots, TxnCommit}
@@ -49,6 +50,43 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def days(d: Int) = f"2024-01-$d%02d"
+
+  /** Stage + commit + publish `df` partitioned by `part`, one file per
+    * partition value. */
+  private def publishBy(warehouse: String, table: String,
+                        df: org.apache.spark.sql.DataFrame,
+                        part: String): Unit = {
+    val commitId = java.util.UUID.randomUUID().toString
+    df.coalesce(1).write.partitionBy(part)
+      .parquet(s"${TxnCommit.stagingDir(warehouse, commitId)}/$table")
+    val moves = TxnCommit.movesFor(fs, warehouse, commitId, table)
+    TxnCommit.commit(fs, warehouse, commitId, moves)
+    TxnCommit.publish(fs, warehouse, commitId, moves)
+  }
+
+  /** `body` with Spark's partition-column type inference on (this spec
+    * keeps it off elsewhere). */
+  private def inferring[T](body: => T): T = {
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(key, "true")
+    try body finally spark.conf.set(key, "false")
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobs(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
 
   test("partitioned publish lands dt=… files under the log with recorded tuples") {
     val w = wh("whPub")
@@ -206,5 +244,62 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("id", "dt", "_change_type", "_commit_version"))
     assert(delta.select("id", "dt").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq == Seq(2L -> days(2)))
+  }
+
+  test("a stats-pruned readWhere serves the table's partition type") {
+    val s0 = spark
+    import s0.implicits._
+    inferring {
+      val w = wh("whWhereType")
+      publishBy(w, "p",
+        Seq((1L, "05"), (2L, "1.50"), (3L, "abc")).toDF("id", "h"), "h")
+      // The table's tuples type `h` as STRING; the h=05 file that stats
+      // pruning leaves would alone infer INT 5.
+      val df = Snapshots.readWhere(spark, w, "p", col("id") === 1L)
+      assert(df.schema("h").dataType == StringType)
+      assert(df.select("id", "h").as[(Long, String)].collect().toSeq ==
+        Seq(1L -> "05"))
+    }
+  }
+
+  test("a partition-filtered read keeps the table's partition type") {
+    val s0 = spark
+    import s0.implicits._
+    inferring {
+      val w = wh("whFilterType")
+      publishBy(w, "p",
+        Seq((1L, "05"), (2L, "1.50"), (3L, "abc")).toDF("id", "h"), "h")
+      // Without h=abc the surviving tuples would infer DOUBLE 5.0 / 1.5.
+      val df = Snapshots.read(spark, w, "p",
+        partitionFilter = m => !m.get("h").contains("abc"))
+      assert(df.schema("h").dataType == StringType)
+      assert(df.select("h").as[String].collect().toSeq.sorted ==
+        Seq("05", "1.50"))
+    }
+  }
+
+  test("updateWhere leaves a partition value it did not assign untouched") {
+    val s0 = spark
+    import s0.implicits._
+    inferring {
+      val w = wh("whUpdType")
+      publishBy(w, "u",
+        Seq((1L, 1L, "05"), (2L, 2L, "abc")).toDF("id", "x", "h"), "h")
+      Merge.updateWhere(spark, w, "u", col("id") === 1L,
+        Map("x" -> org.apache.spark.sql.functions.lit(11L)))
+      assert(Snapshots.read(spark, w, "u").filter(col("id") === 1L)
+        .select("x", "h").as[(Long, String)].collect().toSeq == Seq(11L -> "05"))
+      // The rewrite stays under its directory: no h=5 tuple appears.
+      assert(Snapshots.partitionedFiles(fs, w, "u").get.map(_._2).toSet ==
+        Set("h=05", "h=abc"))
+    }
+  }
+
+  test("planning a partitioned read or readWhere runs no Spark job") {
+    val w = wh("whPlanJobs")
+    publishPartitioned(w, "t", Seq(1L -> days(1), 2L -> days(2)))
+    Snapshots.read(spark, w, "t") // warms the footer cache
+    assert(jobs(Snapshots.read(spark, w, "t").schema) == 0)
+    assert(jobs(Snapshots.readWhere(spark, w, "t", col("id") === 1L)) == 0)
   }
 }

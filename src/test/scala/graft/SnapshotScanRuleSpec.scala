@@ -430,6 +430,32 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().toSeq == Seq(2L -> "1.50"))
   }
 
+  test("catalog UPDATE and MERGE keep a STRING partition's path strings") {
+    val s0 = spark
+    import s0.implicits._
+    val w = wh("catPartDml")
+    spark.conf.set("spark.sql.catalog.gpd",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gpd.warehouse", w)
+    spark.sql(
+      "CREATE TABLE gpd.p (id BIGINT, v BIGINT, h STRING) PARTITIONED BY (h)")
+    spark.sql("INSERT INTO gpd.p VALUES " +
+      "(1L, 10L, '05'), (2L, 20L, '1.50'), (3L, 30L, '007')")
+    // Neither statement assigns `h`; path inference over the rewritten
+    // files would move the rows to h=5, h=1.5 and h=7.
+    spark.sql("UPDATE gpd.p SET v = v + 1 WHERE id = 1")
+    spark.sql("UPDATE gpd.p SET v = v + 2 WHERE id = 2")
+    Seq((3L, 33L)).toDF("id", "v").createOrReplaceTempView("pd_src")
+    spark.sql(
+      """MERGE INTO gpd.p USING pd_src ON gpd.p.id = pd_src.id
+        |WHEN MATCHED THEN UPDATE SET v = pd_src.v""".stripMargin)
+    assert(spark.sql("SELECT id, v, h FROM gpd.p")
+      .as[(Long, Long, String)].collect().toSeq.sorted ==
+      Seq((1L, 11L, "05"), (2L, 22L, "1.50"), (3L, 33L, "007")))
+    assert(Snapshots.partitionedFiles(fs, w, "p").get.map(_._2).toSet ==
+      Set("h=05", "h=1.50", "h=007"))
+  }
+
   test("a stats-pruned format read keeps the table's partition type") {
     val w = wh("prunePartType")
     val s0 = spark

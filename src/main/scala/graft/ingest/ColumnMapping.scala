@@ -115,11 +115,9 @@ object SchemaEvolution {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = Snapshots.snapshot(fs, warehouse)
     snap.columnMapping(table).getOrElse {
-      // The served schema with mergeSchema: on an additively-evolved table
-      // of untagged files a sampled-footer schema could miss a late column,
-      // and a mapping built without it would silently project the column
-      // away on every subsequent read. (No mapping applies here — there is
-      // none yet.)
+      // With mergeSchema: on an additively-evolved table of untagged files
+      // a sampled footer could miss a late column, which a mapping built
+      // without it would project away on every later read.
       ColumnMapping.identity(
         snap.schema(spark, table, mergeSchema = true).fieldNames.toSeq)
     }

@@ -84,7 +84,7 @@ object Compaction {
     // defaults become stored values, at the table's served schema (see
     // Snapshot.scanFiles).
     (snap.scanFiles(spark, table, acts,
-      snap.physicalSchema(spark, table, snap.files(table))), partCols)
+      snap.liveSchema(spark, table)), partCols)
   }
 
   /** Compact `table` into files of ~`targetBytes`. No-op (None) when the

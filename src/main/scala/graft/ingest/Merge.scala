@@ -63,7 +63,7 @@ object Merge {
     // Row identity is captured per group at the scan, where the metadata
     // columns resolve; DML reads serve (and rewrites materialize) defaults.
     val df = snap.scanFiles(spark, table, acts,
-      snap.physicalSchema(spark, table, snap.files(table)), _
+      snap.liveSchema(spark, table), _
       .withColumn(SrcFileCol,
         regexp_replace(col("_metadata.file_path"), Snapshots.SchemeRe, ""))
       .withColumn(RowPosCol, col("_metadata.row_index")))

@@ -79,37 +79,51 @@ final class Snapshot private[ingest] (
       .flatMap(_.split(",")).filter(_.nonEmpty)
   }
 
-  /** The schema `table` serves at this version, in LOGICAL names — the
-    * one place a column's type is decided: every read, DML rewrite and
-    * catalog scan of the table reads at it (a change feed at the same rule
-    * over its range's files too), so no filter, pruning or rewrite can
-    * move it. Computed from the log, with no path inference
-    * ([[physicalSchema]]), then resolved through the column mapping (a
-    * mapped column no file carries and nothing types is NullType, as the
-    * mapped read serves it). A declared table with no live files serves
-    * its declaration; any other table without committed files throws. */
+  /** The schema `table` serves at this version, in LOGICAL names — the one
+    * place a column's type is decided, so no filter, pruning or rewrite can
+    * move it: every read, DML rewrite and catalog scan reads at it. Computed
+    * from the log ([[physicalSchema]]), then resolved through the column
+    * mapping. A declared table with no live files serves its declaration;
+    * any other table without committed files throws. */
   def schema(spark: SparkSession, table: String,
              mergeSchema: Boolean = false): StructType = {
     requireFeatures(table)
-    val physical = physicalSchema(spark, table, files(table), mergeSchema)
+    logicalSchema(table, liveSchema(spark, table, mergeSchema))
+  }
+
+  /** `physical` in LOGICAL names, as [[ColumnMapping.applyTo]] serves it:
+    * mapped columns in mapping order, then the `passthrough` columns. */
+  private[ingest] def logicalSchema(table: String, physical: StructType,
+                                    passthrough: Seq[String] = Nil)
+      : StructType =
     columnMapping(table).fold(physical)(m => StructType(m.cols.map {
       case (logical, p) => physical.find(_.name == p)
         .fold(StructField(logical, NullType))(_.copy(name = logical))
-    }))
+    } ++ physical.filter(f => passthrough.contains(f.name))))
+
+  /** [[physicalSchema]] over the live files, memoized on the shared fold
+    * per table, `mergeSchema` and the session confs it reads, so all the
+    * operations planning one version pay for it once. */
+  private[ingest] def liveSchema(spark: SparkSession, table: String,
+                                 mergeSchema: Boolean = false): StructType = {
+    val conf = spark.sessionState.conf
+    state.schemas.computeIfAbsent((table, mergeSchema,
+        conf.partitionColumnTypeInferenceEnabled, conf.caseSensitiveAnalysis,
+        conf.sessionLocalTimeZone),
+      _ => physicalSchema(spark, table, files(table), mergeSchema))
   }
 
   /** [[schema]] in PHYSICAL names over the files `acts` (the live files,
     * or a change feed's range):
-    *  - data columns from the log's schema tags and one cached footer per
-    *    signature ([[Snapshots.footerSchema]]);
-    *  - partition columns typed from the tuples: declared type
-    *    (`catalog.schema.ddl`), else Spark's inference rule over every
-    *    tuple ([[Snapshots.partitionSchema]]);
-    *  - `catalog.coltype.*` (ALTER COLUMN TYPE / ADD COLUMN) widens a
-    *    column safely, and types a mapped column no file carries yet —
-    *    as does an initial default's literal;
-    *  - no files: the declaration in place of the files' columns, else
-    *    an error. */
+    *  - data columns from one cached footer per schema-tag signature
+    *    ([[Snapshots.footerSchema]]);
+    *  - partition columns: the declared type (`catalog.schema.ddl`), else
+    *    the type files carrying the column as data give it (a flat era's
+    *    files, change files), else Spark's inference over every tuple
+    *    ([[Snapshots.partitionSchema]]);
+    *  - `catalog.coltype.*` widens a column safely and, like an initial
+    *    default's literal, types a mapped column no file carries;
+    *  - no files: the declaration, else an error. */
   private[ingest] def physicalSchema(spark: SparkSession, table: String,
                                      acts: Seq[Action],
                                      mergeSchema: Boolean = false): StructType = {
@@ -131,11 +145,11 @@ final class Snapshot private[ingest] (
         s"table '$table' has no committed files at version " +
           version.getOrElse(-1L))), new StructType())
       else {
+        val footer = Snapshots.footerSchema(spark, acts, mergeSchema)
+        def types(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
         val parts = Snapshots.partitionSchema(spark, acts,
-          declared.fold(Map.empty[String, DataType])(
-            _.fields.map(f => f.name -> f.dataType).toMap))
-        (Snapshots.footerSchema(spark, acts, mergeSchema)
-          .filterNot(f => parts.fieldNames.contains(f.name)), parts)
+          types(footer) ++ declared.fold(Map.empty[String, DataType])(types))
+        (footer.filterNot(f => parts.fieldNames.contains(f.name)), parts)
       }
     val carried = (data ++ parts).map(_.name).toSet
     // Initial defaults are SQL literals: their type is the parsed literal's.

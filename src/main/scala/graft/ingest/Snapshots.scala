@@ -1491,7 +1491,12 @@ object Snapshots {
   private[ingest] case class Folded(
       files: scala.collection.mutable.LinkedHashMap[
         String, scala.collection.mutable.LinkedHashMap[String, (String, String, String)]],
-      metas: scala.collection.mutable.LinkedHashMap[String, String])
+      metas: scala.collection.mutable.LinkedHashMap[String, String]) {
+    /** [[Snapshot.liveSchema]]'s memo: derived from this state alone. */
+    private[ingest] val schemas = new java.util.concurrent.ConcurrentHashMap[
+      (String, Boolean, Boolean, Boolean, String),
+      org.apache.spark.sql.types.StructType]
+  }
 
   /** Process-wide fold cache. A fold's entire input is (anchor checkpoint,
     * post-anchor delta entries); log entry FILES are immutable once
@@ -2143,17 +2148,8 @@ object Snapshots {
               fromExclusive: Long, toInclusive: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, input_file_name, lit,
       regexp_replace}
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // The range end is pinned once: the protocol gate (a change feed serves
-    // file rows, so it needs every reader feature a plain read needs), the
-    // end version and the logical schema all come from this snapshot.
-    val snap = snapshot(fs, warehouse, toInclusive)
-    snap.requireFeatures(table)
-    val rewriteOps = Set("compact", "zorder")
-    def checkLive(acts: Seq[Action]): Unit =
-      acts.foreach(a => require(fs.exists(new Path(a.file)),
-        s"change file ${a.file} was vacuumed — requested range predates retention"))
+    val (snap, appends, cdfs, schema) =
+      feed(spark, warehouse, table, fromExclusive, toInclusive)
     // Plan shape: the whole range is normally served by TWO parquet reads
     // (more only across root-dir, layout, default-presence and deletion-
     // vector eras) — one over every in-range append/restore ADD file, one
@@ -2162,9 +2158,94 @@ object Snapshots {
     // names are unique within a table's dirs). A consumer catching up over
     // thousands of versions gets a two-leaf plan, not an O(versions)-deep
     // union chain.
-    // The scan retries whole on a vanished entry (zombie sweep / vacuum
+    // A file can be ADDed at SEVERAL in-range versions (restore re-ADDs the
+    // original path): read each distinct path ONCE, and let the (path →
+    // version) map fan each row out to one copy per serving version — the
+    // same multiplicity the per-version plan produced. Passing the path
+    // twice to read.parquet would double the rows BEFORE the fan-out. The
+    // key is the scheme-less FULL path (basenames are NOT unique within a
+    // commit — one dynamic-partition write emits the same basename into
+    // every partition dir), in the URL-ENCODED form both sides can agree
+    // on: input_file_name() serves encoded URIs, and Hadoop Path's
+    // toUri.getRawPath produces the same encoding for the log's raw paths
+    // (spaces in partition values survive Spark's path escaping, so
+    // comparing decoded-vs-encoded would silently drop their rows).
+    // Each leaf goes through the one builder ([[Snapshot.scanFiles]]):
+    // basePath per root dir (a clone's files root in its source's dir),
+    // one relation per partition layout (flat→partitioned or dt→dt/hour
+    // switches), initial-defaults for rows that predate their column. All
+    // leaves read at the feed's one schema ([[feed]]). The file path is
+    // captured scan-side (input_file_name is only reliable there, before
+    // the deletion-vector anti-join).
+    def leaf(files: Seq[(Action, Long)], inserts: Boolean): DataFrame = {
+      val df = snap.scanFiles(spark, table, files.map(_._1), schema,
+        _.withColumn("_file_path",
+          regexp_replace(input_file_name(), SchemeRe, "")))
+      val tagged =
+        if (inserts) df.withColumn("_change_type", lit("insert")) else df
+      val verDf = spark.createDataFrame(
+        files.map { case (a, v) => (pathKey(a.file), v) }.distinct)
+        .toDF("_file_path", "_commit_version")
+      tagged.join(broadcast(verDf), "_file_path").drop("_file_path")
+    }
+    // One leaf per deletion-vector era: a file served at two versions
+    // under DIFFERENT vectors (restore eras) is read once per era, so each
+    // version's insert rows subtract exactly its own vector. Plan depth
+    // grows only with layout switches + restore-of-DV events. Change files
+    // carry their own `_change_type` and no stats token, so they always
+    // take the footer merge.
+    val frames = appends.groupBy(_._1.dv).toSeq.sortBy(_._1)
+      .map { case (_, files) => leaf(files, inserts = true) } ++
+      (if (cdfs.isEmpty) Nil else Seq(leaf(cdfs, inserts = false)))
+    val physical =
+      if (frames.isEmpty) spark.createDataFrame(
+        java.util.List.of[org.apache.spark.sql.Row](), schema.add(
+          "_commit_version", org.apache.spark.sql.types.LongType, false))
+      else frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    // Serve the feed in the range-end's LOGICAL schema: physical names
+    // are stable across renames, so one mapping covers every era's files;
+    // the feed's own columns pass through unmapped.
+    snap.columnMapping(table)
+      .fold(physical)(_.applyTo(physical,
+        passthrough = Seq("_change_type", "_commit_version")))
+  }
+
+  /** The schema [[changes]] serves over the same range, from the log and
+    * cached footers alone — no frame planned, so a relation can advertise
+    * it at load. */
+  private[graft] def changesSchema(spark: SparkSession, warehouse: String,
+                                   table: String, fromExclusive: Long,
+                                   toInclusive: Option[Long])
+      : org.apache.spark.sql.types.StructType = {
+    val (snap, _, _, schema) =
+      feed(spark, warehouse, table, fromExclusive, toInclusive)
+    snap.logicalSchema(table, schema, passthrough = Seq("_change_type"))
+      .add("_commit_version", org.apache.spark.sql.types.LongType,
+        nullable = false)
+  }
+
+  /** A change feed over (`fromExclusive`, `toInclusive`]: the range end
+    * pinned once (a feed serves file rows, so it passes a plain read's
+    * protocol gate); the in-range append/restore ADD files and merge change
+    * files, each with the version serving it, from one bounded walk of the
+    * log (compact and zorder rewrites move rows unchanged — skipped); and
+    * the one PHYSICAL schema every leaf reads at, typed over the live and
+    * the range's files together — so a range ending at a delete of every
+    * row still has one — with the change files' `_change_type` last. */
+  private def feed(spark: SparkSession, warehouse: String, table: String,
+                   fromExclusive: Long, toInclusive: Option[Long])
+      : (Snapshot, Seq[(Action, Long)], Seq[(Action, Long)],
+         org.apache.spark.sql.types.StructType) = {
+    val fs = fsOf(spark, warehouse)
+    val snap = snapshot(fs, warehouse, toInclusive)
+    snap.requireFeatures(table)
+    val rewriteOps = Set("compact", "zorder")
+    def checkLive(acts: Seq[Action]): Unit =
+      acts.foreach(a => require(fs.exists(new Path(a.file)),
+        s"change file ${a.file} was vacuumed — requested range predates retention"))
+    // The walk retries whole on a vanished entry (zombie sweep / vacuum
     // racing it) — listing, range bound, and builders all reset per pass.
-    val (appendList, cdfList, to) = retryVanished {
+    val (appends, cdfs) = retryVanished {
       // A consumer tailing the log (from at/above the checkpoint anchor —
       // the steady state) pays only the anchored tail listing; catch-ups
       // reaching below the anchor list the full dir.
@@ -2200,70 +2281,14 @@ object Snapshots {
           }
         }
       }
-      (appendFiles.result(), cdfFiles.result(), to)
+      (appendFiles.result(), cdfFiles.result())
     }
-    // A file can be ADDed at SEVERAL in-range versions (restore re-ADDs the
-    // original path): read each distinct path ONCE, and let the (path →
-    // version) map fan each row out to one copy per serving version — the
-    // same multiplicity the per-version plan produced. Passing the path
-    // twice to read.parquet would double the rows BEFORE the fan-out. The
-    // key is the scheme-less FULL path (basenames are NOT unique within a
-    // commit — one dynamic-partition write emits the same basename into
-    // every partition dir), in the URL-ENCODED form both sides can agree
-    // on: input_file_name() serves encoded URIs, and Hadoop Path's
-    // toUri.getRawPath produces the same encoding for the log's raw paths
-    // (spaces in partition values survive Spark's path escaping, so
-    // comparing decoded-vs-encoded would silently drop their rows).
-    // Each leaf goes through the one builder ([[Snapshot.scanFiles]]):
-    // basePath per root dir (a clone's files root in its source's dir),
-    // one relation per partition layout (flat→partitioned or dt→dt/hour
-    // switches), initial-defaults for rows that predate their column. All
-    // leaves read at ONE schema, served over the live files and the
-    // range's files together: the widest type of a width-mixed range,
-    // columns added mid-range (older rows null), partition columns typed
-    // over every tuple either side holds, and the change files' own
-    // `_change_type` (last; appends fill it). The file path is captured
-    // scan-side (input_file_name is only reliable there, before the
-    // deletion-vector anti-join).
-    lazy val feedSchema = org.apache.spark.sql.types.StructType(
+    val schema = org.apache.spark.sql.types.StructType(
       snap.physicalSchema(spark, table,
-          snap.files(table) ++ (appendList ++ cdfList).map(_._1),
-          mergeSchema = true)
+        snap.files(table) ++ (appends ++ cdfs).map(_._1), mergeSchema = true)
         .filterNot(_.name == "_change_type"))
       .add("_change_type", org.apache.spark.sql.types.StringType)
-    def leaf(files: Seq[(Action, Long)], inserts: Boolean): DataFrame = {
-      val df = snap.scanFiles(spark, table, files.map(_._1), feedSchema,
-        _.withColumn("_file_path",
-          regexp_replace(input_file_name(), SchemeRe, "")))
-      val tagged =
-        if (inserts) df.withColumn("_change_type", lit("insert")) else df
-      val verDf = spark.createDataFrame(
-        files.map { case (a, v) => (pathKey(a.file), v) }.distinct)
-        .toDF("_file_path", "_commit_version")
-      tagged.join(broadcast(verDf), "_file_path").drop("_file_path")
-    }
-    // One leaf per deletion-vector era: a file served at two versions
-    // under DIFFERENT vectors (restore eras) is read once per era, so each
-    // version's insert rows subtract exactly its own vector. Plan depth
-    // grows only with layout switches + restore-of-DV events. Change files
-    // carry their own `_change_type` and no stats token, so they always
-    // take the footer merge.
-    val frames = appendList.groupBy(_._1.dv).toSeq.sortBy(_._1)
-      .map { case (_, files) => leaf(files, inserts = true) } ++
-      (if (cdfList.isEmpty) Nil else Seq(leaf(cdfList, inserts = false)))
-    if (frames.isEmpty)
-      snap.read(spark, table)
-        .withColumn("_change_type", lit(""))
-        .withColumn("_commit_version", lit(0L)).limit(0)
-    else {
-      val physical = frames.reduce(_.unionByName(_, allowMissingColumns = true))
-      // Serve the feed in the range-end's LOGICAL schema: physical names
-      // are stable across renames, so one mapping covers every era's files;
-      // the feed's own columns pass through unmapped.
-      snap.columnMapping(table)
-        .fold(physical)(_.applyTo(physical,
-          passthrough = Seq("_change_type", "_commit_version")))
-    }
+    (snap, appends, cdfs, schema)
   }
 
   /** Roll `table` back to `version` as a NEW commit (Delta's RESTORE): the
@@ -3190,17 +3215,14 @@ object Snapshots {
       .map(_.split("/").toSeq.map(s => unescapeSeg(s.split("=", 2)(0))))
       .getOrElse(Seq.empty)
 
-  /** The data columns the files of `acts` carry, read from the log's
-    * schema tags and cached footers: ONE footer per distinct tag signature
-    * (bounded by schema-evolution events, not by file count; zero jobs
-    * once cached), merged so a column added by a later commit is served
-    * (older files read it as null) and a width mix reads at the widest type
-    * ([[TxnCommit]]'s safe widenings: INT32/INT64, FLOAT/DOUBLE, one-scale
-    * decimal precisions — Spark's parquet readers materialize the narrow
-    * files at the wide type losslessly). Files without tags (pre-stats
-    * logs, change files) fall back to footer inference, over every footer
-    * when `mergeSchema`. The order is deterministic: signatures sorted,
-    * then the tagless files' footers. */
+  /** The data columns the files of `acts` carry: ONE cached footer per
+    * distinct schema-tag signature (bounded by schema-evolution events, not
+    * file count; zero jobs once cached), merged so a later commit's column
+    * is served (older files read null) and a width mix reads at the widest
+    * of [[TxnCommit]]'s safe widenings (INT32/INT64, FLOAT/DOUBLE,
+    * one-scale decimal precisions). Files without tags (pre-stats logs,
+    * change files) take footer inference, over every footer when
+    * `mergeSchema`. Signatures sorted, then the tagless footers. */
   private[ingest] def footerSchema(spark: SparkSession, acts: Seq[Action],
                                    mergeSchema: Boolean)
       : org.apache.spark.sql.types.StructType = {
@@ -3239,16 +3261,14 @@ object Snapshots {
   }
 
   /** The partition columns of `acts`' layouts with their served types,
-    * typed from the log's tuples alone (no listing, no footer): a column
-    * `declared` names takes its declared type; any other takes Spark's own
-    * path-inference rule (`PartitioningUtils.parsePartitions` over
-    * synthetic `/c=v` paths of every distinct value — the session's
-    * `partitionColumnTypeInference` and time zone honoured), decided over
-    * ALL the tuples at once so the type cannot move with pruning; a column
-    * whose values are all null is STRING (a VOID column cannot be written).
+    * from the log's tuples alone (no listing, no footer): a column `typed`
+    * names takes that type; any other Spark's own path inference
+    * (`PartitioningUtils.parsePartitions` over synthetic `/c=v` paths of
+    * every distinct value, session confs honoured), decided over ALL the
+    * tuples so pruning cannot move it; an all-null column is STRING.
     * Columns in layout order, the longest layout first. */
   private[ingest] def partitionSchema(spark: SparkSession, acts: Seq[Action],
-                                      declared: Map[String,
+                                      typed: Map[String,
                                         org.apache.spark.sql.types.DataType])
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -3258,7 +3278,7 @@ object Snapshots {
       .sortBy(l => (-l.size, l.mkString("/"))).flatten.distinct
     val values = segs.flatten.groupBy(_._1)
     StructType(cols.map { c =>
-      val t = declared.getOrElse(c, org.apache.spark.sql.execution.datasources
+      val t = typed.getOrElse(c, org.apache.spark.sql.execution.datasources
         .graftbridge.PartitionBridge.inferredType(spark, values(c).map(_._2).distinct))
       StructField(c, if (t == NullType) StringType else t)
     })
@@ -3282,12 +3302,10 @@ object Snapshots {
   /** Snapshot-isolated read: plan from the pinned file list of the resolved
     * version — concurrent publishes (and compactions) are invisible, and
     * `asOf` reads any retained historical version. Serves exactly
-    * [[Snapshot.schema]] at that version, whatever the filters prune: every
-    * file reads at the one served schema (partition columns typed from the
-    * log's tuples or the catalog declaration, never by path inference over
-    * the surviving files). A declared table with no live files serves its
-    * declaration as an empty frame; any other table without committed
-    * files throws.
+    * [[Snapshot.schema]] at that version, whatever the filters prune. A
+    * read whose `dataFilter` excludes every file, and a declared table with
+    * no live files, serve an empty frame of it; any other table without
+    * committed files throws.
     *
     * `partitionFilter` prunes the pinned file list BEFORE planning, from
     * the partition tuples recorded in the log — no directory listing, no
@@ -3319,8 +3337,10 @@ object Snapshots {
     val at = snap.version.getOrElse(throw new IllegalStateException(
       s"no snapshot log under ${snap.warehouse} — was this table committed via TxnCommit?"))
     val all = snap.files(table)
-    if (all.isEmpty) return spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](), snap.schema(spark, table))
+    def empty = spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](),
+      snap.schema(spark, table, mergeSchema))
+    if (all.isEmpty) return empty
     val partPruned =
       if (partitionFilter == null) all
       else snap.pruned(table, null, partitionFilter)
@@ -3334,13 +3354,9 @@ object Snapshots {
     val pruned =
       if (dataFilter == null) partPruned
       else snap.pruned(table, dataFilter, partitionFilter)
-    // Every file provably excluded: an empty frame planned over one pinned
-    // file whose rows are never read (its vector is dropped — nothing to
-    // subtract from no rows).
-    val scanned = snap.scanFiles(spark, table,
-      if (pruned.isEmpty) Seq(partPruned.head.copy(dv = "")) else pruned,
-      snap.physicalSchema(spark, table, all, mergeSchema))
-    val physical = if (pruned.isEmpty) scanned.limit(0) else scanned
+    if (pruned.isEmpty) return empty
+    val physical = snap.scanFiles(spark, table, pruned,
+      snap.liveSchema(spark, table, mergeSchema))
     // Column mapping (rename/drop without rewrite): files keep ONE physical
     // schema; the logical view is resolved at the end, and log-side stats
     // (physical keys) are renamed to logical so skipping still fires on

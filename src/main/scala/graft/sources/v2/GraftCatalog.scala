@@ -103,11 +103,9 @@ class GraftCatalog extends TableCatalog
 
   private def loadAt(ident: Identifier, asOf: Option[Long]): Table = {
     val t = tableName(ident)
-    // Schema, declaration, layout and TBLPROPERTIES all come from one
-    // snapshot: a time-traveled load serves THAT era's (wrong era after an
-    // ALTER or a replace/re-create otherwise). The served schema is the
-    // snapshot's own — declared partition types, ALTER types and an empty
-    // declared table included — so no read is planned here.
+    // Schema, layout and TBLPROPERTIES all come from one snapshot, so a
+    // time-traveled load serves THAT era's; the schema is the snapshot's
+    // own ([[graft.ingest.Snapshot.schema]]), so no read is planned here.
     val snap = Snapshots.snapshot(fs, warehouse, asOf)
     val tblProps = snap.properties(t)
     if (snap.files(t).isEmpty && !tblProps.contains("catalog.schema.ddl"))
@@ -225,9 +223,8 @@ class GraftCatalog extends TableCatalog
             s"'$c' is ${cur.sql} — rewrite via CREATE OR REPLACE for " +
             "other changes")
         // Metadata-only: the snapshot's schema serves the declared type,
-        // existing narrow files read at the wide type (the same
-        // width-mixed machinery compaction and commits already honor), new
-        // writes land wide.
+        // existing narrow files read at the wide type, new writes land
+        // wide.
         Snapshots.setProperties(fs, warehouse, t,
           Map(s"catalog.coltype.$c" -> ut.newDataType().sql))
       case ac: TableChange.AddColumn =>
@@ -495,11 +492,10 @@ class GraftCatalogTable(val warehouse: String, val table: String,
   private[graft] def logRowBound: Option[Long] = snapshot.logRowCount(table)
 
   /** The optimized plan of this table's rows at the pinned version, with
-    * `pred` pruning the file list from log stats — the snapshot's read,
-    * which serves exactly this table's schema (both are
-    * [[graft.ingest.Snapshot.schema]]). What [[graft.sql.SnapshotScanRule]]
-    * splices in place of the relation; built fresh per call, so each splice
-    * has its own expression ids. */
+    * `pred` pruning the file list from log stats, at this table's schema
+    * (both are [[graft.ingest.Snapshot.schema]]). What
+    * [[graft.sql.SnapshotScanRule]] splices in place of the relation; built
+    * fresh per call, so each splice has its own expression ids. */
   private[graft] def planFor(pred: graft.ingest.FileStats.Pred)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     snapshot.read(spark, table, dataFilter = pred).queryExecution.optimizedPlan

@@ -242,13 +242,22 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
   private val changeFeed = SnapshotDataSource.readChangeFeed(options)
   private def fs = new Path(warehouse)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // The change feed's exclusive lower bound.
+  private lazy val fromExclusive: Long =
+    Option(options.get("startingVersion")).map(_.toLong)
+      .orElse(Option(options.get("startingTimestamp")).map { ts =>
+        // Delta-parity INCLUSIVE timestamp bound: serve changes
+        // committed at or after the instant.
+        Snapshots.versionAt(fs, warehouse,
+          java.sql.Timestamp.valueOf(ts).getTime - 1).getOrElse(-1L)
+      }).getOrElse(-1L)
 
   // The pinned END of what this relation serves, resolved ONCE at load():
   // the snapshot version for plain reads, the change feed's inclusive
   // upper bound for CDF reads — so two actions on the same DataFrame see
   // the same data even while commits land in between. The relation keeps
-  // that version and its schema, never the snapshot: both come from one
-  // snapshot taken here, and every later plan re-pins the version.
+  // that version and its schema (a change feed's from its own range), never
+  // the snapshot: every later plan re-pins the version.
   private val (pinnedVersion, loadSchema): (Option[Long], StructType) = {
     val requested =
       if (changeFeed)
@@ -266,9 +275,11 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
               s"no snapshot version existed at '$ts' under $warehouse"))
         })
     val snap = Snapshots.snapshot(fs, warehouse, requested)
-    val served = snap.schema(spark, table, mergeSchema)
-    (requested.orElse(snap.version),
-      if (changeFeed) SnapshotDataSource.withFeedColumns(served) else served)
+    val at = requested.orElse(snap.version)
+    (at,
+      if (changeFeed)
+        Snapshots.changesSchema(spark, warehouse, table, fromExclusive, at)
+      else snap.schema(spark, table, mergeSchema))
   }
 
   /** Live-row bound at the pinned version from the log's stats tokens —
@@ -279,22 +290,6 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     if (changeFeed) None
     else Snapshots.snapshot(fs, warehouse, pinnedVersion).logRowCount(table)
 
-  private def baseFrame(at: Option[Long],
-                        dataFilter: graft.ingest.FileStats.Pred): DataFrame =
-    if (changeFeed)
-      Snapshots.changes(spark, warehouse, table,
-        fromExclusive =
-          Option(options.get("startingVersion")).map(_.toLong)
-            .orElse(Option(options.get("startingTimestamp")).map { ts =>
-              // Delta-parity INCLUSIVE timestamp bound: serve changes
-              // committed at or after the instant.
-              Snapshots.versionAt(fs, warehouse,
-                java.sql.Timestamp.valueOf(ts).getTime - 1).getOrElse(-1L)
-            }).getOrElse(-1L),
-        toInclusive = at)
-    else Snapshots.snapshot(fs, warehouse, at).read(spark, table,
-      mergeSchema, dataFilter = dataFilter)
-
   override val schema: StructType = loadSchema
 
   /** The relation's rows ARE the inner vectorized plan's rows — serve
@@ -304,26 +299,15 @@ class SnapshotBatchRelation(override val sqlContext: org.apache.spark.sql.SQLCon
     * `RDD[InternalRow]` directly. */
   override def needConversion: Boolean = false
 
-  /** The inner frame with log-side skipping applied. A read serves the
-    * advertised schema by construction (both are the snapshot's served
-    * schema, whatever skipping prunes). The change feed types its columns
-    * over the range's files as well, so it is projected into the
-    * advertised order and refused where a type differs (a partition value
-    * of a removed file can type a column differently) — the relation's
-    * rows are handed to Spark as they are. */
+  /** The inner frame with log-side skipping applied, at the advertised
+    * schema by construction ([[graft.ingest.Snapshot.schema]], or
+    * [[Snapshots.changesSchema]] for a change feed). */
   private def frameFor(pred: graft.ingest.FileStats.Pred): DataFrame =
-    if (!changeFeed) baseFrame(pinnedVersion, pred)
-    else {
-      val feed = baseFrame(pinnedVersion, null)
-      val types = feed.schema.map(f => f.name -> f.dataType).toMap
-      schema.foreach(f => if (!types.get(f.name).contains(f.dataType))
-        throw new IllegalStateException(
-          s"change feed column '${f.name}' reads as " +
-            s"${types.get(f.name).fold("absent")(_.sql)}, not the table's " +
-            s"${f.dataType.sql}"))
-      feed.select(schema.fieldNames.map(c =>
-        col(s"`${c.replace("`", "``")}`")).toSeq: _*)
-    }
+    if (changeFeed)
+      Snapshots.changes(spark, warehouse, table, fromExclusive,
+        toInclusive = pinnedVersion)
+    else Snapshots.snapshot(fs, warehouse, pinnedVersion).read(spark, table,
+      mergeSchema, dataFilter = pred)
 
   /** The OPTIMIZED logical plan this relation delegates to, output columns
     * in schema order — what [[graft.sql.SnapshotScanRule]]
@@ -427,12 +411,9 @@ object SnapshotDataSource {
       catch { case _: IllegalStateException | _: IllegalArgumentException =>
         return new StructType()
       }
-    if (!readChangeFeed(options)) base else withFeedColumns(base)
+    if (!readChangeFeed(options)) base
+    else base.add("_change_type", StringType).add("_commit_version", LongType)
   }
-
-  /** `schema` plus the change feed's metadata columns. */
-  private[v2] def withFeedColumns(schema: StructType): StructType =
-    schema.add("_change_type", StringType).add("_commit_version", LongType)
 
   /** The DSv2 scans and the sink serve exactly what Spark's parquet
     * format serves: the check `df.write.parquet` applies. */

@@ -126,6 +126,31 @@ class SnapshotBatchReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ended >= 1 && ended <= 3, s"got $ended")
   }
 
+  test("batch change feed ending at a delete of every row serves the delete rows") {
+    val w = wh("whCdfEmptied")
+    val s0 = spark
+    import s0.implicits._
+    pub(w, "t", Seq((1L, "05"), (2L, "abc")).toDF("id", "h"),
+      partitionBy = Seq("h"))                                 // v0
+    pub(w, "t", Seq((3L, 7.5, "05")).toDF("id", "x", "h"),
+      partitionBy = Seq("h"))                                 // v1
+    Merge.deleteWhere(spark, w, "t", $"id" > 0L)             // v2: no live files
+    val end = Snapshots.snapshot(fs, w).version.get
+    val feed = load(w, "t", Map("readChangeFeed" -> "true",
+      "startingVersion" -> "0", "endingVersion" -> end.toString))
+    val api = Snapshots.changes(spark, w, "t", 0L, Some(end))
+    // The feed's own schema: `x` lives only in the range's files, and `h`
+    // takes the type the change files carry it at ('abc' is among them,
+    // though no in-range ADD tuple holds it).
+    assert(feed.schema == api.schema)
+    assert(feed.schema("x").dataType.typeName == "double")
+    assert(feed.schema("h").dataType.typeName == "string")
+    assert(sortedRows(feed.filter($"_change_type" === "delete")
+      .select("id", "x", "h")) ==
+      Seq("[1,null,05]", "[2,null,abc]", "[3,7.5,05]"))
+    assert(sortedRows(feed) == sortedRows(api))
+  }
+
   test("batch read subtracts deletion vectors, with and without pushed filters") {
     val s0 = spark
     import s0.implicits._

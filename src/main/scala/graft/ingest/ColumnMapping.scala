@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -107,13 +106,10 @@ object ColumnMapping {
   * `read(mergeSchema = true)` (additive evolution). */
 object SchemaEvolution {
 
-  /** Current mapping of `table`, or the identity mapping over its physical
-    * schema when none was ever committed. */
-  def mappingOrIdentity(spark: SparkSession, warehouse: String,
-                        table: String): ColumnMapping = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = Snapshots.snapshot(fs, warehouse)
+  /** Mapping of `table` at `snap`, or the identity mapping over its
+    * physical schema when none was ever committed. */
+  private def mappingOrIdentity(spark: SparkSession, snap: Snapshot,
+                                table: String): ColumnMapping =
     snap.columnMapping(table).getOrElse {
       // With mergeSchema: on an additively-evolved table of untagged files
       // a sampled footer could miss a late column, which a mapping built
@@ -121,23 +117,21 @@ object SchemaEvolution {
       ColumnMapping.identity(
         snap.schema(spark, table, mergeSchema = true).fieldNames.toSeq)
     }
-  }
 
   /** RENAME COLUMN `from` → `to`: one metadata commit, zero files touched.
     * Fails if `from` doesn't exist, `to` is taken, or `from` is a
-    * partition column. */
+    * partition column. The checks and the OCC base come from one
+    * snapshot (as for [[addColumn]] and [[dropColumn]]). */
   def renameColumn(spark: SparkSession, warehouse: String, table: String,
                    from: String, to: String): Unit = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val m = mappingOrIdentity(spark, warehouse, table)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val m = mappingOrIdentity(spark, snap, table)
     require(m.logicalNames.contains(from), s"no column '$from' in $table " +
       s"(has: ${m.logicalNames.mkString(", ")})")
     require(!m.logicalNames.contains(to), s"column '$to' already exists in $table")
-    requireNotPartition(fs, warehouse, table, from, "rename")
-    requireNotEngineManaged(fs, warehouse, table, from, "rename")
-    commitMeta(fs, warehouse, table, "rename_column", base,
+    requireNotPartition(snap, table, from, "rename")
+    requireNotEngineManaged(snap, table, from, "rename")
+    commitMeta(snap, table, "rename_column",
       m.copy(cols = m.cols.map { case (l, p) =>
         if (l == from) (to, p) else (l, p) }))
   }
@@ -158,8 +152,6 @@ object SchemaEvolution {
     * never leave the column without its default. */
   def addColumn(spark: SparkSession, warehouse: String, table: String,
                 name: String, default: Option[String] = None): String = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Defaults must be PLAIN literals: the per-file DSv2 reader serves
     // them as parsed constants, so an expression (function call, cast,
     // column ref) would silently diverge between read paths — reject at
@@ -186,18 +178,18 @@ object SchemaEvolution {
         catch { case scala.util.control.NonFatal(_) => false }
       if (roundTrips) canonical else d
     }
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val m = mappingOrIdentity(spark, warehouse, table)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val m = mappingOrIdentity(spark, snap, table)
     require(!m.logicalNames.contains(name), s"column '$name' already exists in $table")
     val taken = (m.cols.map(_._2) ++ m.droppedPhysical).toSet
     val phys =
       if (!taken(name)) name
-      else Iterator.from(base.getOrElse(0L).toInt + 1)
+      else Iterator.from(snap.version.getOrElse(0L).toInt + 1)
         .map(v => s"${name}_v$v").find(!taken(_)).get
-    commitMeta(fs, warehouse, table, "add_column", base,
+    commitMeta(snap, table, "add_column",
       m.copy(cols = m.cols :+ (name, phys)),
       extraMetas = storedDefault.map(d => Snapshots.propsMetaEntry(
-        fs, warehouse, table, Map(s"default.$name" -> d))).toSeq)
+        snap, table, Map(s"default.$name" -> d))).toSeq)
     phys
   }
 
@@ -208,31 +200,28 @@ object SchemaEvolution {
     * Time travel below the drop still serves the column. */
   def dropColumn(spark: SparkSession, warehouse: String, table: String,
                  name: String): Unit = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Snapshots.latestVersion(fs, warehouse)
-    val m = mappingOrIdentity(spark, warehouse, table)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val m = mappingOrIdentity(spark, snap, table)
     require(m.logicalNames.contains(name), s"no column '$name' in $table")
     require(m.cols.size > 1, s"cannot drop the last column of $table")
-    requireNotPartition(fs, warehouse, table, name, "drop")
+    requireNotPartition(snap, table, name, "drop")
     // Dropping a GENERATED column is legal — its declaration clears in
     // the SAME commit (a crash can never leave a declared-but-absent
     // column). Identity and generation-referenced base columns refuse.
-    require(!Identity.identityColumns(fs, warehouse, table).contains(name),
+    require(!Identity.identityColumns(snap, table).contains(name),
       s"cannot drop IDENTITY column '$name' — its high-water mark is " +
         "keyed by name")
-    val refs = Generated.referencedBy(fs, warehouse, table, name)
+    val refs = Generated.referencedBy(snap, table, name)
     require(refs.isEmpty,
       s"cannot drop column '$name' — generated column(s) " +
         s"${refs.mkString(", ")} reference it by name in their expressions")
     val clearGen =
-      if (Generated.generatedColumns(fs, warehouse, table)
-          .exists(_._1 == name))
-        Seq(Snapshots.propsMetaEntry(fs, warehouse, table,
+      if (Generated.generatedColumns(snap, table).exists(_._1 == name))
+        Seq(Snapshots.propsMetaEntry(snap, table,
           Map(s"generated.$name" -> "")))
       else Nil
     val phys = m.cols.find(_._1 == name).get._2
-    commitMeta(fs, warehouse, table, "drop_column", base,
+    commitMeta(snap, table, "drop_column",
       ColumnMapping(m.cols.filterNot(_._1 == name),
         m.droppedPhysical :+ phys), extraMetas = clearGen)
   }
@@ -242,40 +231,38 @@ object SchemaEvolution {
     * generation expression references base columns by NAME — renaming or
     * dropping either side would dangle the declaration and fail (or
     * corrupt) every later materialization. Crisp refusal instead. */
-  private def requireNotEngineManaged(fs: org.apache.hadoop.fs.FileSystem,
-                                      warehouse: String, table: String,
+  private def requireNotEngineManaged(snap: Snapshot, table: String,
                                       name: String, verb: String): Unit = {
-    require(!Generated.generatedColumns(fs, warehouse, table)
-        .exists(_._1 == name),
+    require(!Generated.generatedColumns(snap, table).exists(_._1 == name),
       s"cannot $verb GENERATED column '$name' — its declaration is keyed " +
         "by name; DROP COLUMN (which clears the declaration) and " +
         "re-declare instead")
-    require(!Identity.identityColumns(fs, warehouse, table).contains(name),
+    require(!Identity.identityColumns(snap, table).contains(name),
       s"cannot $verb IDENTITY column '$name' — its high-water mark is " +
         "keyed by name")
-    val refs = Generated.referencedBy(fs, warehouse, table, name)
+    val refs = Generated.referencedBy(snap, table, name)
     require(refs.isEmpty,
       s"cannot $verb column '$name' — generated column(s) " +
         s"${refs.mkString(", ")} reference it by name in their " +
         "expressions")
   }
 
-  private def requireNotPartition(fs: org.apache.hadoop.fs.FileSystem,
-                                  warehouse: String, table: String,
-                                  name: String, verb: String): Unit = {
-    val parts = Snapshots.partitionColumns(
-      Snapshots.fileMeta(fs, warehouse, table).getOrElse(Nil).map(_.partition))
-    require(!parts.contains(name),
+  /** A partition column — of the live layout, or the catalog declaration
+    * of a table with no files yet — is never renamed or dropped. */
+  private def requireNotPartition(snap: Snapshot, table: String,
+                                  name: String, verb: String): Unit =
+    require(!snap.partitionLayout(table).contains(name),
       s"cannot $verb partition column '$name' — partition names are " +
         "directory structure; repartition via compaction first")
-  }
 
-  private def commitMeta(fs: org.apache.hadoop.fs.FileSystem, warehouse: String,
-                         table: String, op: String, base: Option[Long],
+  /** One metadata commit OCC-based on `snap`, the snapshot its caller
+    * checked against. */
+  private def commitMeta(snap: Snapshot, table: String, op: String,
                          m: ColumnMapping,
                          extraMetas: Seq[(String, String)] = Nil): Unit =
-    Snapshots.append(fs, warehouse, java.util.UUID.randomUUID().toString,
-      adds = Nil, removes = Nil, op = op, baseVersion = base,
+    Snapshots.append(snap.fs, snap.warehouse,
+      java.util.UUID.randomUUID().toString,
+      adds = Nil, removes = Nil, op = op, baseVersion = snap.version,
       metas = (table -> m.encode) +: extraMetas,
       // Protocol requirements land WITH the commit that introduces them:
       // a reader without mapping support misresolves renamed columns; one

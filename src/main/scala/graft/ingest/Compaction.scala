@@ -116,14 +116,23 @@ object Compaction {
               purgeDropped: Boolean = false,
               maxInputBytes: Long = Long.MaxValue,
               maxInputFiles: Int = Int.MaxValue)
-      : Option[Result] = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // OCC guard: the input list, the table config and the base version
-    // come from one snapshot — a concurrent rewrite landing after it makes
-    // the commit abort instead of re-adding rows the rival already
-    // rewrote (double data).
-    val snap = Snapshots.snapshot(fs, warehouse)
+      : Option[Result] =
+    compact(spark, Snapshots.snapshot(spark, warehouse), table, targetBytes,
+      minInputFiles, retainRemoved, sortBy, partitionFilter, purgeDropped,
+      maxInputBytes, maxInputFiles)
+
+  /** [[compact]] of `table` at `snap`. OCC guard: the input list, the
+    * table config and the base version all come from `snap` — a concurrent
+    * rewrite landing after it makes the commit abort instead of re-adding
+    * rows the rival already rewrote (double data). */
+  private[graft] def compact(spark: SparkSession, snap: Snapshot,
+                             table: String, targetBytes: Long,
+                             minInputFiles: Int, retainRemoved: Boolean,
+                             sortBy: Seq[String],
+                             partitionFilter: Map[String, String] => Boolean,
+                             purgeDropped: Boolean, maxInputBytes: Long,
+                             maxInputFiles: Int): Option[Result] = {
+    val (fs, warehouse) = (snap.fs, snap.warehouse)
     val mapping = snap.columnMapping(table)
     val tombstoned: Seq[String] =
       if (!purgeDropped) Nil else mapping.map(_.droppedPhysical).getOrElse(Nil)

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -41,10 +41,6 @@ object Generated {
 
   /** Declared generated columns of `table` as (column, expressionSql),
     * property-driven. */
-  def generatedColumns(fs: FileSystem, warehouse: String, table: String)
-      : Seq[(String, String)] =
-    generatedColumns(Snapshots.snapshot(fs, warehouse), table)
-
   def generatedColumns(snap: Snapshot, table: String): Seq[(String, String)] =
     snap.properties(table).toSeq
       .collect { case (k, v) if k.startsWith("generated.") =>
@@ -54,9 +50,8 @@ object Generated {
   /** Generated columns whose expressions REFERENCE `col` — the rename /
     * drop DDL refuses to touch such a base column (the stored expression
     * text would dangle and every later materialization would fail). */
-  def referencedBy(fs: FileSystem, warehouse: String, table: String,
-                   col: String): Seq[String] =
-    generatedColumns(fs, warehouse, table).collect {
+  def referencedBy(snap: Snapshot, table: String, col: String): Seq[String] =
+    generatedColumns(snap, table).collect {
       case (g, e) if {
         val refs =
           try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
@@ -83,8 +78,8 @@ object Generated {
     * context-dependent, no subquery, and references no generated/identity
     * column (generation must be a function of STORED base columns only —
     * chains would make rewrite re-materialization order-dependent). */
-  private def validate(fs: FileSystem, warehouse: String, table: String,
-                       column: String, exprSql: String): Unit = {
+  private def validate(snap: Snapshot, table: String, column: String,
+                       exprSql: String): Unit = {
     val parsed =
       try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
         .parseExpression(exprSql)
@@ -97,8 +92,8 @@ object Generated {
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]),
       s"generated column '$column': subqueries are not allowed in a " +
         "generation expression")
-    val banned = (generatedColumns(fs, warehouse, table).map(_._1) ++
-      Identity.identityColumns(fs, warehouse, table) :+ column).toSet
+    val banned = (generatedColumns(snap, table).map(_._1) ++
+      Identity.identityColumns(snap, table) :+ column).toSet
     parsed.foreach {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
         require(!banned.contains(a.name),
@@ -119,13 +114,13 @@ object Generated {
     * schema (when the table already has one — a declared-only table
     * defers to the first materialization) and require determinism of
     * the RESOLVED tree; an unresolved `rand()` would claim determinism. */
-  private def validateResolved(spark: SparkSession, warehouse: String,
+  private def validateResolved(spark: SparkSession, snap: Snapshot,
                                table: String, column: String,
                                exprSql: String,
                                schemaHint: Option[org.apache.spark.sql.types.StructType])
       : Unit = {
     val probe =
-      try Some(Snapshots.read(spark, warehouse, table).limit(0))
+      try Some(snap.read(spark, table).limit(0))
       catch {
         case _: Exception => // declared-only table: resolve on the hint
           schemaHint.map(sc => spark.createDataFrame(
@@ -158,32 +153,30 @@ object Generated {
   }
 
   /** Declare `column` GENERATED ALWAYS AS (`exprSql`). One metadata
-    * commit: property + writer feature. */
+    * commit: property + writer feature. Every check and the OCC base come
+    * from one snapshot, so a commit landing after the checks aborts the
+    * declaration. */
   def declare(spark: SparkSession, warehouse: String, table: String,
               column: String, exprSql: String,
               schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
       : Unit = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    validate(fs, warehouse, table, column, exprSql)
-    validateResolved(spark, warehouse, table, column, exprSql, schemaHint)
-    val existing = Snapshots.fileMeta(fs, warehouse, table).getOrElse(Nil)
-    require(!existing.exists(a =>
+    val snap = Snapshots.snapshot(spark, warehouse)
+    validate(snap, table, column, exprSql)
+    validateResolved(spark, snap, table, column, exprSql, schemaHint)
+    require(!snap.files(table).exists(a =>
         FileStats.schemaTags(a.stats).exists(_._1 == column)),
       s"column '$column' already carries data in '$table' — generation " +
         "is declared before the column's first write, not retrofitted")
-    require(!Snapshots.properties(fs, warehouse, table)
-        .contains(s"default.$column"),
+    require(!snap.properties(table).contains(s"default.$column"),
       s"column '$column' already carries a DEFAULT — a column is " +
         "defaulted or generated, not both")
-    require(Snapshots.columnMapping(fs, warehouse, table)
+    require(snap.columnMapping(table)
         .forall(m => m.physicalFor(column) == column),
       s"generated column '$column' must be unmapped (no rename history)")
-    val base = Snapshots.latestVersion(fs, warehouse)
-    Snapshots.append(fs, warehouse, "generated" +
+    Snapshots.append(snap.fs, warehouse, "generated" +
         java.util.UUID.randomUUID().toString.replace("-", ""),
-      adds = Nil, removes = Nil, op = "generated", baseVersion = base,
-      metas = Seq(Snapshots.propsMetaEntry(fs, warehouse, table,
+      adds = Nil, removes = Nil, op = "generated", baseVersion = snap.version,
+      metas = Seq(Snapshots.propsMetaEntry(snap, table,
         Map(s"generated.$column" -> exprSql))),
       features = Seq(table -> "w:generatedColumns"))
   }
@@ -205,10 +198,11 @@ object Generated {
                       commitId: Option[String] = None): Long = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = generatedColumns(fs, warehouse, table)
+    val snap = Snapshots.snapshot(fs, warehouse)
+    val gens = generatedColumns(snap, table)
     require(gens.nonEmpty,
       s"table '$table' has no declared generated column ([[declare]])")
-    require(Identity.identityColumns(fs, warehouse, table).isEmpty,
+    require(Identity.identityColumns(snap, table).isEmpty,
       s"table '$table' also declares IDENTITY columns — route through " +
         "Identity.appendWithIdentity, which mints ids AND materializes " +
         "the generated expressions")
@@ -229,9 +223,9 @@ object Generated {
     // Honor the table's partition layout (live files' specs, else its
     // catalog declaration) — a generated PARTITION column routes by the
     // just-materialized value and keeps its pruning.
-    val partCols = Snapshots.partitionLayout(fs, warehouse, table)
+    val partCols = snap.partitionLayout(table)
     val writer = withGen.write
-      .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, table, None))
+      .options(Snapshots.bloomOptions(snap.properties(table), None))
     (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
       .parquet(staging)
     val moves = TxnCommit.movesFor(fs, warehouse, stagingId, table)

@@ -38,44 +38,37 @@ object Identity {
   private def hwKey(table: String, column: String) = s"$table#idhw#$column"
 
   /** Declared identity columns of `table` (property-driven). */
-  def identityColumns(fs: FileSystem, warehouse: String, table: String)
-      : Seq[String] =
-    identityColumns(Snapshots.snapshot(fs, warehouse), table)
-
   def identityColumns(snap: Snapshot, table: String): Seq[String] =
     snap.properties(table).keys.toSeq
       .filter(_.startsWith("identity.")).map(_.stripPrefix("identity."))
       .sorted
 
   /** The column's current high-water mark (last minted id). */
-  def highWaterMark(fs: FileSystem, warehouse: String, table: String,
+  def highWaterMark(snap: Snapshot, table: String,
                     column: String): Option[Long] =
-    Snapshots.snapshot(fs, warehouse).metaValue(hwKey(table, column))
-      .flatMap(_.toLongOption)
+    snap.metaValue(hwKey(table, column)).flatMap(_.toLongOption)
 
   /** Declare `column` GENERATED ALWAYS AS IDENTITY starting at `start`.
     * One metadata commit: property + seeded mark + writer feature. The
     * column must not already exist in committed data (identity is a
     * creation-time property, Delta's stance — a retrofit would leave
-    * pre-declaration rows without ids). */
+    * pre-declaration rows without ids). The checks and the OCC base come
+    * from one snapshot. */
   def declare(spark: SparkSession, warehouse: String, table: String,
               column: String, start: Long = 1L): Unit = {
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = Snapshots.fileMeta(fs, warehouse, table).getOrElse(Nil)
-    require(!existing.exists(a =>
+    val snap = Snapshots.snapshot(spark, warehouse)
+    require(!snap.files(table).exists(a =>
         FileStats.schemaTags(a.stats).exists(_._1 == column)),
       s"column '$column' already carries data in '$table' — identity is " +
         "declared before the column's first write, not retrofitted")
-    require(Snapshots.columnMapping(fs, warehouse, table)
+    require(snap.columnMapping(table)
         .forall(m => m.physicalFor(column) == column),
       s"identity column '$column' must be unmapped (no rename history)")
-    val base = Snapshots.latestVersion(fs, warehouse)
-    Snapshots.append(fs, warehouse, "identity" +
+    Snapshots.append(snap.fs, warehouse, "identity" +
         java.util.UUID.randomUUID().toString.replace("-", ""),
-      adds = Nil, removes = Nil, op = "identity", baseVersion = base,
+      adds = Nil, removes = Nil, op = "identity", baseVersion = snap.version,
       metas = Seq(
-        Snapshots.propsMetaEntry(fs, warehouse, table,
+        Snapshots.propsMetaEntry(snap, table,
           Map(s"identity.$column" -> s"always,$start")),
         hwKey(table, column) -> (start - 1L).toString),
       features = Seq(table -> "w:identityColumns"))
@@ -126,7 +119,8 @@ object Identity {
   private[graft] def syncIdentity(fs: FileSystem, warehouse: String,
                                   table: String, column: String,
                                   scanDone: () => Unit): Long = {
-    require(identityColumns(fs, warehouse, table).contains(column),
+    require(identityColumns(Snapshots.snapshot(fs, warehouse), table)
+        .contains(column),
       s"'$column' is not a declared identity column of '$table'")
     // The no-advance answer must be as race-proof as the advancing one:
     // with no commit to carry the OCC guard, a raw append landing between
@@ -145,10 +139,10 @@ object Identity {
     var spins = 0
     while (true) {
       val top0 = topId()
-      val base = top0.map(_._1)
-      val cur = highWaterMark(fs, warehouse, table, column).getOrElse(0L)
-      val acts = Snapshots.fileMeta(fs, warehouse, table).getOrElse(Nil)
-      val maxes = acts.flatMap(a => FileStats.decode(a.stats))
+      // The mark, the stats scan and the OCC base: one snapshot.
+      val snap = Snapshots.snapshot(fs, warehouse)
+      val cur = highWaterMark(snap, table, column).getOrElse(0L)
+      val maxes = snap.files(table).flatMap(a => FileStats.decode(a.stats))
         .flatMap { st =>
           // A live file that predates the column (or lacks its stats)
           // cannot carry ids — only files that STORE the column count, and
@@ -172,7 +166,8 @@ object Identity {
         // makes the sync abort and the caller retry against fresh stats.
         Snapshots.append(fs, warehouse, "idsync" +
             java.util.UUID.randomUUID().toString.replace("-", ""),
-          adds = Nil, removes = Nil, op = "syncIdentity", baseVersion = base,
+          adds = Nil, removes = Nil, op = "syncIdentity",
+          baseVersion = snap.version,
           occTables = Set(table),
           metas = Seq(hwKey(table, column) -> synced.toString))
         return synced
@@ -208,7 +203,7 @@ object Identity {
                          commitId: Option[String] = None): Long = {
     val fs = new Path(warehouse)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idCols = identityColumns(fs, warehouse, table)
+    val idCols = identityColumns(Snapshots.snapshot(fs, warehouse), table)
     require(idCols.nonEmpty,
       s"table '$table' has no declared identity column ([[declare]])")
     idCols.foreach(c => require(!df.columns.contains(c),
@@ -222,9 +217,12 @@ object Identity {
           (Snapshots.entries(fs, warehouse).exists(_.commitId == cid) ||
             Snapshots.txnApplied(fs, warehouse, cid)))
         return 0L // replay: the batch already landed, ids already minted
-      val base = Snapshots.latestVersion(fs, warehouse)
+      // The marks, the table's layout and config, and the OCC base: one
+      // snapshot per attempt.
+      val snap = Snapshots.snapshot(fs, warehouse)
+      val base = snap.version
       val marks = idCols.map(c => c ->
-        highWaterMark(fs, warehouse, table, c).getOrElse(0L)).toMap
+        highWaterMark(snap, table, c).getOrElse(0L)).toMap
       // Attempt-scoped staging (the zombie-vs-retry discipline every
       // replay-keyed path uses).
       val stagingId = s"$cid-a-${java.util.UUID.randomUUID().toString}"
@@ -235,7 +233,7 @@ object Identity {
       // append path, so it also materializes the generated expressions
       // (which may never reference identity columns — banned at declare,
       // so the order is immaterial).
-      val gens = Generated.generatedColumns(fs, warehouse, table)
+      val gens = Generated.generatedColumns(snap, table)
       gens.foreach { case (c, _) => require(!df.columns.contains(c),
         s"GENERATED ALWAYS: the write must not supply generated column '$c'") }
       val withAll = gens.foldLeft(withIds) { case (d, (c, e)) =>
@@ -245,13 +243,13 @@ object Identity {
       // partitioned identity table land unpartitioned files (reads stay
       // correct via mixed-layout handling, but pruning and blooms are
       // lost for those files).
-      val partCols = Snapshots.partitionLayout(fs, warehouse, table)
+      val partCols = snap.partitionLayout(table)
       idCols.foreach(c => require(!partCols.contains(c),
         s"identity column '$c' cannot be a partition column — the " +
           "high-water mark advances from file stats, which partition " +
           "values don't carry"))
       val writer = withAll.write
-        .options(Snapshots.bloomWriteOptionsFor(fs, warehouse, table, None))
+        .options(Snapshots.bloomOptions(snap.properties(table), None))
       (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*))
         .parquet(staging)
       val moves = TxnCommit.movesFor(fs, warehouse, stagingId, table)

@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.{DataType, NullType, StructField, StructType}
   * keep only the version and the per-table facts they need, never the
   * snapshot itself. */
 final class Snapshot private[ingest] (
-    fs: FileSystem, val warehouse: String, val version: Option[Long],
+    private[graft] val fs: FileSystem, val warehouse: String,
+    val version: Option[Long],
     private[ingest] val state: Snapshots.Folded) {
   import Snapshots.Action
 

@@ -1265,10 +1265,16 @@ object Snapshots {
         // Re-merged per ATTEMPT against current state, so a rival's
         // feature introduction between retries is never clobbered
         // (latest-wins META key — the union must be computed last).
-        val featMetas = (features ++
+        val featTags = (features ++
             dvs.map { case (t, _, _) => (t, "r:deletionVectors") })
-          .groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (t, tags) =>
-            featureMetaEntry(fs, warehouse, t, tags.map(_._2).toSet) }
+          .groupBy(_._1).toSeq.sortBy(_._1)
+        val featMetas =
+          if (featTags.isEmpty) Nil
+          else {
+            val cur = snapshot(fs, warehouse)
+            featTags.flatMap { case (t, tags) =>
+              featureMetaEntry(cur, t, tags.map(_._2).toSet) }
+          }
         writeEntry(fs, warehouse, f"$version%020d-$commitId.snap",
           (Seq(s"#OP\t$op") ++
             (if (metrics.isEmpty) Nil
@@ -1527,6 +1533,10 @@ object Snapshots {
     // the retry re-lists — listing happens inside, so each pass folds a
     // consistent view.
     retryVanished { snapshotPass(fs, warehouse, asOf) }
+
+  /** The latest [[snapshot]] of `warehouse` on the session's filesystem. */
+  private[graft] def snapshot(spark: SparkSession, warehouse: String): Snapshot =
+    snapshot(fsOf(spark, warehouse), warehouse)
 
   /** The folded state at `asOf`; None when no log exists. */
   private def stateAt(fs: FileSystem, warehouse: String, asOf: Option[Long])
@@ -1922,9 +1932,9 @@ object Snapshots {
     // table's reader features could reap live data. Refuse for the whole
     // warehouse, naming the table (the Delta stance: protocol checks
     // guard every operation, vacuum included).
-    stateAt(fs, warehouse, None).foreach(_.metas.keys
-      .filter(_.endsWith("#features")).map(_.stripSuffix("#features"))
-      .foreach(t => requireFeatures(fs, warehouse, t)))
+    val snap = snapshot(fs, warehouse)
+    snap.state.metas.keys.filter(_.endsWith("#features"))
+      .foreach(k => snap.requireFeatures(k.stripSuffix("#features")))
     val latest = all.last.version
     val now = System.currentTimeMillis()
     // Version V was superseded before the window iff some entry with a
@@ -2406,42 +2416,6 @@ object Snapshots {
       "files_deleted", "bytes_deleted")
   }
 
-  /** Summed live-row count of `table` at `asOf` from the log's stats
-    * tokens alone (deletion-vectored rows subtracted) — zero file opens,
-    * zero jobs. None when the warehouse has no log or any live file lacks
-    * a rows token (pre-stats eras must never masquerade as counted). */
-  def logRowCount(fs: FileSystem, warehouse: String, table: String,
-                  asOf: Option[Long] = None): Option[Long] =
-    snapshot(fs, warehouse, asOf).logRowCount(table)
-
-  /** The exact committed file set of `table` at `asOf` (default: latest).
-    * None when the warehouse has no snapshot log at all. */
-  def fileSet(fs: FileSystem, warehouse: String, table: String,
-              asOf: Option[Long] = None): Option[Seq[String]] =
-    partitionedFiles(fs, warehouse, table, asOf).map(_.map(_._1))
-
-  /** Committed (file, partitionSpec) pairs of `table` at `asOf` — the
-    * log-side input to partition pruning: the spec comes from the ADD line,
-    * no path parsing or directory listing at read time. */
-  def partitionedFiles(fs: FileSystem, warehouse: String, table: String,
-                       asOf: Option[Long] = None): Option[Seq[(String, String)]] =
-    fileMeta(fs, warehouse, table, asOf)
-      .map(_.map(a => (a.file, a.partition)))
-
-  /** Committed files of `table` at `asOf` with partition spec AND stats
-    * token — the log-side input to both partition pruning and data
-    * skipping. One ADD Action per live file; None without a log. */
-  def fileMeta(fs: FileSystem, warehouse: String, table: String,
-               asOf: Option[Long] = None): Option[Seq[Action]] =
-    Some(snapshot(fs, warehouse, asOf)).filter(_.version.isDefined)
-      .map(_.files(table))
-
-  /** Ordered partition-column list of the table's layout at `asOf`
-    * ([[Snapshot.partitionLayout]]; empty for flat tables). */
-  def partitionLayout(fs: FileSystem, warehouse: String, table: String,
-                      asOf: Option[Long] = None): Seq[String] =
-    snapshot(fs, warehouse, asOf).partitionLayout(table)
-
   /** Table names visible in the CURRENT snapshot: tables with live files,
     * plus declared-but-empty tables that carry properties (a catalog
     * CREATE TABLE before its first data commit). */
@@ -2529,13 +2503,6 @@ object Snapshots {
     (snap.metaValue(featuresKey(table)).map(_ => featuresKey(table)).toSeq ++
       snap.metasWithPrefix(s"$table#idhw#").map(_._1)).map(_ -> "")
 
-  /** The table's [[ColumnMapping]] visible at `asOf` — None until the
-    * first RENAME/DROP COLUMN commit. Versioned like file state: time
-    * travel below a rename resolves through the mapping of that era. */
-  def columnMapping(fs: FileSystem, warehouse: String, table: String,
-                    asOf: Option[Long] = None): Option[ColumnMapping] =
-    snapshot(fs, warehouse, asOf).columnMapping(table)
-
   // ------------------------------------------------------ table properties
 
   /** Table properties (the Delta TBLPROPERTIES analog) ride the META
@@ -2602,10 +2569,6 @@ object Snapshots {
     * Verbatim (ad-hoc) entries answer 0 — membership only; their payload
     * also carries a `@<registeredAtMs>` tail for retention, which this
     * accessor strips. */
-  def txnVersion(fs: FileSystem, warehouse: String, appId: String)
-      : Option[Long] =
-    txnVersion(snapshot(fs, warehouse), appId)
-
   private def txnVersion(snap: Snapshot, appId: String): Option[Long] =
     snap.metaValue(txnMetaKey(appId)).flatMap(_.split('@').head.toLongOption)
 
@@ -2646,11 +2609,7 @@ object Snapshots {
     * are max-guarded (a recovery replay of an older batch must never
     * regress the watermark); verbatim ids stamp their registration time
     * for [[setTxnRetention]] expiry. */
-  private[graft] def txnMetaEntry(fs: FileSystem, warehouse: String,
-                                  commitId: String): (String, String) =
-    txnMetaEntry(snapshot(fs, warehouse), commitId)
-
-  private[ingest] def txnMetaEntry(snap: Snapshot, commitId: String)
+  private[graft] def txnMetaEntry(snap: Snapshot, commitId: String)
       : (String, String) = {
     val (app, v) = txnParse(commitId)
     if (txnIsWatermark(commitId)) {
@@ -2724,25 +2683,11 @@ object Snapshots {
         s"unrecognized table-features payload: $payload")
     }
 
-  /** The table's required features at `asOf` (scope-prefixed names).
-    * "" = cleared by a drop (a re-created name starts fresh). */
-  def tableFeatures(fs: FileSystem, warehouse: String, table: String,
-                    asOf: Option[Long] = None): Set[String] =
-    snapshot(fs, warehouse, asOf).features(table)
-
   /** Thrown when a table requires features this build doesn't know —
     * deliberately NOT a subclass of the OCC/validation exceptions so
     * recovery and abort paths can route it precisely. */
   final class UnsupportedTableFeatureException(msg: String)
     extends UnsupportedOperationException(msg)
-
-  /** Refuse to serve (or, `forWrite`, to mutate) a table whose required
-    * features this build doesn't understand — fail FAST with the feature
-    * names, never silently-wrong rows. */
-  def requireFeatures(fs: FileSystem, warehouse: String, table: String,
-                      asOf: Option[Long] = None,
-                      forWrite: Boolean = false): Unit =
-    snapshot(fs, warehouse, asOf).requireFeatures(table, forWrite)
 
   private[ingest] def checkFeatures(table: String, req: Set[String],
                                     forWrite: Boolean): Unit = {
@@ -2869,14 +2814,13 @@ object Snapshots {
     }
   }
 
-  /** The META entry merging `features` into the table's required set —
-    * None when nothing is new (no redundant log lines). Hand it to
-    * [[append]]'s `metas` so the requirement lands ATOMICALLY with the
-    * commit that first exercises the feature. */
-  private[graft] def featureMetaEntry(fs: FileSystem, warehouse: String,
-                                      table: String, features: Set[String])
+  /** The META entry merging `features` into the table's required set at
+    * `snap` — None when nothing is new (no redundant log lines). [[append]]
+    * writes it in the commit that first exercises the feature. */
+  private def featureMetaEntry(snap: Snapshot, table: String,
+                               features: Set[String])
       : Option[(String, String)] = {
-    val cur = snapshot(fs, warehouse).features(table)
+    val cur = snap.features(table)
     if ((features -- cur).isEmpty) None
     else Some(featuresKey(table) -> encodeFeatures(cur ++ features))
   }
@@ -2898,23 +2842,13 @@ object Snapshots {
     }
   }
 
-  /** The table's properties visible at `asOf` (empty until the first
-    * [[setProperties]] commit). */
-  def properties(fs: FileSystem, warehouse: String, table: String,
-                 asOf: Option[Long] = None): Map[String, String] =
-    snapshot(fs, warehouse, asOf).properties(table)
-
-  /** The props META entry that would merge `updates` in — for callers
-    * composing a property change ATOMICALLY with another metadata commit
-    * (e.g. ADD COLUMN … DEFAULT: mapping + default land in one entry). */
-  private[graft] def propsMetaEntry(fs: FileSystem, warehouse: String,
-                                     table: String,
-                                     updates: Map[String, String])
+  /** The props META entry that merges `updates` into the table's
+    * properties at `snap` — for callers composing a property change
+    * ATOMICALLY with another metadata commit (e.g. ADD COLUMN … DEFAULT:
+    * mapping + default land in one entry). */
+  private[graft] def propsMetaEntry(snap: Snapshot, table: String,
+                                    updates: Map[String, String])
       : (String, String) =
-    mergedProps(snapshot(fs, warehouse), table, updates)
-
-  private def mergedProps(snap: Snapshot, table: String,
-                          updates: Map[String, String]): (String, String) =
     propsKey(table) -> encodeProps((snap.properties(table) ++ updates)
       .filter { case (_, v) => v != null && v.nonEmpty })
 
@@ -2964,13 +2898,17 @@ object Snapshots {
     * commit (a `null`/empty value unsets the key). Versioned like any
     * commit — RESTORE and time travel see the era's properties. */
   def setProperties(fs: FileSystem, warehouse: String, table: String,
-                    updates: Map[String, String]): Unit = {
-    val snap = snapshot(fs, warehouse)
-    append(fs, warehouse, java.util.UUID.randomUUID().toString,
+                    updates: Map[String, String]): Unit =
+    setProperties(snapshot(fs, warehouse), table, updates)
+
+  /** [[setProperties]] merged into, and OCC-based on, `snap` — for callers
+    * that checked a condition against that snapshot first. */
+  private[graft] def setProperties(snap: Snapshot, table: String,
+                                   updates: Map[String, String]): Unit =
+    append(snap.fs, snap.warehouse, java.util.UUID.randomUUID().toString,
       adds = Nil, removes = Nil, op = "set_properties",
       baseVersion = snap.version,
-      metas = Seq(mergedProps(snap, table, updates)))
-  }
+      metas = Seq(propsMetaEntry(snap, table, updates)))
 
   /** REPLACE TABLE's metadata tail: the table's declaration becomes
     * EXACTLY `declared` — stale properties of the old contract are
@@ -3003,7 +2941,7 @@ object Snapshots {
   def bloomWriteOptionsFor(fs: FileSystem, warehouse: String, table: String,
                            mapping: Option[ColumnMapping])
       : Map[String, String] =
-    bloomOptions(properties(fs, warehouse, table), mapping)
+    bloomOptions(snapshot(fs, warehouse).properties(table), mapping)
 
   private[ingest] def bloomOptions(props: Map[String, String],
                                    mapping: Option[ColumnMapping])

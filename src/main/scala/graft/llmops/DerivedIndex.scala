@@ -1,10 +1,9 @@
 package graft.llmops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ingest.{Compaction, FileStats, Merge, Snapshots, TxnCommit}
+import graft.ingest.{Compaction, FileStats, Merge, Snapshot, Snapshots, TxnCommit}
 
 /** The one contract under every derived index ([[SignatureStore]],
   * [[LshStore]], [[IvfStore]] flat and PQ): posting tables committed
@@ -18,6 +17,9 @@ import graft.ingest.{Compaction, FileStats, Merge, Snapshots, TxnCommit}
   * every append, sync, compaction and query checks the stamp and refuses a
   * mismatch naming the key; a table written before stamps existed is
   * refused until rebuilt. Scheme parameters are given once, at build.
+  * Each entry point reads the stamp, the live files and the postings from
+  * the one [[Snapshot]] its operation took, so a rebuild landing
+  * mid-operation is either wholly seen or not at all.
   */
 private[llmops] object DerivedIndex {
 
@@ -38,20 +40,18 @@ private[llmops] object DerivedIndex {
   final case class Postings(table: String, key: String, clusterBy: String,
                             build: Stamp)
 
-  def fsOf(spark: SparkSession, warehouse: String): FileSystem =
-    new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def recorded(snap: Snapshot, table: String): Stamp =
+    snap.properties(table).filter(_._1.startsWith("index."))
 
-  private def recorded(fs: FileSystem, warehouse: String, table: String): Stamp =
-    Snapshots.properties(fs, warehouse, table).filter(_._1.startsWith("index."))
-
-  /** `table`'s stamp; None for a table never written. A table that holds
-    * rows but no stamp predates stamped indexes and is refused. */
-  def stampOf(fs: FileSystem, warehouse: String, table: String): Option[Stamp] = {
-    val st = recorded(fs, warehouse, table)
+  /** `table`'s stamp at `snap`; None for a table never written. A table
+    * that holds rows but no stamp predates stamped indexes and is
+    * refused. */
+  def stampOf(snap: Snapshot, table: String): Option[Stamp] = {
+    val st = recorded(snap, table)
     if (st.contains(KindKey)) Some(st)
     else {
-      require(!Snapshots.fileMeta(fs, warehouse, table).exists(_.nonEmpty),
-        s"derived index '$table' under $warehouse has no build stamp " +
+      require(snap.files(table).isEmpty,
+        s"derived index '$table' under ${snap.warehouse} has no build stamp " +
           s"($KindKey unset): it was written before indexes recorded their " +
           "scheme — rebuild it")
       None
@@ -67,41 +67,38 @@ private[llmops] object DerivedIndex {
           "(an index keeps one scheme — rebuild it to change it)")
     }
 
-  /** The stamp of an index that must exist, checked against `want`. */
-  def check(fs: FileSystem, warehouse: String, table: String,
-            want: Stamp): Stamp = {
-    val st = stampOf(fs, warehouse, table).getOrElse(
+  /** The stamp of an index that must exist at `snap`, checked against
+    * `want`. */
+  def check(snap: Snapshot, table: String, want: Stamp): Stamp = {
+    val st = stampOf(snap, table).getOrElse(
       throw new IllegalArgumentException(
-        s"no derived index '$table' under $warehouse — build it first"))
+        s"no derived index '$table' under ${snap.warehouse} — build it first"))
     agree(table, st, want)
     st
   }
 
-  /** Commit `(table, stamp, rows)` parts as ONE log version. An append
-    * (`replace = false`) checks each table's stamp against its part's and
-    * stamps a table on its first write. A build (`replace = true`) swaps
-    * every current file of the tables out in the same version, OCC-guarded
-    * against concurrent writers of those tables, and re-stamps them — so a
-    * rebuild is also how an unstamped or re-schemed index is replaced. */
-  def write(spark: SparkSession, warehouse: String,
-            parts: Seq[(String, Stamp, DataFrame)],
+  /** Commit `(table, stamp, rows)` parts as ONE log version, checked
+    * against `snap`. An append (`replace = false`) checks each table's
+    * stamp against its part's and stamps a table on its first write. A
+    * build (`replace = true`) swaps every file the tables hold at `snap`
+    * out in the same version, OCC-based on `snap` against concurrent
+    * writers of those tables, and re-stamps them — so a rebuild is also how
+    * an unstamped or re-schemed index is replaced. */
+  def write(snap: Snapshot, parts: Seq[(String, Stamp, DataFrame)],
             replace: Boolean = false): Unit = {
-    val fs = fsOf(spark, warehouse)
-    val base = if (replace) Snapshots.latestVersion(fs, warehouse) else None
     val metas = parts.flatMap { case (t, st, _) =>
-      val have =
-        if (replace) Some(recorded(fs, warehouse, t)) else stampOf(fs, warehouse, t)
+      val have = if (replace) Some(recorded(snap, t)) else stampOf(snap, t)
       if (!replace) have.foreach(agree(t, _, st))
       if (have.contains(st)) None
-      else Some(Snapshots.propsMetaEntry(fs, warehouse, t, st))
+      else Some(Snapshots.propsMetaEntry(snap, t, st))
     }
     val old = if (!replace) Nil else parts.flatMap { case (t, _, _) =>
-      Snapshots.fileMeta(fs, warehouse, t).getOrElse(Seq.empty).map(_.file)
+      snap.files(t).map(_.file)
     }
-    TxnCommit.writeTables(fs, warehouse,
+    TxnCommit.writeTables(snap.fs, snap.warehouse,
       parts.map { case (t, _, rows) => t -> rows.write },
       retained = old, op = if (old.isEmpty) "append" else "merge",
-      baseVersion = base, metas = metas)
+      baseVersion = if (replace) snap.version else None, metas = metas)
   }
 
   /** Propagate corpus DML since `fromExclusive` into `p`: every touched
@@ -113,7 +110,7 @@ private[llmops] object DerivedIndex {
   def sync[A](spark: SparkSession, warehouse: String, p: Postings,
               corpusTable: String, fromExclusive: Long, idCol: String,
               payloadCol: String)(append: DataFrame => A): Option[A] = {
-    check(fsOf(spark, warehouse), warehouse, p.table, p.build)
+    check(Snapshots.snapshot(spark, warehouse), p.table, p.build)
     // The feed drives several actions — pin it once (ContextCleaner-
     // managed blocks; it is O(changed rows) small).
     val feed = Snapshots.changes(spark, warehouse, corpusTable, fromExclusive)
@@ -151,20 +148,25 @@ private[llmops] object DerivedIndex {
     * small appends erode the range layout [[probe]] depends on (a late
     * append covers the full key range); one range exchange restores
     * disjoint per-file intervals in an OCC-guarded atomic swap, and
-    * materializes away the deletion vectors [[sync]] leaves. */
+    * materializes away the deletion vectors [[sync]] leaves. The stamp
+    * check, the inputs and the OCC base come from one snapshot. */
   def compact(spark: SparkSession, warehouse: String, p: Postings,
               targetBytes: Long): Option[Compaction.Result] = {
-    check(fsOf(spark, warehouse), warehouse, p.table, p.build)
-    Compaction.compact(spark, warehouse, p.table, targetBytes = targetBytes,
-      sortBy = Seq(p.clusterBy))
+    val snap = Snapshots.snapshot(spark, warehouse)
+    check(snap, p.table, p.build)
+    Compaction.compact(spark, snap, p.table, targetBytes, minInputFiles = 2,
+      retainRemoved = true, sortBy = Seq(p.clusterBy), partitionFilter = null,
+      purgeDropped = false, maxInputBytes = Long.MaxValue,
+      maxInputFiles = Int.MaxValue)
   }
 
-  /** `p`'s postings whose clustering key is one of `keys`, reading only
-    * the files whose log-side [min,max] can hold one (nothing for none). */
-  def probe(spark: SparkSession, warehouse: String, p: Postings,
+  /** `p`'s postings at `snap` whose clustering key is one of `keys`,
+    * reading only the files whose log-side [min,max] can hold one (nothing
+    * for none). */
+  def probe(spark: SparkSession, snap: Snapshot, p: Postings,
             keys: Seq[Any]): DataFrame =
-    if (keys.isEmpty) Snapshots.read(spark, warehouse, p.table).limit(0)
-    else Snapshots.read(spark, warehouse, p.table,
+    if (keys.isEmpty) snap.read(spark, p.table).limit(0)
+    else snap.read(spark, p.table,
         dataFilter = keys.map(FileStats.eq(p.clusterBy, _)).reduce(_ or _))
       .filter(col(p.clusterBy).isInCollection(keys))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorExprs
-import graft.ingest.{FileStats, Snapshots}
+import graft.ingest.{FileStats, Snapshot, Snapshots}
 
 /** Persisted IVF index: the [[SignatureStore]] pattern applied to ANN.
   *
@@ -108,10 +108,12 @@ object IvfStore {
     * model parameters, not data, so the collect is bounded by k at any
     * corpus scale. Refused unless the table holds exactly the stamped
     * model. */
-  def loadModel(spark: SparkSession, warehouse: String): Ivf.Model = {
-    val st = DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
-      CentroidTable, Flat.build)
-    val model = Ivf.Model(Snapshots.read(spark, warehouse, CentroidTable)
+  def loadModel(spark: SparkSession, warehouse: String): Ivf.Model =
+    loadModel(spark, Snapshots.snapshot(spark, warehouse))
+
+  private def loadModel(spark: SparkSession, snap: Snapshot): Ivf.Model = {
+    val st = DerivedIndex.check(snap, CentroidTable, Flat.build)
+    val model = Ivf.Model(snap.read(spark, CentroidTable)
       .select("cell", "centroid").collect().sortBy(_.getInt(0))
       .map(_.getAs[scala.collection.Seq[Float]](1).toArray))
     DerivedIndex.agree(CentroidTable, st, coarseStamp(model))
@@ -119,10 +121,9 @@ object IvfStore {
   }
 
   /** [[loadModel]], checked against the flat postings' stamp. */
-  private def flatModel(spark: SparkSession, warehouse: String): Ivf.Model = {
-    val model = loadModel(spark, warehouse)
-    DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
-      CellTable, coarseStamp(model))
+  private def flatModel(spark: SparkSession, snap: Snapshot): Ivf.Model = {
+    val model = loadModel(spark, snap)
+    DerivedIndex.check(snap, CellTable, coarseStamp(model))
     model
   }
 
@@ -133,8 +134,9 @@ object IvfStore {
   def appendBatch(spark: SparkSession, warehouse: String, newVecs: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   targetFiles: Int = 1): Ivf.Model = {
-    val model = loadModel(spark, warehouse)
-    DerivedIndex.write(spark, warehouse, Seq((CellTable, coarseStamp(model),
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val model = loadModel(spark, snap)
+    DerivedIndex.write(snap, Seq((CellTable, coarseStamp(model),
       cellRows(vectors(newVecs, idCol, vecCol), model, targetFiles))))
     model
   }
@@ -161,7 +163,8 @@ object IvfStore {
         val b = batch.localCheckpoint(true)
         commitBatch(b.select(col(idCol), col(vecCol)), warehouse,
           corpusTable, batchId)
-        val model = flatModel(b.sparkSession, warehouse)
+        val model = flatModel(b.sparkSession,
+          Snapshots.snapshot(b.sparkSession, warehouse))
         commitBatch(cellRows(vectors(b, idCol, vecCol), model, targetFiles = 1),
           warehouse, CellTable, batchId)
         ()
@@ -198,16 +201,17 @@ object IvfStore {
     // The mirror of [[rebuildPq]]'s shared-centroid rule: a PQ posting
     // table in this warehouse references the swapped centroids' cell ids
     // through the same `ann_centroids` — refuse rather than silently
-    // orphan it (rebuildPq re-assigns BOTH flavors atomically).
-    require(!Snapshots.fileMeta(DerivedIndex.fsOf(spark, warehouse), warehouse,
-        PqCellTable).exists(_.nonEmpty),
+    // orphan it (rebuildPq re-assigns BOTH flavors atomically). The check
+    // and the swap's OCC base come from one snapshot.
+    val snap = Snapshots.snapshot(spark, warehouse)
+    require(snap.files(PqCellTable).isEmpty,
       s"this warehouse also hosts $PqCellTable, whose codes/cells reference " +
         "the shared centroids — use rebuildPq, which swaps both index " +
         "flavors in one commit")
     val vecs = vectors(corpus, idCol, vecCol)
     val model = Ivf.train(vecs, dim, k, iters)
     val st = coarseStamp(model)
-    DerivedIndex.write(spark, warehouse, Seq(
+    DerivedIndex.write(snap, Seq(
       (CentroidTable, st, centroidRows(spark, model)),
       (CellTable, st, cellRows(vecs, model, targetFiles))), replace = true)
     model
@@ -281,19 +285,18 @@ object IvfStore {
     * action — two separate loads were two jobs for data that unions into
     * one aligned projection. Refused unless both match the PQ stamp. */
   private def loadModels(spark: SparkSession,
-                         warehouse: String): (Ivf.Model, Pq.Model) = {
-    val st = DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
-      PqCellTable, Coded.build)
-    val cent = Snapshots.read(spark, warehouse, CentroidTable)
+                         snap: Snapshot): (Ivf.Model, Pq.Model) = {
+    val st = DerivedIndex.check(snap, PqCellTable, Coded.build)
+    val cent = snap.read(spark, CentroidTable)
       .select(lit(0).as("kind"), col("cell").as("i"), lit(0).as("j"),
         col("centroid"))
-    val cbs = Snapshots.read(spark, warehouse, PqCodebookTable)
+    val cbs = snap.read(spark, PqCodebookTable)
       .select(lit(1).as("kind"), col("subspace").as("i"), col("code").as("j"),
         col("centroid"))
     val (centRows, cbRows) = cent.unionByName(cbs).collect()
       .partition(_.getInt(0) == 0)
     require(centRows.nonEmpty && cbRows.nonEmpty,
-      s"$CentroidTable or $PqCodebookTable is empty under $warehouse")
+      s"$CentroidTable or $PqCodebookTable is empty under ${snap.warehouse}")
     val coarse = Ivf.Model(centRows.sortBy(_.getInt(1))
       .map(_.getAs[scala.collection.Seq[Float]](3).toArray))
     val pq = pqModelOf(cbRows)
@@ -306,8 +309,9 @@ object IvfStore {
   def appendPqBatch(spark: SparkSession, warehouse: String, newVecs: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     targetFiles: Int = 1): Unit = {
-    val (coarse, pq) = loadModels(spark, warehouse)
-    DerivedIndex.write(spark, warehouse, Seq((PqCellTable, pqStamp(coarse, pq),
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val (coarse, pq) = loadModels(spark, snap)
+    DerivedIndex.write(snap, Seq((PqCellTable, pqStamp(coarse, pq),
       codeRows(vectors(newVecs, idCol, vecCol), coarse, pq, targetFiles))))
   }
 
@@ -337,13 +341,13 @@ object IvfStore {
     // also hosts `ann_cells`, its assignments reference the centroids
     // being swapped — re-assign it under the new model in the SAME
     // commit, or a reader would see new centroids over old cell ids.
-    val hasFlat = Snapshots.fileMeta(DerivedIndex.fsOf(spark, warehouse),
-      warehouse, CellTable).exists(_.nonEmpty)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val hasFlat = snap.files(CellTable).nonEmpty
     val vecs = vectors(corpus, idCol, vecCol)
     val coarse = Ivf.train(vecs, dim, k, iters)
     val pq = Pq.train(vecs, dim, m, ksub, iters)
     val (cs, ps) = (coarseStamp(coarse), pqStamp(coarse, pq))
-    DerivedIndex.write(spark, warehouse, Seq(
+    DerivedIndex.write(snap, Seq(
       (CentroidTable, cs, centroidRows(spark, coarse)),
       (PqCodebookTable, ps, codebookRows(spark, pq)),
       (PqCellTable, ps, codeRows(vecs, coarse, pq, targetFiles))) ++
@@ -367,20 +371,29 @@ object IvfStore {
     * so a vec_id-clustered or bloom-carrying corpus opens only the files
     * that hold shortlist rows. nprobe = k with a refine that covers every
     * candidate degenerates to exact brute force — the oracle-checkable
-    * configuration. */
+    * configuration. Models, postings and corpus are all read at one
+    * snapshot of the warehouse. */
   def pqTopK(spark: SparkSession, warehouse: String, queries: DataFrame,
              k: Int, nprobe: Int = 2, refine: Int = 4,
              corpusTable: String = "embeddings",
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    pqTopK(spark, Snapshots.snapshot(spark, warehouse), queries, k, nprobe,
+      refine, corpusTable, idCol, vecCol)
+
+  /** [[pqTopK]] at the pinned `snap`. */
+  private[graft] def pqTopK(spark: SparkSession, snap: Snapshot,
+                            queries: DataFrame, k: Int, nprobe: Int,
+                            refine: Int, corpusTable: String, idCol: String,
+                            vecCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (coarse, pq) = loadModels(spark, warehouse)
+    val (coarse, pq) = loadModels(spark, snap)
     val np = math.min(nprobe, coarse.k)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
     val probed = probedCells(q, "q_vec", coarse, np)
     if (probed.isEmpty)
       return q.limit(0).select(col("q_id"), col("q_id").as("vec_id"),
         lit(0.0).as("sim"), lit(0L).as("rnk"))
-    val postings = DerivedIndex.probe(spark, warehouse, Coded, probed)
+    val postings = DerivedIndex.probe(spark, snap, Coded, probed)
     // Full-refine shortcut (r22), full probe only: below it every query
     // must see its OWN nprobe nearest cells, while `postings` is the union
     // over the batch — the windowed path joins per query on cell. When
@@ -396,7 +409,7 @@ object IvfStore {
     // and stays the serving configuration.
     if (np == coarse.k && k.toLong * refine >= Int.MaxValue.toLong) {
       val cand = postings.select(col("vec_id"))
-        .join(Snapshots.read(spark, warehouse, corpusTable)
+        .join(snap.read(spark, corpusTable)
           .select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
           Seq("vec_id"))
       val exact = broadcast(q).join(cand, col("q_id") =!= col("vec_id"))
@@ -433,9 +446,9 @@ object IvfStore {
       .limit(MaxRerankPruneIds + 1).collect().map(_.get(0))
     val corpus0 =
       if (ids.nonEmpty && ids.length <= MaxRerankPruneIds)
-        Snapshots.read(spark, warehouse, corpusTable,
+        snap.read(spark, corpusTable,
           dataFilter = ids.map(v => FileStats.eq(idCol, v)).reduce(_ or _))
-      else Snapshots.read(spark, warehouse, corpusTable)
+      else snap.read(spark, corpusTable)
     val exact = broadcast(shortlist)
       .join(corpus0.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
         Seq("vec_id"))
@@ -453,14 +466,16 @@ object IvfStore {
     * min(|queries|·nprobe, k) ints — are collected to drive log-side file
     * skipping, the same bounded-scalars-to-the-driver shape as
     * [[graft.ingest.Merge]]'s candidate bounds. nprobe = k scans every
-    * cell → exact top-k (the oracle-checkable configuration). */
+    * cell → exact top-k (the oracle-checkable configuration). Model and
+    * postings are read at one snapshot of the warehouse. */
   def topK(spark: SparkSession, warehouse: String, queries: DataFrame,
            k: Int, nprobe: Int = 2,
            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val model = flatModel(spark, warehouse)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val model = flatModel(spark, snap)
     val np = math.min(nprobe, model.k)
     val q = vectors(queries, idCol, vecCol)
-    Ivf.topK(q, DerivedIndex.probe(spark, warehouse, Flat,
+    Ivf.topK(q, DerivedIndex.probe(spark, snap, Flat,
       probedCells(q, "embedding", model, np)), model, k, np)
   }
 

@@ -3,7 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ingest.Snapshots
+import graft.ingest.{Snapshot, Snapshots}
 
 /** Persisted LSH ANN index — the [[IvfStore]] pattern for the hyperplane
   * family. The bucket function is deterministic (pseudo-random planes
@@ -46,16 +46,19 @@ object LshStore {
                  dim: Int, numPlanes: Int = 8, targetFiles: Int = 8,
                  idCol: String = "vec_id", vecCol: String = "embedding"): Params = {
     val p = Params(dim, numPlanes)
-    DerivedIndex.write(spark, warehouse, Seq((BucketTable, p.stamp,
-      bucketRows(corpus, p, idCol, vecCol, targetFiles))), replace = true)
+    DerivedIndex.write(Snapshots.snapshot(spark, warehouse), Seq((BucketTable,
+      p.stamp, bucketRows(corpus, p, idCol, vecCol, targetFiles))),
+      replace = true)
     p
   }
 
   /** The index's hashing params, from its build stamp — a log read, no
     * Spark job. */
-  def loadParams(spark: SparkSession, warehouse: String): Params = {
-    val st = DerivedIndex.check(DerivedIndex.fsOf(spark, warehouse), warehouse,
-      BucketTable, Buckets.build)
+  def loadParams(spark: SparkSession, warehouse: String): Params =
+    loadParams(Snapshots.snapshot(spark, warehouse))
+
+  private def loadParams(snap: Snapshot): Params = {
+    val st = DerivedIndex.check(snap, BucketTable, Buckets.build)
     Params(DerivedIndex.param(st, "dim"), DerivedIndex.param(st, "numPlanes"))
   }
 
@@ -64,8 +67,9 @@ object LshStore {
   def appendBatch(spark: SparkSession, warehouse: String, newVecs: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   targetFiles: Int = 1): Params = {
-    val p = loadParams(spark, warehouse)
-    DerivedIndex.write(spark, warehouse, Seq((BucketTable, p.stamp,
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val p = loadParams(snap)
+    DerivedIndex.write(snap, Seq((BucketTable, p.stamp,
       bucketRows(newVecs, p, idCol, vecCol, targetFiles))))
     p
   }
@@ -95,12 +99,14 @@ object LshStore {
     * log-side file skipping over the index; the corpus table contributes
     * zero bytes. `probeAll` scans every bucket → exact top-k (the
     * oracle-checkable configuration, ≡ brute force). `maxBucket` drops
-    * oversized buckets (skew guard) except under `probeAll`. */
+    * oversized buckets (skew guard) except under `probeAll`. Params and
+    * buckets are read at one snapshot of the warehouse. */
   def topK(spark: SparkSession, warehouse: String, queries: DataFrame, k: Int,
            multiProbe: Boolean = true, probeAll: Boolean = false,
            maxBucket: Int = 100000,
            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val p = loadParams(spark, warehouse)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val p = loadParams(snap)
     val qBase = queries
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("b0", Similarity.lshBucket(col("q_vec"), p.dim, p.numPlanes))
@@ -114,12 +120,12 @@ object LshStore {
             "i -> CAST(b0 AS BIGINT) ^ shiftleft(CAST(1 AS BIGINT), i)))")).as("bucket"))
       else qBase.select(col("q_id"), col("q_vec"), col("b0").as("bucket"))
     val indexed =
-      if (probeAll) Snapshots.read(spark, warehouse, BucketTable)
+      if (probeAll) snap.read(spark, BucketTable)
       else {
         val probed = qb.select("bucket").distinct()
           .collect().map(_.getLong(0)).sorted
         Similarity.dropLargeBuckets(
-          DerivedIndex.probe(spark, warehouse, Buckets, probed.toSeq),
+          DerivedIndex.probe(spark, snap, Buckets, probed.toSeq),
           Seq("bucket"), maxBucket)
       }
     val scored = broadcast(qb).join(indexed, Seq("bucket"))

@@ -63,7 +63,7 @@ object SignatureStore {
                   idCol: String, textCol: String,
                   numPerms: Int = 64, numBands: Int = 16,
                   sigTable: String = "doc_signatures"): Unit =
-    DerivedIndex.write(spark, warehouse, Seq((sigTable,
+    DerivedIndex.write(Snapshots.snapshot(spark, warehouse), Seq((sigTable,
       stamp(numPerms, numBands),
       bandRows(batch, idCol, textCol, numPerms, numBands))))
 
@@ -88,7 +88,7 @@ object SignatureStore {
                       sigTable: String = "doc_signatures"): Unit = {
     val p = sigs(sigTable)
     val (numPerms, numBands) = scheme(sigTable, DerivedIndex.check(
-      DerivedIndex.fsOf(spark, warehouse), warehouse, sigTable, p.build))
+      Snapshots.snapshot(spark, warehouse), sigTable, p.build))
     DerivedIndex.sync(spark, warehouse, p, docTable, fromExclusive, idCol,
         textCol)(fresh =>
       appendBatch(spark, warehouse, fresh, idCol, textCol, numPerms,
@@ -112,7 +112,9 @@ object SignatureStore {
     * Per-trigger cost is the incremental contract: O(batch) signature
     * compute + O(candidates) corpus re-read via log-side bounds pruning —
     * the corpus text is never re-scanned, which is what makes a
-    * long-running 100 TB ingest loop viable. */
+    * long-running 100 TB ingest loop viable. A trigger takes two snapshots:
+    * one for the band commit's stamp (checked, or written with the first
+    * batch), one for the pair query, which must see that commit. */
   def streamingIncrementalDedup(
       docs: DataFrame, warehouse: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -129,15 +131,15 @@ object SignatureStore {
         // The batch feeds three actions — pin it once (checkpoint blocks
         // are ContextCleaner-managed, same stance as the dedup joins).
         val b = batch.localCheckpoint(true)
-        val fs = DerivedIndex.fsOf(b.sparkSession, warehouse)
         commitBatch(b, warehouse, docTable, batchId)
-        val st = DerivedIndex.stampOf(fs, warehouse, sigTable)
+        val snap = Snapshots.snapshot(b.sparkSession, warehouse)
+        val st = DerivedIndex.stampOf(snap, sigTable)
         val (numPerms, numBands) = st.fold((64, 16))(scheme(sigTable, _))
         commitBatch(bandRows(b, idCol, textCol, numPerms, numBands),
           warehouse, sigTable, batchId,
           if (st.nonEmpty) Nil
-          else Seq(Snapshots.propsMetaEntry(fs, warehouse,
-            sigTable, stamp(numPerms, numBands))))
+          else Seq(Snapshots.propsMetaEntry(snap, sigTable,
+            stamp(numPerms, numBands))))
         // The store now includes this batch's bands; pairs against the
         // full corpus-so-far, emitted exactly once per pair.
         commitBatch(
@@ -159,17 +161,18 @@ object SignatureStore {
     * stamp. The corpus text is never scanned wholesale: only files whose
     * log-side [min,max] on `idCol` overlap the candidate-id bounds are
     * opened, and only candidate rows are shingled for the exact verify.
-    * Output: (doc_a, doc_b, jaccard), doc_a < doc_b. */
+    * Output: (doc_a, doc_b, jaccard), doc_a < doc_b. The stamp, the band
+    * table and the corpus text are read at one snapshot. */
   def incrementalNearDupPairs(spark: SparkSession, warehouse: String,
                               docTable: String, newDocs: DataFrame,
                               idCol: String, textCol: String,
                               threshold: Double = 0.6, maxBucket: Int = 1000,
                               sigTable: String = "doc_signatures"): DataFrame = {
     MinHash.requireIntegralId(newDocs, idCol)
-    val (numPerms, numBands) = scheme(sigTable, DerivedIndex.check(
-      DerivedIndex.fsOf(spark, warehouse), warehouse, sigTable,
-      sigs(sigTable).build))
-    val banded = Snapshots.read(spark, warehouse, sigTable)
+    val snap = Snapshots.snapshot(spark, warehouse)
+    val (numPerms, numBands) = scheme(sigTable,
+      DerivedIndex.check(snap, sigTable, sigs(sigTable).build))
+    val banded = snap.read(spark, sigTable)
     // localCheckpoint(eager=false), not cache(): the batch is reused
     // several times below, but a long-running ingest loop calls this per
     // batch — cached plans would pin block-manager memory until an
@@ -202,7 +205,7 @@ object SignatureStore {
         if (bounds.isNullAt(0)) // no corpus endpoints: new-vs-new pairs only
           MinHash.withShingleHashes(freshDocs.limit(0), "doc_id", "text")
         else MinHash.withShingleHashes(
-          Snapshots.read(spark, warehouse, docTable,
+          snap.read(spark, docTable,
               dataFilter = FileStats.between(idCol, bounds.get(0), bounds.get(1)))
             .select(col(idCol).as("doc_id"), col(textCol).as("text"))
             .join(corpusIds, "doc_id"),

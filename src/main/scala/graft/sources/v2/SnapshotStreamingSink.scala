@@ -174,14 +174,21 @@ private[v2] class SnapshotWriteCore(
   protected def fs = new Path(warehouse)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  // The table's column mapping and engine-managed columns, read at write
+  // start from ONE snapshot (only these facts are kept, not the snapshot).
+  private val (mapping, idNames, gens) = {
+    val snap = Snapshots.snapshot(fs, warehouse)
+    (snap.columnMapping(table), graft.ingest.Identity.identityColumns(snap, table),
+      graft.ingest.Generated.generatedColumns(snap, table))
+  }
+
   // Column-mapped (renamed) tables: files store PHYSICAL names; the write
   // carries the LOGICAL schema the caller reads. Translate field names
   // once (captured at write start — physical names never change across
   // renames). Partition columns must be unmapped: the k=v path and the
   // log tuple would otherwise disagree with the logical reader.
   protected val nameMap: Map[String, String] =
-    Snapshots.columnMapping(fs, warehouse, table)
-      .map(_.cols.toMap).getOrElse(Map.empty)
+    mapping.map(_.cols.toMap).getOrElse(Map.empty)
   partCols.foreach(c => require(nameMap.getOrElse(c, c) == c,
     s"partitionBy column '$c' is renamed (physical '${nameMap(c)}') — " +
       "partitioned writes to column-mapped tables require " +
@@ -197,7 +204,7 @@ private[v2] class SnapshotWriteCore(
   // BATCH write still refuses (its subclass enforces it) — batch callers
   // route through Identity.appendWithIdentity.
   protected val identityCols: Seq[(String, Int)] =
-    graft.ingest.Identity.identityColumns(fs, warehouse, table).map { c =>
+    idNames.map { c =>
       val idx = schema.fieldNames.indexOf(c)
       require(idx >= 0,
         s"table '$table' declares GENERATED ALWAYS AS IDENTITY column " +
@@ -221,7 +228,6 @@ private[v2] class SnapshotWriteCore(
       : Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences}
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    val gens = graft.ingest.Generated.generatedColumns(fs, warehouse, table)
     gens.map { case (c, e) =>
       val idx = schema.fieldNames.indexOf(c)
       require(idx >= 0,
@@ -263,15 +269,16 @@ private[v2] class SnapshotWriteCore(
     }
     val staged = messages.collect {
       case m: SnapshotWriteMessage => m.files }.flatten
-    // OCC anchor before the live-file set (same ordering rule as the V1
-    // batch overwrite): a commit racing in between has version > base and
-    // aborts this write instead of slipping past the REMOVE set unflagged.
-    val base = if (truncateMode || dynamicMode)
-      Snapshots.latestVersion(fs, warehouse) else None
+    // The OCC base and the live-file set come from one snapshot: a commit
+    // landing after it has version > base and aborts this write instead of
+    // slipping past the REMOVE set unflagged.
+    val snap =
+      if (truncateMode || dynamicMode) Some(Snapshots.snapshot(fs, warehouse))
+      else None
+    val base = snap.flatMap(_.version)
+    val live = snap.fold(Seq.empty[Snapshots.Action])(_.files(table))
     val existing =
-      if (truncateMode)
-        Snapshots.fileMeta(fs, warehouse, table).map(_.map(_.file))
-          .getOrElse(Seq.empty)
+      if (truncateMode) live.map(_.file)
       else if (dynamicMode) {
         // Replace only the partitions this job's data touches.
         val specs = staged.map(_._2).toSet
@@ -279,8 +286,7 @@ private[v2] class SnapshotWriteCore(
           "dynamic partition overwrite requires a partitioned table — " +
             "unpartitioned data would silently replace everything; use " +
             "plain INSERT OVERWRITE (truncate) for that")
-        Snapshots.fileMeta(fs, warehouse, table).getOrElse(Seq.empty)
-          .filter(a => specs.contains(a.partition)).map(_.file)
+        live.filter(a => specs.contains(a.partition)).map(_.file)
       } else Seq.empty
     if (staged.isEmpty && existing.isEmpty) {
       // Empty write over an empty (or append-mode) table: no version, no
@@ -456,12 +462,13 @@ case class SnapshotWriterFactory(conf: SerializableConfiguration,
     val (idBase, idVersion) =
       if (identityCols.isEmpty) (Nil, None)
       else {
-        val fs = new Path(warehouse).getFileSystem(conf.value)
-        val v = Snapshots.latestVersion(fs, warehouse)
+        // The marks and their version: one snapshot.
+        val snap = Snapshots.snapshot(
+          new Path(warehouse).getFileSystem(conf.value), warehouse)
         val bases = identityCols.map { case (c, i) =>
-          i -> (graft.ingest.Identity.highWaterMark(fs, warehouse, table, c)
+          i -> (graft.ingest.Identity.highWaterMark(snap, table, c)
             .getOrElse(0L) + 1L) }
-        (bases, Some(v.getOrElse(-1L)))
+        (bases, Some(snap.version.getOrElse(-1L)))
       }
     // taskId in the name keeps retried attempts collision-free; only the
     // committed attempt's message reaches the driver.

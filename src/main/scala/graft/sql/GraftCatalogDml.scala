@@ -981,18 +981,17 @@ case class GraftMergeSyncCommand(warehouse: String, table: String,
           col(k0)))
         .drop("_graft_key_n")
     }
+    // The target's keys and partition layout: one snapshot.
+    val snap = graft.ingest.Snapshots.snapshot(session, warehouse)
     val result =
       if (matchedUpdate && notMatchedInsert) guarded(src)
       else if (matchedUpdate) {
-        val targetKeys = graft.ingest.Snapshots
-          .read(session, warehouse, table)
+        val targetKeys = snap.read(session, table)
           .select(keyCols.map(col): _*).distinct()
         guarded(src.join(targetKeys, keyCols, "left_semi"))
       } else null
     if (result != null) {
-      val partCols = graft.ingest.Snapshots.partitionLayout(
-        new org.apache.hadoop.fs.Path(warehouse).getFileSystem(
-          session.sparkContext.hadoopConfiguration), warehouse, table)
+      val partCols = snap.partitionLayout(table)
       val w = result.write.format("graft-snapshots")
         .option("warehouse", warehouse).option("table", table)
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1000,23 +999,16 @@ case class GraftMergeSyncCommand(warehouse: String, table: String,
        else w.option("partitionBy", partCols.mkString(","))).save()
     } else {
       // NMBS DELETE alone: drop target keys absent from the source.
-      val gone = graft.ingest.Snapshots.read(session, warehouse, table)
+      val gone = snap.read(session, table)
         .select(keyCols.map(col): _*).distinct()
         .join(src.select(keyCols.map(col): _*).distinct(),
           keyCols, "left_anti")
       graft.ingest.Merge.deleteKeys(session, warehouse, table, gone, keyCols)
     }
-    // rows_after from the log's stats tokens (DV counts subtracted) — a
-    // MERGE must not end with a full count job at 100 TB; -1 when any
-    // file lacks a rows token.
-    val fsW = new org.apache.hadoop.fs.Path(warehouse).getFileSystem(
-      session.sparkContext.hadoopConfiguration)
-    val files = graft.ingest.Snapshots.fileMeta(fsW, warehouse, table)
-      .getOrElse(Seq.empty)
-    val rowsAfter = files.foldLeft(Option(0L)) { (acc, a) =>
-      for (t <- acc; st <- graft.ingest.FileStats.decode(a.stats))
-        yield t + math.max(0L, st.rows - a.dvCount)
-    }.getOrElse(-1L)
-    Seq(org.apache.spark.sql.Row(rowsAfter))
+    // rows_after from the log's stats tokens at the version this MERGE
+    // produced (DV counts subtracted) — a MERGE must not end with a full
+    // count job at 100 TB; -1 when any file lacks a rows token.
+    Seq(org.apache.spark.sql.Row(graft.ingest.Snapshots
+      .snapshot(session, warehouse).logRowCount(table).getOrElse(-1L)))
   }
 }

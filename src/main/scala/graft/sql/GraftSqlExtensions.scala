@@ -262,7 +262,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         .getFileSystem(session.sparkContext.hadoopConfiguration)
       fs.exists(new Path(wh, "_snapshots")) &&
         fs.exists(new Path(wh, table)) &&
-        Snapshots.fileMeta(fs, wh, table).exists(_.nonEmpty)
+        Snapshots.snapshot(fs, wh).files(table).nonEmpty
     } catch { case scala.util.control.NonFatal(_) => false }
   private val VacuumRe =
     raw"(?is)\s*VACUUM\s+SNAPSHOTS\s*(?:IN\s+(\w+)\s*)?(?:RETAIN\s+(\d+)\s+VERSIONS\s*)?(?:MAX\s+AGE\s+(\d+)\s+HOURS\s*)?(DRY\s+RUN\s*)?".r
@@ -567,15 +567,16 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         if scala.util.Try(resolveTarget(rawTable)).toOption
           .exists { case (w, t) => isGraftTableIn(w, t) } =>
       // A read, materialized at parse time like SHOW TBLPROPERTIES —
-      // everything comes from the log (no footer opens, no data).
+      // everything comes from one snapshot of the log (no footer opens, no
+      // data), so every column of the row describes the same version.
       val (ddWh, table) = resolveTarget(rawTable)
       val fs = new Path(ddWh).getFileSystem(
         session.sparkContext.hadoopConfiguration)
-      val acts = Snapshots.fileMeta(fs, ddWh, table).getOrElse(Nil)
+      val snap = Snapshots.snapshot(fs, ddWh)
+      val acts = snap.files(table)
       val stats = acts.map(a => graft.ingest.FileStats.decode(a.stats))
       val numRows = stats.map(_.map(_.rows).getOrElse(-1L))
-      val partCols = Snapshots.partitionColumns(acts.map(_.partition))
-      val props = Snapshots.properties(fs, ddWh, table)
+      val props = snap.properties(table)
       // Sizes from the log's stats tokens; only pre-size-token files pay a
       // getFileStatus RPC.
       val bytes = acts.zip(stats).map { case (a, st) =>
@@ -587,18 +588,17 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       Seq((table, acts.size.toLong, bytes,
           if (numRows.exists(_ < 0)) -1L else numRows.sum,
           acts.count(_.dv.nonEmpty).toLong,
-          partCols.mkString(","),
+          snap.partitionLayout(table).mkString(","),
           props.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(","),
           // The protocol gate's required-feature set (Delta's
           // minReaderVersion/tableFeatures column): what a reader/writer
           // must support to open this table.
-          Snapshots.tableFeatures(fs, ddWh, table).toSeq.sorted
-            .mkString(","),
+          snap.features(table).toSeq.sorted.mkString(","),
           // Identity allocation state (col=last-minted-id) — the mark the
           // next appendWithIdentity / sink epoch mints above, otherwise
           // invisible outside a SYNC IDENTITY run.
-          graft.ingest.Identity.identityColumns(fs, ddWh, table).map(c =>
-            s"$c=${graft.ingest.Identity.highWaterMark(fs, ddWh, table, c)
+          graft.ingest.Identity.identityColumns(snap, table).map(c =>
+            s"$c=${graft.ingest.Identity.highWaterMark(snap, table, c)
               .getOrElse(-1L)}").mkString(",")))
         .toDF("table", "num_files", "size_bytes", "num_rows",
           "files_with_deletion_vectors", "partition_columns", "properties",
@@ -623,9 +623,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     case ShowPropsRe(table) if isGraftPropsTable(table) =>
       // A read, not a command — materialized at parse time like SNAPSHOT
       // HISTORY (driver-sized: a table has a handful of properties).
-      val props = Snapshots.properties(
-        new Path(warehouse).getFileSystem(
-          session.sparkContext.hadoopConfiguration), warehouse, table)
+      val props = Snapshots.snapshot(session, warehouse).properties(table)
       import session.implicits._
       props.toSeq.sortBy(_._1).toDF("key", "value")
         .queryExecution.logical
@@ -702,10 +700,11 @@ case class GraftAddConstraintCommand(warehouse: String, table: String,
   override def run(session: SparkSession): Seq[Row] = {
     import graft.ingest.{FileStats, TxnCommit}
     val ck = TxnCommit.parseCheck(checkSql) // reject unsupported shapes now
-    val fs = new Path(warehouse)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
-    val props = Snapshots.properties(fs, warehouse, table)
-    require(props.getOrElse(s"constraint.check.$name", "").isEmpty,
+    // The checks, the merged properties and the commit's OCC base: one
+    // snapshot, so a property change landing after it aborts the commit.
+    val snap = Snapshots.snapshot(session, warehouse)
+    require(snap.properties(table)
+        .getOrElse(s"constraint.check.$name", "").isEmpty,
       s"constraint '$name' already exists on '$table' — DROP CONSTRAINT " +
         "first")
     val who = (c: String, what: String) =>
@@ -713,15 +712,14 @@ case class GraftAddConstraintCommand(warehouse: String, table: String,
     val notNull = ck.notNull.map(c => c -> who(c, "NOT NULL"))
     val bounds = ck.bounds.map { case (c, lo, hi) =>
       (c, lo, hi, who(c, "bounds")) }
-    Snapshots.fileMeta(fs, warehouse, table).getOrElse(Seq.empty)
-      .foreach { a =>
-        val st = FileStats.decode(a.stats).getOrElse(
-          throw new IllegalArgumentException(
-            s"cannot add constraint '$name': live file ${a.file} has no " +
-              "stats token — existing data is unverifiable"))
-        TxnCommit.checkStats(st, a.file, notNull, bounds)
-      }
-    Snapshots.setProperties(fs, warehouse, table,
+    snap.files(table).foreach { a =>
+      val st = FileStats.decode(a.stats).getOrElse(
+        throw new IllegalArgumentException(
+          s"cannot add constraint '$name': live file ${a.file} has no " +
+            "stats token — existing data is unverifiable"))
+      TxnCommit.checkStats(st, a.file, notNull, bounds)
+    }
+    Snapshots.setProperties(snap, table,
       Map(s"constraint.check.$name" -> checkSql))
     Nil
   }
@@ -736,18 +734,16 @@ case class GraftDropConstraintCommand(warehouse: String, table: String,
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] = {
-    val fs = new Path(warehouse)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
+    val snap = Snapshots.snapshot(session, warehouse)
     val key = s"constraint.check.$name"
-    val exists = Snapshots.properties(fs, warehouse, table)
-      .get(key).exists(_.nonEmpty)
+    val exists = snap.properties(table).get(key).exists(_.nonEmpty)
     if (!exists) {
       if (ifExists) return Nil
       throw new IllegalArgumentException(
         s"no constraint '$name' on table '$table' — " +
           "use DROP CONSTRAINT IF EXISTS to no-op")
     }
-    Snapshots.setProperties(fs, warehouse, table, Map(key -> ""))
+    Snapshots.setProperties(snap, table, Map(key -> ""))
     Nil
   }
 }
@@ -816,9 +812,9 @@ case class GraftInsertCommand(warehouse: String, table: String,
   override def run(session: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions.{col => c, lit}
     val src = session.sql(querySql)
-    val fs = new Path(warehouse)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
-    val target = Snapshots.read(session, warehouse, table).schema
+    // The table's schema and partition layout: one snapshot.
+    val snap = Snapshots.snapshot(session, warehouse)
+    val target = snap.read(session, table).schema
     val renamed = if (cols.isEmpty) {
       require(src.schema.length == target.length,
         s"INSERT arity mismatch: query produces ${src.schema.length} " +
@@ -842,9 +838,7 @@ case class GraftInsertCommand(warehouse: String, table: String,
         else df.withColumn(f.name, lit(null).cast(f.dataType))
       }.select(target.fieldNames.map(c).toIndexedSeq: _*)
     }
-    val partCols = Snapshots.partitionColumns(
-      Snapshots.fileMeta(fs, warehouse, table)
-        .map(_.map(_.partition)).getOrElse(Nil))
+    val partCols = snap.partitionLayout(table)
     val writer = renamed.write.format("graft-snapshots")
       .option("warehouse", warehouse).option("table", table)
       // graft.cdf.overwrite=true: INSERT OVERWRITE also stages a change
@@ -872,9 +866,7 @@ case class GraftCtasCommand(warehouse: String, table: String,
                             ifNotExists: Boolean) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] = {
-    val fs = new Path(warehouse)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
-    val exists = Snapshots.fileMeta(fs, warehouse, table).exists(_.nonEmpty)
+    val exists = Snapshots.snapshot(session, warehouse).files(table).nonEmpty
     if (exists && ifNotExists) return Seq.empty
     if (exists) throw new IllegalStateException(
       s"table '$table' already exists under $warehouse — use CREATE TABLE " +
@@ -983,20 +975,18 @@ case class GraftMergeCommand(warehouse: String, table: String,
   override def run(session: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions.col
     import graft.ingest.Merge
-    val fs = new Path(warehouse)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
+    // The source and the target's keys are read at one snapshot.
+    val snap = Snapshots.snapshot(session, warehouse)
     val src = sourcePlan match {
       // Catalog MERGE hands the analyzed source plan directly.
       case Some(p) =>
         org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(session, p)
       case None =>
-        if (Snapshots.fileMeta(fs, warehouse, source).exists(_.nonEmpty))
-          Snapshots.read(session, warehouse, source)
+        if (snap.files(source).nonEmpty) snap.read(session, source)
         else session.table(source)
     }
     def targetKeys =
-      Snapshots.read(session, warehouse, table)
-        .select(keyCols.map(col): _*).distinct()
+      snap.read(session, table).select(keyCols.map(col): _*).distinct()
     val res = (matchedUpdate, matchedDelete, notMatchedInsert) match {
       case (true, false, true) =>
         Merge.upsert(session, warehouse, table, src, keyCols)

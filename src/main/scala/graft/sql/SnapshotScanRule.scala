@@ -1,8 +1,10 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Alias
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -28,7 +30,13 @@ import graft.sources.v2.{GraftCatalogTable, SnapshotBatchRelation}
   * built inner plan, keeping both sides' ids distinct). Sessions without
   * the extension still work through the V1 fallback and the per-file DSv2
   * scan. Snapshot pinning is unchanged: each leaf resolved its version at
-  * load and every splice serves that same version. */
+  * load and every splice serves that same version.
+  *
+  * An unfiltered, ungrouped `count(*)` over a leaf is answered from that
+  * leaf's pinned log row count (stats tokens, deletion vectors
+  * subtracted) — zero files opened, as the V2 aggregate pushdown this
+  * rule runs ahead of would; a leaf whose count the log cannot prove is
+  * spliced as usual. */
 case class SnapshotScanRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -53,24 +61,50 @@ case class SnapshotScanRule(session: SparkSession) extends Rule[LogicalPlan] {
     // commands are untouched: a V2WriteCommand's target table is not among
     // its children, only its query is.
     plan.transformDown {
-      case Filter(cond, leaf @ Leaf(planFor)) =>
-        Filter(cond, splice(leaf, planFor(FileStats.fromExpression(cond).orNull)))
-      case leaf @ Leaf(planFor) => splice(leaf, planFor(null))
+      case CountStar(out, Leaf(leaf)) if leaf.logRowBound.isDefined =>
+        LocalRelation(Seq(out), Seq(InternalRow(leaf.logRowBound.get)))
+      case Filter(cond, l @ Leaf(leaf)) =>
+        Filter(cond, splice(l, leaf.planFor(FileStats.fromExpression(cond).orNull)))
+      case l @ Leaf(leaf) => splice(l, leaf.planFor(null))
     }
   }
 
-  /** A snapshot-table leaf's own `planFor`. */
+  /** A snapshot-table leaf's own plan builder and pinned row bound. */
+  private final class Pinned(val planFor: FileStats.Pred => LogicalPlan,
+                             bound: => Option[Long]) {
+    lazy val logRowBound: Option[Long] = bound
+  }
+
   private final class SnapshotLeaf(shielded: java.util.Set[LogicalPlan]) {
-    def unapply(p: LogicalPlan): Option[FileStats.Pred => LogicalPlan] =
+    def unapply(p: LogicalPlan): Option[Pinned] =
       p match {
         case lr: LogicalRelation => lr.relation match {
-          case r: SnapshotBatchRelation => Some(r.planFor)
+          case r: SnapshotBatchRelation => Some(new Pinned(r.planFor, r.logRowBound))
           case _ => None
         }
         case r: DataSourceV2Relation if !shielded.contains(r) => r.table match {
-          case t: GraftCatalogTable => Some(t.planFor)
+          case t: GraftCatalogTable => Some(new Pinned(t.planFor, t.logRowBound))
           case _ => None
         }
+        case _ => None
+      }
+  }
+
+  /** `SELECT count(*)` (or `count(<literal>)`) with no grouping and no
+    * filter, over a leaf or its column-pruned projection: the output
+    * attribute and the leaf. */
+  private object CountStar {
+    def unapply(p: LogicalPlan): Option[(AttributeReference, LogicalPlan)] =
+      p match {
+        case Aggregate(Nil, Seq(a @ Alias(AggregateExpression(
+            Count(args), Complete, false, None, _), _)), child, _)
+            if args.forall(e => e.isInstanceOf[Literal] && !e.nullable) =>
+          val leaf = child match {
+            case Project(_, l) => l
+            case l => l
+          }
+          Some((AttributeReference(a.name, a.dataType, nullable = false)(
+            exprId = a.exprId, qualifier = a.qualifier), leaf))
         case _ => None
       }
   }

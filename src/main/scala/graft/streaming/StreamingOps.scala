@@ -95,7 +95,8 @@ object StreamingOps {
     // allocation path under the SAME epoch commitId, so the stream keeps
     // exactly-once (a crash-replayed trigger re-finds the commitId and
     // mints nothing) and ids stay monotone across epochs.
-    if (graft.ingest.Identity.identityColumns(fs, warehouse, table).nonEmpty) {
+    val snap = Snapshots.snapshot(fs, warehouse)
+    if (graft.ingest.Identity.identityColumns(snap, table).nonEmpty) {
       graft.ingest.Identity.appendWithIdentity(spark, warehouse, table, df,
         commitId = Some(commitId))
       // Engine-managed appends stage under the table's own k=v partition
@@ -108,8 +109,7 @@ object StreamingOps {
     }
     // Generated tables: the engine materializes the expressions — same
     // exactly-once epoch key, same discipline as identity.
-    if (graft.ingest.Generated.generatedColumns(fs, warehouse, table)
-        .nonEmpty) {
+    if (graft.ingest.Generated.generatedColumns(snap, table).nonEmpty) {
       graft.ingest.Generated.appendGenerated(spark, warehouse, table, df,
         commitId = Some(commitId))
       // Set.empty (all specs), same reason as the identity branch above.

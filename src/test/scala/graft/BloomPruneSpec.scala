@@ -75,7 +75,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ADD lines carry bloom bitsets only for opted-in writes") {
     val w = wh("tok")
     build(w, bloom = true, files = 1)
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     val st = FileStats.decode(acts.head.stats).get
     assert(st.blooms.keySet == Set("doc_id"),
       s"expected a doc_id bloom, got ${st.blooms.keySet}")
@@ -83,7 +83,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w2 = wh("tok-plain")
     build(w2, bloom = false, files = 1)
     val st2 = FileStats.decode(
-      Snapshots.fileMeta(fs, w2, "docs").get.head.stats).get
+      Snapshots.snapshot(fs, w2).files("docs").head.stats).get
     assert(st2.blooms.isEmpty, "un-opted write must not grow the log token")
   }
 
@@ -136,7 +136,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
     build(w, bloom = true, files = 4, n = 200)
     graft.ingest.Compaction.compact(spark, w, "docs",
       sortBy = Seq("doc_id"), targetBytes = 512L * 1024 * 1024)
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     assert(acts.nonEmpty)
     assert(acts.forall(a =>
       FileStats.decode(a.stats).exists(_.blooms.contains("doc_id"))),
@@ -179,7 +179,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("doc_id") === "doc-0013").collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("doc-0013"))
     // Pruning: only the one bloom-positive file survives the log-side cut.
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     val pred = FileStats.eq("doc_id", "doc-0013")
     val kept = acts.filter(a =>
       FileStats.mayMatch(FileStats.decode(a.stats), pred))
@@ -257,7 +257,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       TxnCommit.commit(fs, w, cid, moves)
       TxnCommit.publish(fs, w, cid, moves)
     }
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     assert(acts.forall(a => FileStats.decode(a.stats)
       .exists(_.dicts.get("category").exists(_.values.size == 1))),
       "each file should carry its 1-value category dictionary")
@@ -304,7 +304,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       TxnCommit.commit(fs, w, cid, moves)
       TxnCommit.publish(fs, w, cid, moves)
     }
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     assert(acts.size == files)
     val stats = acts.map(a => FileStats.decode(a.stats).get)
     Seq("d9", "d18", "d38").foreach { c =>
@@ -379,7 +379,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
     Snapshots.setProperties(fs, w, "docs",
       Map("bloom.columns" -> "doc_id", "bloom.ndv" -> "200000"))
     build(w, bloom = false) // property already set; build() publishes via it
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     acts.foreach { a =>
       val st = FileStats.decode(a.stats).get
       assert(st.blooms.isEmpty, "payload must not ride the log line")
@@ -413,7 +413,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // SIDECAR with the data (the manifest is authoritative).
     TxnCommit.recover(fs, w)
     val st = FileStats.decode(
-      Snapshots.fileMeta(fs, w, "docs").get.head.stats).get
+      Snapshots.snapshot(fs, w).files("docs").head.stats).get
     assert(st.bloomRefs.contains("doc_id"))
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$w/${st.bloomRefs("doc_id").path}")),
@@ -454,7 +454,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
     TxnCommit.commit(fs, w, cid, moves)
     TxnCommit.publish(fs, w, cid, moves)
 
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     assert(acts.size == 2, s"expected one file per partition, got ${acts.size}")
     val refs = acts.map(a =>
       FileStats.decode(a.stats).get.bloomRefs("doc_id").path)
@@ -530,7 +530,7 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       TxnCommit.commit(fs, w, cid, moves)
       TxnCommit.publish(fs, w, cid, moves)
     }
-    val acts = Snapshots.fileMeta(fs, w, "docs").get
+    val acts = Snapshots.snapshot(fs, w).files("docs")
     assert(acts.forall(a =>
       FileStats.decode(a.stats).exists(_.blooms.get("score")
         .exists(_.tag == "i64"))), "long column should carry an i64 bloom")

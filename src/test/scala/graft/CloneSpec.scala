@@ -115,7 +115,7 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Snapshots.read(spark, w, "src").count() == 3)
     // Divergence 3: compaction pulls everything into the clone's dir.
     Compaction.compact(spark, w, "dst")
-    assert(Snapshots.fileMeta(fs, w, "dst").get
+    assert(Snapshots.snapshot(fs, w).files("dst")
       .forall(_.file.startsWith(s"$w/dst/")))
     assert(Snapshots.read(spark, w, "dst").select("id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 3L, 4L))
@@ -159,7 +159,7 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The clone carries DV files, so it needs the DV reader feature — a
     // clone WITHOUT it would dodge the protocol gate and serve deleted
     // rows to naive readers.
-    assert(Snapshots.tableFeatures(fs, w, "dst")
+    assert(Snapshots.snapshot(fs, w).features("dst")
       .contains("r:deletionVectors"))
     // Identity marks ride too: the clone continues where the source left
     // off, never re-minting the cloned rows' ids.
@@ -176,9 +176,9 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // DROP clears the name's features and marks — a re-created table of
     // the same name starts fresh (no stale refusals, ids from 1).
     Snapshots.dropTable(fs, w, "dst")
-    assert(Snapshots.tableFeatures(fs, w, "dst").isEmpty)
+    assert(Snapshots.snapshot(fs, w).features("dst").isEmpty)
     Snapshots.dropTable(fs, w, "iddst")
-    assert(graft.ingest.Identity.highWaterMark(fs, w, "iddst", "row_id")
+    assert(graft.ingest.Identity.highWaterMark(Snapshots.snapshot(fs, w), "iddst", "row_id")
       .isEmpty)
   }
 
@@ -189,7 +189,7 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
     pub(w, "src", (0L until 10L).map(i => (i, s"x$i")).toDF("id", "v"))
     pub(w, "src", (10L until 20L).map(i => (i, s"x$i")).toDF("id", "v"))
     Snapshots.cloneTable(spark, w, "src", "dst")
-    val shared = Snapshots.fileMeta(fs, w, "dst").get.map(_.file)
+    val shared = Snapshots.snapshot(fs, w).files("dst").map(_.file)
     // The source compacts away its originals; retention window elapsed.
     Compaction.compact(spark, w, "src")
     Snapshots.vacuum(fs, w, keepVersions = 1, minAgeMs = 0L)
@@ -304,9 +304,9 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!commitIds(wd).exists(_.startsWith("drop")),
         "an aborted drop must commit nothing")
     else
-      assert(Snapshots.fileMeta(rfs, wd, "t").get.isEmpty,
+      assert(Snapshots.snapshot(rfs, wd).files("t").isEmpty,
         "the drop committed while the rival's file stays live: " +
-          Snapshots.fileMeta(rfs, wd, "t").get.map(_.file))
+          Snapshots.snapshot(rfs, wd).files("t").map(_.file))
 
     val wc = whR("raceClone")
     add(wc, "c0", "src")
@@ -316,7 +316,7 @@ class CloneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(commitIds(wc).contains("rival"), "the rival commit must land")
     assert(cloned.nonEmpty,
       "the clone committed on top of a concurrently created dst: " +
-        Snapshots.fileMeta(rfs, wc, "dst").get.map(_.file))
+        Snapshots.snapshot(rfs, wc).files("dst").map(_.file))
     assert(!commitIds(wc).exists(_.startsWith("clone")),
       "an aborted clone must commit nothing")
   }

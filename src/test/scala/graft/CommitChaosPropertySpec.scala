@@ -237,7 +237,7 @@ class CommitChaosPropertySpec extends AnyFunSuite with BeforeAndAfterAll
         override def run(): Unit = { start.await()
           FlakyStoreFs.pct.set(0) // pooled thread may have been a writer
           while (!stop.get()) {
-            try assert(Snapshots.fileSet(fs, w, "t").exists(_.nonEmpty))
+            try assert(Snapshots.snapshot(fs, w).files("t").nonEmpty)
             catch {
               // Documented TRANSIENT: a live writer mid-entry-pour past
               // the (shrunk) grace — the contract says re-drive, so the
@@ -333,26 +333,26 @@ class CommitChaosPropertySpec extends AnyFunSuite with BeforeAndAfterAll
     t.claimState match {
       case 0 => // own stale claim: sweep breaks it and heals
         plantLock(fs, w, v, cid)
-        assert(Snapshots.fileSet(fs, w, "t").nonEmpty)
+        assert(Snapshots.snapshot(fs, w).version.nonEmpty)
         assert(!fs.exists(torn), "own-claim torn residue must self-heal")
       case 1 => // no claim: heals directly
         fs.delete(new Path(s"$w/_snapshots/${"%020d".format(v)}.lock"), false)
-        assert(Snapshots.fileSet(fs, w, "t").nonEmpty)
+        assert(Snapshots.snapshot(fs, w).version.nonEmpty)
         assert(!fs.exists(torn), "unclaimed torn residue must self-heal")
       case 2 => // rival-held, rival absent: loud error, nothing deleted...
         plantLock(fs, w, v, s"rival-${UUID.randomUUID()}")
         intercept[Snapshots.TornLogEntryException](
-          Snapshots.fileSet(fs, w, "t"))
+          Snapshots.snapshot(fs, w))
         assert(fs.exists(torn), "rival-claimed residue must not be swept")
         // ...until the rival dies (claim removed): then it heals.
         fs.delete(new Path(s"$w/_snapshots/${"%020d".format(v)}.lock"), false)
-        assert(Snapshots.fileSet(fs, w, "t").nonEmpty)
+        assert(Snapshots.snapshot(fs, w).version.nonEmpty)
         assert(!fs.exists(torn))
       case _ => // double-dead: holder recursion sweeps both
         val cid2 = s"dead2-${UUID.randomUUID()}"
         val torn2 = plantTorn(fs, w, v, cid2)
         plantLock(fs, w, v, cid2)
-        assert(Snapshots.fileSet(fs, w, "t").nonEmpty)
+        assert(Snapshots.snapshot(fs, w).version.nonEmpty)
         assert(!fs.exists(torn) && !fs.exists(torn2),
           "double-dead residue must fully self-heal")
     }
@@ -443,7 +443,7 @@ class CommitChaosPropertySpec extends AnyFunSuite with BeforeAndAfterAll
           s"duplicate versions: $versions (schedule $schedule)")
         assert(versions == (versions.min to versions.max),
           s"version hole: $versions (schedule $schedule)")
-        val files = Snapshots.fileSet(fs, w, "t").get.toSet
+        val files = Snapshots.snapshot(fs, w).files("t").map(_.file).toSet
         val expected = appended.size + torns // each torn phase post-appends
         assert(files.size == expected,
           s"lost rows: ${files.size} of $expected files live " +

@@ -70,7 +70,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dataFiles(w, "t") == before,
       "merge-on-read must not add, remove, or rewrite data files")
     assert(ids(w, "t") == (0L until 20L).filterNot(_ % 5 == 0))
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.count(_.dv.nonEmpty) == 2)
     assert(meta.filter(_.dv.nonEmpty).map(_.dvCount).sum == 4)
     // Vector parquets live under _dv/<table>/ and are manifest-published.
@@ -89,7 +89,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r2 = Merge.deleteWhereDv(spark, w, "t", col("id") === 5)
     assert(r2.rowsMatched == 1)
     assert(ids(w, "t") == Seq(2L, 3L, 4L, 6L, 7L, 8L, 9L))
-    val att = Snapshots.fileMeta(fs, w, "t").get.filter(_.dv.nonEmpty)
+    val att = Snapshots.snapshot(fs, w).files("t").filter(_.dv.nonEmpty)
     assert(att.size == 1 && att.head.dvCount == 3)
     // Idempotence: already-deleted rows are invisible to the matcher.
     val r3 = Merge.deleteWhereDv(spark, w, "t", col("id") < 2)
@@ -105,7 +105,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = Merge.deleteWhereDv(spark, w, "t", col("id") >= 8)
     assert(r.rowsMatched == 4)
     assert(r.filesDvAttached == 0, "whole-file delete should REMOVE instead")
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.size == 1 && meta.forall(_.dv.isEmpty))
     assert(ids(w, "t") == (0L until 8L))
     // ... and the removed file still serves time travel.
@@ -175,7 +175,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     Merge.deleteWhereDv(spark, w, "t", col("id") % 3 === 0)
     val res = Compaction.compact(spark, w, "t").get
     assert(res.filesBefore == 2)
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.forall(_.dv.isEmpty), "compaction outputs carry no vectors")
     assert(ids(w, "t") == (0L until 20L).filterNot(_ % 3 == 0))
   }
@@ -188,7 +188,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Compaction.compact(spark, w, "t").isEmpty)
     val res = Compaction.compact(spark, w, "t", purgeDropped = true)
     assert(res.nonEmpty)
-    assert(Snapshots.fileMeta(fs, w, "t").get.forall(_.dv.isEmpty))
+    assert(Snapshots.snapshot(fs, w).files("t").forall(_.dv.isEmpty))
     assert(ids(w, "t") == (0L until 10L).filterNot(_ == 4L))
   }
 
@@ -206,7 +206,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     Merge.upsert(spark, w, "t",
       Seq((2L, "two")).toDF("id", "name"), Seq("id"))
     assert(ids(w, "t") == (0L until 9L))
-    assert(Snapshots.fileMeta(fs, w, "t").get.forall(_.dv.isEmpty),
+    assert(Snapshots.snapshot(fs, w).files("t").forall(_.dv.isEmpty),
       "the CoW rewrite replaced the vectored file — attachment must die")
   }
 
@@ -230,7 +230,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex.getMessage.contains("injected crash"))
     TxnCommit.recover(fs, w2)
     assert(ids(w2, "t") == (2L until 10L))
-    assert(Snapshots.fileMeta(fs, w2, "t").get.count(_.dv.nonEmpty) == 1)
+    assert(Snapshots.snapshot(fs, w2).files("t").count(_.dv.nonEmpty) == 1)
   }
 
   test("deleteKeysDv: keyed merge-on-read delete with stats-pruned candidates") {
@@ -245,7 +245,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.rowsMatched == 2)
     assert(r.filesScanned == 1)
     assert(ids(w, "t") == (0L until 20L).filterNot(i => i == 2L || i == 5L))
-    assert(Snapshots.fileMeta(fs, w, "t").get.count(_.dv.nonEmpty) == 1)
+    assert(Snapshots.snapshot(fs, w).files("t").count(_.dv.nonEmpty) == 1)
     // A narrow key set prunes to one candidate file.
     val r2 = Merge.deleteKeysDv(spark, w, "t", Seq(11L).toDF("id"), Seq("id"))
     assert(r2.rowsMatched == 1 && r2.filesScanned == 1)
@@ -266,7 +266,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.filesAdded == 1, "A's survivors re-added as one file")
     assert(r.filesDvAttached == 1, "file B stays vectored")
     assert(ids(w, "t") == Seq(8L, 9L) ++ (10L until 20L).filterNot(_ == 15L))
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.size == 2) // survivors file + file B
     assert(meta.count(_.dv.nonEmpty) == 1)
     assert(meta.filter(_.dv.nonEmpty).head.dvCount == 1L)
@@ -347,7 +347,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Partition-scoped compaction purges only that partition's vectors.
     Compaction.compact(spark, w, "t",
       partitionFilter = m => m.get("dt").contains("d one"))
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.filter(_.partition.contains("d%20one")).forall(_.dv.isEmpty) ||
       meta.filter(_.partition.contains("d one")).forall(_.dv.isEmpty))
     assert(ids(w, "t") == (0L until 20L).filterNot(_ % 5 == 0))
@@ -436,9 +436,9 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = wh("dv-vacuum")
     publishBatch(w, "t", 0 until 10)
     Merge.deleteWhereDv(spark, w, "t", col("id") === 0) // vector 1
-    val v1 = Snapshots.fileMeta(fs, w, "t").get.filter(_.dv.nonEmpty).head.dvPath
+    val v1 = Snapshots.snapshot(fs, w).files("t").filter(_.dv.nonEmpty).head.dvPath
     Merge.deleteWhereDv(spark, w, "t", col("id") === 1) // vector 2 supersedes
-    val v2 = Snapshots.fileMeta(fs, w, "t").get.filter(_.dv.nonEmpty).head.dvPath
+    val v2 = Snapshots.snapshot(fs, w).files("t").filter(_.dv.nonEmpty).head.dvPath
     assert(v1 != v2)
     // Both exist pre-vacuum (v1 serves time travel to version 1).
     assert(fs.exists(new Path(v1)) && fs.exists(new Path(v2)))

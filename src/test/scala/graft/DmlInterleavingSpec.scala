@@ -273,7 +273,7 @@ class DmlInterleavingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Snapshots.append(fs, w, f"adhocg$g%02d", adds = Nil, removes = Nil,
         op = "meta", baseVersion = base,
         metas = (1 to 20).map(j =>
-          Snapshots.txnMetaEntry(fs, w, f"adhocld${g * 20 + j}%04d")))
+          Snapshots.txnMetaEntry(Snapshots.snapshot(fs, w), f"adhocld${g * 20 + j}%04d")))
     }
     assert(Snapshots.txnApplied(fs, w, "adhocld0001") &&
       Snapshots.txnApplied(fs, w, "adhocld1000"))
@@ -491,7 +491,7 @@ class DmlInterleavingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base2 = Snapshots.latestVersion(fs, w)
     Snapshots.append(fs, w, "modernreg", adds = Nil, removes = Nil,
       op = "meta", baseVersion = base2,
-      metas = Seq(Snapshots.txnMetaEntry(fs, w, "job-7")))
+      metas = Seq(Snapshots.txnMetaEntry(Snapshots.snapshot(fs, w), "job-7")))
     assert(Snapshots.txnApplied(fs, w, "job-7"))
     assert(!Snapshots.txnApplied(fs, w, "job-3"),
       "verbatim membership must not infer order from the suffix")

@@ -51,7 +51,7 @@ class FileGranularOccSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def stageCompaction(w: String)
       : (String, Seq[TxnCommit.Move], Seq[String], Option[Long]) = {
     val base = Snapshots.latestVersion(fs, w)
-    val inputs = Snapshots.fileSet(fs, w, "t").get
+    val inputs = Snapshots.snapshot(fs, w).files("t").map(_.file)
     val cid = java.util.UUID.randomUUID().toString
     spark.read.parquet(inputs: _*).coalesce(1)
       .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/t")
@@ -71,7 +71,7 @@ class FileGranularOccSpec extends AnyFunSuite with BeforeAndAfterAll {
       op = "compact", baseVersion = base, fileGranularOcc = true)
     // Both survive: the compacted 0-9 plus the appended 10-14, no doubles.
     assert(ids(w) == (0L until 15L))
-    assert(Snapshots.fileSet(fs, w, "t").get.size == 2)
+    assert(Snapshots.snapshot(fs, w).files("t").size == 2)
   }
 
   test("two compactions of the same files still conflict") {
@@ -113,14 +113,14 @@ class FileGranularOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     Merge.deleteWhereDv(spark, w, "t", col("id") === 7) // touches file B
     // A delete on file A with the pre-DV base version: file-granular OCC
     // must let it through (disjoint files)...
-    val metaA = Snapshots.fileMeta(fs, w, "t").get
+    val metaA = Snapshots.snapshot(fs, w).files("t")
       .filter(a => a.dv.isEmpty).map(a => "t" -> a.file)
     Snapshots.append(fs, w, "occA",
       adds = Nil, removes = metaA, op = "merge",
       baseVersion = before, fileGranularOcc = true)
     // ...while the same commit against file B's path (already DV'd since
     // `before`) must conflict.
-    val fileB = Snapshots.fileMeta(fs, w, "t").get.collectFirst {
+    val fileB = Snapshots.snapshot(fs, w).files("t").collectFirst {
       case a if a.dv.nonEmpty => a.file }
     // file B carries the DV — a rewrite that read it pre-DV is stale.
     fileB.foreach { f =>

@@ -322,7 +322,7 @@ class FileStatsSpec extends AnyFunSuite with BeforeAndAfterAll with GenChecks {
     // Four disjoint key ranges → four files with disjoint [min,max].
     (0 until 4).foreach(i => publishKv(w,
       (i * 10 until i * 10 + 10).map(k => k.toLong -> s"v$k")))
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.size == 4)
     val decoded = meta.map(a => FileStats.decode(a.stats))
     assert(decoded.forall(_.isDefined), s"missing stats: $meta")
@@ -350,11 +350,11 @@ class FileStatsSpec extends AnyFunSuite with BeforeAndAfterAll with GenChecks {
     // 17 commits crosses the CheckpointInterval (16) so the anchored fold
     // serves stats from the .ckpt lines, not just .snap deltas.
     (0 until 17).foreach(i => publishKv(w, Seq(i.toLong -> s"v$i")))
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.size == 17 && meta.forall(a => FileStats.decode(a.stats).isDefined))
     // Compaction (sorted) republishes through the same stats collection.
     graft.ingest.Compaction.compact(spark, w, "t", sortBy = Seq("id"))
-    val meta2 = Snapshots.fileMeta(fs, w, "t").get
+    val meta2 = Snapshots.snapshot(fs, w).files("t")
     assert(meta2.nonEmpty && meta2.forall(a => FileStats.decode(a.stats).isDefined))
     assert(Snapshots.read(spark, w, "t",
       dataFilter = FileStats.between("id", 3L, 3L)).count() == 17) // one file now
@@ -453,7 +453,7 @@ class FileStatsSpec extends AnyFunSuite with BeforeAndAfterAll with GenChecks {
         TxnCommit.publish(fs, w, cid, moves)
       }
       pub(0 until 6); pub(6 until 12)
-      val meta = Snapshots.fileMeta(fs, w, "t").get
+      val meta = Snapshots.snapshot(fs, w).files("t")
       val stats = meta.map(a => FileStats.decode(a.stats).get)
       // MILLIS files carry micros-unit ts stats (predicates compare in
       // micros); decimal stats are the unscaled ints rescaled by
@@ -501,7 +501,7 @@ class FileStatsSpec extends AnyFunSuite with BeforeAndAfterAll with GenChecks {
       TxnCommit.publish(fs, w, cid, moves)
     }
     pub(-10); pub(0); pub(10)
-    val meta = Snapshots.fileMeta(fs, w, "t").get
+    val meta = Snapshots.snapshot(fs, w).files("t")
     assert(meta.size == 3)
     val stats = meta.map(a => FileStats.decode(a.stats).get)
     // Prove each column rode the intended carrier, then that ALL carry

@@ -64,7 +64,7 @@ class GeneratedSpec extends AnyFunSuite with BeforeAndAfterAll {
       TxnCommit.commit(fs, w, cid, mv))
     assert(ex.getMessage.contains("total"), ex.getMessage)
     // Writer feature stamped: an unaware build must refuse to write.
-    assert(Snapshots.tableFeatures(fs, w, "t").contains("w:generatedColumns"))
+    assert(Snapshots.snapshot(fs, w).features("t").contains("w:generatedColumns"))
     assertInvariant(w, "t", "total", "price * qty")
   }
 
@@ -356,7 +356,7 @@ class GeneratedSpec extends AnyFunSuite with BeforeAndAfterAll {
     // DROPPING the generated column clears its declaration in the same
     // commit — later appends need (and accept) no generated column.
     SchemaEvolution.dropColumn(spark, w, "t", "total")
-    assert(Generated.generatedColumns(fs, w, "t").isEmpty)
+    assert(Generated.generatedColumns(Snapshots.snapshot(fs, w), "t").isEmpty)
     val cid = java.util.UUID.randomUUID().toString
     Seq((2L, 5.0, 1L)).toDF("key", "price", "qty").coalesce(1)
       .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/t")
@@ -408,7 +408,7 @@ class GeneratedSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql(
         "ALTER TABLE t ADD COLUMN day INT GENERATED ALWAYS AS " +
           "((CAST(ts AS INT) % 7))")
-      assert(Generated.generatedColumns(fs, w, "t") ==
+      assert(Generated.generatedColumns(Snapshots.snapshot(fs, w), "t") ==
         Seq("day" -> "(CAST(ts AS INT) % 7)"))
       Generated.appendGenerated(spark, w, "t",
         Seq((1L, 20L), (2L, 13L)).toDF("id", "ts"))
@@ -426,13 +426,50 @@ class GeneratedSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Snapshots.read(spark, w, "t", mergeSchema = true).count() == 4)
       // Clone carries the property + feature; appends there materialize.
       Snapshots.cloneTable(spark, w, "t", "t2")
-      assert(Generated.generatedColumns(fs, w, "t2").nonEmpty)
-      assert(Snapshots.tableFeatures(fs, w, "t2")
+      assert(Generated.generatedColumns(Snapshots.snapshot(fs, w), "t2").nonEmpty)
+      assert(Snapshots.snapshot(fs, w).features("t2")
         .contains("w:generatedColumns"))
       Generated.appendGenerated(spark, w, "t2",
         Seq((4L, 15L)).toDF("id", "ts"))
       assert(Snapshots.read(spark, w, "t2", mergeSchema = true)
         .filter("id = 4").select("day").head().getInt(0) == 1)
     } finally spark.conf.unset("spark.graft.warehouse")
+  }
+
+  test("schema DDL checks and commits at one snapshot: one walk before its commit") {
+    val s0 = spark
+    import s0.implicits._
+    /** Log-list operations `ddl` performs before its version claim, in
+      * walks of `w`'s one-commit log (one snapshot's listing). */
+    def walksBeforeClaim(w: String)(ddl: => Unit): Double = {
+      val cid = java.util.UUID.randomUUID().toString
+      Seq((1L, 2.0, 3L)).toDF("id", "price", "qty").coalesce(1)
+        .write.parquet(s"${TxnCommit.stagingDir(w, cid)}/t")
+      val mv = TxnCommit.movesFor(fs, w, cid, "t")
+      TxnCommit.commit(fs, w, cid, mv)
+      TxnCommit.publish(fs, w, cid, mv)
+      Snapshots.logLists.set(0)
+      Snapshots.snapshot(fs, w)
+      val walk = Snapshots.logLists.get
+      val atClaim = new java.util.concurrent.atomic.AtomicLong(-1L)
+      Snapshots.testPostClaim =
+        Some((_, _) => atClaim.compareAndSet(-1L, Snapshots.logLists.get))
+      Snapshots.logLists.set(0)
+      try ddl finally Snapshots.testPostClaim = None
+      atClaim.get.toDouble / walk
+    }
+    // Each is the operation's one snapshot plus append's own tail walk; a
+    // column-mapping commit writes the table's own key, so append's write
+    // gate adds its snapshot.
+    val walks = Map(
+      "identity" -> walksBeforeClaim(wh("walkId"))(graft.ingest.Identity
+        .declare(spark, wh("walkId"), "t", "row_id")),
+      "generated" -> walksBeforeClaim(wh("walkGen"))(Generated
+        .declare(spark, wh("walkGen"), "t", "total", "price * qty")),
+      "addColumn" -> walksBeforeClaim(wh("walkAdd"))(graft.ingest
+        .SchemaEvolution.addColumn(spark, wh("walkAdd"), "t", "tag",
+          Some("'x'"))))
+    assert(walks == Map("identity" -> 2.0, "generated" -> 2.0,
+      "addColumn" -> 3.0), walks)
   }
 }

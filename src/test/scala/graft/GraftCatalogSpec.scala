@@ -68,8 +68,8 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       "rid BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 10), " +
       "price DOUBLE, qty BIGINT, " +
       "total DOUBLE GENERATED ALWAYS AS (price * qty))")
-    assert(Identity.identityColumns(fs, wh, "em") == Seq("rid"))
-    assert(Generated.generatedColumns(fs, wh, "em").map(_._1) == Seq("total"))
+    assert(Identity.identityColumns(Snapshots.snapshot(fs, wh), "em") == Seq("rid"))
+    assert(Generated.generatedColumns(Snapshots.snapshot(fs, wh), "em").map(_._1) == Seq("total"))
     // The one legal append path mints ids AND materializes expressions.
     Identity.appendWithIdentity(spark, wh, "em",
       Seq((2.0, 3L), (5.0, 2L)).toDF("price", "qty").coalesce(1))
@@ -138,7 +138,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT count(*) FROM graft.gp WHERE bucket <> id % 4")
       .head().getLong(0) == 0)
     // Partition pruning: a bucket filter plans a quarter of the files.
-    val all = Snapshots.fileMeta(fs, wh, "gp").get
+    val all = Snapshots.snapshot(fs, wh).files("gp")
     assert(all.map(_.partition).distinct.size == 4, all.map(_.partition))
     val one = spark.sql("SELECT id FROM graft.gp WHERE bucket = 2")
       .queryExecution.executedPlan.toString
@@ -148,7 +148,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // materialized bucket routes to k=v dirs, keeping the pruning.
     graft.ingest.Generated.appendGenerated(spark, wh, "gp",
       (40L until 48L).map(i => (i, s"v$i")).toDF("id", "v"))
-    val after = Snapshots.fileMeta(fs, wh, "gp").get
+    val after = Snapshots.snapshot(fs, wh).files("gp")
     assert(after.forall(_.partition.startsWith("bucket=")),
       after.map(_.partition).distinct.mkString(", "))
     assert(spark.sql(
@@ -169,12 +169,12 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("CREATE TABLE graft.owt PARTITIONED BY (p) " +
       "TBLPROPERTIES ('graft.optimizeWrite'='true') AS " +
       "SELECT /*+ REPARTITION(4) */ id, p FROM ow_src")
-    val afterCtas = Snapshots.fileMeta(fs, wh, "owt").get.size
+    val afterCtas = Snapshots.snapshot(fs, wh).files("owt").size
     assert(afterCtas == 2,
       s"expected one file per partition value from CTAS, got $afterCtas")
     spark.sql("INSERT INTO graft.owt " +
       "SELECT /*+ REPARTITION(4) */ id + 200, p FROM ow_src")
-    val afterInsert = Snapshots.fileMeta(fs, wh, "owt").get.size
+    val afterInsert = Snapshots.snapshot(fs, wh).files("owt").size
     assert(afterInsert == 4,
       s"expected two more files from INSERT, got $afterInsert")
     assert(spark.sql("SELECT count(*) FROM graft.owt").head().getLong(0)
@@ -222,7 +222,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).createOrReplaceTempView("big")
     spark.sql("CREATE TABLE graft.dv2 AS SELECT id, v FROM big")
     spark.sql("DELETE FROM graft.dv2 WHERE id = 7")
-    assert(Snapshots.fileMeta(fs, wh, "dv2").get.exists(_.dv.nonEmpty),
+    assert(Snapshots.snapshot(fs, wh).files("dv2").exists(_.dv.nonEmpty),
       "a 1-percent delete must attach a deletion vector, not rewrite")
     assert(spark.sql("SELECT count(*) FROM graft.dv2").head().getLong(0) == 99)
     assert(spark.sql("SELECT count(*) FROM graft.dv2 WHERE id = 7")
@@ -243,7 +243,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT * FROM graft.alt").columns.toSeq ==
       Seq("id", "label"))
     spark.sql("ALTER TABLE graft.alt SET TBLPROPERTIES ('team'='data-eng')")
-    assert(Snapshots.properties(fs, wh, "alt").get("team").contains("data-eng"))
+    assert(Snapshots.snapshot(fs, wh).properties("alt").get("team").contains("data-eng"))
   }
 
   test("per-file catalog reads serve initial-defaults for pre-add files") {
@@ -301,7 +301,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(perFile == expect, s"per-file path diverged: $perFile")
     assert(batch == expect, s"batch path diverged: $batch")
     // The stored property is the parser's canonical spelling.
-    val props = Snapshots.properties(fs, wh, "dlt")
+    val props = Snapshots.snapshot(fs, wh).properties("dlt")
     assert(props.get("default.dq").contains("'legacy'"), props)
   }
 
@@ -373,7 +373,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // DROP then vacuum: the dropped table's data files are physically
     // reclaimed once the retention window passes them.
-    val dataFiles = Snapshots.fileMeta(fs, wh, "tr").get.map(_.file)
+    val dataFiles = Snapshots.snapshot(fs, wh).files("tr").map(_.file)
     assert(dataFiles.nonEmpty)
     spark.sql("DROP TABLE graft.tr")
     Snapshots.vacuum(fs, wh, keepVersions = 1, minAgeMs = 0L)
@@ -415,7 +415,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s0.implicits._
     Seq((1L, "p")).toDF("id", "v").createOrReplaceTempView("pgsrc")
     spark.sql("CREATE TABLE graft.pg AS SELECT id, v FROM pgsrc")
-    val files = Snapshots.fileMeta(fs, wh, "pg").get.map(_.file)
+    val files = Snapshots.snapshot(fs, wh).files("pg").map(_.file)
     assert(files.nonEmpty && files.forall(f => fs.exists(new Path(f))))
     spark.sql("DROP TABLE graft.pg PURGE")
     assert(!spark.catalog.tableExists("graft.pg"))
@@ -446,7 +446,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // A zero-copy clone shares pm's files; siblings make the sweep walk.
     Snapshots.cloneTable(spark, wh, "pm", "pm_clone")
     spark.sql("CREATE TABLE graft.pm_other AS SELECT 2L AS id")
-    val shared = Snapshots.fileMeta(fs, wh, "pm").get.map(_.file)
+    val shared = Snapshots.snapshot(fs, wh).files("pm").map(_.file)
     spark.sql("DROP TABLE graft.pm PURGE")
     // Shared files survive (the clone still references them) and the
     // clone still reads.
@@ -461,11 +461,11 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s0.implicits._
     spark.sql("CREATE TABLE graft.wd AS " +
       "SELECT CAST(1 AS INT) AS id, CAST(1.5 AS FLOAT) AS x, 'a' AS tag")
-    val filesBefore = Snapshots.fileMeta(fs, wh, "wd").get.map(_.file).toSet
+    val filesBefore = Snapshots.snapshot(fs, wh).files("wd").map(_.file).toSet
     spark.sql("ALTER TABLE graft.wd ALTER COLUMN id TYPE BIGINT")
     spark.sql("ALTER TABLE graft.wd ALTER COLUMN x TYPE DOUBLE")
     // Metadata-only: zero files moved.
-    assert(Snapshots.fileMeta(fs, wh, "wd").get.map(_.file).toSet == filesBefore)
+    assert(Snapshots.snapshot(fs, wh).files("wd").map(_.file).toSet == filesBefore)
     val sch = spark.table("graft.wd").schema
     assert(sch("id").dataType == org.apache.spark.sql.types.LongType &&
       sch("x").dataType == org.apache.spark.sql.types.DoubleType, sch)
@@ -672,6 +672,21 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(api.collect().toSeq == cat.collect().toSeq)
   }
 
+  test("a declared partition column of an empty catalog table is never renamed or dropped") {
+    spark.sql(
+      "CREATE TABLE graft.emptypart (id BIGINT, h STRING) PARTITIONED BY (h)")
+    Seq("ALTER TABLE graft.emptypart RENAME COLUMN h TO hh",
+        "ALTER TABLE graft.emptypart DROP COLUMN h").foreach { ddl =>
+      val e = intercept[Exception](spark.sql(ddl))
+      val why = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
+      assert(why.contains("cannot") && why.contains("partition column 'h'"),
+        why)
+    }
+    assert(Snapshots.snapshot(fs, wh).partitionLayout("emptypart") == Seq("h"))
+    assert(spark.table("graft.emptypart").columns.toSeq == Seq("id", "h"))
+  }
+
   test("a version-pinned catalog source bounds its merge size from the log") {
     spark.conf.set("spark.sql.catalog.gsb",
       classOf[graft.sources.v2.GraftCatalog].getName)
@@ -800,7 +815,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // A deletion vector keeps count(*) exact (subtracted) but bails
     // min/max back to the real scan — both stay correct.
     spark.sql("DELETE FROM graft.agg WHERE id = 1")
-    assert(Snapshots.fileMeta(fs, wh, "agg").get.exists(_.dv.nonEmpty))
+    assert(Snapshots.snapshot(fs, wh).files("agg").exists(_.dv.nonEmpty))
     val r2 = spark.sql(
       "SELECT count(*), min(id), min(s) FROM graft.agg").head()
     assert((r2.getLong(0), r2.getLong(1), r2.getString(2)) == ((3L, 5L, "bb")))

@@ -52,7 +52,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch1Max = all.filter(_._1 < 10L).map(_._2).max
     val batch2Min = all.filter(_._1 >= 10L).map(_._2).min
     assert(batch2Min > batch1Max, "commit N+1 ids must exceed commit N's")
-    assert(Identity.highWaterMark(fs, w, "t", "row_id")
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id")
       .contains(all.map(_._2).max))
   }
 
@@ -109,7 +109,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Identity.appendWithIdentity(spark, w, "t", df2,
       commitId = Some("idload-b2")) == 0L)
     assert(ids(w).sorted == (100L until 108L))
-    assert(Identity.highWaterMark(fs, w, "t", "row_id").contains(107L))
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").contains(107L))
     // Vacuum past the entries: the applied-txn registry still proves both.
     (0 until 20).foreach { i =>
       val cid = java.util.UUID.randomUUID().toString
@@ -192,7 +192,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
         s"step $step: expected $appended rows, got ${got.length}")
       assert(got.distinct.length == got.length,
         s"step $step: duplicate ids minted")
-      assert(Identity.highWaterMark(fs, w, "t", "row_id")
+      assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id")
         .contains(got.max), s"step $step: mark diverged from max id")
     }
   }
@@ -239,7 +239,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql(
         "ALTER TABLE t ADD COLUMN row_id BIGINT GENERATED ALWAYS AS " +
           "IDENTITY (START WITH 500)")
-      assert(Identity.identityColumns(fs, w, "t") == Seq("row_id"))
+      assert(Identity.identityColumns(Snapshots.snapshot(fs, w), "t") == Seq("row_id"))
       Identity.appendWithIdentity(spark, w, "t",
         Seq((2L, "b")).toDF("k", "v").coalesce(1))
       // Pre-declaration rows read NULL for the column (additive era);
@@ -262,7 +262,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     Identity.appendWithIdentity(spark, w, "t",
       (0L until 12L).map(i => (i, s"p${i % 3}")).toDF("k", "pt"))
     // Files landed under the k=v layout with their specs recorded …
-    val pf = Snapshots.partitionedFiles(fs, w, "t").get
+    val pf = Snapshots.snapshot(fs, w).files("t").map(a => (a.file, a.partition))
     assert(pf.map(_._2).toSet == Set("pt=p0", "pt=p1", "pt=p2"), pf)
     // … so log-side pruning plans only the matching partition.
     val pruned = Snapshots.read(spark, w, "t",
@@ -272,7 +272,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // Ids still unique and stats-advanced across the partitioned write.
     val got = ids(w)
     assert(got.distinct.size == 12 && got.forall(_ >= 1L))
-    assert(Identity.highWaterMark(fs, w, "t", "row_id").contains(got.max))
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").contains(got.max))
     // An identity column can never BE the partition column: the mark
     // advances from file stats, which partition values don't carry.
     Snapshots.setProperties(fs, w, "bad",
@@ -301,7 +301,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq((b.toLong, "a"), (b + 100L, "b")).toDF("k", "pt").coalesce(1),
         w, "t", batchId = b.toLong)
     }
-    val live = Snapshots.fileMeta(fs, w, "t").get
+    val live = Snapshots.snapshot(fs, w).files("t")
     assert(live.size < 10,
       s"auto-compaction never fired for the partitioned layout: ${live.size} files")
     assert(Snapshots.history(spark, w).select("op").as[String].collect()
@@ -330,11 +330,11 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val mv = TxnCommit.movesFor(fs, w, cid, "t")
     TxnCommit.commit(fs, w, cid, mv)
     TxnCommit.publish(fs, w, cid, mv)
-    assert(Identity.highWaterMark(fs, w, "t", "row_id").contains(2L),
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").contains(2L),
       "raw appends must not move the mark by themselves")
     // SYNC: metadata-only, from the log's stats tokens.
     assert(Identity.syncIdentity(fs, w, "t", "row_id") == 200L)
-    assert(Identity.highWaterMark(fs, w, "t", "row_id").contains(200L))
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").contains(200L))
     // The next engine mint starts ABOVE the synced ids.
     Identity.appendWithIdentity(spark, w, "t", Seq("c").toDF("v"))
     val got = ids(w)
@@ -374,7 +374,7 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[Snapshots.ConcurrentCommitException](
       Identity.syncIdentity(fs, w, "t", "row_id",
         () => rawAppend(Seq((500L, "m2")))))
-    assert(Identity.highWaterMark(fs, w, "t", "row_id").contains(1L),
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").contains(1L),
       "an aborted sync must not move the mark")
     // The caller's retry sees fresh stats and lands the true max.
     assert(Identity.syncIdentity(fs, w, "t", "row_id") == 500L)
@@ -386,12 +386,12 @@ class IdentitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // stale "reconciled" mark with no OCC commit to catch it — the sync
     // detects the log moved mid-scan and rescans to the true max.
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val cur = Identity.highWaterMark(fs, w, "t", "row_id").get
+    val cur = Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").get
     val synced = Identity.syncIdentity(fs, w, "t", "row_id", () =>
       if (once.compareAndSet(false, true)) rawAppend(Seq((5000L, "m3"))))
     assert(synced == 5000L,
       s"no-advance path missed the racing append (returned $synced, cur $cur)")
-    assert(Identity.highWaterMark(fs, w, "t", "row_id").contains(5000L))
+    assert(Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id").contains(5000L))
   }
 
   test("identity mark advance requires per-file per-column stats coverage") {

@@ -191,7 +191,7 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = new org.apache.hadoop.fs.Path(w)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     import graft.ingest.{Compaction, Snapshots}
-    val meta = Snapshots.fileMeta(fs, w, "verified_speedtest_report").get
+    val meta = Snapshots.snapshot(fs, w).files("verified_speedtest_report")
     assert(meta.size == 3)
     assert(meta.map(_.partition).sorted ==
       Seq("dt=2023-11-14", "dt=2023-11-14", "dt=2023-11-16"),
@@ -213,7 +213,7 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 2023-11-14 (2 files → 1), leave 2023-11-16 untouched.
     Compaction.compact(spark, w, "verified_speedtest_report",
       partitionFilter = m => m.get("dt").contains("2023-11-14"))
-    val after = Snapshots.fileMeta(fs, w, "verified_speedtest_report").get
+    val after = Snapshots.snapshot(fs, w).files("verified_speedtest_report")
     assert(after.count(_.partition == "dt=2023-11-14") == 1, after.toString)
     assert(after.count(_.partition == "dt=2023-11-16") == 1)
     val all = Snapshots.read(spark, w, "verified_speedtest_report")
@@ -246,7 +246,7 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     IngestJob.run(spark, in.toString, w, "verified-speedtest")
     val fs = new org.apache.hadoop.fs.Path(w)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = graft.ingest.Snapshots.fileMeta(fs, w, "verified_speedtest_report").get
+    val meta = graft.ingest.Snapshots.snapshot(fs, w).files("verified_speedtest_report")
     assert(meta.map(_.partition).sorted == Seq("dt=2023-11-14", "dt=2023-11-16"),
       s"dotted input dir corrupted the dt derivation: ${meta.map(_.partition)}")
   }
@@ -303,8 +303,7 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("mobile_radio_rewards", "mobile_reward_covered_hexes",
       "mobile_gateway_rewards").foreach { t =>
-      val parts = graft.ingest.Snapshots.fileMeta(fsW, wh("wh2"), t)
-        .get.map(_.partition)
+      val parts = graft.ingest.Snapshots.snapshot(fsW, wh("wh2")).files(t).map(_.partition)
       assert(parts.nonEmpty && parts.forall(_ == "dt=2023-11-14"),
         s"$t partitions: $parts")
     }

@@ -80,9 +80,9 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       Compaction.autoCompact(spark, w, "b", Set.empty)
     } finally release.countDown()
     drainMaintenance()
-    assert(Snapshots.fileMeta(fs, w, "a").get.size == 1,
+    assert(Snapshots.snapshot(fs, w).files("a").size == 1,
       "table a never compacted")
-    assert(Snapshots.fileMeta(fs, w, "b").get.size == 1,
+    assert(Snapshots.snapshot(fs, w).files("b").size == 1,
       "table b's trigger was dropped by another table's saturation")
   }
 
@@ -108,6 +108,6 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fsAfter = new Path(w).getFileSystem(hadoopConf)
     assert(Snapshots.latestVersion(fsAfter, w).contains(vBefore),
       "a maintenance commit landed after spark.stop()")
-    assert(Snapshots.fileMeta(fsAfter, w, "t").get.size == 3)
+    assert(Snapshots.snapshot(fsAfter, w).files("t").size == 3)
   }
 }

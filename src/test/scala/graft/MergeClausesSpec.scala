@@ -149,7 +149,7 @@ class MergeClausesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Corrupt the MIDDLE file's bytes on disk: a scan touching it would
     // throw, so the merge below succeeds ONLY if the NMBS condition's
     // stats pruning (t.id >= 20 cannot match [10,19]) skips it.
-    val mid = Snapshots.fileMeta(fs, w, "t").get.find(a =>
+    val mid = Snapshots.snapshot(fs, w).files("t").find(a =>
       graft.ingest.FileStats.decode(a.stats).exists(s =>
         s.cols.get("id").exists(_.min == "10"))).get.file
     val orig = {
@@ -599,7 +599,7 @@ class MergeClausesSpec extends AnyFunSuite with BeforeAndAfterAll {
         (4L, 40L, "d0", None), (3L, 30L, "d1", None), (5L, 50L, "d1", None),
         (1L, 111L, "d1", Some("x1")), (9L, 999L, "d1", Some("x9")))
       assert(got2 == exp2, s"partitioned: got=${got2.toSeq.sortBy(_._1)}")
-      assert(graft.ingest.Snapshots.partitionLayout(fs, w2, "p") == Seq("dt"),
+      assert(Snapshots.snapshot(fs, w2).partitionLayout("p") == Seq("dt"),
         "partition layout must survive the evolving merge")
     } finally spark.conf.unset("graft.merge.schemaEvolution")
   }
@@ -609,7 +609,7 @@ class MergeClausesSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s0.implicits._
     val w = wh("granular")
     publish(w, (0L until 30L).map(i => i -> i)) // 3 files by construction
-    val before = Snapshots.fileSet(fs, w, "t").get
+    val before = Snapshots.snapshot(fs, w).files("t").map(_.file)
     // Keys 0-4 live in the first file only: one file rewrites.
     val res = Merge.mergeClauses(spark, w, "t",
       Seq((2L, 5L), (3L, 5L)).toDF("id", "v"), Seq("id"),
@@ -618,7 +618,7 @@ class MergeClausesSpec extends AnyFunSuite with BeforeAndAfterAll {
       notMatched = Nil)
     assert(res.rowsMatched == 2 && res.filesRewritten == 1,
       s"expected 1 rewritten file, got $res")
-    val after = Snapshots.fileSet(fs, w, "t").get
+    val after = Snapshots.snapshot(fs, w).files("t").map(_.file)
     assert((before intersect after).size == before.size - 1,
       "only the matching file may swap out")
   }

@@ -91,7 +91,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("partitioned publish lands dt=… files under the log with recorded tuples") {
     val w = wh("whPub")
     publishPartitioned(w, "t", Seq(1L -> days(1), 2L -> days(1), 3L -> days(2)))
-    val pf = Snapshots.partitionedFiles(fs, w, "t").get
+    val pf = Snapshots.snapshot(fs, w).files("t").map(a => (a.file, a.partition))
     assert(pf.size == 2) // one file per dt value
     assert(pf.map(_._2).toSet == Set(s"dt=${days(1)}", s"dt=${days(2)}"))
     pf.foreach { case (f, spec) =>
@@ -143,13 +143,13 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       publishPartitioned(w, "t",
         Seq((i * 10L) -> days(1 + i % 2), (i * 10L + 1) -> days(1 + i % 2)))
     }
-    assert(Snapshots.partitionedFiles(fs, w, "t").get.size == 4)
+    assert(Snapshots.snapshot(fs, w).files("t").map(a => (a.file, a.partition)).size == 4)
     val before = Snapshots.read(spark, w, "t")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
 
     val res = Compaction.compact(spark, w, "t").get
     assert(res.filesBefore == 4)
-    val pf = Snapshots.partitionedFiles(fs, w, "t").get
+    val pf = Snapshots.snapshot(fs, w).files("t").map(a => (a.file, a.partition))
     // Every compacted file still lives under a dt=… dir with its tuple
     // recorded; both partitions survive.
     assert(pf.forall(_._2.startsWith("dt=")), s"lost partition layout: $pf")
@@ -177,7 +177,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
     assert(got == Set(1L -> days(1), 2L -> days(1), 3L -> days(2), 4L -> days(2)))
     // Rewrite kept the Hive layout + recorded tuples.
-    assert(Snapshots.partitionedFiles(fs, w, "t").get.forall(_._2.startsWith("dt=")))
+    assert(Snapshots.snapshot(fs, w).files("t").forall(_.partition.startsWith("dt=")))
   }
 
   test("partition layout evolution: a flat era and a dt= era read together") {
@@ -290,7 +290,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Snapshots.read(spark, w, "u").filter(col("id") === 1L)
         .select("x", "h").as[(Long, String)].collect().toSeq == Seq(11L -> "05"))
       // The rewrite stays under its directory: no h=5 tuple appears.
-      assert(Snapshots.partitionedFiles(fs, w, "u").get.map(_._2).toSet ==
+      assert(Snapshots.snapshot(fs, w).files("u").map(_.partition).toSet ==
         Set("h=05", "h=abc"))
     }
   }
@@ -310,7 +310,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Snapshots.read(spark, w, "u").schema("h").dataType == IntegerType)
       Merge.updateWhere(spark, w, "u", col("id") === 1L,
         Map("x" -> org.apache.spark.sql.functions.lit(11L)))
-      assert(Snapshots.partitionedFiles(fs, w, "u").get.map(_._2).toSet ==
+      assert(Snapshots.snapshot(fs, w).files("u").map(_.partition).toSet ==
         Set("h=5", "h=07"))
       assert(Snapshots.read(spark, w, "u").select("id", "x", "h")
         .as[(Long, Long, Int)].collect().toSeq.sorted ==

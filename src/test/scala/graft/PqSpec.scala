@@ -123,10 +123,10 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
     // All three tables appear at ONE version (atomic build).
     val v = Snapshots.latestVersion(fs, w).get
     Seq(IvfStore.CentroidTable, IvfStore.PqCodebookTable, IvfStore.PqCellTable)
-      .foreach(t => assert(Snapshots.fileMeta(fs, w, t).exists(_.nonEmpty),
+      .foreach(t => assert(Snapshots.snapshot(fs, w).files(t).nonEmpty,
         s"missing $t"))
-    assert(Snapshots.fileMeta(fs, w, IvfStore.PqCellTable, Some(v - 1))
-      .getOrElse(Nil).isEmpty, "PQ tables must land in one atomic commit")
+    assert(Snapshots.snapshot(fs, w, Some(v - 1)).files(IvfStore.PqCellTable)
+      .isEmpty, "PQ tables must land in one atomic commit")
 
     // The posting table stores m-BYTE codes, never vectors — the 100 TB
     // claim is per-row payload (8 bytes vs dim·4 = 256), which parquet
@@ -258,6 +258,57 @@ class PqSpec extends AnyFunSuite with BeforeAndAfterAll {
       Snapshots.read(spark, w, "embeddings"), k = 10)
       .orderBy("q_id", "rnk").collect().toSeq
     assert(got == brute, "appended vectors must be fully searchable")
+  }
+
+  /** Log-list operations `body` performs. */
+  private def lists(body: => Any): Long = {
+    Snapshots.logLists.set(0)
+    body
+    Snapshots.logLists.get
+  }
+
+  test("IVF, PQ and LSH top-k each walk their warehouse's log once per call") {
+    val w = wh("walks")
+    pubEmb(w, embDf(256))
+    val corpus = Snapshots.read(spark, w, "embeddings")
+    IvfStore.buildIndex(spark, w, corpus, dim = Dim, k = 8, targetFiles = 2)
+    IvfStore.buildPqIndex(spark, w, corpus, dim = Dim, k = 8, m = 8,
+      ksub = 16, targetFiles = 2)
+    graft.llmops.LshStore.buildIndex(spark, w, corpus, dim = Dim,
+      numPlanes = 4, targetFiles = 2)
+    val q = embDf(3)
+    // Stamp, model, postings and (PQ) the corpus re-rank all come from
+    // one snapshot: the query lists the log exactly as one snapshot does.
+    val walk = lists(Snapshots.snapshot(fs, w))
+    assert(walk > 0)
+    val got = Map(
+      "ivf" -> lists(IvfStore.topK(spark, w, q, 5).collect()),
+      "pq" -> lists(IvfStore.pqTopK(spark, w, q, 5).collect()),
+      "lsh" -> lists(graft.llmops.LshStore.topK(spark, w, q, 5).collect()))
+    assert(got == Map("ivf" -> walk, "pq" -> walk, "lsh" -> walk),
+      s"one walk lists $walk: $got")
+  }
+
+  test("a PQ query pinned to a snapshot answers as it did before a rebuild") {
+    val w = wh("pinned")
+    pubEmb(w, embDf(256))
+    val corpus = Snapshots.read(spark, w, "embeddings")
+    IvfStore.buildPqIndex(spark, w, corpus, dim = Dim, k = 8, m = 8,
+      ksub = 16, targetFiles = 2)
+    val q = embDf(3)
+    def answer(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .toSeq.sorted
+    val pin = Snapshots.snapshot(fs, w)
+    val before = answer(IvfStore.pqTopK(spark, w, q, 5))
+    // Retrained on other vectors: new centroids, codebooks and codes land
+    // in one version above the pin.
+    IvfStore.rebuildPq(spark, w, corpus.filter(col("vec_id") % 2 === 0),
+      dim = Dim, k = 8, m = 8, ksub = 16, targetFiles = 2)
+    assert(answer(IvfStore.pqTopK(spark, w, q, 5)) != before,
+      "the rebuild must change the latest answer")
+    assert(answer(IvfStore.pqTopK(spark, pin, q, 5, 2, 4, "embeddings",
+      "vec_id", "embedding")) == before)
   }
 }
 

@@ -76,7 +76,7 @@ class SnapshotBatchWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.write.format("graft-snapshots").option("warehouse", w0)
       .option("table", "t").option("partitionBy", "p")
       .mode(SaveMode.Append).save()
-    val off = Snapshots.fileMeta(fs, w0, "t").get.size
+    val off = Snapshots.snapshot(fs, w0).files("t").size
     assert(off > 2, s"expected tasks × values without optimizeWrite, got $off")
     // With: the staged frame REBALANCEs on p — AQE coalesces the tiny
     // shuffle partitions, so each partition value lands in ONE file.
@@ -85,7 +85,7 @@ class SnapshotBatchWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("table", "t").option("partitionBy", "p")
       .option("graft.optimizeWrite", "true")
       .mode(SaveMode.Append).save()
-    val on = Snapshots.fileMeta(fs, w1, "t").get
+    val on = Snapshots.snapshot(fs, w1).files("t")
     assert(on.size == 2, s"expected one file per partition value, got " +
       on.map(_.file).mkString(", "))
     assert(on.map(_.partition).distinct.size == 2)

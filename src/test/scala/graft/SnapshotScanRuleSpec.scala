@@ -116,7 +116,7 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.graft.warehouse", wh("catVecOther"))
     try {
       spark.sql("CREATE TABLE gcat.ct AS SELECT 1L AS one")
-      assert(Snapshots.fileMeta(fs, w, "ct").exists(_.nonEmpty),
+      assert(Snapshots.snapshot(fs, w).files("ct").nonEmpty,
         "catalog CTAS must land in the catalog's warehouse")
       assert(spark.sql("SELECT one FROM gcat.ct").as[Long]
         .collect().toSeq == Seq(1L))
@@ -452,7 +452,7 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT id, v, h FROM gpd.p")
       .as[(Long, Long, String)].collect().toSeq.sorted ==
       Seq((1L, 11L, "05"), (2L, 22L, "1.50"), (3L, 33L, "007")))
-    assert(Snapshots.partitionedFiles(fs, w, "p").get.map(_._2).toSet ==
+    assert(Snapshots.snapshot(fs, w).files("p").map(_.partition).toSet ==
       Set("h=05", "h=1.50", "h=007"))
   }
 
@@ -1095,7 +1095,7 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // OPTIMIZE compacts the two commits into one file.
     spark.sql("OPTIMIZE gm.t")
-    assert(Snapshots.fileMeta(fsW, w, "t").get.size == 1)
+    assert(Snapshots.snapshot(fsW, w).files("t").size == 1)
     assert(spark.sql("SELECT count(*) FROM gm.t").head().getLong(0) == 21)
 
     // DESCRIBE DETAIL resolves the prefix too.
@@ -1122,7 +1122,7 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     Snapshots.setProperties(fsW, w, "idc", Map("identity.rid" -> null))
     assert(spark.sql("ALTER TABLE gm.idc DROP FEATURE identityColumns")
       .head().getString(0) == "identityColumns")
-    assert(Snapshots.tableFeatures(fsW, w, "idc").isEmpty)
+    assert(Snapshots.snapshot(fsW, w).features("idc").isEmpty)
   }
 
   test("SNAPSHOT HISTORY OF t and SHOW TBLPROPERTIES resolve per table") {
@@ -1184,5 +1184,40 @@ class SnapshotScanRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(feed.count() == 10)
     assert(feed.select("_change_type").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("insert"))
+  }
+
+  test("an unfiltered count(*) over a snapshot leaf is answered from the log") {
+    spark.conf.set("spark.sql.catalog.gcnt",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    val w = wh("catCount")
+    spark.conf.set("spark.sql.catalog.gcnt.warehouse", w)
+    spark.sql("CREATE TABLE gcnt.t AS SELECT id FROM range(100)")
+    spark.sql("INSERT INTO gcnt.t SELECT id FROM range(100, 150)")
+    val sc = spark.sparkContext
+    def jobs(body: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      sc.addSparkListener(l)
+      try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+      finally sc.removeSparkListener(l)
+      n.get
+    }
+    def count(sql: String) = spark.sql(sql).head().getLong(0)
+    // The leaf's own pinned row count from the stats tokens: no file is
+    // opened, so no job runs — for the catalog leaf, a time-travelled one,
+    // and the format-read leaf alike.
+    assert(jobs(assert(count("SELECT count(*) FROM gcnt.t") == 150L)) == 0)
+    assert(jobs(assert(
+      count("SELECT count(*) FROM gcnt.t VERSION AS OF 0") == 100L)) == 0)
+    load(w).createOrReplaceTempView("cnt_fmt")
+    assert(jobs(assert(count("SELECT count(*) FROM cnt_fmt") == 150L)) == 0)
+    // A filtered count still scans, and still answers right.
+    assert(jobs(assert(
+      count("SELECT count(*) FROM gcnt.t WHERE id >= 120") == 30L)) > 0)
   }
 }

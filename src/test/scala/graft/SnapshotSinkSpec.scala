@@ -92,7 +92,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       in.addData((e * 100L until e * 100L + 5L).map(i => (i, s"x$i")): _*)
       sinkTo(in.toDF.toDF("id", "val"), w, ckpt)
     }
-    val live = Snapshots.fileMeta(fs, w, "t").get
+    val live = Snapshots.snapshot(fs, w).files("t")
     assert(live.size < 8,
       s"auto-compaction must bound live files, got ${live.size}")
     // Exactly the ingested rows — maintenance moved bytes, never rows.
@@ -116,7 +116,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    assert(Snapshots.fileMeta(fs, w2, "t").get.size >= 9,
+    assert(Snapshots.snapshot(fs, w2).files("t").size >= 9,
       "control table without the property must accumulate files")
   }
 
@@ -148,7 +148,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 2).foreach { e =>
       in.addData((100L + e, "b")); drain()
     }
-    val bySpec = Snapshots.fileMeta(fs, w, "t").get.groupBy(_.partition)
+    val bySpec = Snapshots.snapshot(fs, w).files("t").groupBy(_.partition)
     assert(bySpec("side=b").size == 2,
       s"untouched/below-threshold partition was rewritten: ${bySpec("side=b")}")
     assert(bySpec("side=a").size < 5,
@@ -276,7 +276,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val files = Snapshots.fileMeta(fs, w, "t").get
+    val files = Snapshots.snapshot(fs, w).files("t")
     assert(files.size == 2, s"expected one file per partition value, " +
       s"got ${files.map(_.file).mkString(", ")}")
     assert(Snapshots.read(spark, w, "t").count() == 80)
@@ -501,7 +501,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(compacts.forall(_ <= 4L),
       s"a capped run rewrote more than its budget: ${compacts.mkString(",")}")
     // … and the live-file count still converges under the capped packs.
-    val live = Snapshots.fileMeta(fs, w, "t").get
+    val live = Snapshots.snapshot(fs, w).files("t")
     assert(live.size < 10,
       s"capped auto-compaction failed to converge: ${live.size} files")
     // Rows exactly once through all the maintenance.
@@ -537,7 +537,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e2.distinct.size == 9, e2.sorted)
     assert(e2.filterNot(e1.contains).min > e1.max,
       "later epoch ids must exceed all earlier ids")
-    assert(graft.ingest.Identity.highWaterMark(fs, w, "t", "row_id")
+    assert(graft.ingest.Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id")
       .contains(e2.max), "mark must ride the epoch commit")
     // Replayed epoch (same queryId + epochId → same commitId): recognized
     // and skipped — nothing re-minted, mark unchanged.
@@ -554,7 +554,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       Some(0L))))
     assert(Snapshots.read(spark, w, "t").count() == 9,
       "replayed epoch re-landed rows")
-    assert(graft.ingest.Identity.highWaterMark(fs, w, "t", "row_id")
+    assert(graft.ingest.Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id")
       .contains(e2.max), "replayed epoch moved the mark")
     // The BATCH v2 write still refuses identity tables with the steering
     // error (no epoch discipline → no allocation contract).
@@ -629,10 +629,10 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The packs run on the maintenance thread — poll for convergence
     // (level-based: the last queued run sees the final live set).
     val deadline = System.currentTimeMillis() + 30000
-    var live = Snapshots.fileMeta(fs, w, "t").get.size
+    var live = Snapshots.snapshot(fs, w).files("t").size
     while (live >= 8 && System.currentTimeMillis() < deadline) {
       Thread.sleep(250)
-      live = Snapshots.fileMeta(fs, w, "t").get.size
+      live = Snapshots.snapshot(fs, w).files("t").size
     }
     assert(live < 8, s"async auto-compaction never converged: $live files")
     // Maintenance moved bytes, never rows.
@@ -665,7 +665,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     in.addData((6L until 10L).map(i => (i, "a")): _*)
     drain()
     // Files landed under the k=v layout with specs recorded — pruning fires.
-    val bySpec = Snapshots.fileMeta(fs, w, "t").get.groupBy(_.partition)
+    val bySpec = Snapshots.snapshot(fs, w).files("t").groupBy(_.partition)
     assert(bySpec.keySet == Set("side=a", "side=b"), bySpec.keySet)
     val pruned = Snapshots.read(spark, w, "t",
       partitionFilter = m => m("side") == "b")
@@ -674,7 +674,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = Snapshots.read(spark, w, "t")
       .select("row_id").as[Long].collect().toSeq
     assert(got.distinct.size == 10, got.sorted)
-    assert(graft.ingest.Identity.highWaterMark(fs, w, "t", "row_id")
+    assert(graft.ingest.Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id")
       .contains(got.max))
     // The identity column itself can never be the partition column.
     val ex = intercept[Exception] {
@@ -718,7 +718,7 @@ class SnapshotSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The ENGINE's values win on both columns: user 0L/-1.0 never land.
     assert(got.map(_._3).distinct.length == 3, got.mkString(","))
     assert(got.forall { case (p, q, _, t) => t == p * q }, got.mkString(","))
-    assert(graft.ingest.Identity.highWaterMark(fs, w, "t", "row_id")
+    assert(graft.ingest.Identity.highWaterMark(Snapshots.snapshot(fs, w), "t", "row_id")
       .contains(got.map(_._3).max))
   }
 }

@@ -119,11 +119,11 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("OPTIMIZE bin-packs; OPTIMIZE ZORDER BY clusters; results mirror the API") {
-    val before = Snapshots.fileSet(fs, wh, "t").get.size
+    val before = Snapshots.snapshot(fs, wh).files("t").size
     assert(before >= 3)
     val row = spark.sql("OPTIMIZE t").collect().head
     assert(row.getInt(0) == before && row.getInt(1) == 1)
-    assert(Snapshots.fileSet(fs, wh, "t").get.size == 1)
+    assert(Snapshots.snapshot(fs, wh).files("t").size == 1)
     assert(Snapshots.read(spark, wh, "t").count() == 30)
     // zorder on (id, x): a rewrite lands (files_before ≥ 1), rows intact.
     val zrow = spark.sql("OPTIMIZE t ZORDER BY (id, x)").collect().head
@@ -143,8 +143,8 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       TxnCommit.commit(fs, wh, cid, moves)
       TxnCommit.publish(fs, wh, cid, moves)
     }
-    def filesPer: Map[String, Int] = Snapshots.partitionedFiles(fs, wh, "p").get
-      .groupBy(_._2).view.mapValues(_.size).toMap
+    def filesPer: Map[String, Int] = Snapshots.snapshot(fs, wh).files("p")
+      .groupBy(_.partition).view.mapValues(_.size).toMap
     assert(filesPer == Map("dt=2024-01-01" -> 2, "dt=2024-01-02" -> 2))
     val row = spark.sql("OPTIMIZE p WHERE dt='2024-01-01'").collect().head
     assert(row.getInt(0) == 2 && row.getInt(1) == 1)
@@ -315,7 +315,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = Snapshots.read(spark, wh, "ctas_p")
     assert(p.columns.toSeq.sorted == Seq("id", "par"))
     assert(p.filter($"par" === "e").count() == 3)
-    val spec = Snapshots.fileMeta(fs, wh, "ctas_p").get.map(_.partition)
+    val spec = Snapshots.snapshot(fs, wh).files("ctas_p").map(_.partition)
     assert(spec.forall(_.startsWith("par=")), spec)
     // USING marker variant parses; a catalog CTAS still reaches Spark.
     spark.sql("CREATE TABLE ctas_u USING graft AS SELECT 7 AS k")
@@ -382,7 +382,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val mrow = spark.sql("DELETE FROM d WHERE id = 1").collect().head
       assert(mrow.getInt(0) == 0 && mrow.getLong(1) == 1L)
       assert(Snapshots.read(spark, wh, "d").count() == 7)
-      assert(Snapshots.fileMeta(fs, wh, "d").get.exists(_.dv.nonEmpty))
+      assert(Snapshots.snapshot(fs, wh).files("d").exists(_.dv.nonEmpty))
       val urow2 = spark.sql("UPDATE d SET v = 0 WHERE id = 2").collect().head
       assert(urow2.getInt(0) == 0 && urow2.getLong(1) == 1L)
       assert(Snapshots.read(spark, wh, "d").filter($"id" === 2L)
@@ -435,11 +435,11 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val moves = TxnCommit.movesFor(fs, wh, cid, "talter")
     TxnCommit.commit(fs, wh, cid, moves)
     TxnCommit.publish(fs, wh, cid, moves)
-    val filesBefore = Snapshots.fileSet(fs, wh, "talter").get.toSet
+    val filesBefore = Snapshots.snapshot(fs, wh).files("talter").map(_.file).toSet
 
     spark.sql("ALTER TABLE talter RENAME COLUMN name TO label").collect()
     spark.sql("ALTER TABLE talter DROP COLUMN score").collect()
-    assert(Snapshots.fileSet(fs, wh, "talter").get.toSet == filesBefore) // no rewrite
+    assert(Snapshots.snapshot(fs, wh).files("talter").map(_.file).toSet == filesBefore) // no rewrite
     val df = spark.sql("SNAPSHOT OF talter")
     assert(df.columns.toSeq == Seq("id", "label"))
     assert(df.orderBy("id").as[(Long, String)].collect().toSeq ==
@@ -449,7 +449,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("ALTER TABLE no_such_graft_table RENAME COLUMN a TO b"))
     // REORG … APPLY (PURGE) physically sheds the dropped column
     spark.sql("REORG TABLE talter APPLY (PURGE)").collect()
-    assert(Snapshots.fileSet(fs, wh, "talter").get
+    assert(Snapshots.snapshot(fs, wh).files("talter").map(_.file)
       .forall(f => !spark.read.parquet(f).columns.contains("score")))
     assert(spark.sql("SNAPSHOT OF talter").orderBy("id")
       .as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
@@ -531,11 +531,11 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(shown == Map("bloom.columns" -> "id", "bloom.ndv" -> "1000"))
     // The SQL path and the API read the same committed state.
-    assert(Snapshots.properties(fs, wh, "t") == shown)
+    assert(Snapshots.snapshot(fs, wh).properties("t") == shown)
     spark.sql("ALTER TABLE t UNSET TBLPROPERTIES ('bloom.ndv')").collect()
-    assert(Snapshots.properties(fs, wh, "t") == Map("bloom.columns" -> "id"))
+    assert(Snapshots.snapshot(fs, wh).properties("t") == Map("bloom.columns" -> "id"))
     spark.sql("ALTER TABLE t UNSET TBLPROPERTIES ('bloom.columns')").collect()
-    assert(Snapshots.properties(fs, wh, "t").isEmpty)
+    assert(Snapshots.snapshot(fs, wh).properties("t").isEmpty)
   }
 
   test("TBLPROPERTIES on a pre-first-commit table governs its first write") {
@@ -543,7 +543,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // bloom.columns to cover the very first file.
     spark.sql("ALTER TABLE fresh SET TBLPROPERTIES " +
       "('bloom.columns'='name')").collect()
-    assert(Snapshots.properties(fs, wh, "fresh") ==
+    assert(Snapshots.snapshot(fs, wh).properties("fresh") ==
       Map("bloom.columns" -> "name"))
     val cid = java.util.UUID.randomUUID().toString
     val s0 = spark
@@ -555,7 +555,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     TxnCommit.commit(fs, wh, cid, moves)
     TxnCommit.publish(fs, wh, cid, moves)
     val st = graft.ingest.FileStats.decode(
-      Snapshots.fileMeta(fs, wh, "fresh").get.head.stats).get
+      Snapshots.snapshot(fs, wh).files("fresh").head.stats).get
     assert(st.blooms.contains("name"), "first commit should carry the bloom")
   }
 
@@ -588,7 +588,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "(CAST(2 AS BIGINT), CAST(20.0 AS DOUBLE)) AS v(id, x)")
     spark.sql("ALTER TABLE ct ADD CONSTRAINT xrange CHECK " +
       "(x BETWEEN 0 AND 100 AND id IS NOT NULL)").collect()
-    assert(Snapshots.properties(fs, wh, "ct")
+    assert(Snapshots.snapshot(fs, wh).properties("ct")
       .get("constraint.check.xrange").nonEmpty)
     // A violating INSERT aborts NAMING the constraint; nothing lands.
     val err = intercept[Exception](
@@ -603,7 +603,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val err2 = intercept[Exception](spark.sql(
       "ALTER TABLE ct ADD CONSTRAINT xbig CHECK (x >= 1000)").collect())
     assert(chain(err2).contains("CHECK constraint 'xbig'"), chain(err2))
-    assert(Snapshots.properties(fs, wh, "ct")
+    assert(Snapshots.snapshot(fs, wh).properties("ct")
       .get("constraint.check.xbig").isEmpty)
     // Unsupported CHECK shapes are rejected up front, naming the conjunct.
     val err3 = intercept[Exception](spark.sql(
@@ -835,7 +835,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("graft.dml.mode", "mor")
     try spark.sql("DELETE FROM dfeat WHERE id = 0")
     finally spark.conf.unset("graft.dml.mode")
-    assert(Snapshots.tableFeatures(fs, wh, "dfeat")
+    assert(Snapshots.snapshot(fs, wh).features("dfeat")
       .contains("r:deletionVectors"))
     // Refused while a live vector depends on it; the error names the verb.
     val ex = intercept[Exception](
@@ -845,7 +845,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = spark.sql("ALTER TABLE dfeat DROP FEATURE deletionVectors")
       .collect()
     assert(out.map(_.getString(0)).toSeq == Seq("deletionVectors"))
-    assert(Snapshots.tableFeatures(fs, wh, "dfeat").isEmpty)
+    assert(Snapshots.snapshot(fs, wh).features("dfeat").isEmpty)
     assert(spark.sql("SNAPSHOT OF dfeat").count() == 9)
   }
 }

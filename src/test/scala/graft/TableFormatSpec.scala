@@ -87,7 +87,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     // default retention: inputs stay on disk, so pre-compaction versions
     // still read — the snapshot swap is logical
     assert(partFiles(w, "t").size == 5)
-    assert(Snapshots.fileSet(fs, w, "t").get.size == 1)
+    assert(Snapshots.snapshot(fs, w).files("t").size == 1)
     val after = Snapshots.read(spark, w, "t")
     assert(after.count() == 100)
     assert(after.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0) == sumBefore)
@@ -112,7 +112,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = Compaction.compact(spark, w, "t",
       targetBytes = 1, minInputFiles = 2, sortBy = Seq("id")).get
     assert(res.filesBefore == 4)
-    val files = Snapshots.fileSet(fs, w, "t").get
+    val files = Snapshots.snapshot(fs, w).files("t").map(_.file)
     assert(files.size > 1)
     // After clustering, per-file id ranges must be pairwise disjoint — the
     // property parquet row-group stats pruning needs to skip whole files.
@@ -146,7 +146,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val res = Compaction.zorder(spark, w, "t", Seq("a", "b"), targetBytes = 1).get
     assert(res.filesBefore == 4)
-    val files = Snapshots.fileSet(fs, w, "t").get
+    val files = Snapshots.snapshot(fs, w).files("t").map(_.file)
     assert(files.size == 4) // capped at input count
     // The data-skipping property: a predicate on EITHER column must be able
     // to skip at least one file by min/max stats. (A single-column sort
@@ -183,7 +183,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     TxnCommit.publish(fs, w, commitId, moves)
     val res = Compaction.zorder(spark, w, "t",
       Seq("a", "b", "c", "d", "e"), targetBytes = 1).get
-    val files = Snapshots.fileSet(fs, w, "t").get
+    val files = Snapshots.snapshot(fs, w).files("t").map(_.file)
     assert(files.size >= 4)
     // With few files the range split lands on the key's top bits, owned by
     // the LAST column (highest interleave position) — that's where exact
@@ -302,7 +302,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(Snapshots.latestVersion(fs, w).contains(199L))
     Snapshots.logReads.set(0L)
-    val files = Snapshots.fileSet(fs, w, "t").get
+    val files = Snapshots.snapshot(fs, w).files("t").map(_.file)
     assert(files.size == 200)
     val reads = Snapshots.logReads.get()
     // Anchored fold: newest checkpoint (v192) + the ≤ interval deltas at or
@@ -313,7 +313,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Time travel to a pre-anchor version still folds correctly (bounded by
     // the nearest earlier checkpoint, not version 0).
     Snapshots.logReads.set(0L)
-    assert(Snapshots.fileSet(fs, w, "t", asOf = Some(100L)).get.size == 101)
+    assert(Snapshots.snapshot(fs, w, Some(100L)).files("t").size == 101)
     assert(Snapshots.logReads.get() <= Snapshots.CheckpointInterval + 2)
     // LISTING cost is bounded too: the _last_checkpoint pointer anchors the
     // listing walk, so one append (or one latest-state read) pays
@@ -325,7 +325,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(listsPerAppend <= 2 * Snapshots.CheckpointInterval + 4,
       s"append paid $listsPerAppend list ops; expected O(${Snapshots.CheckpointInterval})")
     Snapshots.logLists.set(0L)
-    assert(Snapshots.fileSet(fs, w, "t").get.size == 201)
+    assert(Snapshots.snapshot(fs, w).files("t").size == 201)
     assert(Snapshots.logLists.get() <= 2 * Snapshots.CheckpointInterval + 4,
       s"read paid ${Snapshots.logLists.get()} list ops")
     // Tailing consumers (changes / the streaming source's addsInRange)
@@ -336,7 +336,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"tailing addsInRange paid ${Snapshots.logLists.get()} list ops")
     // A stale/missing pointer only widens: delete it, everything still works.
     fs.delete(new Path(s"$w/_snapshots/_last_checkpoint"), false)
-    assert(Snapshots.fileSet(fs, w, "t").get.size == 201)
+    assert(Snapshots.snapshot(fs, w).files("t").size == 201)
     assert(Snapshots.latestVersion(fs, w).contains(200L))
   }
 
@@ -403,7 +403,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     publishKv(0 until 10, "a")  // file A
     publishKv(10 until 20, "b") // file B
-    val fileB = Snapshots.fileSet(fs, w, "t").get
+    val fileB = Snapshots.snapshot(fs, w).files("t").map(_.file)
       .find(f => spark.read.parquet(f).agg(org.apache.spark.sql.functions.min("id"))
         .head.getLong(0) == 10L).get
     val vBefore = Snapshots.latestVersion(fs, w).get
@@ -417,7 +417,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.filter($"val" === "x").select("id").as[Long].collect().sorted
       .sameElements(Array(5L, 7L, 100L)))
     // file B never moved: the same physical file is still in the snapshot
-    assert(Snapshots.fileSet(fs, w, "t").get.contains(fileB))
+    assert(Snapshots.snapshot(fs, w).files("t").map(_.file).contains(fileB))
     // pre-merge version still reads the original values
     assert(Snapshots.read(spark, w, "t", asOf = Some(vBefore))
       .filter($"id" === 5L).select("val").as[String].head() == "a")
@@ -446,12 +446,12 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     publishKv(Seq((1L, "a", 10L), (2L, "b", 20L)))
     publishKv(Seq((3L, "c", 30L), (4L, "d", 40L)))
-    val filesBefore = Snapshots.fileSet(fs, w, "t").get.toSet
+    val filesBefore = Snapshots.snapshot(fs, w).files("t").map(_.file).toSet
     val vBefore = Snapshots.latestVersion(fs, w).get
 
     SchemaEvolution.renameColumn(spark, w, "t", "name", "doc_name")
     // zero files touched — pure metadata commit
-    assert(Snapshots.fileSet(fs, w, "t").get.toSet == filesBefore)
+    assert(Snapshots.snapshot(fs, w).files("t").map(_.file).toSet == filesBefore)
     val df = Snapshots.read(spark, w, "t")
     assert(df.columns.toSeq == Seq("id", "doc_name", "score"))
     assert(df.filter($"doc_name" === "c").select("id").as[Long].head() == 3L)
@@ -471,7 +471,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.filesRewritten == 1 && res.rowsMatched == 1)
     val after = Snapshots.read(spark, w, "t")
     assert(after.filter($"id" === 1L).select("doc_name").as[String].head() == "A")
-    val rewritten = (Snapshots.fileSet(fs, w, "t").get.toSet -- filesBefore).head
+    val rewritten = (Snapshots.snapshot(fs, w).files("t").map(_.file).toSet -- filesBefore).head
     assert(spark.read.parquet(rewritten).columns.contains("name")) // physical
     // change feed serves the logical schema too
     val feed = Snapshots.changes(spark, w, "t", fromExclusive = -1L)
@@ -500,10 +500,10 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     publishKv(Seq((1L, "a", 10L), (2L, "b", 20L)))
     val vBefore = Snapshots.latestVersion(fs, w).get
-    val filesBefore = Snapshots.fileSet(fs, w, "t").get.toSet
+    val filesBefore = Snapshots.snapshot(fs, w).files("t").map(_.file).toSet
 
     SchemaEvolution.dropColumn(spark, w, "t", "score")
-    assert(Snapshots.fileSet(fs, w, "t").get.toSet == filesBefore) // no rewrite
+    assert(Snapshots.snapshot(fs, w).files("t").map(_.file).toSet == filesBefore) // no rewrite
     assert(Snapshots.read(spark, w, "t").columns.toSeq == Seq("id", "name"))
     // the bytes are still there for time travel below the drop
     assert(Snapshots.read(spark, w, "t", asOf = Some(vBefore))
@@ -515,10 +515,10 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after.columns.toSeq == Seq("id", "name"))
     assert(after.orderBy("id").as[(Long, String)].collect()
       .toSeq == Seq((1L, "a"), (2L, "B")))
-    val rewritten = (Snapshots.fileSet(fs, w, "t").get.toSet -- filesBefore).head
+    val rewritten = (Snapshots.snapshot(fs, w).files("t").map(_.file).toSet -- filesBefore).head
     assert(!spark.read.parquet(rewritten).columns.contains("score"))
     // the physical name is tombstoned in the mapping
-    val m = Snapshots.columnMapping(fs, w, "t").get
+    val m = Snapshots.snapshot(fs, w).columnMapping("t").get
     assert(m.droppedPhysical == Seq("score"))
     // guards: last column, unknown column
     intercept[IllegalArgumentException](
@@ -571,7 +571,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the identity mapping must capture BOTH columns, whichever footer the
     // non-merge schema sample would have picked
     SchemaEvolution.renameColumn(spark, w, "t", "id", "key")
-    val m = Snapshots.columnMapping(fs, w, "t").get
+    val m = Snapshots.snapshot(fs, w).columnMapping("t").get
     assert(m.cols.toSet == Set(("key", "id"), ("val", "val")))
     val df = Snapshots.read(spark, w, "t", mergeSchema = true)
     assert(df.columns.toSet == Set("key", "val"))
@@ -596,12 +596,12 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vBefore = Snapshots.latestVersion(fs, w).get
     SchemaEvolution.dropColumn(spark, w, "t", "secret")
     // metadata drop leaves the bytes in place …
-    assert(Snapshots.fileSet(fs, w, "t").get
+    assert(Snapshots.snapshot(fs, w).files("t").map(_.file)
       .forall(f => spark.read.parquet(f).columns.contains("secret")))
     // … the purging rewrite removes them physically
     val res = Compaction.compact(spark, w, "t", purgeDropped = true)
     assert(res.nonEmpty)
-    val live = Snapshots.fileSet(fs, w, "t").get
+    val live = Snapshots.snapshot(fs, w).files("t").map(_.file)
     assert(live.forall(f => !spark.read.parquet(f).columns.contains("secret")))
     assert(Snapshots.read(spark, w, "t").orderBy("id")
       .as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
@@ -629,7 +629,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Snapshots.entries(fs, w).exists(_.isCheckpoint))
     // the mapping survives the checkpoint fold (META line in the anchor)
     assert(Snapshots.read(spark, w, "t").columns.toSeq == Seq("pk"))
-    assert(Snapshots.columnMapping(fs, w, "t").get.cols == Seq(("pk", "id")))
+    assert(Snapshots.snapshot(fs, w).columnMapping("t").get.cols == Seq(("pk", "id")))
     assert(Snapshots.read(spark, w, "t")
       .agg(org.apache.spark.sql.functions.sum("pk")).head.getLong(0) == 55L)
   }
@@ -1023,7 +1023,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     publishBatch(w, "t", 11 to 20) // v1
     // Victim compaction reads the v1 snapshot and commits its manifest …
     val victim = java.util.UUID.randomUUID().toString
-    val inputs = Snapshots.fileSet(fs, w, "t").get
+    val inputs = Snapshots.snapshot(fs, w).files("t").map(_.file)
     spark.read.parquet(inputs: _*).coalesce(1)
       .write.parquet(s"${TxnCommit.stagingDir(w, victim)}/t")
     val moves = TxnCommit.movesFor(fs, w, victim, "t")
@@ -1031,14 +1031,14 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       op = "compact", baseVersion = Some(1L))
     // … but a rival compaction publishes first (lands v2).
     assert(Compaction.compact(spark, w, "t").isDefined)
-    val afterRival = Snapshots.fileSet(fs, w, "t").get.toSet
+    val afterRival = Snapshots.snapshot(fs, w).files("t").map(_.file).toSet
     // The victim's publish must abort — without OCC both rewrites' outputs
     // would fold in and every row would exist twice.
     intercept[Snapshots.ConcurrentCommitException] {
       TxnCommit.publish(fs, w, victim, moves, retained = inputs,
         op = "compact", baseVersion = Some(1L))
     }
-    assert(Snapshots.fileSet(fs, w, "t").get.toSet == afterRival)
+    assert(Snapshots.snapshot(fs, w).files("t").map(_.file).toSet == afterRival)
     assert(Snapshots.read(spark, w, "t").count() == 20) // not 40
     moves.foreach(m => assert(!fs.exists(new Path(m.dest))))
     assert(!fs.exists(new Path(s"$w/_commits/$victim.manifest")))
@@ -1152,7 +1152,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       feed.filter("_change_type = 'delete'").count() == 1)
     // Compaction materializes the widest type physically.
     assert(Compaction.compact(spark, w, "t", minInputFiles = 2).nonEmpty)
-    val files = Snapshots.fileSet(fs, w, "t").get
+    val files = Snapshots.snapshot(fs, w).files("t").map(_.file)
     files.foreach { f =>
       val sch = spark.read.parquet(f).schema
       assert(sch("id").dataType == org.apache.spark.sql.types.LongType &&
@@ -1315,7 +1315,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       TxnCommit.commit(fs, w, cid, moves))
     assert(ex.getMessage.contains("TIMESTAMP(NANOS)") &&
       ex.getMessage.contains("TIMESTAMP_MICROS"), ex.getMessage)
-    assert(Snapshots.fileMeta(fs, w, "t").isEmpty, "nothing became visible")
+    assert(Snapshots.latestVersion(fs, w).isEmpty, "nothing became visible")
   }
 
   test("changes() over change files that differ only in repetition equals a mergeSchema read") {
@@ -1379,7 +1379,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ex = intercept[IllegalArgumentException](
       TxnCommit.commit(fs, w, cid, moves))
     assert(ex.getMessage.contains("reserved"))
-    assert(Snapshots.fileMeta(fs, w, "t").isEmpty, "nothing became visible")
+    assert(Snapshots.latestVersion(fs, w).isEmpty, "nothing became visible")
   }
 
   test("corrupt deletion-vector tokens fail with a diagnosable error") {
@@ -1427,7 +1427,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vOld = Snapshots.latestVersion(fs, w).get
     // A DV commit stamps its reader feature; this build serves it fine.
     Merge.deleteWhereDv(spark, w, "t", org.apache.spark.sql.functions.col("id") === 0L)
-    assert(Snapshots.tableFeatures(fs, w, "t")
+    assert(Snapshots.snapshot(fs, w).features("t")
       .contains("r:deletionVectors"))
     assert(Snapshots.read(spark, w, "t").count() == 9L)
     // A NEWER build marks the table as requiring a reader feature this
@@ -1498,7 +1498,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     publishBatch(w, "t", 0 until 10)
     Merge.deleteWhereDv(spark, w, "t",
       org.apache.spark.sql.functions.col("id") === 0L)
-    assert(Snapshots.tableFeatures(fs, w, "t").contains("r:deletionVectors"))
+    assert(Snapshots.snapshot(fs, w).features("t").contains("r:deletionVectors"))
     // While a live file still carries its vector, the drop REFUSES and
     // names the purge verb.
     val exLive = intercept[IllegalStateException](
@@ -1508,15 +1508,15 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (purgeDropped forces the rewrite even for a single input file).
     Compaction.compact(spark, w, "t", targetBytes = 512L * 1024 * 1024,
       purgeDropped = true)
-    assert(Snapshots.fileMeta(fs, w, "t").get.forall(_.dv.isEmpty))
+    assert(Snapshots.snapshot(fs, w).files("t").forall(_.dv.isEmpty))
     val vBeforeDrop = Snapshots.latestVersion(fs, w).get
     Snapshots.dropFeature(fs, w, "t", "deletionVectors")
     // The requirement is gone at latest — a build that has never heard of
     // deletionVectors passes the gate (requireFeatures consults the same
     // cleared set for ANY build) — while time travel below the drop still
     // carries the era's requirement for history safety.
-    assert(Snapshots.tableFeatures(fs, w, "t").isEmpty)
-    assert(Snapshots.tableFeatures(fs, w, "t", Some(vBeforeDrop))
+    assert(Snapshots.snapshot(fs, w).features("t").isEmpty)
+    assert(Snapshots.snapshot(fs, w, Some(vBeforeDrop)).features("t")
       .contains("r:deletionVectors"))
     assert(Snapshots.read(spark, w, "t").count() == 9L)
     // Dropping a feature the table never required, or one THIS build
@@ -1547,11 +1547,11 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exId.getMessage.contains("row_id"), exId.getMessage)
     Snapshots.setProperties(fs, w, "idt", Map("identity.row_id" -> null))
     Snapshots.dropFeature(fs, w, "idt", "identityColumns")
-    assert(Snapshots.tableFeatures(fs, w, "idt").isEmpty)
+    assert(Snapshots.snapshot(fs, w).features("idt").isEmpty)
     // A later write that re-exercises a feature simply re-stamps it.
     Merge.deleteWhereDv(spark, w, "t",
       org.apache.spark.sql.functions.col("id") === 1L)
-    assert(Snapshots.tableFeatures(fs, w, "t").contains("r:deletionVectors"))
+    assert(Snapshots.snapshot(fs, w).features("t").contains("r:deletionVectors"))
     assert(Snapshots.read(spark, w, "t").count() == 8L)
   }
 
@@ -1562,7 +1562,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.functions.col("id") === 0L)
     Compaction.compact(spark, w, "t", targetBytes = 512L * 1024 * 1024,
       purgeDropped = true)
-    assert(Snapshots.fileMeta(fs, w, "t").get.forall(_.dv.isEmpty))
+    assert(Snapshots.snapshot(fs, w).files("t").forall(_.dv.isEmpty))
     // The dependency probe passes (no live vectors) — and then a rival
     // DELETE attaches a fresh vector before the drop publishes. The
     // rival's entry carries NO `#features` META line (the feature is
@@ -1574,15 +1574,15 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       Snapshots.dropFeature(fs, w, "t", "deletionVectors", () =>
         Merge.deleteWhereDv(spark, w, "t",
           org.apache.spark.sql.functions.col("id") === 1L)))
-    assert(Snapshots.tableFeatures(fs, w, "t").contains("r:deletionVectors"),
+    assert(Snapshots.snapshot(fs, w).features("t").contains("r:deletionVectors"),
       "the drop slipped through with a live dependent")
-    assert(Snapshots.fileMeta(fs, w, "t").get.exists(_.dv.nonEmpty))
+    assert(Snapshots.snapshot(fs, w).files("t").exists(_.dv.nonEmpty))
     assert(Snapshots.read(spark, w, "t").count() == 8L)
     // The retry path: purge again, drop cleanly.
     Compaction.compact(spark, w, "t", targetBytes = 512L * 1024 * 1024,
       purgeDropped = true)
     Snapshots.dropFeature(fs, w, "t", "deletionVectors")
-    assert(Snapshots.tableFeatures(fs, w, "t").isEmpty)
+    assert(Snapshots.snapshot(fs, w).features("t").isEmpty)
     assert(Snapshots.read(spark, w, "t").count() == 8L)
   }
 
@@ -1594,7 +1594,7 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.ingest.Generated.declare(spark, w, "t", "twice", "id * 2")
     graft.ingest.Generated.appendGenerated(spark, w, "t",
       Seq(100L).toDF("id").coalesce(1))
-    assert(Snapshots.tableFeatures(fs, w, "t").contains("w:generatedColumns"))
+    assert(Snapshots.snapshot(fs, w).features("t").contains("w:generatedColumns"))
     // Refused while the declaration lives; the error names the column.
     val ex = intercept[IllegalStateException](
       Snapshots.dropFeature(fs, w, "t", "generatedColumns"))
@@ -1605,12 +1605,12 @@ class TableFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
     Snapshots.dropFeature(fs, w, "t", "generatedColumns")
     // columnMapping (from the drop) now gates reads instead — expected:
     // the drop DDL is itself a feature; generatedColumns is gone.
-    assert(!Snapshots.tableFeatures(fs, w, "t").exists(_.contains("generated")))
+    assert(!Snapshots.snapshot(fs, w).features("t").exists(_.contains("generated")))
     assert(Snapshots.read(spark, w, "t").count() == 6)
     // A clone made AFTER the drop carries the cleared set, not a stale one.
     Snapshots.cloneTable(spark, w, "t", "t2")
-    assert(!Snapshots.tableFeatures(fs, w, "t2").exists(_.contains("generated")),
-      Snapshots.tableFeatures(fs, w, "t2").toString)
+    assert(!Snapshots.snapshot(fs, w).features("t2").exists(_.contains("generated")),
+      Snapshots.snapshot(fs, w).features("t2").toString)
   }
 
   /** Drain the `graft-snapshots` stream of `table` to its current end with
